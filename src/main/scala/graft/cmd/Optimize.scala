@@ -24,10 +24,10 @@ import graft.meta.GraftTable
   *
   * Scale: this is what makes `optimize` a maintenance op instead of a
   * table copy — a 100 TB table with 1% small files rewrites ~1 TB, not
-  * 100 TB. File selection is a distributed filter over the manifest;
-  * only the (small) candidate path list ever reaches the driver, and
-  * the untouched majority of the manifest flows into the new commit as
-  * a DataFrame without being collected.
+  * 100 TB. File selection is a filter over the manifest; the commit
+  * carries the untouched majority of the manifest forward through
+  * [[GraftTable.commitReplacement]] — on the driver under the manifest
+  * read gate, as a distributed anti-join above it.
   */
 object Optimize {
   /** Files below this fraction of the target size are compaction
@@ -82,12 +82,8 @@ object Optimize {
       table.dataWrite(rewritten).parquet(commitDir.toString)
       table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
       if (exprs.nonEmpty) table.pruneEmptyFiles(commitDir)
-      val untouched = manifest.filter(!candidate)
-        .select((GraftTable.ManifestCols :+ "added_snapshot_id").map(col): _*)
-      val fresh = table.inventory(commitDir)
-        .withColumn("added_snapshot_id", lit(null).cast("long"))
-      table.doCommit("optimize", untouched.unionByName(fresh), clock,
-        basis = Some(current))
+      table.commitReplacement("optimize", Some(current),
+        candPairs.map(_._1).toSet, commitDir, clock)
     }
 
   /** @param clusterBy when non-empty, the rewrite range-partitions and
@@ -166,15 +162,7 @@ object Optimize {
       table.dataWrite(rewritten).parquet(commitDir.toString)
       table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
       if (exprs.nonEmpty) table.pruneEmptyFiles(commitDir)
-
-      // New manifest = untouched entries (original lineage preserved, never
-      // collected) ∪ the freshly written files (stamped with the new id by
-      // the commit's coalesce on added_snapshot_id).
-      val untouched = manifest.filter(!candidate)
-        .select((GraftTable.ManifestCols :+ "added_snapshot_id").map(col): _*)
-      val fresh = table.inventory(commitDir)
-        .withColumn("added_snapshot_id", lit(null).cast("long"))
-      table.doCommit("optimize", untouched.unionByName(fresh), clock,
-        basis = Some(current))
+      table.commitReplacement("optimize", Some(current),
+        candPairs.map(_._1).toSet, commitDir, clock)
     }
 }

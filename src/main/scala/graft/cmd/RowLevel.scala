@@ -22,7 +22,8 @@ import graft.meta.GraftTable
   *   2. rewrite ONLY those files without their matched rows (+ the new
   *      rows for MERGE) into a fresh commit directory;
   *   3. commit a snapshot whose manifest = untouched files' rows
-  *      (lineage preserved) + the rewrite's delta.
+  *      (lineage preserved) + the rewrite's delta
+  *      ([[GraftTable.commitReplacement]]).
   *
   * Untouched files are never read or rewritten, so the cost scales with
   * the touched-file fraction, not table size — on a 100 TB table an
@@ -193,9 +194,6 @@ object RowLevel {
     val cols = schema.fieldNames.toSeq.map(col)
     val affectedPaths = affected.unionByName(table.deleteTargets)
       .as[String].collect().toSet
-    // Re-used as a join input below — a tiny local relation, not a
-    // re-execution of the affected-file scan.
-    val affectedDf = spark.createDataset(affectedPaths.toSeq).toDF("path")
 
     val preObs = new org.apache.spark.sql.Observation(
       s"cow-pre-${UUID.randomUUID()}")
@@ -261,14 +259,7 @@ object RowLevel {
     // shuffle writes emit schema-only files for empty tasks — junk
     // manifest entries at one per rewrite
     table.pruneEmptyFiles(commitDir)
-
-    val kept = table.files // manifest rows of files we did NOT touch
-      .join(affectedDf, Seq("path"), "left_anti")
-      .select((GraftTable.ManifestCols :+ "added_snapshot_id").map(col): _*)
-    val delta = table.inventory(commitDir)
-      .withColumn("added_snapshot_id", lit(null).cast("long")) // commit stamps
-    table.doCommit(op, kept.unionByName(delta), clock, carryPrior = false,
-      basis = basis)
+    table.commitReplacement(op, basis, affectedPaths, commitDir, clock)
     preVal
   }
 }

@@ -1877,9 +1877,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       .map(f => (normalize(f.getPath), f.getLen))
     import spark.implicits._
     val fsDf = listed.toDF("path", "size_bytes")
-    if (listed.isEmpty) {
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ManifestSchema)
-    }
+    if (listed.isEmpty) return ManifestIO.emptyRelation(spark)
     // schema from the footer's embedded Spark schema JSON (driver-side,
     // no inference job); inference only for non-Spark-written files
     val dataSchema = ManifestIO
@@ -1891,10 +1889,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // and min/max come from the parquet footers the write already
     // produced — exact, driver-side, no second read of the data. The
     // distributed aggregation below stays for what footers can't give:
-    // partition-transform bounds, bloom filters, non-atomic columns
-    // (footer null counts are per-LEAF, not per-field), decimals, and
-    // large commits (a thousand-file rewrite shouldn't serialize footer
-    // reads on the driver).
+    // non-derivable partition-transform bounds, bloom filters, decimals,
+    // and large commits (a thousand-file rewrite shouldn't serialize
+    // footer reads on the driver). Top-level nested columns (array, map,
+    // struct) take the footer path too: they carry no bounds, and their
+    // null count comes from a definition-level histogram.
     // A partition field is footer-eligible when its transform output
     // bounds DERIVE from the source column's footer bounds: identity
     // over a boundable column (the column's own entry serves), and the
@@ -1921,7 +1920,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         data.schema.fields.forall(f => f.dataType match {
           case _: DecimalType => false
           case _: NumericType | StringType | BinaryType | BooleanType |
-               DateType | TimestampType | TimestampNTZType => true
+               DateType | TimestampType | TimestampNTZType |
+               _: ArrayType | _: MapType | _: StructType => true
           case _ => false
         })) {
       footerInventory(listed, data.schema, specFields) match {
@@ -1983,13 +1983,14 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     *
     * Returns None — and [[inventory]] falls back to the distributed
     * aggregation — whenever any footer statistic is unusable: unset
-    * null counts, INT96 timestamps (no footer stats by spec),
+    * null counts, a nested column without a definition-level
+    * histogram, INT96 timestamps (no footer stats by spec),
     * non-MICROS timestamp encodings, or a chunk with rows but dropped
     * bounds (float/double containing NaN, oversized binary values).
     * Fallback keeps pruning parity; this path is purely a plan-time
-    * optimization for small flat commits (eq-delete key files,
-    * position-delete files, config-table appends — the per-commit
-    * floor of maintenance demos).
+    * optimization for small commits (eq-delete key files,
+    * position-delete files, config-table appends and stamps — the
+    * per-commit floor of maintenance demos).
     *
     * `specs` are the partition fields whose transform-output bounds
     * must be derived alongside (pre-checked monotonic by the caller):
@@ -1999,6 +2000,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
                               schema: StructType,
                               specs: Seq[PartitionField]): Option[DataFrame] = {
     import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -2114,6 +2116,30 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // walk with a stackless control throwable
     object Fallback extends Exception with scala.util.control.NoStackTrace
     def fallback(): Nothing = throw Fallback
+    // Rows where a top-level nested column is NULL. Footer null counts
+    // are per LEAF (an empty list or a null element counts there too),
+    // so read the first leaf's definition-level histogram instead: level
+    // 0 means the OPTIONAL top-level group itself is absent, one entry
+    // per such row. A REQUIRED group holds no nulls.
+    def nestedNulls(fileSchema: org.apache.parquet.schema.MessageType,
+                    byName: Map[String, Seq[ColumnChunkMetaData]],
+                    name: String): Long = {
+      import org.apache.parquet.schema.Type.Repetition
+      if (!fileSchema.containsField(name)) fallback()
+      val top = fileSchema.getType(fileSchema.getFieldIndex(name))
+      if (top.isRepetition(Repetition.REQUIRED)) 0L
+      else if (!top.isRepetition(Repetition.OPTIONAL)) fallback()
+      else {
+        val leaf = fileSchema.getColumns.asScala
+          .find(_.getPath.head == name).getOrElse(fallback())
+        byName.getOrElse(leaf.getPath.mkString("."), fallback()).map { c =>
+          val h = Option(c.getSizeStatistics).filter(_.isValid)
+            .map(_.getDefinitionLevelHistogram)
+            .filter(!_.isEmpty).getOrElse(fallback())
+          h.get(0).longValue
+        }.sum
+      }
+    }
     try {
       val rows = listed.map { case (p, size) =>
         val reader = ParquetFileReader.open(
@@ -2128,13 +2154,18 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           } else {
             val byName = blocks.flatMap(_.getColumns.asScala)
               .groupBy(_.getPath.toDotString)
+            val fileSchema = reader.getFooter.getFileMetaData.getSchema
             val nulls = schema.fields.map { f =>
-              val chunks = byName.getOrElse(f.name, fallback())
-              f.name -> chunks.map { c =>
-                val st = c.getStatistics
-                if (st == null || !st.isNumNullsSet) fallback()
-                st.getNumNulls
-              }.sum
+              f.name -> (f.dataType match {
+                case _: ArrayType | _: MapType | _: StructType =>
+                  nestedNulls(fileSchema, byName, f.name)
+                case _ =>
+                  byName.getOrElse(f.name, fallback()).map { c =>
+                    val st = c.getStatistics
+                    if (st == null || !st.isNumNullsSet) fallback()
+                    st.getNumNulls
+                  }.sum
+              })
             }.toMap
             // raw footer bound of a column: Some(value), or None when
             // every value is null; aborts when bounds were dropped
@@ -2587,6 +2618,44 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     commit(op, manifest, clock, carryPrior, basis = basis)
   private[graft] def emptyManifest: DataFrame =
     ManifestIO.emptyRelation(spark)
+
+  /** Replacement commit (CoW row-level rewrite, binpack optimize): the
+    * new manifest is `basis`'s rows minus `removed` — lineage kept —
+    * plus the inventory of the files written to `commitDir`, which the
+    * commit stamps with its id. Outstanding delete manifests are
+    * dropped; the caller has rewritten every file they target. Under
+    * the [[ManifestIO.LocalReadMaxBytes]] gate and with a footer-served
+    * inventory the manifest is assembled on the driver, so the commit
+    * writes it with no Spark job; otherwise [[replacementManifestScan]]. */
+  private[graft] def commitReplacement(op: String, basis: Option[Snapshot],
+                                       removed: Set[String], commitDir: Path,
+                                       clock: Clock): Unit = {
+    val fresh = inventory(commitDir)
+    val local = for {
+      base <- ManifestIO.readLocal(spark, basis.toSeq.flatMap(_.manifests))
+      added <- ManifestIO.localRowsOf(fresh)
+    } yield base.filterNot(r => removed(r.getString(0))) ++
+      added.map(r => Row.fromSeq(r.toSeq :+ null))
+    val manifest = local match {
+      case Some(rows) =>
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(rows.asJava, ManifestSchema)
+      case None => replacementManifestScan(basis, removed, fresh)
+    }
+    commit(op, manifest, clock, carryPrior = false, basis = basis)
+  }
+
+  /** Distributed form of [[commitReplacement]]'s manifest: the basis
+    * manifest anti-joined with `removed`, unioned with the `fresh`
+    * inventory. */
+  private[graft] def replacementManifestScan(basis: Option[Snapshot],
+                                             removed: Set[String],
+                                             fresh: DataFrame): DataFrame = {
+    import spark.implicits._
+    ManifestIO.relation(spark, basis.toSeq.flatMap(_.manifests))
+      .join(removed.toSeq.toDF("path"), Seq("path"), "left_anti")
+      .unionByName(fresh.withColumn("added_snapshot_id", lit(null).cast(LongType)))
+  }
 }
 
 /** Result of [[GraftTable.readPruned]]: the pruned scan plus the file
@@ -2693,14 +2762,14 @@ object GraftTable {
   private[meta] val MorAddedCol = "__graft_mor_added"
   private[meta] val MorEqSnapCol = "__graft_mor_eq_snap"
 
-  /** Column types whose string-encoded min/max round-trip losslessly
-    * through `cast(string)` and back (Spark renders doubles/timestamps
-    * shortest-round-trip), so file-skipping comparisons are exact. */
   /** Per-column value-list cap for [[GraftTable.pairsMatchingKeySet]]'s
     * exact exists-test; larger localized key sets prune by the
     * (constant-folded, job-free) hull alone. */
   private[graft] val ExactValueCap = 1024
 
+  /** Column types whose string-encoded min/max round-trip losslessly
+    * through `cast(string)` and back (Spark renders doubles/timestamps
+    * shortest-round-trip), so file-skipping comparisons are exact. */
   private[graft] def boundable(dt: DataType): Boolean = dt match {
     case _: NumericType | StringType | DateType |
          TimestampType | TimestampNTZType => true

@@ -43,7 +43,10 @@ import org.apache.spark.sql.types._
   * driver-resident (the footer fast path) writes its single-file manifest
   * through parquet-mr directly — same bytes-on-disk contract as the Spark
   * write (Spark's own [[ParquetWriteSupport]] does the encoding), one
-  * fewer job per commit. Distributed inventories keep the Spark write.
+  * fewer job per commit. Replacement commits (CoW rewrites, binpack)
+  * assemble the kept rows and the fresh inventory on the driver the same
+  * way ([[GraftTable.commitReplacement]]). Distributed inventories
+  * keep the Spark write.
   */
 object ManifestIO {
 

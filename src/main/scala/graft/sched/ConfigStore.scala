@@ -1,10 +1,8 @@
 package graft.sched
 
 import java.sql.Timestamp
-import java.time.Clock
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.meta.GraftTable
@@ -85,20 +83,6 @@ final class ConfigStore(spark: SparkSession, location: String) {
 
   def insert(rows: MaintenanceConfig*): Unit =
     table.append(spark.createDataset(rows).toDF())
-
-  /** Point UPDATE (__main__.py:172-176,194-198): stamp
-    * `last_optimized_on` / `last_analyzed_on` = now for one table_name.
-    * Copy-on-write under the table lock. */
-  def stamp(tableName: String, column: String, clock: Clock): Unit = {
-    val t = table
-    t.lock.synchronized {
-      val now = new Timestamp(clock.millis())
-      // affected-file CoW — nothing materialized on the driver, and the
-      // same plan whether the config table has 15 rows or a billion
-      t.updateWhere(col("table_name") === tableName,
-        Map(column -> lit(now).cast(TimestampType)), clock)
-    }
-  }
 }
 
 object ConfigStore {

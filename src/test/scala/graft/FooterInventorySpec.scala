@@ -2,23 +2,51 @@ package graft
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.meta.GraftTable
 
-/** The footer-statistics commit fast path: small flat commits build
-  * their manifest from the parquet footers the write just produced —
-  * no second Spark job over the data — and MUST emit byte-identical
-  * stats to the distributed aggregation (same null counts, same
+/** The footer-statistics commit fast path: small commits build their
+  * manifest from the parquet footers the write just produced — no
+  * second Spark job over the data — and MUST emit byte-identical stats
+  * to the distributed aggregation (same null counts, same
   * string-rendered min/max), or file-skipping semantics would drift
-  * between the two paths. */
+  * between the two paths. A decimal column keeps a commit on the
+  * distributed path, which serves as the reference below. */
 class FooterInventorySpec extends SparkSpec {
 
   private def statsOf(t: GraftTable): Seq[Row] =
     t.files
       .select("record_count", "null_counts", "min_values", "max_values")
       .collect().toSeq
+
+  /** Nested columns over every definition level of their first leaf,
+    * keyed on `id`: a null list, an empty list and a list holding a
+    * null element; a map and a struct that are null in some rows; and
+    * a never-null array. */
+  private def withNested(df: DataFrame): DataFrame = {
+    val k = col("id") % 3
+    df.withColumn("arr", when(k === 1, lit(null).cast("array<string>"))
+        .when(k === 2, array().cast("array<string>"))
+        .otherwise(array(lit("x"), lit(null).cast("string"))))
+      .withColumn("m", when(k === 2, lit(null).cast("map<string,bigint>"))
+        .otherwise(map(lit("k"), col("id"))))
+      .withColumn("st", when(k === 0,
+          lit(null).cast("struct<a:bigint,b:string>"))
+        .otherwise(struct(col("id").as("a"),
+          lit(null).cast("string").as("b"))))
+      .withColumn("req", array(col("id")))
+  }
+
+  /** A decimal column: the guard keeps such commits distributed. */
+  private def withDecimal(df: DataFrame): DataFrame =
+    df.withColumn("dec", col("id").cast("decimal(10,2)"))
+
+  private def nullCounts(t: GraftTable): Map[String, Map[String, Long]] =
+    t.files.select("min_values", "null_counts").collect().toSeq.map(r =>
+      r.getMap[String, String](0)("id") ->
+        (r.getMap[String, Long](1).toMap - "dec")).toMap
 
   private def mixed = {
     import spark.implicits._
@@ -40,16 +68,31 @@ class FooterInventorySpec extends SparkSpec {
     assert(GraftTable.footerInventoryHits.get == before + 1,
       "footer fast path did not fire on a flat micros-timestamp commit")
 
-    // Same rows plus an array column → guard rejects, distributed path.
-    val slowDf = df.withColumn("arr", array(col("id")))
+    // Same rows plus nested columns → still the footer path.
+    val nestedDf = withNested(df)
+    val nested = GraftTable.create(spark, tmpDir("fi_nested") + "/t",
+      nestedDf.schema)
+    nested.append(nestedDf.repartition(1))
+    assert(GraftTable.footerInventoryHits.get == before + 2,
+      "nested columns must stay on the footer path")
+
+    // ... plus a decimal column → guard rejects, distributed path.
+    val slowDf = withDecimal(nestedDf)
     val slow = GraftTable.create(spark, tmpDir("fi_slow") + "/t", slowDf.schema)
     slow.append(slowDf.repartition(1))
-    assert(GraftTable.footerInventoryHits.get == before + 1,
-      "array column must force the distributed inventory")
+    assert(GraftTable.footerInventoryHits.get == before + 2,
+      "decimal column must force the distributed inventory")
 
     val Seq(f) = statsOf(fast)
+    val Seq(n) = statsOf(nested)
     val Seq(s) = statsOf(slow)
-    assert(f.getLong(0) == 3 && s.getLong(0) == 3)
+    assert(f.getLong(0) == 3 && n.getLong(0) == 3 && s.getLong(0) == 3)
+    assert(n.getMap[String, Long](1) == (s.getMap[String, Long](1) - "dec"),
+      "nested-column null counts drifted from the distributed aggregation")
+    assert(n.getMap[String, String](2) == (s.getMap[String, String](2) - "dec"))
+    assert(n.getMap[String, String](3) == (s.getMap[String, String](3) - "dec"))
+    val nn = n.getMap[String, Long](1)
+    assert(Seq("arr", "m", "st").map(nn) == Seq(1L, 1L, 1L) && nn("req") == 0L)
     val cols = Seq("id", "name", "score", "ts", "d", "opt")
     for (c <- cols) {
       assert(f.getMap[String, Long](1).get(c) == s.getMap[String, Long](1).get(c),
@@ -113,17 +156,20 @@ class FooterInventorySpec extends SparkSpec {
       PartitionSpec.identity("id"))
 
     val before = GraftTable.footerInventoryHits.get
-    val fast = GraftTable.create(spark, tmpDir("fi_part") + "/t", df.schema, specs)
-    fast.append(df)
+    val fastDf = withNested(df)
+    val fast = GraftTable.create(spark, tmpDir("fi_part") + "/t",
+      fastDf.schema, specs)
+    fast.append(fastDf)
     assert(GraftTable.footerInventoryHits.get == before + 1,
       "days/truncate/identity specs must be footer-derivable")
 
-    // same data + an array column → guard rejects → distributed path
-    val slowDf = df.withColumn("arr", array($"id"))
+    // same data + a decimal column → guard rejects → distributed path
+    val slowDf = withDecimal(fastDf)
     val slow = GraftTable.create(spark, tmpDir("fi_part_slow") + "/t",
       slowDf.schema, specs)
     slow.append(slowDf)
     assert(GraftTable.footerInventoryHits.get == before + 1)
+    assert(nullCounts(fast) == nullCounts(slow))
 
     def bounds(t: GraftTable): Map[(String, String), (String, String)] =
       t.files.select("min_values", "max_values").collect().toSeq.map { r =>
@@ -159,16 +205,19 @@ class FooterInventorySpec extends SparkSpec {
       PartitionSpec.hours("ts"))
 
     val before = GraftTable.footerInventoryHits.get
-    val fast = GraftTable.create(spark, tmpDir("fi_tempo") + "/t", df.schema, specs)
-    fast.append(df)
+    val fastDf = withNested(df)
+    val fast = GraftTable.create(spark, tmpDir("fi_tempo") + "/t",
+      fastDf.schema, specs)
+    fast.append(fastDf)
     assert(GraftTable.footerInventoryHits.get == before + 1,
       "month/year/hour specs must be footer-derivable")
 
-    val slowDf = df.withColumn("arr", array($"id"))
+    val slowDf = withDecimal(fastDf)
     val slow = GraftTable.create(spark, tmpDir("fi_tempo_slow") + "/t",
       slowDf.schema, specs)
     slow.append(slowDf)
     assert(GraftTable.footerInventoryHits.get == before + 1)
+    assert(nullCounts(fast) == nullCounts(slow))
 
     def bounds(t: GraftTable): Map[(String, String), Seq[(String, String)]] =
       t.files.select("min_values", "max_values").collect().toSeq.map { r =>
@@ -212,15 +261,18 @@ class FooterInventorySpec extends SparkSpec {
       val specs = Seq(PartitionSpec.hours("ts"))
 
       val before = GraftTable.footerInventoryHits.get
+      val fastDf = withNested(df)
       val fast = GraftTable.create(spark, tmpDir("fi_ntz_hours") + "/t",
-        df.schema, specs)
-      fast.append(df)
+        fastDf.schema, specs)
+      fast.append(fastDf)
       assert(GraftTable.footerInventoryHits.get == before + 1,
         "NTZ hour spec must stay footer-derivable")
-      val slowDf = df.withColumn("arr", array($"id"))
+      val slowDf = withDecimal(fastDf)
       val slow = GraftTable.create(spark, tmpDir("fi_ntz_hours_slow") + "/t",
         slowDf.schema, specs)
       slow.append(slowDf)
+      assert(GraftTable.footerInventoryHits.get == before + 1)
+      assert(nullCounts(fast) == nullCounts(slow))
 
       def hourBounds(t: GraftTable): Map[String, (String, String)] =
         t.files.select("min_values", "max_values").collect().toSeq.map { r =>

@@ -148,27 +148,15 @@ class RowLevelSpec extends SparkSpec {
 
   test("UPDATE is single-pass: the matched count rides the rewrite scan (r19)") {
     val t = freshTable()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(); ()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = t.updateWhere(col("id") >= 10 && col("id") < 20,
-        Map("tag" -> lit("U")))
-      assert(n == 10)
-      Thread.sleep(1000) // the listener bus is async (DevCommitRate's drain)
-      // discovery + rewrite write + commit-inventory jobs. Measured on
-      // this exact update: 5 jobs after the r19 fold, 7 before it (the
-      // separate matched-count scan over the affected files plus its
-      // duplicated discovery collect). Pinned at the measured 5 so a
-      // reintroduced count scan fails here.
-      assert(jobs.get() <= 5, s"UPDATE ran ${jobs.get()} jobs — " +
-        "a separate matched-count scan has crept back in")
-      assert(t.read.filter(col("tag") === "U").count() == 10)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (n, jobs) = JobLog.during(spark)(
+      t.updateWhere(col("id") >= 10 && col("id") < 20, Map("tag" -> lit("U"))))
+    assert(n == 10)
+    // discovery + the rewrite write; the commit builds its manifest on
+    // the driver. Pinned at the measured 3 so a reintroduced
+    // matched-count scan or commit job fails here.
+    assert(jobs.size <= 3, s"UPDATE ran ${jobs.size} jobs — " +
+      "a separate matched-count scan or a commit job has crept back in")
+    assert(t.read.filter(col("tag") === "U").count() == 10)
   }
 
   test("UPDATE whose raw-affected matches are all MOR-deleted commits nothing") {
