@@ -75,7 +75,7 @@ object DevCommitRate {
     // r17 item 1 (measured): CoW MERGE affected-file cost on a
     // range-CLUSTERED table vs whole-domain keys. files_touched/commit =
     // manifest rows REWRITTEN (dropped from the live set) per merge —
-    // the discovery scan (RowLevel.merge via pairsOverlappingKeys) must
+    // the discovery scan (RowLevel.merge → FileSkipping's key rules) must
     // touch only bounds-overlapping files, so clustered keys rewrite ~1
     // file while whole-domain keys rewrite every file.
     def probeMerge(tag: String, keysOf: Int => org.apache.spark.sql.DataFrame): Unit = {
@@ -117,8 +117,8 @@ object DevCommitRate {
       spark.range(0, 200).select((col("id") * 500 + i % 100).as("k")))
     // scattered (r19 item 6): two tight 100-key clusters at opposite
     // ends of the domain. Their min/max HULL spans nearly every file, so
-    // the r18 hull test kept ~all 16; the key-set test
-    // (pairsMatchingKeySet) keeps only the files the clusters land in
+    // the r18 hull test kept ~all 16; the exact key-set test
+    // (FileSkipping.mayContainAny) keeps only the files the clusters land in
     // (~2 + rewrite splits).
     probeMerge("merge_scattered", i =>
       spark.range(0, 100).select((col("id") + 400 * (i % 8)).as("k"))

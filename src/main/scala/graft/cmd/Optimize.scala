@@ -4,6 +4,7 @@ import java.time.Clock
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.meta.GraftTable
@@ -54,36 +55,8 @@ object Optimize {
         "scoped optimize on a table with outstanding merge-on-read " +
           "deletes would drop delete entries for out-of-scope files; " +
           "run optimize() or rewriteDeleteFiles() first")
-      val spec = table.partitionSpec
-      val minBytes = (targetFileBytes * MinFileSizeRatio).toLong
-      val maxBytes = (targetFileBytes * MaxFileSizeRatio).toLong
-      val manifest = table.files
-      val candidate = table.partitionScope(preds) &&
-        (col("size_bytes") < minBytes || col("size_bytes") > maxBytes)
-      val candRows = manifest.filter(candidate)
-        .select("path", "added_snapshot_id", "size_bytes").collect()
-      val numSmall = candRows.count(_.getLong(2) < minBytes)
-      if (numSmall < MinInputFiles && candRows.length == numSmall) return
-      val candPairs = candRows.map(r =>
-        (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1))).toIndexedSeq
-      val candBytes = candRows.map(_.getLong(2)).sum
-      val nOut = math.max(1L,
-        (candBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val commitDir = new Path(table.dir, s"data/${UUID.randomUUID()}")
-      val toRewrite = table.readFilesAligned(candPairs)
-      val exprs = spec.map(f =>
-        f.expr(toRewrite(f.column), toRewrite.schema(f.column).dataType)) ++
-        table.sortExprs(toRewrite)
-      val rewritten =
-        if (exprs.nonEmpty)
-          toRewrite.repartitionByRange(nOut, exprs: _*)
-            .sortWithinPartitions(exprs: _*)
-        else toRewrite.repartition(nOut)
-      table.dataWrite(rewritten).parquet(commitDir.toString)
-      table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
-      if (exprs.nonEmpty) table.pruneEmptyFiles(commitDir)
-      table.commitReplacement("optimize", Some(current),
-        candPairs.map(_._1).toSet, commitDir, clock)
+      binpack(table, current, withoutDeletes(table), table.partitionScope(preds),
+        targetFileBytes, clock)
     }
 
   /** @param clusterBy when non-empty, the rewrite range-partitions and
@@ -99,11 +72,10 @@ object Optimize {
         current.deleteManifests.nonEmpty || current.eqDeleteManifests.nonEmpty
       if (current.numFiles <= 1 && clusterBy.isEmpty && !hasDeletes)
         return // already compact
-      val spec = table.partitionSpec
-      val commitDir = new Path(table.dir, s"data/${UUID.randomUUID()}")
 
       if (clusterBy.nonEmpty) {
         // sort-order compaction: full re-cluster, replaces every file
+        val commitDir = new Path(table.dir, s"data/${UUID.randomUUID()}")
         val nOut = math.max(1L,
           (current.totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
         table.dataWrite(table.read
@@ -117,52 +89,63 @@ object Optimize {
         return
       }
 
-      // ---- binpack: rewrite undersized, oversized, AND delete-laden files
-      val minBytes = (targetFileBytes * MinFileSizeRatio).toLong
-      val maxBytes = (targetFileBytes * MaxFileSizeRatio).toLong
       // Files targeted by outstanding MOR delete entries are rewritten
       // too (with the deletes applied) — the commit drops the delete
       // manifests, so every entry must be materialized here (Iceberg's
       // rewrite_position_delete_files folded into binpack). Tables
       // without deletes skip the target join entirely.
       val manifest =
-        if (!hasDeletes)
-          table.files.withColumn("has_deletes", lit(null).cast("boolean"))
+        if (!hasDeletes) withoutDeletes(table)
         else table.files.join(
           table.deleteTargets.withColumn("has_deletes", lit(true)),
           Seq("path"), "left")
-      val candidate = col("size_bytes") < minBytes ||
-        col("size_bytes") > maxBytes || col("has_deletes").isNotNull
-      val candRows = manifest.filter(candidate)
-        .select("path", "added_snapshot_id", "size_bytes", "has_deletes")
-        .collect()
-      val numSmall = candRows.count(r => r.getLong(2) < minBytes)
-      val numForced = candRows.count(r =>
-        !r.isNullAt(3) || r.getLong(2) > maxBytes)
-      // lone small files aren't worth a rewrite; any oversized or
-      // delete-laden file always is
-      if (numSmall < MinInputFiles && numForced == 0) return
-      val candPairs = candRows.map(r =>
-        (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1))).toIndexedSeq
-      val candBytes = candRows.map(_.getLong(2)).sum
-      val nOut = math.max(1L,
-        (candBytes + targetFileBytes - 1) / targetFileBytes).toInt
-
-      val toRewrite = table.morReadLive(candPairs)
-      // keep partitioned/sorted tables clustered — a round-robin rewrite
-      // would widen every file's transform/sort bounds and kill pruning
-      val exprs = spec.map(f =>
-        f.expr(toRewrite(f.column), toRewrite.schema(f.column).dataType)) ++
-        table.sortExprs(toRewrite)
-      val rewritten =
-        if (exprs.nonEmpty)
-          toRewrite.repartitionByRange(nOut, exprs: _*)
-            .sortWithinPartitions(exprs: _*)
-        else toRewrite.repartition(nOut)
-      table.dataWrite(rewritten).parquet(commitDir.toString)
-      table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
-      if (exprs.nonEmpty) table.pruneEmptyFiles(commitDir)
-      table.commitReplacement("optimize", Some(current),
-        candPairs.map(_._1).toSet, commitDir, clock)
+      binpack(table, current, manifest, lit(true), targetFileBytes, clock)
     }
+
+  private def withoutDeletes(table: GraftTable): DataFrame =
+    table.files.withColumn("has_deletes", lit(null).cast("boolean"))
+
+  /** Binpack the `manifest` rows (`has_deletes` marks delete-laden
+    * files) inside `scope`: rewrite the undersized, oversized, AND
+    * delete-laden ones, carry the rest. */
+  private def binpack(table: GraftTable, current: graft.meta.Snapshot,
+                      manifest: DataFrame, scope: Column,
+                      targetFileBytes: Long, clock: Clock): Unit = {
+    val minBytes = (targetFileBytes * MinFileSizeRatio).toLong
+    val maxBytes = (targetFileBytes * MaxFileSizeRatio).toLong
+    val candidate = scope && (col("size_bytes") < minBytes ||
+      col("size_bytes") > maxBytes || col("has_deletes").isNotNull)
+    val candRows = manifest.filter(candidate)
+      .select("path", "added_snapshot_id", "size_bytes", "has_deletes")
+      .collect()
+    val numSmall = candRows.count(r => r.getLong(2) < minBytes)
+    val numForced = candRows.count(r =>
+      !r.isNullAt(3) || r.getLong(2) > maxBytes)
+    // lone small files aren't worth a rewrite; any oversized or
+    // delete-laden file always is
+    if (numSmall < MinInputFiles && numForced == 0) return
+    val candPairs = candRows.map(r =>
+      (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1))).toIndexedSeq
+    val candBytes = candRows.map(_.getLong(2)).sum
+    val nOut = math.max(1L,
+      (candBytes + targetFileBytes - 1) / targetFileBytes).toInt
+
+    val toRewrite = table.morReadFiles(current, candPairs)
+    // keep partitioned/sorted tables clustered — a round-robin rewrite
+    // would widen every file's transform/sort bounds and kill pruning
+    val exprs = table.partitionSpec.map(f =>
+      f.expr(toRewrite(f.column), toRewrite.schema(f.column).dataType)) ++
+      table.sortExprs(toRewrite)
+    val rewritten =
+      if (exprs.nonEmpty)
+        toRewrite.repartitionByRange(nOut, exprs: _*)
+          .sortWithinPartitions(exprs: _*)
+      else toRewrite.repartition(nOut)
+    val commitDir = new Path(table.dir, s"data/${UUID.randomUUID()}")
+    table.dataWrite(rewritten).parquet(commitDir.toString)
+    table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
+    if (exprs.nonEmpty) table.pruneEmptyFiles(commitDir)
+    table.commitReplacement("optimize", Some(current),
+      candPairs.map(_._1).toSet, commitDir, clock)
+  }
 }

@@ -105,11 +105,12 @@ object RowLevel {
     * bounds pruning and both joins (≲256 KB of driver state — the
     * upsert shapes the entries exercise are far below it). Within the
     * cap, discovery prunes by the exact key set up to
-    * [[GraftTable.ExactValueCap]] values per column and by the job-free
-    * constant-folded hull beyond it. A bulk merge beyond the cap falls
-    * back to the DataFrame path (hull aggregate + re-executed source —
-    * requires a deterministic source, and pays one count for the
-    * insert-bytes estimate, both negligible at bulk scale). */
+    * [[graft.meta.FileSkipping.ExactValueCap]] values per column and by
+    * the job-free constant-folded hull beyond it. A bulk merge beyond
+    * the cap falls back to the DataFrame path (hull aggregate +
+    * re-executed source — requires a deterministic source, and pays one
+    * count for the insert-bytes estimate, both negligible at bulk
+    * scale). */
   private val MaxLocalKeys = 8192
 
   /** MERGE (upsert): rows in `source` replace table rows with the same
@@ -126,42 +127,34 @@ object RowLevel {
       val spark = table.spark
       val srcKeysDf = source.select(keys.map(col): _*).distinct()
       val localKeys = srcKeysDf.limit(MaxLocalKeys + 1).collect()
-      if (localKeys.length <= MaxLocalKeys) {
-        // LOCALIZED path (r19): the distinct key set is materialized
-        // ONCE and reused for bounds pruning, the semi-join, and the
-        // anti-join — one job over the source instead of three, a
-        // non-deterministic source can no longer disagree between the
-        // discovery bounds and the joins (r18 ADVICE), and the per-file
-        // overlap test runs against the ACTUAL key tuples
-        // ([[GraftTable.pairsMatchingKeySet]]): scattered keys prune to
-        // the files containing SOME key, not every file in their
-        // min/max hull.
-        val srcKeys = spark.createDataFrame(
-          java.util.Arrays.asList(localKeys: _*), srcKeysDf.schema)
-        val withPath = table.morReadLive(
-          table.pairsMatchingKeySet(localKeys.toSeq, srcKeysDf.schema, keys),
-          Some(FP))
-        rewrite(table, "merge",
-          affected = withPath.join(srcKeys, keys, "left_semi")
-            .select(col(FP).as("path")).distinct(),
-          survivorsOf = df => df.join(srcKeys, keys, "left_anti"),
-          extra = Some(source), clock,
-          extraRowsEst = localKeys.length.toLong)
-      } else {
-        // bulk fallback: the r18 hull-bounds path. Requires a
-        // deterministic source (the key aggregate and the joins
-        // re-evaluate it) — the localized path above covers every
-        // non-bulk shape.
-        val srcKeys = srcKeysDf
-        val withPath = table.morReadLive(
-          table.pairsOverlappingKeys(srcKeys, keys), Some(FP))
-        rewrite(table, "merge",
-          affected = withPath.join(srcKeys, keys, "left_semi")
-            .select(col(FP).as("path")).distinct(),
-          survivorsOf = df => df.join(srcKeys, keys, "left_anti"),
-          extra = Some(source), clock,
-          extraRowsEst = srcKeys.count())
-      }
+      val (srcKeys, pairs, keyCount) =
+        if (localKeys.length <= MaxLocalKeys)
+          // LOCALIZED path (r19): the distinct key set is materialized
+          // ONCE and reused for bounds pruning, the semi-join, and the
+          // anti-join — one job over the source instead of three, a
+          // non-deterministic source can no longer disagree between the
+          // discovery bounds and the joins (r18 ADVICE), and the per-file
+          // overlap test runs against the ACTUAL key tuples
+          // ([[GraftTable.pairsMatchingKeySet]]): scattered keys prune to
+          // the files containing SOME key, not every file in their
+          // min/max hull.
+          (spark.createDataFrame(
+            java.util.Arrays.asList(localKeys: _*), srcKeysDf.schema),
+            table.pairsMatchingKeySet(localKeys.toSeq, srcKeysDf.schema, keys),
+            localKeys.length.toLong)
+        else
+          // bulk fallback: the r18 hull-bounds path. Requires a
+          // deterministic source (the key aggregate and the joins
+          // re-evaluate it) — the localized path above covers every
+          // non-bulk shape.
+          (srcKeysDf, table.pairsOverlappingKeys(srcKeysDf, keys),
+            srcKeysDf.count())
+      val withPath = table.morReadLive(pairs, Some(FP))
+      rewrite(table, "merge",
+        affected = withPath.join(srcKeys, keys, "left_semi")
+          .select(col(FP).as("path")).distinct(),
+        survivorsOf = df => df.join(srcKeys, keys, "left_anti"),
+        extra = Some(source), clock, extraRowsEst = keyCount)
     }
 
   /** Shared CoW machinery: rewrite the affected files via `survivorsOf`

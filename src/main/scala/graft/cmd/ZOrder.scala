@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.meta.GraftTable
+import graft.meta.{FileSkipping, GraftTable}
 
 /** Z-order (Morton-curve) compaction: rewrite the table clustered on the
   * INTERLEAVED bits of several columns, so manifest min/max bounds stay
@@ -67,8 +67,8 @@ object ZOrder {
     val bounds = cols.map { c =>
       val dt = table.schema(c).dataType
       val r = m.agg(
-        asDouble(min(element_at(col("min_values"), c).cast(dt)), dt).as("lo"),
-        asDouble(max(element_at(col("max_values"), c).cast(dt)), dt).as("hi"))
+        asDouble(min(FileSkipping.lowerBound(c, dt)), dt).as("lo"),
+        asDouble(max(FileSkipping.upperBound(c, dt)), dt).as("hi"))
         .head()
       require(!r.isNullAt(0) && !r.isNullAt(1),
         s"no manifest bounds for column $c — not a boundable type?")

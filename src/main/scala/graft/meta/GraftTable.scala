@@ -170,15 +170,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     case _ => ManifestIO.emptyRelation(spark)
   }
 
-  /** Union of every snapshot's inventory (for orphan reconciliation) —
-    * including position- and equality-delete files under `data/`. */
-  private def allReferencedFiles: DataFrame = {
-    val paths = snapshots
-      .flatMap(s => s.manifests ++ s.deleteManifests ++ s.eqDeleteManifests)
-      .distinct
-    ManifestIO.relation(spark, paths)
-  }
-
   /** Scan of the current snapshot. */
   def read: DataFrame = readSnapshot(currentSnapshot)
 
@@ -233,13 +224,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     if (range.isEmpty || to.manifests.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val compactionIds = range.filter(compaction).map(_.snapshotId)
-    val pairs = ManifestIO.relation(spark, to.manifests)
-      .filter(col("added_snapshot_id") > fromId &&
-        col("added_snapshot_id") <= toId &&
-        !col("added_snapshot_id").isin(compactionIds: _*))
-      .select("path", "added_snapshot_id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toIndexedSeq
-    readFilesAligned(pairs)
+    readFilesAligned(FileSkipping.survivingPairs(manifestDf(to.manifests),
+      col("added_snapshot_id") > fromId && col("added_snapshot_id") <= toId &&
+        !col("added_snapshot_id").isin(compactionIds: _*)))
   }
 
   /** Row-level changelog of `(fromId, toId]` (Delta CDF / Iceberg
@@ -368,10 +355,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val inserts: Option[DataFrame] =
         if (s.manifests.isEmpty) None
         else {
-          val pairs = manifestDf(s.manifests)
-            .filter(col("added_snapshot_id") === s.snapshotId)
-            .select("path", "added_snapshot_id").collect()
-            .map(r => (r.getString(0), r.getLong(1))).toIndexedSeq
+          val pairs = FileSkipping.survivingPairs(manifestDf(s.manifests),
+            col("added_snapshot_id") === s.snapshotId)
           if (pairs.isEmpty) None else Some(stamp(readFilesAligned(pairs), "insert"))
         }
 
@@ -482,13 +467,14 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** (path, added_snapshot_id) of a snapshot's live data files. */
   private def filePairsOf(s: Snapshot): Seq[(String, Long)] =
-    manifestDf(s.manifests)
-      .select("path", "added_snapshot_id").collect()
-      .map(r => (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-      .toIndexedSeq
+    FileSkipping.survivingPairs(manifestDf(s.manifests), FileSkipping.KeepAll)
 
-  private[graft] def liveFilePairs: Seq[(String, Long)] = currentSnapshot match {
-    case Some(s) if s.numFiles > 0 && s.manifests.nonEmpty => filePairsOf(s)
+  private[graft] def liveFilePairs: Seq[(String, Long)] = livePairs(FileSkipping.KeepAll)
+
+  /** The current snapshot's live files that `keep` admits. */
+  private def livePairs(keep: => Column): Seq[(String, Long)] = currentSnapshot match {
+    case Some(s) if s.numFiles > 0 && s.manifests.nonEmpty =>
+      FileSkipping.survivingPairs(manifestDf(s.manifests), keep)
     case _ => Seq.empty
   }
 
@@ -499,39 +485,26 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * files, not the table (on a 100 TB table an upsert landing in one
     * key range reads the overlapping files, not every file).
     *
-    * MERGE key equality is plain `=` (a NULL key matches nothing), so
-    * only non-null key bounds participate: a key column with no non-null
-    * value prunes every file. Files with missing bounds for a boundable
-    * column are kept (never pruned); non-boundable key types disable
-    * pruning on that column. The min/max aggregate is one tiny job over
-    * the (small) source key set; the manifest filter folds into the
-    * driver-local manifest relation, job-free below the local-read gate. */
+    * MERGE key equality is plain `=`
+    * ([[FileSkipping.mayMatchKeyRange]]). Only boundable key columns are
+    * aggregated: the min/max aggregate is one tiny job over the (small)
+    * source key set, skipped when no key column can prune; the manifest
+    * filter folds into the driver-local manifest relation, job-free
+    * below the local-read gate. */
   private[graft] def pairsOverlappingKeys(keys: DataFrame,
                                           keyCols: Seq[String]): Seq[(String, Long)] =
-    currentSnapshot match {
-      case Some(s) if s.numFiles > 0 && s.manifests.nonEmpty =>
-        val tableSchema = schema
-        val bounded = keyCols.filter(k => boundable(tableSchema(k).dataType))
-        if (bounded.isEmpty) return filePairsOf(s)
+    livePairs {
+      val tableSchema = schema
+      val bounded = keyCols.filter(k => FileSkipping.boundable(tableSchema(k).dataType))
+      if (bounded.isEmpty) FileSkipping.KeepAll
+      else {
         val aggs = bounded.flatMap(k => Seq(min(col(k)), max(col(k))))
         val st = keys.agg(aggs.head, aggs.tail: _*).head()
-        val keep = bounded.zipWithIndex.map { case (k, i) =>
-          val dt = tableSchema(k).dataType
-          val mn = st.get(2 * i)
-          val mx = st.get(2 * i + 1)
-          if (mn == null) lit(false) // no non-null keys: nothing can match
-          else {
-            val dmin = element_at(col("min_values"), k).cast(dt)
-            val dmax = element_at(col("max_values"), k).cast(dt)
-            (dmin.isNull || dmin <= lit(mx).cast(dt)) &&
-              (dmax.isNull || dmax >= lit(mn).cast(dt))
-          }
+        bounded.zipWithIndex.map { case (k, i) =>
+          FileSkipping.mayMatchKeyRange(k, tableSchema(k).dataType,
+            st.get(2 * i), st.get(2 * i + 1))
         }.reduce(_ && _)
-        manifestDf(s.manifests).filter(keep)
-          .select("path", "added_snapshot_id").collect()
-          .map(r => (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-          .toIndexedSeq
-      case _ => Seq.empty
+      }
     }
 
   /** [[pairsOverlappingKeys]] refined to an ACTUAL-key-set overlap test
@@ -544,54 +517,20 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * matching row with key k in file f implies min_f ≤ k_c ≤ max_f for
     * every column c, so k witnesses every per-column exists.
     *
-    * Same conservative edges as the hull test: null key values match
-    * nothing under MERGE's plain `=` and are dropped per column; a key
-    * column with no non-null value prunes every file; files with
-    * missing bounds for a boundable column are kept; non-boundable key
-    * types disable pruning on that column. The per-column value lists
-    * are literal arrays over the (small, already-collected) key set, so
-    * the filter folds into the driver-local manifest relation exactly
-    * like the hull test — no extra job. */
+    * Same conservative edges as the hull test
+    * ([[FileSkipping.mayContainAny]]). The per-column value lists are
+    * literal arrays over the (small, already-collected) key set, so the
+    * filter folds into the driver-local manifest relation exactly like
+    * the hull test — no extra job. */
   private[graft] def pairsMatchingKeySet(keyRows: Seq[Row],
                                          keySchema: StructType,
                                          keyCols: Seq[String]): Seq[(String, Long)] =
-    currentSnapshot match {
-      case Some(s) if s.numFiles > 0 && s.manifests.nonEmpty =>
-        val tableSchema = schema
-        val bounded = keyCols.filter(k => boundable(tableSchema(k).dataType))
-        if (bounded.isEmpty) return filePairsOf(s)
-        val keep = bounded.map { k =>
-          val dt = tableSchema(k).dataType
-          val idx = keySchema.fieldIndex(k)
-          val vals = keyRows.iterator.map(_.get(idx))
-            .filter(_ != null).toSeq.distinct
-          if (vals.isEmpty) lit(false) // no non-null keys: nothing matches
-          else {
-            val dmin = element_at(col("min_values"), k).cast(dt)
-            val dmax = element_at(col("max_values"), k).cast(dt)
-            val arr = array(vals.map(v => lit(v).cast(dt)): _*)
-            // hull conjunct first: array_min/max of the literal array
-            // constant-fold, so this is O(1) per file — the same test
-            // pairsOverlappingKeys runs, minus its aggregate job. It
-            // short-circuits the O(|values|) exists to hull-surviving
-            // files, and beyond ExactValueCap it stands alone (a linear
-            // probe of a huge value list per manifest row would not pay
-            // for the extra pruning).
-            val hull = (dmin.isNull || dmin <= array_max(arr)) &&
-              (dmax.isNull || dmax >= array_min(arr))
-            if (vals.size > GraftTable.ExactValueCap) hull
-            else hull &&
-              // qualified: the companion's exists(spark, location)
-              // shadows the sql.functions higher-order exists here
-              org.apache.spark.sql.functions.exists(arr,
-                v => (dmin.isNull || dmin <= v) && (dmax.isNull || dmax >= v))
-          }
-        }.reduce(_ && _)
-        manifestDf(s.manifests).filter(keep)
-          .select("path", "added_snapshot_id").collect()
-          .map(r => (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-          .toIndexedSeq
-      case _ => Seq.empty
+    livePairs {
+      val tableSchema = schema
+      keyCols.map { k =>
+        val idx = keySchema.fieldIndex(k)
+        FileSkipping.mayContainAny(k, tableSchema(k).dataType, keyRows.map(_.get(idx)))
+      }.reduce(_ && _)
     }
 
   // ---- merge-on-read position deletes (Iceberg v2) -----------------------
@@ -753,26 +692,15 @@ final class GraftTable(val spark: SparkSession, val location: String) {
               infos.groupBy(_.keys).map { case (keyCols, group) =>
                 val eqFiles =
                   eqAll.filter(col("path").isin(group.map(_.path): _*))
-                def b(side: DataFrame, which: String, k: String) = {
-                  val dt = tableSchema(k).dataType
-                  element_at(side(which), k).cast(dt)
-                }
+                // null-safe equality: the eq file's bounds are the probe
+                // range, and its null entries match the data file's nulls
                 val overlap = keyCols.map { k =>
-                  val (dmin, dmax) = (b(data, "min_values", k),
-                    b(data, "max_values", k))
-                  val (emin, emax) = (b(eqFiles, "min_values", k),
-                    b(eqFiles, "max_values", k))
-                  val boundsHit =
-                    (dmin.isNull || emax.isNull || dmin <= emax) &&
-                      (dmax.isNull || emin.isNull || dmax >= emin)
-                  // null-safe equality: a null key entry matches rows
-                  // with null in k — a file pair can also hit when BOTH
-                  // sides hold nulls (missing counts keep the file)
-                  val dNulls = element_at(data("null_counts"), k)
-                  val eNulls = element_at(eqFiles("null_counts"), k)
-                  val nullHit = (dNulls.isNull || dNulls > 0) &&
-                    (eNulls.isNull || eNulls > 0)
-                  boundsHit || nullHit
+                  val dt = tableSchema(k).dataType
+                  FileSkipping.mayMatchNullSafe(k,
+                    FileSkipping.mayOverlap(k, dt,
+                      FileSkipping.lowerBound(k, dt, eqFiles(_)),
+                      FileSkipping.upperBound(k, dt, eqFiles(_)), data(_)),
+                    FileSkipping.mayHaveNulls(k, eqFiles(_)), data(_))
                 }.reduce(_ && _)
                 // per-file intro (max-of-file for compacted files) —
                 // a conservative upper bound keeps the target SUPERSET
@@ -1058,10 +986,12 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Rows of `b` (all MOR deletes applied) matching the key set —
     * the exact count an eq-delete commit must subtract. The scan is
-    * bounds-pruned first: one tiny aggregate computes the key set's
-    * min/max per key column, and only data files whose manifest bounds
-    * overlap are read — an upsert touching one key range counts
-    * against overlapping files, not the table.
+    * bounds-pruned first: `stats` holds the key set's min, max and NULL
+    * count per key column (observed during the eq-file write
+    * ([[writeEqDeleteFile]]) — no extra scan), and only data files that
+    * may hold a key under null-safe equality are read — an upsert
+    * touching one key range counts against overlapping files, not the
+    * table.
     *
     * `memo` (one map per commit call) caches the count keyed by the
     * pruned file set plus the basis's delete manifests: a CAS retry
@@ -1082,31 +1012,15 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // may contain nulls while the key set does. `stats` was computed
     // during the eq-file write ([[writeEqDeleteFile]]) — no extra scan.
     val tableSchema = schema
-    val keep = keyCols.zipWithIndex.map { case (k, i) =>
-      val dt = tableSchema(k).dataType
-      if (!boundable(dt)) lit(true)
-      else {
-        val mn = stats.get(3 * i)
-        val dmin = element_at(col("min_values"), k).cast(dt)
-        val dmax = element_at(col("max_values"), k).cast(dt)
-        val valuesHit =
-          if (mn == null) lit(false) // no non-null key values
-          else (dmin.isNull || dmin <= lit(stats.get(3 * i + 1)).cast(dt)) &&
-            (dmax.isNull || dmax >= lit(mn).cast(dt))
-        val fNulls = element_at(col("null_counts"), k)
+    val pairs = FileSkipping.survivingPairs(manifestDf(b.manifests),
+      keyCols.zipWithIndex.map { case (k, i) =>
         // sum over an empty key set observes null — treat as zero
-        val nullKeys = Option(stats.get(3 * i + 2))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        val nullHit =
-          if (nullKeys == 0L) lit(false)
-          else fNulls.isNull || fNulls > 0
-        valuesHit || nullHit
-      }
-    }.reduce(_ && _)
-    val pairs = manifestDf(b.manifests).filter(keep)
-      .select("path", "added_snapshot_id").collect()
-      .map(r => (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-      .toIndexedSeq
+        val nullKeys = Option(stats.get(3 * i + 2)).exists(_.asInstanceOf[Long] > 0)
+        FileSkipping.mayMatchNullSafe(k,
+          FileSkipping.mayMatchKeyRange(k, tableSchema(k).dataType,
+            stats.get(3 * i), stats.get(3 * i + 1)),
+          lit(nullKeys))
+      }.reduce(_ && _))
     if (pairs.isEmpty) 0L
     else {
       val memoKey = (pairs, b.deleteManifests, b.eqDeleteManifests)
@@ -1538,17 +1452,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }.reduce(_ unionByName _)
   }
 
-  /** Stats-pruned scan: read only the data files whose manifest
-    * min/max bounds for `column` overlap `[lo, hi]` — Iceberg-style
-    * file skipping over the `lower_bounds`/`upper_bounds` analogue kept
-    * in the manifest. With range-clustered writes (e.g.
-    * `repartitionByRange` on the column before append) this turns a
-    * selective scan from O(table) to O(matching range) I/O — at 100 TB
-    * the difference between reading everything and reading one
-    * partition's worth. Files without recorded bounds are kept (never
-    * prune on missing stats). The predicate itself must still be
-    * applied by the caller — pruning is a superset guarantee.
-    */
   /** The table's partition spec (empty = unpartitioned). */
   def partitionSpec: Seq[PartitionField] = PartitionSpec.read(fs, tableDir)
 
@@ -1592,17 +1495,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * non-monotonic transforms (bucket) where raw-column min/max can't
     * prune. Superset guarantee — callers still apply the row predicate. */
   def readPrunedPartition(preds: (String, Column)*): PrunedScan =
-    currentSnapshot match {
-      case Some(s) if s.numFiles > 0 =>
-        val keep = files.filter(partitionScope(preds))
-        val pa = keep.select("path", "added_snapshot_id").collect()
-          .map(r => (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-          .toIndexedSeq
-        PrunedScan(readFilesAligned(pa), pa.size.toLong, s.numFiles)
-      case _ =>
-        PrunedScan(
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), 0L, 0L)
-    }
+    prunedScan(partitionScope(preds))
 
   /** Manifest-row predicate: might this file hold rows where each named
     * partition-transform output equals the given value? (missing bounds
@@ -1613,10 +1506,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     preds.map { case (name, v) =>
       val f = spec.find(_.name == name).getOrElse(throw
         new IllegalArgumentException(s"no partition field named $name"))
-      val dt = f.outputType(schema(f.column).dataType)
-      val minC = element_at(col("min_values"), name).cast(dt)
-      val maxC = element_at(col("max_values"), name).cast(dt)
-      minC.isNull || maxC.isNull || (maxC >= v && minC <= v)
+      FileSkipping.mayOverlap(name, f.outputType(schema(f.column).dataType), v, v)
     }.reduce(_ && _)
   }
 
@@ -1633,18 +1523,26 @@ final class GraftTable(val spark: SparkSession, val location: String) {
                          clock: Clock = Clock.systemUTC()): Unit =
     graft.cmd.Optimize.runScoped(this, preds, targetFileBytes, clock)
 
+  /** Stats-pruned scan: read only the data files whose manifest
+    * min/max bounds for `column` overlap `[lo, hi]` — Iceberg-style
+    * file skipping over the `lower_bounds`/`upper_bounds` analogue kept
+    * in the manifest. With range-clustered writes (e.g.
+    * `repartitionByRange` on the column before append) this turns a
+    * selective scan from O(table) to O(matching range) I/O — at 100 TB
+    * the difference between reading everything and reading one
+    * partition's worth. Files without recorded bounds are kept (never
+    * prune on missing stats). The predicate itself must still be
+    * applied by the caller — pruning is a superset guarantee.
+    */
   def readPruned(column: String, lo: Column, hi: Column): PrunedScan =
+    prunedScan(FileSkipping.mayOverlap(column, schema(column).dataType, lo, hi))
+
+  /** The current snapshot's files that `keep` admits, read schema-aligned
+    * (`keep` is built only when the snapshot has files). */
+  private def prunedScan(keep: => Column): PrunedScan =
     currentSnapshot match {
       case Some(s) if s.numFiles > 0 =>
-        val dt = schema(column).dataType
-        val m = files
-        val minC = element_at(col("min_values"), column).cast(dt)
-        val maxC = element_at(col("max_values"), column).cast(dt)
-        val keep = m.filter(minC.isNull || maxC.isNull ||
-          (maxC >= lo && minC <= hi))
-        val pa = keep.select("path", "added_snapshot_id").collect()
-          .map(r => (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-          .toIndexedSeq
+        val pa = FileSkipping.survivingPairs(manifestDf(s.manifests), keep)
         PrunedScan(readFilesAligned(pa), pa.size.toLong, s.numFiles)
       case _ =>
         PrunedScan(
@@ -1904,7 +1802,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val specsDerivable = specFields.forall { s =>
       val dt = data.schema(s.column).dataType
       s.transform match {
-        case "identity" => boundable(dt)
+        case "identity" => FileSkipping.boundable(dt)
         case "days" | "months" | "years" | "hours" =>
           dt == DateType || dt == TimestampType || dt == TimestampNTZType
         case "truncate" => dt match {
@@ -1931,7 +1829,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         case None => () // stats unavailable — fall through to the scan
       }
     }
-    val bounded = data.schema.fields.filter(f => boundable(f.dataType))
+    val bounded = data.schema.fields.filter(f => FileSkipping.boundable(f.dataType))
       .map(_.name).toSeq
     // Partition-transform outputs get their own manifest bounds (e.g.
     // bucket8_id) — identity transforms are already covered by the
@@ -1977,7 +1875,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * and min/max bounds read from the parquet FOOTERS the write itself
     * just produced — exact, no second Spark job over the data. Bounds
     * are rendered so that `cast(string as columnType)` on the consumer
-    * side ([[graft.sources.GraftFileIndex]], [[matchingRows]]) yields
+    * side (every rule in [[FileSkipping]]) yields
     * exactly the file's true min/max — the same contract the
     * distributed path's `cast(StringType)` provides.
     *
@@ -2106,7 +2004,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         }
         case _ => None // identity: the column's own entry serves
       }
-    val boundedNames = schema.fields.filter(f => boundable(f.dataType))
+    val boundedNames = schema.fields.filter(f => FileSkipping.boundable(f.dataType))
       .map(_.name).toSeq
     // spec entries the distributed path would emit separately: transform
     // outputs not already covered by the source column's own entry
@@ -2761,20 +2659,6 @@ object GraftTable {
   private[meta] val MorJoinCol = "__graft_mor_join"
   private[meta] val MorAddedCol = "__graft_mor_added"
   private[meta] val MorEqSnapCol = "__graft_mor_eq_snap"
-
-  /** Per-column value-list cap for [[GraftTable.pairsMatchingKeySet]]'s
-    * exact exists-test; larger localized key sets prune by the
-    * (constant-folded, job-free) hull alone. */
-  private[graft] val ExactValueCap = 1024
-
-  /** Column types whose string-encoded min/max round-trip losslessly
-    * through `cast(string)` and back (Spark renders doubles/timestamps
-    * shortest-round-trip), so file-skipping comparisons are exact. */
-  private[graft] def boundable(dt: DataType): Boolean = dt match {
-    case _: NumericType | StringType | DateType |
-         TimestampType | TimestampNTZType => true
-    case _ => false
-  }
 
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[meta] def lockFor(location: String): Object =

@@ -94,11 +94,6 @@ object ManifestIO {
                                bytes: Long): Unit =
     cachePut(path, rows, bytes)
 
-  private[meta] def cacheDrop(path: String): Unit =
-    cache.synchronized {
-      Option(cache.remove(path)).foreach(old => cachedBytes -= old._2)
-    }
-
   /** Test hook: how many manifest relations were served driver-locally. */
   private[graft] val localReadHits = new java.util.concurrent.atomic.AtomicLong
 

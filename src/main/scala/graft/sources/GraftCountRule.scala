@@ -105,8 +105,8 @@ object GraftCountRule extends Rule[LogicalPlan] {
   /** The equivalent aggregate over the KB-scale manifest relation —
     * LocalRelation-backed under the ManifestIO size gate, a manifest
     * parquet scan above it; either way metadata, never data files.
-    * Bounds re-enter through the same `element_at(map, col).cast(dt)`
-    * the file-skipping translation trusts. */
+    * Bounds re-enter through the same typed decoding the file-skipping
+    * rules trust ([[graft.meta.FileSkipping.lowerBound]]). */
   private def rewriteToManifestAgg(agg: Aggregate, gfi: GraftFileIndex,
                                    specs: Seq[FoldSpec]): LogicalPlan = {
     import org.apache.spark.sql.functions._
@@ -118,10 +118,8 @@ object GraftCountRule extends Rule[LogicalPlan] {
         // driver-local manifest rows before this rewrite was chosen
         coalesce(sum(col("record_count")) -
           sum(element_at(col("null_counts"), lit(n))), lit(0L))
-      case MinOf(n, dt) =>
-        min(element_at(col("min_values"), lit(n)).cast(dt))
-      case MaxOf(n, dt) =>
-        max(element_at(col("max_values"), lit(n)).cast(dt))
+      case MinOf(n, dt) => min(graft.meta.FileSkipping.lowerBound(n, dt))
+      case MaxOf(n, dt) => max(graft.meta.FileSkipping.upperBound(n, dt))
     }
     val inner = mdf.agg(cols.head, cols.tail: _*).queryExecution.analyzed
     // preserve the original output attributes exactly (id/name/type)
@@ -248,10 +246,8 @@ object GraftCountRule extends Rule[LogicalPlan] {
         case Some(_) => Undecided
         case None => Undecided
       }
+    case LiteralFirst(attrFirst) => decide(attrFirst, cols, r, zone)
     case EqualTo(a: AttributeReference, Literal(v, _)) => cmp(a, v, cols, r, zone)(
-      none = (lo, hi, ord) => ord.lt(hi, v) || ord.gt(lo, v),
-      all = (lo, hi, ord) => ord.equiv(lo, v) && ord.equiv(hi, v))
-    case EqualTo(Literal(v, _), a: AttributeReference) => cmp(a, v, cols, r, zone)(
       none = (lo, hi, ord) => ord.lt(hi, v) || ord.gt(lo, v),
       all = (lo, hi, ord) => ord.equiv(lo, v) && ord.equiv(hi, v))
     case EqualNullSafe(a: AttributeReference, Literal(v, _)) if v != null =>
@@ -259,25 +255,13 @@ object GraftCountRule extends Rule[LogicalPlan] {
     case GreaterThan(a: AttributeReference, Literal(v, _)) => cmp(a, v, cols, r, zone)(
       none = (lo, hi, ord) => ord.lteq(hi, v),
       all = (lo, hi, ord) => ord.gt(lo, v))
-    case LessThan(Literal(v, _), a: AttributeReference) => cmp(a, v, cols, r, zone)(
-      none = (lo, hi, ord) => ord.lteq(hi, v),
-      all = (lo, hi, ord) => ord.gt(lo, v))
     case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) => cmp(a, v, cols, r, zone)(
-      none = (lo, hi, ord) => ord.lt(hi, v),
-      all = (lo, hi, ord) => ord.gteq(lo, v))
-    case LessThanOrEqual(Literal(v, _), a: AttributeReference) => cmp(a, v, cols, r, zone)(
       none = (lo, hi, ord) => ord.lt(hi, v),
       all = (lo, hi, ord) => ord.gteq(lo, v))
     case LessThan(a: AttributeReference, Literal(v, _)) => cmp(a, v, cols, r, zone)(
       none = (lo, hi, ord) => ord.gteq(lo, v),
       all = (lo, hi, ord) => ord.lt(hi, v))
-    case GreaterThan(Literal(v, _), a: AttributeReference) => cmp(a, v, cols, r, zone)(
-      none = (lo, hi, ord) => ord.gteq(lo, v),
-      all = (lo, hi, ord) => ord.lt(hi, v))
     case LessThanOrEqual(a: AttributeReference, Literal(v, _)) => cmp(a, v, cols, r, zone)(
-      none = (lo, hi, ord) => ord.gt(lo, v),
-      all = (lo, hi, ord) => ord.lteq(hi, v))
-    case GreaterThanOrEqual(Literal(v, _), a: AttributeReference) => cmp(a, v, cols, r, zone)(
       none = (lo, hi, ord) => ord.gt(lo, v),
       all = (lo, hi, ord) => ord.lteq(hi, v))
     case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>

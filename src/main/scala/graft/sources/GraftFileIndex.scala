@@ -1,15 +1,14 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystShims
 import org.apache.spark.sql.types._
 
-import graft.meta.GraftTable
+import graft.meta.{FileSkipping, GraftTable, ManifestIO}
 
 /** A Catalyst [[FileIndex]] over the graft manifest — the integration
   * point that makes file skipping AUTOMATIC: any `WHERE` predicate a
@@ -23,13 +22,16 @@ import graft.meta.GraftTable
   *
   * Scale: the ONLY driver-resident state is the (path, size) pair per
   * live file — the same footprint Spark's own InMemoryFileIndex keeps
-  * for any parquet scan. The per-column min/max and null-count maps stay
-  * in the manifest parquet and are evaluated AS A SPARK JOB at
-  * [[listFiles]] time: pushed predicates are translated to a keep-file
-  * Column over the manifest rows, the manifest is filtered
-  * distributively, and only the surviving (path, size) list returns to
-  * the driver. At ~1M files the bounds maps would be multi-GB of driver
-  * heap if materialized; here they never leave the executors.
+  * for any parquet scan. The per-column min/max and null-count maps are
+  * evaluated at [[listFiles]] time: pushed predicates are translated to
+  * a keep-file Column over the manifest rows ([[FileSkipping]]), and
+  * only the surviving (path, size) list is collected. Below the
+  * [[ManifestIO.LocalReadMaxBytes]] gate (32 MB of manifest) the
+  * manifest is a driver-local relation and the filter folds into it,
+  * with no Spark job; above it the manifest is filtered distributively
+  * AS A SPARK JOB — at ~1M files the bounds maps would be multi-GB of
+  * driver heap if materialized, and there they never leave the
+  * executors.
   *
   * Snapshot isolation: the manifest path list is pinned at construction
   * (and re-pinned by [[refresh]]), so a concurrent commit never changes
@@ -37,8 +39,8 @@ import graft.meta.GraftTable
   *
   * Unknown or non-translatable predicates keep every file (superset
   * guarantee; the row filter still runs) — and when NO pushed predicate
-  * is translatable the manifest job is skipped entirely and the cached
-  * (path, size) list is served.
+  * is translatable the manifest filter is skipped entirely and the
+  * cached (path, size) list is served.
   *
   * Evolution note: this path serves tables whose schema never evolved
   * (one schema generation). [[GraftTable.read]] handles evolved tables
@@ -71,13 +73,13 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
 
   private def load(): (Seq[String], Seq[(String, Long)]) = {
     val manifests = pinnedSnap.map(_.manifests).getOrElse(Seq.empty)
-    val entries = manifestDf(manifests).select("path", "size_bytes")
-      .collect().toIndexedSeq.map(r => (r.getString(0), r.getLong(1)))
-    (manifests, entries)
+    (manifests, pathSizes(manifests, FileSkipping.KeepAll))
   }
 
-  private def manifestDf(paths: Seq[String]): DataFrame =
-    graft.meta.ManifestIO.relation(spark, paths)
+  /** (path, size) of the manifest rows `keep` admits. */
+  private def pathSizes(manifests: Seq[String], keep: Column): Seq[(String, Long)] =
+    ManifestIO.relation(spark, manifests).filter(keep).select("path", "size_bytes")
+      .collect().toIndexedSeq.map(r => (r.getString(0), r.getLong(1)))
 
   override def rootPaths: Seq[Path] = Seq(new Path(table.location))
 
@@ -137,10 +139,7 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
       if (conds.isEmpty) pinned._2
       else {
         val key = dataFilters.map(_.canonicalized.toString).sorted.mkString("&")
-        listCache.computeIfAbsent(key, _ =>
-          manifestDf(pinned._1).filter(conds.reduce(_ && _))
-            .select("path", "size_bytes").collect().toIndexedSeq
-            .map(r => (r.getString(0), r.getLong(1))))
+        listCache.computeIfAbsent(key, _ => pathSizes(pinned._1, conds.reduce(_ && _)))
       }
     val statuses = kept.map { case (p, sz) =>
       new FileStatus(sz, false, 1, 128L * 1024 * 1024, 0L, new Path(p)) }
@@ -150,9 +149,9 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
   // ---- predicate → manifest-column translation ---------------------------
 
   /** Translate a pushed predicate into a "this file might contain a
-    * matching row" Column over manifest rows. None = not translatable
-    * (keep every file — pruning is only ever a superset). Every produced
-    * Column must evaluate TRUE when the needed statistic is missing. */
+    * matching row" Column over manifest rows ([[FileSkipping]] owns
+    * every rule). None = not translatable, or a rule that keeps every
+    * file (pruning is only ever a superset). */
   private def keepFile(expr: Expression): Option[Column] = expr match {
     case And(l, r) => (keepFile(l), keepFile(r)) match {
       case (Some(a), Some(b)) => Some(a && b)
@@ -160,109 +159,69 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
     }
     case Or(l, r) =>
       for { a <- keepFile(l); b <- keepFile(r) } yield a || b
-    case EqualTo(a: AttributeReference, Literal(v, _)) => overlap(a, v)
-    case EqualTo(Literal(v, _), a: AttributeReference) => overlap(a, v)
+    case LiteralFirst(attrFirst) => keepFile(attrFirst)
+    case Not(LiteralFirst(attrFirst)) => keepFile(Not(attrFirst))
+    case EqualTo(a: AttributeReference, Literal(v, _)) => mayEqual(a, v)
     case EqualNullSafe(a: AttributeReference, Literal(v, _)) =>
-      if (v == null) Some(mayHaveNulls(a)) else overlap(a, v)
+      if (v == null) prune(FileSkipping.mayHaveNulls(a.name)) else mayEqual(a, v)
     case EqualNullSafe(Literal(v, _), a: AttributeReference) =>
-      if (v == null) Some(mayHaveNulls(a)) else overlap(a, v)
-    case GreaterThan(a: AttributeReference, Literal(v, _)) => maxAbove(a, v, strict = true)
-    case LessThan(Literal(v, _), a: AttributeReference) => maxAbove(a, v, strict = true)
-    case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) => maxAbove(a, v, strict = false)
-    case LessThanOrEqual(Literal(v, _), a: AttributeReference) => maxAbove(a, v, strict = false)
-    case LessThan(a: AttributeReference, Literal(v, _)) => minBelow(a, v, strict = true)
-    case GreaterThan(Literal(v, _), a: AttributeReference) => minBelow(a, v, strict = true)
-    case LessThanOrEqual(a: AttributeReference, Literal(v, _)) => minBelow(a, v, strict = false)
-    case GreaterThanOrEqual(Literal(v, _), a: AttributeReference) => minBelow(a, v, strict = false)
+      if (v == null) prune(FileSkipping.mayHaveNulls(a.name)) else mayEqual(a, v)
+    case GreaterThan(a: AttributeReference, Literal(v, _)) => above(a, v, strict = true)
+    case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) => above(a, v, strict = false)
+    case LessThan(a: AttributeReference, Literal(v, _)) => below(a, v, strict = true)
+    case LessThanOrEqual(a: AttributeReference, Literal(v, _)) => below(a, v, strict = false)
     case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      anyOverlap(a, vs.collect { case Literal(v, _) if v != null => v })
+      mayEqualAny(a, vs.collect { case Literal(v, _) if v != null => v })
     case InSet(a: AttributeReference, vs) =>
-      anyOverlap(a, vs.toSeq.filter(_ != null))
-    case IsNull(a: AttributeReference) => Some(mayHaveNulls(a))
-    case IsNotNull(a: AttributeReference) => Some(mayHaveNonNulls(a))
-    case Not(IsNull(a: AttributeReference)) => Some(mayHaveNonNulls(a))
-    case Not(IsNotNull(a: AttributeReference)) => Some(mayHaveNulls(a))
-    case Not(EqualTo(a: AttributeReference, Literal(v, _))) => notAllEqual(a, v)
-    case Not(EqualTo(Literal(v, _), a: AttributeReference)) => notAllEqual(a, v)
+      mayEqualAny(a, vs.toSeq.filter(_ != null))
+    case IsNull(a: AttributeReference) => prune(FileSkipping.mayHaveNulls(a.name))
+    case IsNotNull(a: AttributeReference) => prune(FileSkipping.mayHaveNonNulls(a.name))
+    case Not(IsNull(a: AttributeReference)) => prune(FileSkipping.mayHaveNonNulls(a.name))
+    case Not(IsNotNull(a: AttributeReference)) => prune(FileSkipping.mayHaveNulls(a.name))
+    case Not(EqualTo(a: AttributeReference, Literal(v, _))) =>
+      withValue(a, v)(FileSkipping.mayDifferFrom(a.name, a.dataType, _))
     case StartsWith(a: AttributeReference, Literal(p, StringType)) if p != null =>
-      Some(prefixOverlap(a, p.toString))
+      prune(FileSkipping.mayStartWith(a.name, p.toString))
     case _ => None
   }
 
-  private def minC(a: AttributeReference): Column =
-    element_at(col("min_values"), a.name).cast(a.dataType)
-  private def maxC(a: AttributeReference): Column =
-    element_at(col("max_values"), a.name).cast(a.dataType)
-  private def nullC(a: AttributeReference): Column =
-    element_at(col("null_counts"), a.name)
+  /** None for a rule that keeps every file, so an index whose pushed
+    * predicates prune nothing skips the manifest filter entirely. */
+  private def prune(keep: Column): Option[Column] =
+    Some(keep).filter(_ != FileSkipping.KeepAll)
 
-  /** Catalyst-internal literal value → a Column literal of the column's
-    * external type (None for nulls / non-boundable types → no pruning). */
-  private def extLit(a: AttributeReference, v: Any): Option[Column] =
-    if (v == null || !GraftTable.boundable(a.dataType)) None
-    else Some(lit(CatalystTypeConverters.createToScalaConverter(a.dataType)(v))
-      .cast(a.dataType))
+  /** A rule over the non-null Catalyst literal `v` of `a`'s type. */
+  private def withValue(a: AttributeReference, v: Any)(
+      rule: Column => Column): Option[Column] =
+    if (v == null) None else prune(rule(CatalystShims.literal(v, a.dataType)))
 
-  /** `a = v`: keep iff [min, max] covers v (missing bounds → keep) AND,
-    * when the file carries a bloom filter for the column
-    * (`write.bloom-filter.columns`), the bloom might contain v — the
-    * point-lookup prune min/max can't provide on unsorted
-    * high-cardinality columns (every file's range covers every probe;
-    * the bloom says "definitely not here" per file). The probe hash is
-    * computed at planning time from the same XxHash64 the write side
-    * used. */
-  private def overlap(a: AttributeReference, v: Any): Option[Column] =
-    extLit(a, v).map { l =>
-      val bounds =
-        minC(a).isNull || maxC(a).isNull || (maxC(a) >= l && minC(a) <= l)
-      val bloom = element_at(col("blooms"), a.name)
-      val hash = org.apache.spark.sql.graft.CatalystShims
-        .xxHash64Literal(v, a.dataType)
-      // codegen'd per-row probe (BloomProbe expression) — a Scala UDF
-      // here would break whole-stage codegen for the whole listFiles job
-      bounds && org.apache.spark.sql.graft.CatalystShims.bloomProbe(bloom, hash)
-    }
+  private def mayEqual(a: AttributeReference, v: Any): Option[Column] =
+    withValue(a, v)(FileSkipping.mayEqual(a.name, a.dataType, _))
 
-  private def anyOverlap(a: AttributeReference, vs: Seq[Any]): Option[Column] = {
-    val opts = vs.map(v => overlap(a, v))
+  private def mayEqualAny(a: AttributeReference, vs: Seq[Any]): Option[Column] = {
+    val opts = vs.map(v => mayEqual(a, v))
     if (vs.isEmpty || opts.exists(_.isEmpty)) None
     else Some(opts.flatten.reduce(_ || _))
   }
 
-  /** `a > v` (strict) / `a >= v`: keep iff the file max clears v. */
-  private def maxAbove(a: AttributeReference, v: Any,
-                       strict: Boolean): Option[Column] =
-    extLit(a, v).map(l =>
-      maxC(a).isNull || (if (strict) maxC(a) > l else maxC(a) >= l))
+  private def above(a: AttributeReference, v: Any, strict: Boolean): Option[Column] =
+    withValue(a, v)(FileSkipping.mayHaveAbove(a.name, a.dataType, _, strict))
 
-  /** `a < v` (strict) / `a <= v`: keep iff the file min clears v. */
-  private def minBelow(a: AttributeReference, v: Any,
-                       strict: Boolean): Option[Column] =
-    extLit(a, v).map(l =>
-      minC(a).isNull || (if (strict) minC(a) < l else minC(a) <= l))
+  private def below(a: AttributeReference, v: Any, strict: Boolean): Option[Column] =
+    withValue(a, v)(FileSkipping.mayHaveBelow(a.name, a.dataType, _, strict))
+}
 
-  /** `a IS NULL`: the manifest's null_counts says exactly — skip files
-    * with zero nulls in the column (missing count → keep). */
-  private def mayHaveNulls(a: AttributeReference): Column =
-    nullC(a).isNull || nullC(a) > 0
-
-  /** `a IS NOT NULL`: skip files where EVERY row is null in the column
-    * (null_count == record_count — e.g. a pre-backfill append). */
-  private def mayHaveNonNulls(a: AttributeReference): Column =
-    nullC(a).isNull || nullC(a) < col("record_count")
-
-  /** `NOT (a = v)`: skippable only when every non-null row equals v
-    * (min == max == v); null rows never satisfy the predicate either. */
-  private def notAllEqual(a: AttributeReference, v: Any): Option[Column] =
-    extLit(a, v).map(l => coalesce(!(minC(a) === l && maxC(a) === l), lit(true)))
-
-  /** `a LIKE 'p%'`: truncate the string bounds to the prefix length —
-    * prefix-truncation is monotone under lexicographic order, so
-    * prefix(min) <= p <= prefix(max) is a necessary condition. */
-  private def prefixOverlap(a: AttributeReference, p: String): Column = {
-    val mn = element_at(col("min_values"), a.name)
-    val mx = element_at(col("max_values"), a.name)
-    mn.isNull || mx.isNull ||
-      (substring(mn, 1, p.length) <= p && substring(mx, 1, p.length) >= p)
+/** `literal op attribute` as the equivalent `attribute op' literal`, so
+  * the manifest-statistics translators ([[GraftFileIndex]]'s keep-file
+  * rules, [[GraftCountRule]]'s fold) match one orientation. `<=>` is
+  * left alone: each translator handles its own NULL side. */
+private[sources] object LiteralFirst {
+  def unapply(e: Expression): Option[Expression] = e match {
+    case EqualTo(l: Literal, a: AttributeReference) => Some(EqualTo(a, l))
+    case LessThan(l: Literal, a: AttributeReference) => Some(GreaterThan(a, l))
+    case LessThanOrEqual(l: Literal, a: AttributeReference) => Some(GreaterThanOrEqual(a, l))
+    case GreaterThan(l: Literal, a: AttributeReference) => Some(LessThan(a, l))
+    case GreaterThanOrEqual(l: Literal, a: AttributeReference) => Some(LessThanOrEqual(a, l))
+    case _ => None
   }
 }

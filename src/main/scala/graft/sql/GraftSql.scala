@@ -1236,6 +1236,12 @@ object GraftSql {
 
   private def parseWhereTerm(schema: StructType,
                              term: String): org.apache.spark.sql.Column = {
+    // a literal the column type cannot hold exactly (`int_col = 1.5`,
+    // `int_col = 3000000000`) is outside the closed grammar: Spark's
+    // parser widens both sides and the term matches no row
+    def value(raw: String, dt: DataType): Any =
+      try coerce(parseLiteral(raw.trim), dt)
+      catch { case e: ArithmeticException => throw new IllegalArgumentException(e) }
     def c(id: String) = {
       val name = unquote(id)
       require(schema.fieldNames.contains(name),
@@ -1248,12 +1254,10 @@ object GraftSql {
       case IsNullTerm(id) => c(id)._1.isNull
       case InTerm(id, vals) =>
         val (column, dt) = c(id)
-        val lits = splitTop(vals, ',')
-          .map(v => coerce(parseLiteral(v.trim), dt))
-        column.isin(lits: _*)
+        column.isin(splitTop(vals, ',').map(value(_, dt)): _*)
       case CmpTerm(id, op, rawLit) =>
         val (column, dt) = c(id)
-        val v = lit(coerce(parseLiteral(rawLit.trim), dt))
+        val v = lit(value(rawLit, dt))
         op match {
           case "=" => column === v
           case "<>" | "!=" => column =!= v

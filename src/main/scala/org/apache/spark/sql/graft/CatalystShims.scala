@@ -31,12 +31,22 @@ object CatalystShims {
       new BloomFilterAggregate(new XxHash64(Seq(expr(child))),
         Literal(expectedItems), Literal(numBits)).toAggregateExpression())
 
-  /** XxHash64 of one literal value (catalyst-internal representation),
+  /** XxHash64 of a non-null literal Column (`lit(v)` or [[literal]]),
     * evaluated at planning time — the probe-side hash matching what
-    * [[bloomAgg]] put into the filter. */
-  def xxHash64Literal(value: Any, dt: DataType): Long =
-    new XxHash64(Seq(Literal(value, dt))).eval(InternalRow.empty)
-      .asInstanceOf[Long]
+    * [[bloomAgg]] put into the filter (None for anything else). */
+  def xxHash64Literal(c: Column): Option[Long] = {
+    val l = c.node match {
+      case org.apache.spark.sql.internal.Literal(v, dt, _) =>
+        Some(dt.fold(Literal.create(v))(Literal.create(v, _)))
+      case _ => Some(expr(c)).collect { case l: Literal => l }
+    }
+    l.filter(_.value != null).map(l =>
+      new XxHash64(Seq(l)).eval(InternalRow.empty).asInstanceOf[Long])
+  }
+
+  /** A Catalyst-internal value of type `dt` as a literal Column. */
+  def literal(value: Any, dt: DataType): Column =
+    ExpressionUtils.column(Literal(value, dt))
 
   /** Per-row bloom probe as a Column (see [[graft.functions.BloomProbe]]
     * — catalyst's own probe insists on a constant filter). */

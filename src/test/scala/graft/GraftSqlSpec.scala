@@ -674,6 +674,15 @@ class GraftSqlSpec extends SparkSpec {
     fx.sql("DELETE FROM t WHERE k IN (1, 3) AND v IS NOT NULL")
     assert(t.read.filter($"k".isin(1, 3)).count() == 0)
 
+    // a literal the INTEGER column cannot hold exactly matches no row
+    // (through the fallback) instead of failing its coercion
+    val live = t.rowCount
+    fx.sql("DELETE FROM t WHERE k = 1.5")
+    fx.sql("UPDATE t SET grp = 'z' WHERE k = 3000000000")
+    assert(t.rowCount == live && t.read.filter($"grp" === "z").count() == 0)
+    fx.sql("DELETE FROM t WHERE k IN (2, 2.5)")
+    assert(t.rowCount == live - 1 && t.read.filter($"k" === 2).count() == 0)
+
     // outside the closed conjunction grammar → the general-predicate
     // fallback: OR, BETWEEN, functions, double-quoted identifiers
     fx.sql("DELETE FROM t WHERE k = 0 OR k = 2")
