@@ -101,7 +101,7 @@ object ExpireSnapshots {
                           retained: Seq[graft.meta.Snapshot])
       : org.apache.spark.sql.DataFrame = {
     def manifests(ss: Seq[graft.meta.Snapshot]) =
-      graft.meta.ManifestIO.relation(table.spark,
+      graft.meta.ManifestIO.relation(table.spark, table.hadoopConf,
         ss.flatMap(manifestPathsOf).distinct)
     manifests(expired).select("path").distinct()
       .join(manifests(retained).select("path"), Seq("path"), "left_anti")

@@ -48,8 +48,12 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   import GraftTable._
 
   private val tableDir = new Path(location)
-  private val fs: FileSystem =
-    tableDir.getFileSystem(spark.sessionState.newHadoopConf())
+  /** The handle's one Hadoop conf: its FileSystem, footer reads and
+    * driver-local manifest I/O all share it (a fresh conf per call
+    * would re-read Hadoop's default resources each time). */
+  private[graft] val hadoopConf: Configuration =
+    spark.sessionState.newHadoopConf()
+  private val fs: FileSystem = tableDir.getFileSystem(hadoopConf)
   // JVM-wide lock per table path, not per GraftTable instance — two
   // in-process handles on the same table serialize commits here (cheap);
   // cross-process writers are handled by the log CAS instead.
@@ -166,7 +170,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * analogue of Iceberg's `"t$files"` (tests/test_maintenance.py:50). */
   def files: DataFrame = currentSnapshot match {
     case Some(s) if s.manifests.nonEmpty =>
-      ManifestIO.relation(spark, s.manifests)
+      ManifestIO.relation(spark, hadoopConf, s.manifests)
     case _ => ManifestIO.emptyRelation(spark)
   }
 
@@ -542,7 +546,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     manifestDf(currentSnapshot.map(_.deleteManifests).getOrElse(Seq.empty))
 
   private def manifestDf(paths: Seq[String]): DataFrame =
-    ManifestIO.relation(spark, paths)
+    ManifestIO.relation(spark, hadoopConf, paths)
 
   /** All (file_path, pos) delete entries of a snapshot as a DataFrame. */
   private def deleteRowsOf(s: Snapshot): DataFrame = {
@@ -589,7 +593,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // (writers no longer commit them, but a legacy manifest may carry
     // one): null key names → deletes nothing → skip, instead of reading
     // its NULL key record.
-    val locals = ManifestIO.readLocalByDir(spark, manifests)
+    val locals = ManifestIO.readLocalByDir(hadoopConf, manifests)
     val rows: Seq[(String, java.lang.Long, Seq[String], String)] =
       if (locals.isDefined)
         locals.get.flatMap { case (m, rs) =>
@@ -633,7 +637,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * the nullable embedded intro column compacted files carry — files
     * written without it read as null there. */
   private def eqKeySchema(info: EqFileInfo): StructType = {
-    val fileSchema = ManifestIO.parquetSchemaOf(spark, new Path(info.path))
+    val fileSchema = ManifestIO.parquetSchemaOf(hadoopConf, new Path(info.path))
       .getOrElse(spark.read.parquet(info.path).schema)
     StructType(info.keys.map(k => fileSchema(k)) :+
       StructField(EqIntroCol, LongType, nullable = true))
@@ -857,17 +861,18 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val commitDir = new Path(tableDir, s"data/${UUID.randomUUID()}")
       // HASH-cluster by target file: every file's entries land in exactly
       // one output file (contiguous after the sort), and unlike a range
-      // shuffle there is no boundary-sampling pass. Schema-only files
-      // from empty tasks are pruned after the write (pruneEmptyFiles),
-      // so tiny deletes still commit one small file. The deleted-row
-      // count rides on the same write via observe, not a separate
-      // count job.
+      // shuffle there is no boundary-sampling pass. No partition count:
+      // AQE coalesces the shuffle by size, so a small delete writes ONE
+      // file whatever the random data paths hash to (a fixed count
+      // spread the same delete over 3 or 4 files from run to run).
+      // Schema-only files from empty tasks are pruned after the write
+      // (pruneEmptyFiles). The deleted-row count rides on the same write
+      // via observe, not a separate count job.
       val obs = new org.apache.spark.sql.Observation(
         s"mor-delete-${commitDir.getName}")
       dataWrite(newDeletes
         .observe(obs, count(lit(1)).as("n"))
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("file_path"))
+        .repartition(col("file_path"))
         .sortWithinPartitions("file_path", "pos"))
         .parquet(commitDir.toString)
       fs.delete(new Path(commitDir, "_SUCCESS"), false)
@@ -1043,16 +1048,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * footers, driver-side; the file count is bounded by the shuffle
     * partition count. */
   private[graft] def pruneEmptyFiles(dir: Path): Unit = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
     GraftTable.listFiles(fs, dir).foreach { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(f.getPath, conf))
-      val n = try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally reader.close()
-      if (n == 0L) fs.delete(f.getPath, false)
+      if (ManifestIO.footer(hadoopConf, f.getPath).getBlocks.asScala
+          .forall(_.getRowCount == 0L)) fs.delete(f.getPath, false)
     }
   }
 
@@ -1098,8 +1097,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def writeManifestFile(manifestDir: Path, df: DataFrame): Unit =
     ManifestIO.localRowsOf(df) match {
       case Some(rows) =>
-        val written = ManifestIO.writeLocal(fs,
-          spark.sessionState.newHadoopConf(), manifestDir, rows)
+        val written = ManifestIO.writeLocal(fs, hadoopConf, manifestDir, rows)
         ManifestIO.cacheSeed(normalize(manifestDir), rows, written)
       case None =>
         df.coalesce(1).write.mode("overwrite").parquet(manifestDir.toString)
@@ -1594,7 +1592,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     commitLock.synchronized {
       val src = new Path(location)
       require(fs.exists(src), s"add_files: no such location $location")
-      val srcSchema = ManifestIO.parquetSchemaOf(spark, src)
+      val srcSchema = ManifestIO.parquetSchemaOf(hadoopConf, src)
         .getOrElse(spark.read.parquet(location).schema)
       val cur = schema
       require(srcSchema.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -1773,16 +1771,12 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private[graft] def inventory(commitDir: Path): DataFrame = {
     val listed = listFiles(fs, commitDir)
       .map(f => (normalize(f.getPath), f.getLen))
-    import spark.implicits._
-    val fsDf = listed.toDF("path", "size_bytes")
     if (listed.isEmpty) return ManifestIO.emptyRelation(spark)
     // schema from the footer's embedded Spark schema JSON (driver-side,
     // no inference job); inference only for non-Spark-written files
     val dataSchema = ManifestIO
-      .parquetSchemaOf(spark, new Path(listed.head._1))
+      .parquetSchemaOf(hadoopConf, new Path(listed.head._1))
       .getOrElse(spark.read.parquet(commitDir.toString).schema)
-    val data = spark.read.schema(dataSchema).parquet(commitDir.toString)
-    val names = data.schema.fieldNames.toSeq
     // Small flat commits take the FOOTER path: row counts, null counts,
     // and min/max come from the parquet footers the write already
     // produced — exact, driver-side, no second read of the data. The
@@ -1798,9 +1792,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // monotonic non-decreasing transforms days / truncate, where
     // transform(min)..transform(max) are exact output bounds. bucket
     // (a hash) is not monotonic — only the distributed path can bound it.
-    val specFields = partitionSpec.filter(s => data.columns.contains(s.column))
+    val specFields = partitionSpec.filter(s =>
+      dataSchema.fieldNames.contains(s.column))
     val specsDerivable = specFields.forall { s =>
-      val dt = data.schema(s.column).dataType
+      val dt = dataSchema(s.column).dataType
       s.transform match {
         case "identity" => FileSkipping.boundable(dt)
         case "days" | "months" | "years" | "hours" =>
@@ -1814,21 +1809,25 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       }
     }
     if (listed.size <= FooterInventoryMaxFiles && specsDerivable &&
-        bloomColumns(names).isEmpty &&
-        data.schema.fields.forall(f => f.dataType match {
+        bloomColumns(dataSchema.fieldNames.toSeq).isEmpty &&
+        dataSchema.fields.forall(f => f.dataType match {
           case _: DecimalType => false
           case _: NumericType | StringType | BinaryType | BooleanType |
                DateType | TimestampType | TimestampNTZType |
                _: ArrayType | _: MapType | _: StructType => true
           case _ => false
         })) {
-      footerInventory(listed, data.schema, specFields) match {
+      footerInventory(listed, dataSchema, specFields) match {
         case Some(df) =>
           GraftTable.footerInventoryHits.incrementAndGet()
           return df
         case None => () // stats unavailable — fall through to the scan
       }
     }
+    // the distributed aggregation: the only branch that needs the
+    // commit dir as a relation (a listing plus analysis)
+    val data = spark.read.schema(dataSchema).parquet(commitDir.toString)
+    val names = data.schema.fieldNames.toSeq
     val bounded = data.schema.fields.filter(f => FileSkipping.boundable(f.dataType))
       .map(_.name).toSeq
     // Partition-transform outputs get their own manifest bounds (e.g.
@@ -1864,7 +1863,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // NOT broadcast: with blooms configured the counts side carries
     // filter bytes per file — a shuffle of manifest-sized rows is the
     // scale-safe shape (AQE coalesces the tiny case anyway)
-    fsDf.join(counts, Seq("path"), "left")
+    import spark.implicits._
+    listed.toDF("path", "size_bytes").join(counts, Seq("path"), "left")
       .select(col("path"), col("size_bytes"),
         coalesce(col("record_count"), lit(0L)).as("record_count"),
         col("null_counts"), col("min_values"), col("max_values"),
@@ -1897,16 +1897,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def footerInventory(listed: Seq[(String, Long)],
                               schema: StructType,
                               specs: Seq[PartitionField]): Option[DataFrame] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
     import org.apache.parquet.schema.PrimitiveType
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
     val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
     val tsFmt = java.time.format.DateTimeFormatter
       .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
@@ -2040,68 +2037,65 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
     try {
       val rows = listed.map { case (p, size) =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(p), conf))
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala.toSeq
-          val n = blocks.map(_.getRowCount).sum
-          if (n == 0L) {
-            // mirror the distributed path's left-join miss: zero rows,
-            // null stat maps
-            Row(p, size, 0L, null, null, null, null)
-          } else {
-            val byName = blocks.flatMap(_.getColumns.asScala)
-              .groupBy(_.getPath.toDotString)
-            val fileSchema = reader.getFooter.getFileMetaData.getSchema
-            val nulls = schema.fields.map { f =>
-              f.name -> (f.dataType match {
-                case _: ArrayType | _: MapType | _: StructType =>
-                  nestedNulls(fileSchema, byName, f.name)
-                case _ =>
-                  byName.getOrElse(f.name, fallback()).map { c =>
-                    val st = c.getStatistics
-                    if (st == null || !st.isNumNullsSet) fallback()
-                    st.getNumNulls
-                  }.sum
-              })
-            }.toMap
-            // raw footer bound of a column: Some(value), or None when
-            // every value is null; aborts when bounds were dropped
-            // despite non-null rows (NaN, oversized binary)
-            def raw(name: String, wantMax: Boolean): Option[AnyRef] = {
-              val chunks = byName(name)
-              val pt = chunks.head.getPrimitiveType
-              val cmp = pt.comparator()
-                .asInstanceOf[java.util.Comparator[AnyRef]]
-              val vals = chunks.flatMap { c =>
-                val st = c.getStatistics
-                if (st.hasNonNullValue)
-                  Some(if (wantMax) st.genericGetMax else st.genericGetMin)
-                else if (st.getNumNulls == c.getValueCount) None
-                else fallback()
-              }.map(_.asInstanceOf[AnyRef])
-              if (vals.isEmpty) Option.empty[AnyRef]
-              else Some(vals.reduce((a, b) =>
-                if ((cmp.compare(a, b) >= 0) == wantMax) a else b))
-            }
-            def bound(wantMax: Boolean): Map[String, String] = {
-              val own = boundedNames.map { name =>
-                val dt = schema(name).dataType
-                val pt = byName(name).head.getPrimitiveType
-                name -> raw(name, wantMax).map(v =>
-                  render(v, dt, pt).getOrElse(fallback())).orNull
-              }
-              val derived = specEntries.map { s =>
-                val dt = schema(s.column).dataType
-                s.name -> raw(s.column, wantMax).map(v =>
-                  derive(s, v, dt).getOrElse(fallback())).orNull
-              }
-              (own ++ derived).toMap
-            }
-            Row(p, size, n, nulls,
-              bound(wantMax = false), bound(wantMax = true), null)
+        val footer = ManifestIO.footer(hadoopConf, new Path(p))
+        val blocks = footer.getBlocks.asScala.toSeq
+        val n = blocks.map(_.getRowCount).sum
+        if (n == 0L) {
+          // mirror the distributed path's left-join miss: zero rows,
+          // null stat maps
+          Row(p, size, 0L, null, null, null, null)
+        } else {
+          val byName = blocks.flatMap(_.getColumns.asScala)
+            .groupBy(_.getPath.toDotString)
+          val fileSchema = footer.getFileMetaData.getSchema
+          val nulls = schema.fields.map { f =>
+            f.name -> (f.dataType match {
+              case _: ArrayType | _: MapType | _: StructType =>
+                nestedNulls(fileSchema, byName, f.name)
+              case _ =>
+                byName.getOrElse(f.name, fallback()).map { c =>
+                  val st = c.getStatistics
+                  if (st == null || !st.isNumNullsSet) fallback()
+                  st.getNumNulls
+                }.sum
+            })
+          }.toMap
+          // raw footer bound of a column: Some(value), or None when
+          // every value is null; aborts when bounds were dropped
+          // despite non-null rows (NaN, oversized binary)
+          def raw(name: String, wantMax: Boolean): Option[AnyRef] = {
+            val chunks = byName(name)
+            val pt = chunks.head.getPrimitiveType
+            val cmp = pt.comparator()
+              .asInstanceOf[java.util.Comparator[AnyRef]]
+            val vals = chunks.flatMap { c =>
+              val st = c.getStatistics
+              if (st.hasNonNullValue)
+                Some(if (wantMax) st.genericGetMax else st.genericGetMin)
+              else if (st.getNumNulls == c.getValueCount) None
+              else fallback()
+            }.map(_.asInstanceOf[AnyRef])
+            if (vals.isEmpty) Option.empty[AnyRef]
+            else Some(vals.reduce((a, b) =>
+              if ((cmp.compare(a, b) >= 0) == wantMax) a else b))
           }
-        } finally reader.close()
+          def bound(wantMax: Boolean): Map[String, String] = {
+            val own = boundedNames.map { name =>
+              val dt = schema(name).dataType
+              val pt = byName(name).head.getPrimitiveType
+              name -> raw(name, wantMax).map(v =>
+                render(v, dt, pt).getOrElse(fallback())).orNull
+            }
+            val derived = specEntries.map { s =>
+              val dt = schema(s.column).dataType
+              s.name -> raw(s.column, wantMax).map(v =>
+                derive(s, v, dt).getOrElse(fallback())).orNull
+            }
+            (own ++ derived).toMap
+          }
+          Row(p, size, n, nulls,
+            bound(wantMax = false), bound(wantMax = true), null)
+        }
       }
       Some(spark.createDataFrame(rows.asJava,
         StructType(ManifestSchema.fields.dropRight(1))))
@@ -2193,8 +2187,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
             if (r.isNullAt(7))
               Row(r(0), r(1), r(2), r(3), r(4), r(5), r(6), id)
             else r)
-          val written = ManifestIO.writeLocal(fs,
-            spark.sessionState.newHadoopConf(), manifestDir, stamped)
+          val written = ManifestIO.writeLocal(fs, hadoopConf,
+            manifestDir, stamped)
           ManifestIO.cacheSeed(normalize(manifestDir), stamped, written)
           // null-tolerant like the Observation path's coalesce(sum, 0):
           // a lineage-pass-through frame (rewrite_manifests) may carry a
@@ -2232,8 +2226,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           case Some(rows) =>
             val stamped = rows.map(r =>
               Row(r(0), r(1), r(2), r(3), r(4), r(5), r(6), id))
-            val written = ManifestIO.writeLocal(fs,
-              spark.sessionState.newHadoopConf(), eqManifestDir.get, stamped)
+            val written = ManifestIO.writeLocal(fs, hadoopConf,
+              eqManifestDir.get, stamped)
             ManifestIO.cacheSeed(normalize(eqManifestDir.get), stamped,
               written)
           case None =>
@@ -2530,7 +2524,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
                                        clock: Clock): Unit = {
     val fresh = inventory(commitDir)
     val local = for {
-      base <- ManifestIO.readLocal(spark, basis.toSeq.flatMap(_.manifests))
+      base <- ManifestIO.readLocal(hadoopConf, basis.toSeq.flatMap(_.manifests))
       added <- ManifestIO.localRowsOf(fresh)
     } yield base.filterNot(r => removed(r.getString(0))) ++
       added.map(r => Row.fromSeq(r.toSeq :+ null))
@@ -2550,7 +2544,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
                                              removed: Set[String],
                                              fresh: DataFrame): DataFrame = {
     import spark.implicits._
-    ManifestIO.relation(spark, basis.toSeq.flatMap(_.manifests))
+    ManifestIO.relation(spark, hadoopConf, basis.toSeq.flatMap(_.manifests))
       .join(removed.toSeq.toDF("path"), Seq("path"), "left_anti")
       .unionByName(fresh.withColumn("added_snapshot_id", lit(null).cast(LongType)))
   }

@@ -4,11 +4,12 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -47,6 +48,14 @@ import org.apache.spark.sql.types._
   * assemble the kept rows and the fresh inventory on the driver the same
   * way ([[GraftTable.commitReplacement]]). Distributed inventories
   * keep the Spark write.
+  *
+  * Data-file footers are read here too, through [[footer]] alone: the
+  * footer inventory, empty-file pruning and embedded-schema reads.
+  * Every entry point takes the caller's already-loaded Hadoop conf (one
+  * per [[GraftTable]] handle, the conf its FileSystem is built from).
+  * Copying the session conf, or letting parquet-mr build read options
+  * on a fresh `Configuration`, re-parses Hadoop's default resources —
+  * about 20 ms per call, several times per commit.
   */
 object ManifestIO {
 
@@ -100,9 +109,10 @@ object ManifestIO {
   /** The manifest relation for `paths` — LocalRelation-backed under the
     * size gate (planning-time filters/collects are then job-free), else
     * the distributed parquet read. */
-  def relation(spark: SparkSession, paths: Seq[String]): DataFrame =
+  def relation(spark: SparkSession, conf: Configuration,
+               paths: Seq[String]): DataFrame =
     if (paths.isEmpty) emptyRelation(spark)
-    else readLocal(spark, paths) match {
+    else readLocal(conf, paths) match {
       case Some(rows) =>
         import scala.jdk.CollectionConverters._
         localReadHits.incrementAndGet()
@@ -123,8 +133,8 @@ object ManifestIO {
     * the UNCACHED portion exceeds the size gate or any file is
     * undecodable (caller falls back to the distributed read — fallback
     * is always correct, local is only a latency optimization). */
-  def readLocal(spark: SparkSession, paths: Seq[String]): Option[IndexedSeq[Row]] =
-    readLocalByDir(spark, paths).map(_.flatMap(_._2))
+  def readLocal(conf: Configuration, paths: Seq[String]): Option[IndexedSeq[Row]] =
+    readLocalByDir(conf, paths).map(_.flatMap(_._2))
 
   /** [[readLocal]] with per-dir attribution: (normalized dir path, its
     * rows) in input order — for callers that need to know which
@@ -136,9 +146,8 @@ object ManifestIO {
     * nothing to return — gating them would just demote a fully-warm
     * manifest set to a distributed re-read forever (worst case returned
     * from cache = the cache's own 256 MB byte bound). */
-  def readLocalByDir(spark: SparkSession, paths: Seq[String])
+  def readLocalByDir(conf: Configuration, paths: Seq[String])
       : Option[IndexedSeq[(String, IndexedSeq[Row])]] = {
-    val conf = spark.sessionState.newHadoopConf()
     try {
       val parts = paths.map { p =>
         val key = GraftTable.normalize(p)
@@ -278,21 +287,26 @@ object ManifestIO {
     * Spark's own inference would return, without the inference job a
     * bare `spark.read.parquet(...).schema` submits. None for non-Spark
     * files (no embedded schema) — callers fall back to inference. */
-  def parquetSchemaOf(spark: SparkSession, fileOrDir: Path): Option[StructType] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
+  def parquetSchemaOf(conf: Configuration, fileOrDir: Path): Option[StructType] =
     try {
-      val conf = spark.sessionState.newHadoopConf()
       val fs = fileOrDir.getFileSystem(conf)
       val file =
         if (fs.getFileStatus(fileOrDir).isDirectory)
           GraftTable.listFiles(fs, fileOrDir).head.getPath
         else fileOrDir
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+      Option(footer(conf, file).getFileMetaData.getKeyValueMetaData
           .get("org.apache.spark.sql.parquet.row.metadata"))
         .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      finally reader.close()
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The parquet footer of `file`, read on the driver with read options
+    * built from `conf`. The one-argument `ParquetFileReader.open` builds
+    * its options on a fresh `Configuration` instead, which parses
+    * Hadoop's default resources on every call. */
+  def footer(conf: Configuration, file: Path): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf).build())
+    try reader.getFooter finally reader.close()
   }
 
   /** The rows of a DataFrame whose OPTIMIZED plan is a LocalRelation —

@@ -110,7 +110,8 @@ object GraftCountRule extends Rule[LogicalPlan] {
   private def rewriteToManifestAgg(agg: Aggregate, gfi: GraftFileIndex,
                                    specs: Seq[FoldSpec]): LogicalPlan = {
     import org.apache.spark.sql.functions._
-    val mdf = graft.meta.ManifestIO.relation(gfi.session, gfi.manifestPaths)
+    val mdf = graft.meta.ManifestIO.relation(gfi.session, gfi.hadoopConf,
+      gfi.manifestPaths)
     val cols = specs.map {
       case CountLit => coalesce(sum(col("record_count")), lit(0L))
       case CountColOf(n) =>
@@ -162,7 +163,7 @@ object GraftCountRule extends Rule[LogicalPlan] {
     * so it refuses the fold instead. */
   private def nullCountsComplete(gfi: GraftFileIndex,
                                  names: Seq[String]): Boolean =
-    graft.meta.ManifestIO.readLocal(gfi.session, gfi.manifestPaths)
+    graft.meta.ManifestIO.readLocal(gfi.hadoopConf, gfi.manifestPaths)
       .exists(_.forall { r =>
         val m = r.get(3).asInstanceOf[scala.collection.Map[String, Any]]
         m != null && names.forall(n => m.get(n).exists(_ != null))
@@ -200,7 +201,7 @@ object GraftCountRule extends Rule[LogicalPlan] {
       val countOnly = agg.aggregateExpressions
         .forall(e => classify(e, Map.empty).contains(CountLit))
       if (!countOnly || gfi.metadataRowCount.isEmpty) None
-      else graft.meta.ManifestIO.readLocal(gfi.session, gfi.manifestPaths)
+      else graft.meta.ManifestIO.readLocal(gfi.hadoopConf, gfi.manifestPaths)
         .flatMap { rows =>
           val zone = gfi.session.sessionState.conf.sessionLocalTimeZone
           val verdicts = rows.map(r => (decide(cond, colMap, r, zone), r))

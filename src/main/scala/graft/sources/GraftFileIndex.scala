@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -78,7 +79,8 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
 
   /** (path, size) of the manifest rows `keep` admits. */
   private def pathSizes(manifests: Seq[String], keep: Column): Seq[(String, Long)] =
-    ManifestIO.relation(spark, manifests).filter(keep).select("path", "size_bytes")
+    ManifestIO.relation(spark, hadoopConf, manifests).filter(keep)
+      .select("path", "size_bytes")
       .collect().toIndexedSeq.map(r => (r.getString(0), r.getLong(1)))
 
   override def rootPaths: Seq[Path] = Seq(new Path(table.location))
@@ -105,6 +107,7 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
 
   /** For [[GraftCountRule]]'s manifest-aggregate rewrite. */
   private[sources] def session: SparkSession = spark
+  private[sources] def hadoopConf: Configuration = table.hadoopConf
   private[sources] def manifestPaths: Seq[String] = pinned._1
   private[sources] def snapshot: Option[graft.meta.Snapshot] = pinnedSnap
 

@@ -134,7 +134,7 @@ class CountPushdownSpec extends SparkSpec {
     // scan still returns the right answer)
     val dir = t.currentSnapshot.get.manifests.head
     val key = GraftTable.normalize(dir)
-    val rows0 = graft.meta.ManifestIO.readLocal(spark, Seq(dir)).get
+    val rows0 = graft.meta.ManifestIO.readLocal(t.hadoopConf, Seq(dir)).get
     val doctored = rows0.map { r =>
       val nc = r.get(3).asInstanceOf[scala.collection.Map[String, Any]]
       org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2),
@@ -142,7 +142,7 @@ class CountPushdownSpec extends SparkSpec {
         r.get(4), r.get(5), r.get(6), r.get(7))
     }
     val bytes = graft.meta.ManifestIO.writeLocal(t.fileSystem,
-      spark.sessionState.newHadoopConf(), new org.apache.hadoop.fs.Path(dir),
+      t.hadoopConf, new org.apache.hadoop.fs.Path(dir),
       doctored)
     graft.meta.ManifestIO.cacheSeed(key, doctored, bytes)
     val refused = spark.read.format("graft").load(loc).agg(count($"v"))

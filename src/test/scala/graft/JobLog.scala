@@ -43,4 +43,8 @@ object JobLog {
   /** Jobs whose stack passes through the commit (manifest write). */
   def atCommit(sites: Seq[String]): Seq[String] =
     sites.filter(_.contains("graft.meta.GraftTable.commit"))
+
+  /** Jobs whose stack passes through a commit dir's inventory. */
+  def inInventory(sites: Seq[String]): Seq[String] =
+    sites.filter(_.contains("graft.meta.GraftTable.inventory"))
 }

@@ -15,6 +15,8 @@ import graft.meta.{GraftTable, ManifestIO}
   * freely at any table size. */
 class ManifestIOSpec extends SparkSpec {
 
+  private lazy val hadoopConf = spark.sessionState.newHadoopConf()
+
   private def sampleRows: Seq[Row] = Seq(
     Row("file:/t/data/u1/part-0.parquet", 1234L, 10L,
       Map("a" -> 0L, "b" -> 3L), Map("a" -> "1", "b" -> "x"),
@@ -48,7 +50,7 @@ class ManifestIOSpec extends SparkSpec {
     val dir = new Path(tmpDir("manifestio"), "m2")
     spark.createDataFrame(sampleRows.asJava, GraftTable.ManifestSchema)
       .coalesce(1).write.parquet(dir.toString)
-    val back = ManifestIO.readLocal(spark, Seq(dir.toString))
+    val back = ManifestIO.readLocal(hadoopConf, Seq(dir.toString))
     assert(back.isDefined, "local read fell back on a Spark-written manifest")
     assert(norm(back.get) === norm(sampleRows))
   }
@@ -58,7 +60,7 @@ class ManifestIOSpec extends SparkSpec {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     ManifestIO.writeLocal(fs, spark.sessionState.newHadoopConf(), dir,
       sampleRows)
-    val back = ManifestIO.readLocal(spark, Seq(dir.toString))
+    val back = ManifestIO.readLocal(hadoopConf, Seq(dir.toString))
     assert(back.isDefined)
     assert(norm(back.get) === norm(sampleRows))
   }
@@ -66,19 +68,19 @@ class ManifestIOSpec extends SparkSpec {
   test("a missing manifest dir fails loudly — never reads as zero rows") {
     val dir = new Path(tmpDir("manifestio"), "vanished")
     // local read refuses (no silent empty, nothing cached) …
-    assert(ManifestIO.readLocal(spark, Seq(dir.toString)).isEmpty,
+    assert(ManifestIO.readLocal(hadoopConf, Seq(dir.toString)).isEmpty,
       "a vanished log-referenced manifest must not read as empty — " +
         "empty delete manifests would resurrect MOR-deleted rows")
     // … so relation() falls to the distributed read, which fails loudly
     intercept[Exception] {
-      ManifestIO.relation(spark, Seq(dir.toString)).collect()
+      ManifestIO.relation(spark, hadoopConf, Seq(dir.toString)).collect()
     }
     // and the miss was NOT cached as empty: once the dir appears, the
     // same path serves its real rows
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     ManifestIO.writeLocal(fs, spark.sessionState.newHadoopConf(), dir,
       sampleRows)
-    val back = ManifestIO.readLocal(spark, Seq(dir.toString))
+    val back = ManifestIO.readLocal(hadoopConf, Seq(dir.toString))
     assert(back.isDefined && norm(back.get) === norm(sampleRows))
   }
 
@@ -87,7 +89,7 @@ class ManifestIOSpec extends SparkSpec {
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     ManifestIO.writeLocal(fs, spark.sessionState.newHadoopConf(), dir,
       sampleRows)
-    val rel = ManifestIO.relation(spark, Seq(dir.toString))
+    val rel = ManifestIO.relation(spark, hadoopConf, Seq(dir.toString))
     import org.apache.spark.sql.functions.col
     val filtered = rel.filter(col("record_count") > 0L)
       .select("path", "added_snapshot_id")

@@ -153,6 +153,19 @@ class MorDeleteSpec extends SparkSpec {
     assert(t.read.count() === 80) // 80 - 1 (MOR on 50) + 50 re-inserted; 51 replaced in place
   }
 
+  test("a small MOR delete over many data files writes one delete file") {
+    val t = GraftTable.create(spark, tmpDir("morone") + "/t", schema)
+    t.append(seed(100).repartition(8))
+    assert(t.files.count() === 8)
+    assert(t.deleteWhereMOR(col("id") % 2 === 0) === 50)
+    val Seq(deleteFile) = t.deleteFiles.select("path").as[String].collect().toSeq
+    // every data file holds deleted rows, and all their entries share
+    // one file however the random data paths hash
+    assert(spark.read.parquet(deleteFile).select("file_path").distinct()
+      .count() === 8)
+    assert(t.read.count() === 50)
+  }
+
   test("appends carry outstanding deletes; rewriteManifests preserves them") {
     val clock = new TestClock
     val t = GraftTable.create(spark, tmpDir("mor6") + "/t", schema)

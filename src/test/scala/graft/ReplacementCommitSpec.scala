@@ -81,6 +81,33 @@ class ReplacementCommitSpec extends SparkSpec {
     }
   }
 
+  test("footer-path append, upsert and MOR delete run no job at commit " +
+      "or in inventory") {
+    val t = GraftTable.create(spark, tmpDir("footerpin") + "/t",
+      spark.range(1).select(col("id"), lit("x").as("tag")).schema)
+    t.append(spark.range(0, 100)
+      .select(col("id"), concat(lit("v"), col("id")).as("tag")).repartition(2))
+    def check(name: String, footerInventories: Long)(op: => Unit): Unit = {
+      val hits0 = GraftTable.footerInventoryHits.get()
+      val (_, sites) = JobLog.during(spark)(op)
+      assert(GraftTable.footerInventoryHits.get() - hits0 == footerInventories,
+        s"$name left the footer inventory path")
+      // an upsert's commit counts the rows its keys match in the basis:
+      // that data-scale count is the one job a commit may run
+      val bad = JobLog.atCommit(sites)
+        .filterNot(_.contains("graft.meta.GraftTable.matchingRows")) ++
+        JobLog.inInventory(sites)
+      assert(bad.isEmpty,
+        s"$name ran a job at commit or in inventory:\n${bad.mkString("\n---\n")}")
+    }
+    check("append", 1)(t.append(Seq((200L, "a"), (201L, "b")).toDF("id", "tag")))
+    // one inventory for the data files, one for the equality-delete file
+    check("upsert", 2)(
+      assert(t.upsert(Seq((5L, "u"), (300L, "n")).toDF("id", "tag"), Seq("id")) == 1))
+    check("MOR delete", 1)(assert(t.deleteWhereMOR(col("id") < 10) == 10))
+    assert(t.read.count() == 93)
+  }
+
   test("a config-table stamp through GraftSql runs no job at commit") {
     val clock = new TestClock
     val store = new ConfigStore(spark, tmpDir("stamp") + "/cfg")
