@@ -4,7 +4,7 @@ import java.time.Clock
 
 import org.apache.hadoop.fs.Path
 
-import graft.meta.{GraftTable, SnapshotLog}
+import graft.meta.{Commit, GraftTable, SnapshotLog}
 
 /** Drop snapshots older than the retention threshold (the current
   * snapshot is always kept) and physically delete data files that only
@@ -27,7 +27,7 @@ object ExpireSnapshots {
     * under `cutoffMs`. The current head and every branch-head/tag-target
     * snapshot are always retained (Iceberg's ref-aware expiry, both ref
     * kinds, read from the SAME state the caller claims against). One
-    * definition shared by [[run]] (the CAS commit loop re-evaluates it
+    * definition shared by [[run]] (the commit loop re-evaluates it
     * against each fresh head) and [[plan]] (the x23 dry run) — the two
     * can never drift (judge r16). */
   private[graft] def partitionByRetention(st: graft.meta.TableState,
@@ -43,25 +43,21 @@ object ExpireSnapshots {
   def run(table: GraftTable, retentionDays: Int, clock: Clock): Long =
     table.lock.synchronized {
       val cutoffMs = clock.millis() - retentionDays.toLong * 86400000L
-      // CAS loop: a concurrent cross-process commit between our read and
-      // our log write would otherwise be silently dropped from the
-      // trimmed log — recompute the partition against the fresh head.
+      // Recompute the partition against the fresh head on every attempt:
+      // a concurrent cross-process commit between our read and our log
+      // write would otherwise be silently dropped from the trimmed log.
+      // The trimmed log is committed FIRST: a crash after the claim
+      // leaves only harmless orphan files (reclaimable by
+      // remove_orphan_files), never a log entry whose manifest
+      // references already-deleted data.
       var expired: Seq[graft.meta.Snapshot] = Seq.empty
       var retained: Seq[graft.meta.Snapshot] = Seq.empty
-      var done = false
-      while (!done) {
-        val (ver, st) =
-          SnapshotLog.readState(table.fileSystem, table.dir)
-        val p = partitionByRetention(st, cutoffMs)
-        expired = p._1; retained = p._2
-        if (expired.isEmpty) return 0L
-        // Commit the trimmed log FIRST: a crash after this point leaves
-        // only harmless orphan files (reclaimable by
-        // remove_orphan_files), never a log entry whose manifest
-        // references already-deleted data.
-        done = SnapshotLog.tryWriteState(table.fileSystem, table.dir, ver,
-          st.copy(snapshots = retained))
+      Commit.claim(table.fileSystem, table.dir, "expire_snapshots") { st =>
+        val (e, r) = partitionByRetention(st, cutoffMs)
+        expired = e; retained = r
+        if (e.isEmpty) None else Some(st.copy(snapshots = r))
       }
+      if (expired.isEmpty) return 0L
 
       val spark = table.spark
       import spark.implicits._

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
 
-import graft.meta.GraftTable
+import graft.meta.{Commit, GraftTable}
 
 /** File-size compaction, Iceberg `rewrite_data_files` (binpack) shape:
   * SELECT the mis-sized files from the manifest — undersized ones to
@@ -84,8 +84,8 @@ object Optimize {
           .parquet(commitDir.toString)
         table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
         table.pruneEmptyFiles(commitDir)
-        table.doCommit("optimize", table.inventory(commitDir), clock,
-          basis = Some(current))
+        table.commitReplacing("optimize", table.inventory(commitDir), clock,
+          Commit.HeadIs(Some(current)))
         return
       }
 

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.meta.{FileSkipping, GraftTable}
+import graft.meta.{Commit, FileSkipping, GraftTable}
 
 /** Z-order (Morton-curve) compaction: rewrite the table clustered on the
   * INTERLEAVED bits of several columns, so manifest min/max bounds stay
@@ -95,7 +95,7 @@ object ZOrder {
       .drop("__graft_z"))
       .parquet(commitDir.toString)
     table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
-    table.doCommit("optimize_zorder", table.inventory(commitDir), clock,
-      basis = Some(current))
+    table.commitReplacing("optimize_zorder", table.inventory(commitDir),
+      clock, Commit.HeadIs(Some(current)))
   }
 }

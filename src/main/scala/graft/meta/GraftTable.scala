@@ -38,11 +38,12 @@ import org.apache.spark.sql.types._
   *
   * Concurrency: two layers. In-process, commits serialize on a JVM-wide
   * per-path lock — the discipline the reference imposes with its
-  * module-level RLock (__main__.py:18). ACROSS processes, every commit
-  * is an optimistic CAS on the versioned snapshot log
-  * ([[SnapshotLog.tryWriteState]]) with a read-rebuild-retry loop, so a
-  * cron maintenance job racing ad-hoc writers (the reference's
-  * deployment model) never loses a commit.
+  * module-level RLock (__main__.py:18). ACROSS processes, every log
+  * write is an optimistic CAS on the versioned snapshot log, run by the
+  * one bounded read-rebuild-retry loop in [[Commit]]: each commit site
+  * states its successor snapshot as a function of the fresh head and
+  * names its conflict rule, so a cron maintenance job racing ad-hoc
+  * writers (the reference's deployment model) never loses a commit.
   */
 final class GraftTable(val spark: SparkSession, val location: String) {
   import GraftTable._
@@ -54,6 +55,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private[graft] val hadoopConf: Configuration =
     spark.sessionState.newHadoopConf()
   private val fs: FileSystem = tableDir.getFileSystem(hadoopConf)
+  /** [[hadoopConf]] plus Spark's parquet write-support keys, set once:
+    * driver-local manifest writes take it as is. */
+  private[graft] lazy val manifestWriteConf: Configuration =
+    ManifestIO.writeConf(hadoopConf)
   // JVM-wide lock per table path, not per GraftTable instance — two
   // in-process handles on the same table serialize commits here (cheap);
   // cross-process writers are handled by the log CAS instead.
@@ -69,18 +74,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Head of `main`: the branch ref once refs are materialized, else
     * the implicit pre-branching head (max snapshot id). */
-  def currentSnapshot: Option[Snapshot] = {
-    val st = tableState
-    headOf(st.snapshots, st.refs, "main")
-  }
-
-  private def headOf(all: Seq[Snapshot], refs: Map[String, Long],
-                     branch: String): Option[Snapshot] =
-    refs.get(branch) match {
-      case Some(id) => all.find(_.snapshotId == id)
-      case None if branch == "main" => SnapshotLog.current(all)
-      case None => None
-    }
+  def currentSnapshot: Option[Snapshot] = tableState.head("main")
 
   def schema: StructType = {
     val p = new Path(tableDir, "_graft/schema.json")
@@ -455,10 +449,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * no data is touched, later snapshots stay readable by id until
     * expiry, and the next commit chains onto the rolled-back head. */
   def rollback(snapshotId: Long): Unit = commitLock.synchronized {
-    casState { st =>
+    claimRefs("rollback") { st =>
       require(st.snapshots.exists(_.snapshotId == snapshotId),
         s"no snapshot $snapshotId")
-      st.copy(refs = materialize(st.snapshots, st.refs) + ("main" -> snapshotId))
+      st.copy(refs = st.branchRefs + ("main" -> snapshotId))
     }
   }
 
@@ -803,12 +797,21 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * table (caller falls back to the aligned scan). */
   private[graft] def affectedFilesRaw(matched: Column): Option[DataFrame] =
     if (schemaVersions.size <= 1 && currentSnapshot.isDefined)
-      Some(spark.read.format("graft")
-        .option("graft.internal.allowDeletes", "true").load(location)
-        .filter(matched)
+      Some(rawScan.filter(matched)
         .select(normalizeCol(col("_metadata.file_path")).as("path"))
         .distinct())
     else None
+
+  /** The current snapshot's raw rows (outstanding deletes NOT applied)
+    * through [[graft.sources.GraftFileIndex]] over this handle: Catalyst
+    * pushes predicates into the index, so manifest bounds, null counts
+    * and blooms skip files before a row is read. The same relation the
+    * `graft` data source serves, without its refusal of delete-bearing
+    * snapshots — callers apply the delete joins themselves. Un-evolved
+    * tables only. */
+  private[graft] def rawScan: DataFrame =
+    spark.baseRelationToDataFrame(
+      graft.sources.DefaultSource.relation(spark, this, None))
 
   /** Merge-on-read DELETE (Iceberg v2 position deletes): rather than
     * rewriting every affected data file (the copy-on-write
@@ -846,8 +849,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           // before a single row is read, so a selective delete on a
           // 100 TB table scans only candidate files. (The relation
           // serves the raw rows; the delete joins are applied here.)
-          val base = spark.read.format("graft")
-            .option("graft.internal.allowDeletes", "true").load(location)
+          val base = rawScan
           val cols = base.columns.toSeq.map(col)
           val df = base.filter(matched)
             .select(cols :+
@@ -882,11 +884,21 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val deleted = obs.get.getOrElse("n", 0L).asInstanceOf[Long]
       if (deleted == 0L) { fs.delete(commitDir, true); return 0L }
       pruneEmptyFiles(commitDir) // shuffle writes emit schema-only files
-      // inventory() stays lazy — the manifest write inside commitDelete
-      // is the one job that executes it
-      commitDelete(inventory(commitDir), deleted,
-        basisId = cur.snapshotId, clock,
-        filesAdded = GraftTable.listFiles(fs, commitDir).size.toLong)
+      // a new delete manifest, written once (no lineage stamp): data
+      // manifests are carried from the fresh head each attempt, so
+      // concurrent appends compose; positions go stale under any other
+      // commit since `cur`
+      val manifest = stage(inventory(commitDir))
+      manifest.write(None)
+      val filesAdded = GraftTable.listFiles(fs, commitDir).size.toLong
+      Commit.snapshot(fs, tableDir, "delete", "main",
+          Commit.AppendsSince(cur)) { (id, head) =>
+        val h = head.get
+        h.carried(id, "delete", clock.millis()).copy(
+          totalRows = h.totalRows - deleted,
+          deleteManifests = h.deleteManifests :+ manifest.path,
+          deleteFileCount = h.deleteFileCount.map(_ + filesAdded))
+      }
       deleted
     }
 
@@ -917,12 +929,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       var removed = 0L
       val memo = scala.collection.mutable.Map.empty[
         (IndexedSeq[(String, Long)], Seq[String], Seq[String]), Long]
-      commit("delete", emptyManifest, clock, carryPrior = true,
-        eqDeleteSource = Some(inventory(eqDir)),
-        eqFilesAdded = GraftTable.listFiles(fs, eqDir).size.toLong,
-        rowsDelta = { b =>
-          removed = matchingRows(b, keys, keyCols, keyStats, memo); -removed
-        })
+      commitEqDelete("delete", emptyManifest, eqDir, clock) { b =>
+        removed = matchingRows(b, keys, keyCols, keyStats, memo); removed
+      }
       removed
     }
 
@@ -978,13 +987,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     var removed = 0L
     val memo = scala.collection.mutable.Map.empty[
       (IndexedSeq[(String, Long)], Seq[String], Seq[String]), Long]
-    commit(op, if (hasData) inventory(commitDir) else emptyManifest,
-      clock, carryPrior = true,
-      eqDeleteSource = Some(inventory(eqDir)),
-      eqFilesAdded = GraftTable.listFiles(fs, eqDir).size.toLong,
-      rowsDelta = { b =>
-        removed = matchingRows(b, delKeys, keys, keyStats, memo); -removed
-      })
+    commitEqDelete(op, if (hasData) inventory(commitDir) else emptyManifest,
+        eqDir, clock) { b =>
+      removed = matchingRows(b, delKeys, keys, keyStats, memo); removed
+    }
     if (!hasData) fs.delete(commitDir, true)
     removed
   }
@@ -1080,30 +1086,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     (dir, stats, m.getOrElse("cnt", 0L).asInstanceOf[Long])
   }
 
-  /** Inventory a small metadata-ish dir into a single-file manifest on
-    * disk, returning the manifest path (used for eq-delete manifests,
-    * whose content is CAS-attempt-independent). */
-  private def inventoryManifest(dir: Path): String = {
-    val manifestDir = new Path(tableDir, s"_graft/manifests/${UUID.randomUUID()}")
-    writeManifestFile(manifestDir, inventory(dir)
-      .withColumn("added_snapshot_id", lit(null).cast(LongType)))
-    manifestDir.toString
-  }
-
-  /** Write a fully-stamped 8-column manifest frame to `manifestDir` —
-    * on the driver when the frame is already driver-resident (a footer
-    * inventory / metadata-only rewrite: no Spark job), else via the
-    * Spark writer. */
-  private def writeManifestFile(manifestDir: Path, df: DataFrame): Unit =
-    ManifestIO.localRowsOf(df) match {
-      case Some(rows) =>
-        val written = ManifestIO.writeLocal(fs, hadoopConf, manifestDir, rows)
-        ManifestIO.cacheSeed(normalize(manifestDir), rows, written)
-      case None =>
-        df.coalesce(1).write.mode("overwrite").parquet(manifestDir.toString)
-        fs.delete(new Path(manifestDir, "_SUCCESS"), false)
-    }
-
   /** Compact accumulated position-delete files into one clustered
     * delete file (Iceberg's `rewrite_position_delete_files`): a delete
     * or upsert stream leaves one small delete file per commit; this
@@ -1135,30 +1117,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       fs.delete(new Path(commitDir, "_SUCCESS"), false)
       pruneEmptyFiles(commitDir) // shuffle writes emit schema-only files
       val mergedCount = GraftTable.listFiles(fs, commitDir).size.toLong
-      val manifest = inventoryManifest(commitDir)
-      var done = false
-      var attempt = 0
-      while (!done) {
-        require(attempt < 50, "CAS retry exhausted for rewrite_deletes")
-        val (ver, st) = SnapshotLog.readState(fs, tableDir)
-        val head = headOf(st.snapshots, st.refs, "main").getOrElse(
-          throw new IllegalStateException("table emptied during rewrite"))
-        require(st.snapshots.filter(_.snapshotId > cur.snapshotId)
-          .forall(_.isAppend),
-          "concurrent non-append commit during delete-file rewrite")
-        val id = st.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-        val snap = Snapshot(id, clock.millis(), "rewrite_deletes",
-          head.manifests, head.numFiles, head.totalBytes, head.totalRows,
-          head.snapshotId, Seq(manifest), head.eqDeleteManifests,
-          deleteFileCount = Some(mergedCount),
-          eqDeleteFileCount = head.eqDeleteFileCount)
-        val newRefs =
-          if (st.refs.nonEmpty)
-            materialize(st.snapshots, st.refs) + ("main" -> id)
-          else st.refs
-        done = SnapshotLog.tryWriteState(fs, tableDir, ver,
-          TableState(st.snapshots :+ snap, newRefs, st.tags))
-        attempt += 1
+      val manifest = stage(inventory(commitDir))
+      manifest.write(None)
+      Commit.snapshot(fs, tableDir, "rewrite_deletes", "main",
+          Commit.AppendsSince(cur)) { (id, head) =>
+        head.get.carried(id, "rewrite_deletes", clock.millis()).copy(
+          deleteManifests = Seq(manifest.path),
+          deleteFileCount = Some(mergedCount))
       }
       delFiles.size.toLong
     }
@@ -1199,82 +1164,23 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         fs.delete(new Path(dir, "_SUCCESS"), false)
         (dir, group.map(_.intro).max)
       }
-      val manifestDir = new Path(tableDir,
-        s"_graft/manifests/${UUID.randomUUID()}")
-      writeManifestFile(manifestDir, mergedDirs.map { case (dir, maxIntro) =>
+      val manifest = stage(mergedDirs.map { case (dir, maxIntro) =>
         // file-level stamp = max intro of the folded files: only a
         // conservative pruning bound — reads use the embedded per-entry
         // intro column
         inventory(dir).withColumn("added_snapshot_id", lit(maxIntro))
       }.reduce(_ unionByName _))
-      var done = false
-      var attempt = 0
-      while (!done) {
-        require(attempt < 50, "CAS retry exhausted for rewrite_eq_deletes")
-        val (ver, st) = SnapshotLog.readState(fs, tableDir)
-        val head = headOf(st.snapshots, st.refs, "main").getOrElse(
-          throw new IllegalStateException("table emptied during rewrite"))
-        // appends compose (they never touch the eq list); any other
-        // racing commit could have added or materialized eq manifests
-        // the merged set does not reflect
-        require(st.snapshots.filter(_.snapshotId > cur.snapshotId)
-          .forall(_.isAppend) &&
-          head.eqDeleteManifests == cur.eqDeleteManifests,
-          "concurrent non-append commit during eq-delete-file rewrite")
-        val id = st.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-        val snap = Snapshot(id, clock.millis(), "rewrite_eq_deletes",
-          head.manifests, head.numFiles, head.totalBytes, head.totalRows,
-          head.snapshotId, head.deleteManifests, Seq(manifestDir.toString),
-          deleteFileCount = head.deleteFileCount,
-          eqDeleteFileCount = Some(mergedDirs.map { case (d, _) =>
-            GraftTable.listFiles(fs, d).size.toLong }.sum))
-        val newRefs =
-          if (st.refs.nonEmpty)
-            materialize(st.snapshots, st.refs) + ("main" -> id)
-          else st.refs
-        done = SnapshotLog.tryWriteState(fs, tableDir, ver,
-          TableState(st.snapshots :+ snap, newRefs, st.tags))
-        attempt += 1
+      manifest.write(None)
+      val mergedCount = mergedDirs.map { case (d, _) =>
+        GraftTable.listFiles(fs, d).size.toLong }.sum
+      Commit.snapshot(fs, tableDir, "rewrite_eq_deletes", "main",
+          Commit.AppendsSince(cur)) { (id, head) =>
+        head.get.carried(id, "rewrite_eq_deletes", clock.millis()).copy(
+          eqDeleteManifests = Seq(manifest.path),
+          eqDeleteFileCount = Some(mergedCount))
       }
       infos.size.toLong
     }
-
-  /** Commit a new delete manifest: data manifests are re-carried from
-    * the fresh head each CAS attempt (concurrent appends compose), but
-    * a replacement commit since `basisId` invalidates the scanned
-    * positions and fails the delete loudly. */
-  private def commitDelete(deleteManifest: DataFrame, deletedRows: Long,
-                           basisId: Long, clock: Clock,
-                           filesAdded: Long): Unit = {
-    val manifestDir = new Path(tableDir, s"_graft/manifests/${UUID.randomUUID()}")
-    writeManifestFile(manifestDir, deleteManifest
-      .withColumn("added_snapshot_id", lit(null).cast(LongType)))
-    var attempt = 0
-    var done = false
-    while (!done) {
-      require(attempt < 50, "snapshot-log CAS retry exhausted for delete")
-      val (ver, st) = SnapshotLog.readState(fs, tableDir)
-      val cur = headOf(st.snapshots, st.refs, "main").getOrElse(
-        throw new IllegalStateException("table emptied during MOR delete"))
-      val racing = st.snapshots.filter(_.snapshotId > basisId)
-      require(racing.forall(_.isAppend),
-        "concurrent non-append commit during MOR delete — positions are " +
-          s"stale; retry (saw: ${racing.map(_.operation).distinct.mkString(",")})")
-      val id = st.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-      val snap = Snapshot(id, clock.millis(), "delete", cur.manifests,
-        cur.numFiles, cur.totalBytes, cur.totalRows - deletedRows,
-        cur.snapshotId, cur.deleteManifests :+ manifestDir.toString,
-        cur.eqDeleteManifests,
-        deleteFileCount = cur.deleteFileCount.map(_ + filesAdded),
-        eqDeleteFileCount = cur.eqDeleteFileCount)
-      val newRefs =
-        if (st.refs.nonEmpty) materialize(st.snapshots, st.refs) + ("main" -> id)
-        else st.refs
-      done = SnapshotLog.tryWriteState(fs, tableDir, ver,
-        TableState(st.snapshots :+ snap, newRefs, st.tags))
-      attempt += 1
-    }
-  }
 
   // ---- schema evolution --------------------------------------------------
 
@@ -1573,7 +1479,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       // for empty shuffle tasks — junk manifest entries otherwise
       if (clustered ne df) pruneEmptyFiles(commitDir)
       writeSchemaIfAbsent(df.schema)
-      commit(op, inventory(commitDir), clock, carryPrior = true, branch)
+      commitAppend(op, inventory(commitDir), clock, branch)
     }
 
   /** Adopt EXISTING parquet files into the table without copying a
@@ -1606,7 +1512,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val dup = paths.filter(live)
       require(dup.isEmpty, "add_files: already referenced by the table: " +
         dup.take(3).mkString(", "))
-      commit("append", inv, clock, carryPrior = true)
+      commitAppend("append", inv, clock)
       paths.length.toLong
     }
 
@@ -1648,7 +1554,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       dataWrite(df).parquet(commitDir.toString)
       fs.delete(new Path(commitDir, "_SUCCESS"), false)
       writeSchemaIfAbsent(df.schema)
-      commit("overwrite", inventory(commitDir), clock, carryPrior = false)
+      // replacing the whole table is last-writer-wins by definition
+      commitReplacing("overwrite", inventory(commitDir), clock, Commit.Composes)
     }
 
   /** CREATE OR REPLACE TABLE semantics (Trino/Iceberg): swap schema AND
@@ -1722,7 +1629,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         if (spec != priorSpec) PartitionSpec.write(fs, tableDir, spec)
         if (sortProp != priorSortProp)
           setProperties(Map("sorted_by" -> sortProp.orNull))
-        commit("overwrite", inventory(commitDir), clock, carryPrior = false)
+        commitReplacing("overwrite", inventory(commitDir), clock,
+          Commit.Composes)
       } catch {
         case e: Throwable =>
           if (sortProp != priorSortProp)
@@ -1749,16 +1657,17 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     commitLock.synchronized {
       val cur = currentSnapshot.getOrElse(return 0L)
       if (cur.manifests.size <= 1) return 0L
-      // Metadata-only: outstanding MOR delete manifests ride through
-      // unchanged, and the logical row count must not be recomputed from
-      // the (physical) manifest sum.
-      commit("rewrite_manifests",
-        files.select((ManifestCols :+ "added_snapshot_id").map(col): _*),
-        clock, carryPrior = false, deletes = cur.deleteManifests,
-        rowsOverride = Some(cur.totalRows),
-        eqDeletes = cur.eqDeleteManifests, basis = Some(cur),
-        deletesCount = cur.deleteFileCount,
-        eqDeletesCount = cur.eqDeleteFileCount)
+      // Metadata-only: the rows keep their lineage, outstanding MOR
+      // delete manifests ride through unchanged, and the logical row
+      // count is carried, not recomputed from the (physical) manifest sum
+      val manifest = stage(manifestDf(cur.manifests))
+      Commit.snapshot(fs, tableDir, "rewrite_manifests", "main",
+          Commit.HeadIs(Some(cur))) { (id, _) =>
+        val w = manifest.write(Some(id))
+        cur.carried(id, "rewrite_manifests", clock.millis()).copy(
+          manifests = Seq(manifest.path), numFiles = w.files,
+          totalBytes = w.bytes)
+      }
       cur.manifests.size.toLong
     }
 
@@ -2102,229 +2011,102 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     } catch { case Fallback => None }
   }
 
-  /** Write the delta manifest parquet + appended log entry. Caller holds
-    * the in-process lock. With `carryPrior`, the new snapshot lists the
-    * prior snapshot's manifests plus this delta and totals accumulate
-    * (append); otherwise the delta replaces the whole list (overwrite /
-    * optimize / rewrite_manifests). The delta summary is collected by
-    * `observe` DURING the manifest write — one Spark action per commit,
-    * not a write followed by a read-back aggregation.
-    *
-    * Cross-process safety: the log write is a versioned CAS
-    * ([[SnapshotLog.tryWrite]]) — on conflict the whole attempt
-    * (head read, id assignment, manifest stamp, snapshot build) is
-    * redone against the new head, so a concurrent writer in ANOTHER
-    * process never gets its commit overwritten. Appends compose fully
-    * (the carried manifest list is re-derived from the fresh head each
-    * attempt). Replacement commits (optimize / rewrite / row-level
-    * CoW) pass their planning `basis` and FAIL LOUDLY if any commit
-    * landed since — their content is derived from the scanned state,
-    * so composing silently would drop the racing commit's files or
-    * delete manifests (Iceberg's rewrite validation). `overwrite`
-    * passes no basis: replacing the whole table is last-writer-wins
-    * by definition. */
-  private def commit(op: String, manifest: DataFrame, clock: Clock,
-                     carryPrior: Boolean, branch: String = "main",
-                     deletes: Seq[String] = Seq.empty,
-                     rowsOverride: Option[Long] = None,
-                     eqDeletes: Seq[String] = Seq.empty,
-                     eqDeleteSource: Option[DataFrame] = None,
-                     rowsDelta: Snapshot => Long = _ => 0L,
-                     basis: Option[Snapshot] = None,
-                     eqFilesAdded: Long = 0L,
-                     deletesCount: Option[Long] = Some(0L),
-                     eqDeletesCount: Option[Long] = Some(0L)): Unit = {
-    // Manifest dir named by UUID, not snapshot id: two cross-process
-    // writers can compute the SAME next id before one loses the CAS —
-    // id-named dirs would collide and silently swap inventories.
-    val manifestDir = new Path(tableDir, s"_graft/manifests/${UUID.randomUUID()}")
-    val eqManifestDir = eqDeleteSource.map(_ =>
-      new Path(tableDir, s"_graft/manifests/${UUID.randomUUID()}"))
-    // Driver-resident inventories (the footer fast path, metadata-only
-    // rewrites) skip the per-attempt Spark write+observe job: the rows,
-    // their summary, and the parquet encoding all happen on the driver
-    // (ManifestIO.writeLocal — same bytes-on-disk as the Spark write).
-    val localBase: Option[IndexedSeq[Row]] = ManifestIO.localRowsOf(
-      manifest.select(col("path"), col("size_bytes"), col("record_count"),
-        col("null_counts"), col("min_values"), col("max_values"),
-        col("blooms"),
-        (if (manifest.columns.contains("added_snapshot_id"))
-          col("added_snapshot_id")
-        else lit(null).cast(LongType)).as("added_snapshot_id")))
-    val localEq: Option[Option[IndexedSeq[Row]]] =
-      eqDeleteSource.map(src => ManifestIO.localRowsOf(
-        src.drop("added_snapshot_id")
-          .withColumn("added_snapshot_id", lit(null).cast(LongType))))
-    var attempt = 0
-    var done = false
-    while (!done) {
-      require(attempt < 50, s"snapshot-log CAS retry exhausted for $op")
-      val (ver, st) = SnapshotLog.readState(fs, tableDir)
-      val prior = st.snapshots
-      val refsNow = st.refs
-      require(branch == "main" || refsNow.contains(branch),
-        s"no branch named $branch — createBranch first")
-      val cur = headOf(prior, refsNow, branch)
-      // Replacement commits (carryPrior = false) derive their CONTENT —
-      // the carried manifest rows, delete lists, row counts — from the
-      // state their caller scanned. Unlike appends, a CAS retry cannot
-      // recompute that content here, so ANY commit landing after the
-      // planning basis (a cross-process append, MOR delete, or upsert)
-      // would be silently dropped by the replacement: fail loudly
-      // instead, exactly like Iceberg's rewrite validation.
-      basis.foreach { b =>
-        val headId = cur.map(_.snapshotId).getOrElse(-1L)
-        require(headId == b.snapshotId,
-          s"concurrent commit during $op — the rewrite was planned " +
-            s"against snapshot ${b.snapshotId} but the head is now " +
-            s"$headId; rerun the operation")
-      }
-      val id = prior.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-      // rewrite_manifests passes lineage through; deltas stamp id
-      val (dnf, dbytes, drows) = localBase match {
-        case Some(rows) =>
-          val stamped = rows.map(r =>
-            if (r.isNullAt(7))
-              Row(r(0), r(1), r(2), r(3), r(4), r(5), r(6), id)
-            else r)
-          val written = ManifestIO.writeLocal(fs, hadoopConf,
-            manifestDir, stamped)
-          ManifestIO.cacheSeed(normalize(manifestDir), stamped, written)
-          // null-tolerant like the Observation path's coalesce(sum, 0):
-          // a lineage-pass-through frame (rewrite_manifests) may carry a
-          // null stat (ADVICE r16)
-          (rows.size.toLong,
-            rows.map(r => if (r.isNullAt(1)) 0L else r.getLong(1)).sum,
-            rows.map(r => if (r.isNullAt(2)) 0L else r.getLong(2)).sum)
-        case None =>
-          val obs = new org.apache.spark.sql.Observation(
-            s"manifest-${manifestDir.getName}-$attempt")
-          val addedId =
-            if (manifest.columns.contains("added_snapshot_id"))
-              coalesce(col("added_snapshot_id"), lit(id))
-            else lit(id)
-          manifest
-            .select(col("path"), col("size_bytes"), col("record_count"),
-              col("null_counts"), col("min_values"), col("max_values"),
-              col("blooms"), addedId.as("added_snapshot_id"))
-            .observe(obs, count(lit(1)).as("nf"),
-              coalesce(sum("size_bytes"), lit(0L)).as("bytes"),
-              coalesce(sum("record_count"), lit(0L)).as("rows"))
-            .coalesce(1) // manifests are small relative to data; 1 file/commit
-            .write.mode("overwrite").parquet(manifestDir.toString)
-          fs.delete(new Path(manifestDir, "_SUCCESS"), false)
-          val m = obs.get
-          (m("nf").asInstanceOf[Long], m("bytes").asInstanceOf[Long],
-            m("rows").asInstanceOf[Long])
-      }
-      // the eq-delete manifest stamps the INTRODUCING snapshot id in
-      // its added_snapshot_id column — durable against expiry of the
-      // introducing snapshot (per-attempt rewrite, like the data
-      // manifest, since the id changes on CAS retry)
-      eqDeleteSource.foreach { src =>
-        localEq.flatten match {
-          case Some(rows) =>
-            val stamped = rows.map(r =>
-              Row(r(0), r(1), r(2), r(3), r(4), r(5), r(6), id))
-            val written = ManifestIO.writeLocal(fs, hadoopConf,
-              eqManifestDir.get, stamped)
-            ManifestIO.cacheSeed(normalize(eqManifestDir.get), stamped,
-              written)
-          case None =>
-            src.withColumn("added_snapshot_id", lit(id))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(eqManifestDir.get.toString)
-            fs.delete(new Path(eqManifestDir.get, "_SUCCESS"), false)
-        }
-      }
-      val eqAdd = eqManifestDir.map(_.toString).toSeq
-      val parent = cur.map(_.snapshotId).getOrElse(-1L)
-      val snap =
-        if (carryPrior) {
-          // appends carry outstanding MOR delete manifests — the delete
-          // entries keep targeting the (immutable) prior files; upserts
-          // additionally add an eq-delete manifest and subtract the
-          // replaced-row count (recomputed per CAS attempt, against the
-          // fresh head)
-          val b = cur.getOrElse(Snapshot(0L, 0L, "", Seq.empty, 0L, 0L, 0L,
-            deleteFileCount = Some(0L), eqDeleteFileCount = Some(0L)))
-          Snapshot(id, clock.millis(), op, b.manifests :+ manifestDir.toString,
-            b.numFiles + dnf, b.totalBytes + dbytes,
-            b.totalRows + drows + rowsDelta(b),
-            parent, b.deleteManifests, b.eqDeleteManifests ++ eqAdd,
-            // summary counts accumulate; unknown (legacy) stays unknown
-            deleteFileCount = b.deleteFileCount,
-            eqDeleteFileCount =
-              if (eqAdd.isEmpty) b.eqDeleteFileCount
-              else b.eqDeleteFileCount.map(_ + eqFilesAdded))
-        } else
-          // replacement commits drop deletes (they materialize them)
-          // unless the caller passes its own carried lists + counts
-          Snapshot(id, clock.millis(), op, Seq(manifestDir.toString),
-            dnf, dbytes, rowsOverride.getOrElse(drows), parent, deletes,
-            eqDeletes, deleteFileCount = deletesCount,
-            eqDeleteFileCount = eqDeletesCount)
-      // the branch-ref advance rides in the SAME claimed state as the
-      // snapshot (materializing main's implicit head on the way if refs
-      // already exist); refs-free tables keep the implicit main == max id
-      val newRefs =
-        if (refsNow.nonEmpty || branch != "main")
-          materialize(prior, refsNow) + (branch -> id)
-        else refsNow
-      done = SnapshotLog.tryWriteState(fs, tableDir, ver,
-        TableState(prior :+ snap, newRefs, st.tags))
-      attempt += 1
+  /** Stage a manifest of this commit under a fresh UUID dir. */
+  private def stage(manifest: DataFrame): Commit.Manifest =
+    new Commit.Manifest(fs, manifestWriteConf,
+      new Path(tableDir, s"_graft/manifests/${UUID.randomUUID()}"), manifest)
+
+  /** Commit `delta`'s files on top of `branch`'s head (append,
+    * add_files, streaming appends): the head's manifest and delete lists
+    * are carried and the totals accumulate, so concurrent commits
+    * compose. The delta manifest is stamped with the attempt's id,
+    * hence written per attempt. */
+  private def commitAppend(op: String, delta: DataFrame, clock: Clock,
+                           branch: String = "main"): Unit = {
+    val manifest = stage(delta)
+    Commit.snapshot(fs, tableDir, op, branch, Commit.Composes) { (id, head) =>
+      withDelta(head.getOrElse(Snapshot.Genesis), id, op, clock, manifest)
     }
   }
 
-  /** Pin main's implicit head into the refs map (no-op if present). */
-  private def materialize(all: Seq[Snapshot],
-                          refs: Map[String, Long]): Map[String, Long] =
-    if (refs.contains("main")) refs
-    else refs ++ SnapshotLog.current(all).map("main" -> _.snapshotId)
+  /** `b` carried forward as snapshot `id`, plus the files of `delta`
+    * (written now, stamped with `id`). */
+  private def withDelta(b: Snapshot, id: Long, op: String, clock: Clock,
+                        delta: Commit.Manifest): Snapshot = {
+    val w = delta.write(Some(id))
+    b.carried(id, op, clock.millis()).copy(
+      manifests = b.manifests :+ delta.path, numFiles = b.numFiles + w.files,
+      totalBytes = b.totalBytes + w.bytes, totalRows = b.totalRows + w.rows)
+  }
+
+  /** Commit an equality delete (deleteByKeys, upsert): `delta`'s files
+    * and the eq-delete files in `eqDir` on top of main's head, minus the
+    * `matched(head)` rows the keys delete there — recounted per attempt,
+    * since concurrent commits compose. The eq manifest is stamped with
+    * the attempt's id: the durable introducing-snapshot id its
+    * strictly-before rule reads, safe against the intro's expiry. */
+  private def commitEqDelete(op: String, delta: DataFrame, eqDir: Path,
+                             clock: Clock)(matched: Snapshot => Long): Unit = {
+    val data = stage(delta)
+    val eq = stage(inventory(eqDir))
+    val eqFiles = GraftTable.listFiles(fs, eqDir).size.toLong
+    Commit.snapshot(fs, tableDir, op, "main", Commit.Composes) { (id, head) =>
+      val b = head.getOrElse(Snapshot.Genesis)
+      val s = withDelta(b, id, op, clock, data)
+      eq.write(Some(id))
+      s.copy(totalRows = s.totalRows - matched(b),
+        eqDeleteManifests = s.eqDeleteManifests :+ eq.path,
+        eqDeleteFileCount = s.eqDeleteFileCount.map(_ + eqFiles))
+    }
+  }
+
+  /** Commit `manifest` as the whole file list (overwrite, optimize, CoW
+    * row-level ops), its lineage-free rows stamped with the attempt's
+    * id. Outstanding delete manifests are dropped: the caller has
+    * materialized every file they target, or replaced everything. */
+  private[graft] def commitReplacing(op: String, manifest: DataFrame,
+                                     clock: Clock,
+                                     conflict: Commit.Conflict): Unit = {
+    val staged = stage(manifest)
+    Commit.snapshot(fs, tableDir, op, "main", conflict) { (id, head) =>
+      val w = staged.write(Some(id))
+      Snapshot(id, clock.millis(), op, Seq(staged.path), w.files, w.bytes,
+        w.rows, head.fold(-1L)(_.snapshotId),
+        deleteFileCount = Some(0L), eqDeleteFileCount = Some(0L))
+    }
+  }
 
   // ---- branches / write-audit-publish -----------------------------------
 
   /** All branch refs, including the implicit main. */
-  def branches: Map[String, Long] = {
-    val st = tableState
-    materialize(st.snapshots, st.refs)
-  }
+  def branches: Map[String, Long] = tableState.branchRefs
 
-  /** Run a ref mutation as a state CAS loop: recompute against the
-    * fresh head until the claim lands (cross-process safe — in-process
+  /** Claim a ref mutation through the commit loop: recomputed against
+    * the fresh state on every attempt (cross-process safe — in-process
     * callers already hold the table lock). */
-  private def casState(mutate: (TableState) => TableState): Unit = {
-    var done = false
-    while (!done) {
-      val (ver, st) = SnapshotLog.readState(fs, tableDir)
-      done = SnapshotLog.tryWriteState(fs, tableDir, ver, mutate(st))
-    }
-  }
+  private def claimRefs(op: String)(mutate: TableState => TableState): Unit =
+    Commit.claim(fs, tableDir, op)(st => Some(mutate(st)))
 
   /** Create a branch pointing at `at` (default: main's current head) —
     * the "write" staging area of write-audit-publish. */
   def createBranch(name: String, at: Option[Long] = None): Unit =
     commitLock.synchronized {
-      casState { st =>
+      claimRefs("create_branch") { st =>
         require(name != "main" && !st.refs.contains(name),
           s"branch $name exists")
         require(!st.tags.contains(name), s"a tag named $name exists")
-        val target = at.orElse(headOf(st.snapshots, st.refs, "main")
-          .map(_.snapshotId))
+        val target = at.orElse(st.head("main").map(_.snapshotId))
           .getOrElse(throw new IllegalArgumentException(
             "cannot branch an empty table"))
         require(st.snapshots.exists(_.snapshotId == target),
           s"no snapshot $target")
-        st.copy(refs = materialize(st.snapshots, st.refs) + (name -> target))
+        st.copy(refs = st.branchRefs + (name -> target))
       }
     }
 
   /** Scan a branch head (same aligned read path as [[read]]). */
-  def readBranch(name: String): DataFrame = {
-    val st = tableState
-    readSnapshot(headOf(st.snapshots, st.refs, name))
-  }
+  def readBranch(name: String): DataFrame =
+    readSnapshot(tableState.head(name))
 
   /** Append onto a branch WITHOUT moving main — audited writers land
     * data here, validate via [[readBranch]], then [[fastForward]]. */
@@ -2338,15 +2120,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * old state to the audited state instantly. */
   def fastForward(to: String, from: String): Unit =
     commitLock.synchronized {
-      casState { st =>
+      claimRefs("fast_forward") { st =>
         require(!st.tags.contains(to) && !st.tags.contains(from),
           "tags are immutable refs — cannot fast-forward a tag")
-        val all = st.snapshots
-        val refs = st.refs
-        val fromHead = headOf(all, refs, from).map(_.snapshotId)
+        val fromHead = st.head(from).map(_.snapshotId)
           .getOrElse(throw new IllegalArgumentException(s"no branch $from"))
-        val toHead = headOf(all, refs, to).map(_.snapshotId).getOrElse(-1L)
-        val byId = all.map(s => s.snapshotId -> s).toMap
+        val toHead = st.head(to).map(_.snapshotId).getOrElse(-1L)
+        val byId = st.snapshots.map(s => s.snapshotId -> s).toMap
         var c = fromHead
         var ok = toHead == -1L
         while (!ok && c != -1L) {
@@ -2355,14 +2135,14 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         }
         require(ok, s"$to@$toHead is not an ancestor of $from@$fromHead — " +
           "not a fast-forward")
-        st.copy(refs = materialize(all, refs) + (to -> fromHead))
+        st.copy(refs = st.branchRefs + (to -> fromHead))
       }
     }
 
   /** Delete a branch ref (snapshots stay until expiry). */
   def dropBranch(name: String): Unit = commitLock.synchronized {
     require(name != "main", "cannot drop main")
-    casState { st =>
+    claimRefs("drop_branch") { st =>
       require(st.refs.contains(name), s"no branch $name")
       st.copy(refs = st.refs - name)
     }
@@ -2379,12 +2159,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * tag namespaces are shared, like Iceberg's — one name, one ref. */
   def createTag(name: String, at: Option[Long] = None): Unit =
     commitLock.synchronized {
-      casState { st =>
+      claimRefs("create_tag") { st =>
         require(name != "main" && !st.refs.contains(name),
           s"a branch named $name exists")
         require(!st.tags.contains(name), s"tag $name exists")
-        val target = at.orElse(headOf(st.snapshots, st.refs, "main")
-          .map(_.snapshotId))
+        val target = at.orElse(st.head("main").map(_.snapshotId))
           .getOrElse(throw new IllegalArgumentException(
             "cannot tag an empty table"))
         require(st.snapshots.exists(_.snapshotId == target),
@@ -2403,7 +2182,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Delete a tag (its snapshot stays until expiry un-pins it). */
   def dropTag(name: String): Unit = commitLock.synchronized {
-    casState { st =>
+    claimRefs("drop_tag") { st =>
       require(st.tags.contains(name), s"no tag $name")
       st.copy(tags = st.tags - name)
     }
@@ -2504,10 +2283,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private[graft] def fileSystem: FileSystem = fs
   private[graft] def dir: Path = tableDir
   private[graft] def lock: Object = commitLock
-  private[graft] def doCommit(op: String, manifest: DataFrame, clock: Clock,
-                              carryPrior: Boolean = false,
-                              basis: Option[Snapshot] = None): Unit =
-    commit(op, manifest, clock, carryPrior, basis = basis)
   private[graft] def emptyManifest: DataFrame =
     ManifestIO.emptyRelation(spark)
 
@@ -2534,7 +2309,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         spark.createDataFrame(rows.asJava, ManifestSchema)
       case None => replacementManifestScan(basis, removed, fresh)
     }
-    commit(op, manifest, clock, carryPrior = false, basis = basis)
+    commitReplacing(op, manifest, clock, Commit.HeadIs(basis))
   }
 
   /** Distributed form of [[commitReplacement]]'s manifest: the basis
@@ -2671,7 +2446,9 @@ object GraftTable {
     t.writeSchemaIfAbsent(schema)
     if (partitionBy.nonEmpty)
       PartitionSpec.write(t.fileSystem, t.dir, partitionBy)
-    SnapshotLog.write(t.fileSystem, t.dir, Seq.empty)
+    // the empty log, keeping whatever refs a racing CREATE claimed
+    Commit.claim(t.fileSystem, t.dir, "create")(st =>
+      Some(st.copy(snapshots = Seq.empty)))
     t
   }
 

@@ -47,7 +47,7 @@ import org.apache.spark.sql.types._
   * fewer job per commit. Replacement commits (CoW rewrites, binpack)
   * assemble the kept rows and the fresh inventory on the driver the same
   * way ([[GraftTable.commitReplacement]]). Distributed inventories
-  * keep the Spark write.
+  * keep the Spark write; [[Commit.Manifest]] picks between the two.
   *
   * Data-file footers are read here too, through [[footer]] alone: the
   * footer inventory, empty-file pruning and embedded-schema reads.
@@ -251,27 +251,36 @@ object ManifestIO {
       support
   }
 
+  /** A copy of `conf` carrying the keys Spark's [[ParquetWriteSupport]]
+    * reads when it encodes manifest rows — made once per table handle
+    * ([[GraftTable.manifestWriteConf]]), so [[writeLocal]] copies
+    * nothing. */
+  def writeConf(conf: Configuration): Configuration = {
+    val c = new Configuration(conf)
+    ParquetWriteSupport.setSchema(GraftTable.ManifestSchema, c)
+    c.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
+    c.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+    c.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
+    c.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key, "CORRECTED")
+    c.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "false")
+    c.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
+    c
+  }
+
   /** Write `rows` (ManifestSchema-shaped) as ONE parquet file under `dir`
     * on the driver, replacing any prior content (mode-overwrite parity
     * with the Spark write it substitutes). Bytes on disk match the Spark
     * write: the encoding runs through Spark's own [[ParquetWriteSupport]].
+    * @param conf a [[writeConf]] conf
     * @return the written file's length — the cache price for
     *         [[cacheSeed]] */
-  def writeLocal(fs: FileSystem, hadoopConf: Configuration, dir: Path,
+  def writeLocal(fs: FileSystem, conf: Configuration, dir: Path,
                  rows: Seq[Row]): Long = {
-    val conf = new Configuration(hadoopConf)
-    val schema = GraftTable.ManifestSchema
-    ParquetWriteSupport.setSchema(schema, conf)
-    conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
-    conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
-    conf.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
-    conf.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key, "CORRECTED")
-    conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "false")
-    conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
     if (fs.exists(dir))
       GraftTable.listFiles(fs, dir).foreach(f => fs.delete(f.getPath, false))
     val file = new Path(dir, s"part-00000-${UUID.randomUUID()}.snappy.parquet")
-    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    val toInternal =
+      CatalystTypeConverters.createToCatalystConverter(GraftTable.ManifestSchema)
     val writer = new RowWriterBuilder(
       HadoopOutputFile.fromPath(file, conf), new ParquetWriteSupport())
       .withConf(conf)

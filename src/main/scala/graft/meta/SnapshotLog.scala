@@ -51,6 +51,13 @@ final case class Snapshot(
     // incrementally by every commit path, never recounted.
     deleteFileCount: Option[Long] = None,
     eqDeleteFileCount: Option[Long] = None) {
+  /** This snapshot carried forward as snapshot `id` of `op`: the same
+    * manifest lists, totals and counts, parented here. Commit sites
+    * state their successor as a copy of this. */
+  def carried(id: Long, op: String, timestampMs: Long): Snapshot =
+    copy(snapshotId = id, timestampMs = timestampMs, operation = op,
+      parentId = snapshotId)
+
   /** Pure data addition (plain or streaming-sink append) — the commits
     * incremental scans and the streaming source may deliver. */
   def isAppend: Boolean =
@@ -64,6 +71,13 @@ final case class Snapshot(
       operation == "rewrite_eq_deletes"
 }
 
+object Snapshot {
+  /** The empty table's head: what the first commit is carried from
+    * (no files, known-zero delete counts, parent id -1). */
+  val Genesis: Snapshot = Snapshot(-1L, 0L, "", Seq.empty, 0L, 0L, 0L,
+    deleteFileCount = Some(0L), eqDeleteFileCount = Some(0L))
+}
+
 /** The complete CAS-versioned table state: the snapshot list plus both
   * ref kinds. Refs live IN the claimed log file (Iceberg's
   * metadata.json shape) so a branch advance is atomic with the commit
@@ -74,7 +88,22 @@ final case class Snapshot(
 final case class TableState(
     snapshots: Seq[Snapshot],
     refs: Map[String, Long] = Map.empty,
-    tags: Map[String, Long] = Map.empty)
+    tags: Map[String, Long] = Map.empty) {
+  /** Head of `branch`: its ref once refs are materialized, else (main
+    * only) the implicit pre-branching head, the max snapshot id. */
+  def head(branch: String): Option[Snapshot] =
+    refs.get(branch) match {
+      case Some(id) => snapshots.find(_.snapshotId == id)
+      case None if branch == "main" => SnapshotLog.current(snapshots)
+      case None => None
+    }
+
+  /** The branch refs with main's implicit head pinned (no-op once
+    * present). */
+  def branchRefs: Map[String, Long] =
+    if (refs.contains("main")) refs
+    else refs ++ SnapshotLog.current(snapshots).map("main" -> _.snapshotId)
+}
 
 /** The table's snapshot log: a small JSON array, committed as VERSIONED
   * files `<table>/_graft/log/v<N>.snapshots.json` claimed by
@@ -87,6 +116,10 @@ final case class TableState(
   *      flag — if another process claimed N+1 first, the rename fails
   *      (atomically on HDFS; exists-checked on local/object FS) and the
   *      writer re-reads and retries against the new head.
+  *
+  * This object reads the log and makes one claim ([[tryWriteState]]);
+  * the read-recompute-retry loop around the claim is [[Commit.claim]],
+  * the only writer.
   *
   * Readers always see a complete file (content is fully written before
   * the claim), and a crashed writer leaves only an unclaimed temp.
@@ -168,8 +201,11 @@ object SnapshotLog {
     readState(fs, tableDir)._2.snapshots
 
   /** Compare-and-swap: publish `state` as version `expected + 1`.
-    * Returns false if another writer claimed that version first — the
-    * caller re-reads and recomputes against the new head. */
+    * Returns false if another writer claimed that version first, or the
+    * claim failed — the caller re-reads and recomputes against the new
+    * head. Its one caller is [[Commit.claim]], which bounds the retries;
+    * every log write (commits, expiry, ref moves, CREATE) goes through
+    * it. */
   def tryWriteState(fs: FileSystem, tableDir: Path, expected: Long,
                     state: TableState): Boolean = {
     val target = versionPath(tableDir, expected + 1)
@@ -203,19 +239,6 @@ object SnapshotLog {
       } catch { case _: java.io.IOException => }
     }
     claimed
-  }
-
-  /** Unconditional snapshot-list write: CAS-retry until OUR list is the
-    * head, preserving whatever refs/tags the head carries. For writers
-    * whose content does not depend on the prior state (CREATE TABLE's
-    * empty log); state-dependent writers (commits, expiry, branch ops)
-    * run their own read-recompute-tryWriteState loop instead. */
-  def write(fs: FileSystem, tableDir: Path, snapshots: Seq[Snapshot]): Unit = {
-    var done = false
-    while (!done) {
-      val (v, st) = readState(fs, tableDir)
-      done = tryWriteState(fs, tableDir, v, st.copy(snapshots = snapshots))
-    }
   }
 
   def current(snapshots: Seq[Snapshot]): Option[Snapshot] =

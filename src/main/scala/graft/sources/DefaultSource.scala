@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.Source
@@ -108,25 +108,14 @@ final class DefaultSource extends RelationProvider
     // A HadoopFsRelation is a plain parquet scan — it cannot anti-join
     // position-delete files, and silently serving deleted rows would be
     // a correctness trap. Refuse loudly instead. (GraftTable's own MOR
-    // machinery sets the internal flag: it applies the delete joins
-    // itself and only wants the pruned raw scan.)
-    require(parameters.get("graft.internal.allowDeletes").exists(_.toBoolean) ||
-      asOf.orElse(table.currentSnapshot).forall(s =>
+    // machinery builds the relation directly — GraftTable.rawScan — and
+    // applies the delete joins itself.)
+    require(asOf.orElse(table.currentSnapshot).forall(s =>
         s.deleteManifests.isEmpty && s.eqDeleteManifests.isEmpty),
       "this graft table has outstanding merge-on-read delete files; " +
         "read via GraftTable.read (applies deletes) or run optimize() " +
         "to materialize them first")
-    // ANALYZE stats → Catalyst CBO (see GraftStatsRule): installed on
-    // first load, rewrites this relation's plan stats at optimize time
-    GraftStatsRule.ensureInstalled(spark)
-    GraftCountRule.ensureInstalled(spark)
-    HadoopFsRelation(
-      location = new GraftFileIndex(spark, table, asOf),
-      partitionSchema = new org.apache.spark.sql.types.StructType(),
-      dataSchema = table.schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
-      options = Map.empty)(spark)
+    DefaultSource.relation(spark, table, asOf)
   }
 
   /** A simple scan-only relation over one of the table's metadata
@@ -235,5 +224,26 @@ final class DefaultSource extends RelationProvider
       case SaveMode.Ignore => if (!exists) table.append(data)
     }
     createRelation(sqlContext, parameters)
+  }
+}
+
+object DefaultSource {
+  /** The scan relation over `table` as of `asOf` (None: its current
+    * snapshot): a plain parquet HadoopFsRelation whose file listing is
+    * [[GraftFileIndex]]'s. Raw rows — outstanding deletes are the
+    * caller's to refuse or apply. */
+  private[graft] def relation(spark: SparkSession, table: GraftTable,
+                              asOf: Option[graft.meta.Snapshot]): HadoopFsRelation = {
+    // ANALYZE stats → Catalyst CBO (see GraftStatsRule): installed on
+    // first load, rewrites this relation's plan stats at optimize time
+    GraftStatsRule.ensureInstalled(spark)
+    GraftCountRule.ensureInstalled(spark)
+    HadoopFsRelation(
+      location = new GraftFileIndex(spark, table, asOf),
+      partitionSchema = new StructType(),
+      dataSchema = table.schema,
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat(),
+      options = Map.empty)(spark)
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.meta.{GraftTable, Snapshot, SnapshotLog}
+import graft.meta.{Commit, GraftTable, Snapshot, SnapshotLog}
 
 /** Cross-process commit safety: the snapshot log is versioned files
   * claimed by rename-without-overwrite (optimistic CAS). Two writers
@@ -190,8 +190,8 @@ class CommitConcurrencySpec extends SparkSpec {
     val manifest = t.files
       .select((GraftTable.ManifestCols :+ "added_snapshot_id").map(col): _*)
     val e = intercept[IllegalArgumentException](
-      t.doCommit("optimize", manifest, java.time.Clock.systemUTC(),
-        carryPrior = false, basis = Some(basis)))
+      t.commitReplacing("optimize", manifest, java.time.Clock.systemUTC(),
+        Commit.HeadIs(Some(basis))))
     assert(e.getMessage.contains("concurrent commit during optimize"))
     // the table is untouched: the MOR delete still applies
     assert(t.read.count() == 2)

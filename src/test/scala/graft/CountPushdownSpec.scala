@@ -142,7 +142,7 @@ class CountPushdownSpec extends SparkSpec {
         r.get(4), r.get(5), r.get(6), r.get(7))
     }
     val bytes = graft.meta.ManifestIO.writeLocal(t.fileSystem,
-      t.hadoopConf, new org.apache.hadoop.fs.Path(dir),
+      t.manifestWriteConf, new org.apache.hadoop.fs.Path(dir),
       doctored)
     graft.meta.ManifestIO.cacheSeed(key, doctored, bytes)
     val refused = spark.read.format("graft").load(loc).agg(count($"v"))
@@ -251,9 +251,7 @@ class CountPushdownSpec extends SparkSpec {
     val viaRead = t.read.groupBy().count()
     assert(viaRead.collect().head.getLong(0) == 90L)
     // and even a forced bare relation must refuse (metadataRowCount None)
-    val bare = spark.read.format("graft")
-      .option("graft.internal.allowDeletes", "true").load(loc)
-      .groupBy().count()
+    val bare = t.rawScan.groupBy().count()
     assert(!isMetadataOnly(bare),
       "a delete-bearing snapshot must never fold count(*) to metadata")
     assert(bare.collect().head.getLong(0) == 100L) // physical rows, pre-join

@@ -16,6 +16,7 @@ import graft.meta.{GraftTable, ManifestIO}
 class ManifestIOSpec extends SparkSpec {
 
   private lazy val hadoopConf = spark.sessionState.newHadoopConf()
+  private lazy val writeConf = ManifestIO.writeConf(hadoopConf)
 
   private def sampleRows: Seq[Row] = Seq(
     Row("file:/t/data/u1/part-0.parquet", 1234L, 10L,
@@ -39,7 +40,7 @@ class ManifestIOSpec extends SparkSpec {
   test("local write → spark read round-trips every manifest shape") {
     val dir = new Path(tmpDir("manifestio"), "m1")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    ManifestIO.writeLocal(fs, spark.sessionState.newHadoopConf(), dir,
+    ManifestIO.writeLocal(fs, writeConf, dir,
       sampleRows)
     val back = spark.read.schema(GraftTable.ManifestSchema)
       .parquet(dir.toString).collect().toSeq
@@ -58,7 +59,7 @@ class ManifestIOSpec extends SparkSpec {
   test("local write → local read round-trips (cache-cold)") {
     val dir = new Path(tmpDir("manifestio"), "m3")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    ManifestIO.writeLocal(fs, spark.sessionState.newHadoopConf(), dir,
+    ManifestIO.writeLocal(fs, writeConf, dir,
       sampleRows)
     val back = ManifestIO.readLocal(hadoopConf, Seq(dir.toString))
     assert(back.isDefined)
@@ -78,7 +79,7 @@ class ManifestIOSpec extends SparkSpec {
     // and the miss was NOT cached as empty: once the dir appears, the
     // same path serves its real rows
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    ManifestIO.writeLocal(fs, spark.sessionState.newHadoopConf(), dir,
+    ManifestIO.writeLocal(fs, writeConf, dir,
       sampleRows)
     val back = ManifestIO.readLocal(hadoopConf, Seq(dir.toString))
     assert(back.isDefined && norm(back.get) === norm(sampleRows))
@@ -87,7 +88,7 @@ class ManifestIOSpec extends SparkSpec {
   test("relation() under the gate is LocalRelation-backed and filter-foldable") {
     val dir = new Path(tmpDir("manifestio"), "m4")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    ManifestIO.writeLocal(fs, spark.sessionState.newHadoopConf(), dir,
+    ManifestIO.writeLocal(fs, writeConf, dir,
       sampleRows)
     val rel = ManifestIO.relation(spark, hadoopConf, Seq(dir.toString))
     import org.apache.spark.sql.functions.col
@@ -103,11 +104,10 @@ class ManifestIOSpec extends SparkSpec {
   test("overwrite replaces prior local content (CAS-retry parity)") {
     val dir = new Path(tmpDir("manifestio"), "m5")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val conf = spark.sessionState.newHadoopConf()
-    ManifestIO.writeLocal(fs, conf, dir, sampleRows)
+    ManifestIO.writeLocal(fs, writeConf, dir, sampleRows)
     val two = sampleRows.take(2).map(r =>
       Row(r(0), r(1), r(2), r(3), r(4), r(5), r(6), 42L))
-    ManifestIO.writeLocal(fs, conf, dir, two)
+    ManifestIO.writeLocal(fs, writeConf, dir, two)
     val back = spark.read.schema(GraftTable.ManifestSchema)
       .parquet(dir.toString).collect()
     assert(back.length === 2)
