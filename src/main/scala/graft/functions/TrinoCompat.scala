@@ -83,25 +83,27 @@ object TrinoCompat {
     spans.result()
   }
 
-  /** Rewrite Trino spellings — but a match that STARTS inside a string
-    * literal passes through byte-exact (a literal containing
-    * `date_diff(` or `AS VARCHAR)` is data, not syntax). The unit
-    * literal inside a real `date_diff('hour', …)` call starts OUTSIDE
-    * any enclosing literal, so genuine calls always rewrite. */
+  /** Replace each match of `re` by `f(match)` — but a match that STARTS
+    * inside a string literal passes through byte-exact (a literal
+    * containing `date_diff(` or `AS VARCHAR)` is data, not syntax). */
+  private[graft] def outsideLiterals(in: String, re: scala.util.matching.Regex)(
+      f: scala.util.matching.Regex.Match => String): String = {
+    val spans = literalSpans(in)
+    re.replaceAllIn(in, m =>
+      if (spans.exists(s => m.start >= s._1 && m.start < s._2))
+        scala.util.matching.Regex.quoteReplacement(m.matched)
+      else scala.util.matching.Regex.quoteReplacement(f(m)))
+  }
+
+  /** Rewrite Trino spellings outside string literals. The unit literal
+    * inside a real `date_diff('hour', …)` call starts OUTSIDE any
+    * enclosing literal, so genuine calls always rewrite. */
   def rewriteSql(sql: String): String = {
-    def pass(in: String, re: scala.util.matching.Regex,
-             f: scala.util.matching.Regex.Match => String): String = {
-      val spans = literalSpans(in)
-      re.replaceAllIn(in, m =>
-        if (spans.exists(s => m.start >= s._1 && m.start < s._2))
-          scala.util.matching.Regex.quoteReplacement(m.matched)
-        else scala.util.matching.Regex.quoteReplacement(f(m)))
-    }
-    val d = pass(sql, DateDiffLit,
+    val d = outsideLiterals(sql, DateDiffLit)(
       m => s"timestampdiff(${m.group(1).toUpperCase},")
-    val a = pass(d, DateAddLit,
+    val a = outsideLiterals(d, DateAddLit)(
       m => s"timestampadd(${m.group(1).toUpperCase},")
-    pass(a, BareVarchar, m => s"CAST(${m.group(1)} AS STRING)")
+    outsideLiterals(a, BareVarchar)(m => s"CAST(${m.group(1)} AS STRING)")
   }
 
   /** Idempotently register the compat names into `spark`'s session. */

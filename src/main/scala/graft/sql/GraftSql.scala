@@ -1,14 +1,20 @@
 package graft.sql
 
 import java.sql.Timestamp
-import java.time.Clock
+import java.time.{Clock, Instant}
+import java.time.temporal.ChronoUnit
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{And, BinaryComparison, Cast,
+  EqualTo, Expression, In, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystShims
 import org.apache.spark.sql.types._
 
+import graft.functions.TrinoCompat
 import graft.meta.GraftTable
 
 /** The reference's SQL statement surface, parsed and dispatched onto the
@@ -41,9 +47,11 @@ import graft.meta.GraftTable
   * general SELECTs belong to Spark SQL over `format("graft")` relations
   * (register with `df.createOrReplaceTempView`); what lives here is the
   * statement dialect Spark itself cannot route to our table format.
-  * The grammar is the closed set above, so a hand-rolled parser (regex
-  * per statement + a tiny bracket-aware literal scanner) is exact, and
-  * anything outside it fails loudly rather than half-parsing.
+  * The statement grammar is the closed set above, so a hand-rolled
+  * parser (regex per statement + a tiny bracket-aware literal scanner)
+  * is exact, and anything outside it fails loudly rather than
+  * half-parsing. Expressions and query bodies inside a statement are
+  * Spark's: every such text goes through [[SqlFrontEnd]].
   *
   * Table names resolve through a caller-supplied `String => GraftTable`
   * (the reference's catalog.schema prefix maps to a warehouse directory
@@ -122,7 +130,7 @@ object GraftSql {
         val target = resolve(unquote(t))
         Some(viewText(spark, target.location) match {
           case Some(body) =>
-            describeSchema(spark, selectBody(spark, resolve, body).schema)
+            describeSchema(spark, selectBody(spark, resolve, clock, body).schema)
           case None => describe(spark, target)
         })
       case ShowCreate(t) =>
@@ -162,7 +170,7 @@ object GraftSql {
           s"view exists: ${unquote(t)} (use CREATE OR REPLACE VIEW)")
         // Trino validates the view body at creation: resolve + analyze
         // it NOW against the current tables, store only if it's sound
-        selectBody(spark, resolve, body.trim)
+        selectBody(spark, resolve, clock, body.trim)
         writeViewText(spark, target.location, body.trim)
         None
       case DropViewStmt(ifExists, t) =>
@@ -177,7 +185,7 @@ object GraftSql {
         val target = resolve(unquote(t))
         require(viewText(spark, target.location).isEmpty,
           s"cannot create table ${unquote(t)}: a VIEW exists there")
-        val df = selectBody(spark, resolve, body)
+        val df = selectBody(spark, resolve, clock, body)
         if (GraftTable.exists(spark, target.location)) {
           // CORTAS is a definition swap (Trino): `partitioning` AND
           // `sorted_by` refer to the NEW schema, so both are validated
@@ -207,7 +215,7 @@ object GraftSql {
         else {
           // one distributed pass source → target; the WITH clause applies
           // BEFORE the append, so partitioning/sorted_by cluster the copy
-          val df = selectBody(spark, resolve, body)
+          val df = selectBody(spark, resolve, clock, body)
           val created = GraftTable.create(spark, target.location, df.schema)
           applyWithProps(created, Option(withProps))
           created.append(df, clock)
@@ -215,7 +223,7 @@ object GraftSql {
         None
       case InsertSelect(t, colList, body) =>
         val target = notView(resolve(unquote(t)), t)
-        val df = selectBody(spark, resolve, body)
+        val df = selectBody(spark, resolve, clock, body)
         Option(colList) match {
           case None => // full-row: names and types must match exactly
             val want = target.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -256,7 +264,7 @@ object GraftSql {
         // derived-table source (Trino: USING (query) AS alias ON ...):
         // the body runs through the same resolver as any SELECT
         merge(spark, notView(resolve(unquote(t)), t),
-          selectBody(spark, resolve, body),
+          selectBody(spark, resolve, clock, body),
           Option(tAlias).getOrElse(unquote(t)), sAlias,
           on, whenTail, clock)
         None
@@ -286,7 +294,7 @@ object GraftSql {
       case SelectTimestamp(t, ts) =>
         Some(resolve(unquote(t))
           .readAsOfTime(Timestamp.valueOf(ts).getTime))
-      case SelectAll(t) => Some(select(spark, resolve, unquote(t)))
+      case SelectAll(t) => Some(select(spark, resolve, clock, unquote(t)))
       case TableChangesFn(t, from, to) =>
         Some(resolve(unquote(stripQuotes(t)))
           .readChanges(from.toLong, to.toLong))
@@ -299,12 +307,12 @@ object GraftSql {
       // CTE names shadow graft tables, as in Trino.
       case body if body.toUpperCase.startsWith("SELECT ") ||
         body.toUpperCase.startsWith("WITH ") =>
-        Some(selectBody(spark, resolve, body))
+        Some(selectBody(spark, resolve, clock, body))
       // Trino: EXPLAIN <query> — one row per line of the formatted
       // physical plan (the engine's plan, since that is what executes)
       case ExplainStmt(body) =>
         import spark.implicits._
-        Some(selectBody(spark, resolve, body.trim)
+        Some(selectBody(spark, resolve, clock, body.trim)
           .queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           .split("\n").toSeq.toDF("plan"))
@@ -453,7 +461,7 @@ object GraftSql {
         where match {
           case None => t.optimize(targetFileBytes = target, clock = clock)
           case Some(w) => // partition-scoped rewrite, metadata-pruned
-            t.optimizePartitions(parsePartitionPreds(t, w), target, clock)
+            t.optimizePartitions(parsePartitionPreds(t, w, clock), target, clock)
         }
       case "expire_snapshots" =>
         t.expireSnapshots(parseDays(arg(kv, "retention_threshold", op)), clock)
@@ -477,26 +485,25 @@ object GraftSql {
 
   /** `days_ts = 123 AND trunc4_name = 'alph'` — the optimize WHERE
     * partition predicate: equality conjunctions over partition-FIELD
-    * names (transform outputs), coerced to each transform's output
-    * type. Anything richer fails loudly — scoping is exact bounds
-    * cover on point values ([[GraftTable.partitionScope]]). */
-  private def parsePartitionPreds(t: GraftTable,
-                                  w: String): Seq[(String, org.apache.spark.sql.Column)] =
-    splitTopAnd(w).map { term =>
-      term.trim match {
-        case CmpTerm(id, "=", rawLit) =>
-          val name = unquote(id)
-          val f = t.partitionSpec.find(_.name == name).getOrElse(
-            throw new IllegalArgumentException(
-              s"optimize WHERE takes partition field names (got $name; " +
-                s"fields: ${t.partitionSpec.map(_.name).mkString(", ")})"))
-          val dt = f.outputType(t.schema(f.column).dataType)
-          name -> lit(coerce(parseLiteral(rawLit.trim), dt))
-        case other => throw new IllegalArgumentException(
-          "optimize WHERE supports only partition_field = literal " +
-            s"conjunctions, got: $other")
-      }
+    * names (transform outputs), the literal typed against each
+    * transform's output type. Anything richer fails loudly — scoping is
+    * exact bounds cover on point values ([[GraftTable.partitionScope]]). */
+  private def parsePartitionPreds(t: GraftTable, w: String,
+                                  clock: Clock): Seq[(String, Column)] = {
+    val fields = StructType(t.partitionSpec.map(f =>
+      StructField(f.name, f.outputType(t.schema(f.column).dataType))))
+    conjuncts(SqlFrontEnd.tableExpression(t.spark, w, clock, fields)).map {
+      case EqualTo(UnresolvedAttribute(Seq(name)),
+                   v @ (_: Literal | Cast(_: Literal, _, _, _))) =>
+        require(fields.fieldNames.contains(name),
+          s"optimize WHERE takes partition field names (got $name; " +
+            s"fields: ${fields.fieldNames.mkString(", ")})")
+        name -> CatalystShims.column(v)
+      case other => throw new IllegalArgumentException(
+        "optimize WHERE supports only partition_field = literal " +
+          s"conjunctions, got: ${other.sql}")
     }
+  }
 
   /** `k = 'v', k2 = 'v2'` (Trino SET PROPERTIES; DEFAULT removes). */
   private def parseProps(props: String): Map[String, String] =
@@ -615,84 +622,31 @@ object GraftSql {
 
   // ---- UPDATE (row-level, copy-on-write) ----------------------------------
 
-  /** `UPDATE t SET c = <rhs>[, c2 = <rhs>] WHERE <conjunction>` — the
+  /** `UPDATE t SET c = <expr>[, c2 = <expr>] WHERE <predicate>` — the
     * reference's stamp statements (__main__.py:172-176,194-198) plus
-    * Trino's general row-level UPDATE. Each rhs is a literal,
-    * `current_timestamp(6)` (µs precision, the TIMESTAMP(6) contract),
-    * a column, or one `operand (+|-|*|/) operand` arithmetic step —
-    * richer expressions fail loudly, like the rest of the dispatcher.
-    * The WHERE clause takes the same closed conjunction grammar as
-    * DELETE. Routes to [[GraftTable.updateWhere]]: affected-file CoW,
-    * SETs evaluated against the OLD row, nothing collected to the
-    * driver — the same plan at 15 config rows and at 100 TB. */
+    * Trino's general row-level UPDATE. Each rhs and the WHERE clause are
+    * Spark expressions over the table's columns ([[SqlFrontEnd]]), so
+    * `current_timestamp(6)` is the injected clock's instant and any
+    * function, arithmetic or CASE works, as in Trino; each rhs is cast
+    * to its column's type. Routes to [[GraftTable.updateWhere]]:
+    * affected-file CoW, SETs evaluated against the OLD row, nothing
+    * collected to the driver — the same plan at 15 config rows and at
+    * 100 TB. */
   private def update(t: GraftTable, setsRaw: String, whereRaw: String,
                      clock: Clock): Unit =
     t.lock.synchronized {
       val schema = t.schema
-      val sets = splitTop(setsRaw, ',').map { a =>
+      val assignments = splitTop(setsRaw, ',').map { a =>
         val sides = a.split("=", 2)
         require(sides.length == 2, s"bad SET assignment: $a")
         val name = unquote(sides(0).trim)
         require(schema.fieldNames.contains(name), s"no such column $name")
-        val dt = schema(name).dataType
-        // cast the whole rhs to the column's declared type — literal
-        // parsing yields decimals, columns keep their own types
-        name -> parseSetExpr(schema, sides(1).trim, clock).cast(dt)
-      }.toMap
-      t.updateWhere(parseWhereGeneral(schema, whereRaw), sets, clock)
-    }
-
-  /** One SET rhs: operand, or `operand op operand` (op outside quotes). */
-  private def parseSetExpr(schema: StructType, e: String,
-                           clock: Clock): org.apache.spark.sql.Column = {
-    def operand(s: String): org.apache.spark.sql.Column = {
-      val tr = s.trim
-      val un = unquote(tr)
-      if (schema.fieldNames.contains(un)) col(un)
-      else if (tr.matches("""(?i)current_timestamp ?\( ?6 ?\)"""))
-        lit(Timestamp.from(clock.instant()))
-      else lit(parseLiteral(tr) match {
-        case bd: BigDecimal => // keep integral literals integral
-          if (bd.isValidLong && !tr.contains('.')) bd.toLongExact else bd.toDouble
-        case other => other
-      })
-    }
-    splitTopOperator(e) match {
-      case Some((a, op, b)) =>
-        val (l, r) = (operand(a), operand(b))
-        op match {
-          case '+' => l + r
-          case '-' => l - r
-          case '*' => l * r
-          case '/' => l / r
-        }
-      case None => operand(e)
-    }
-  }
-
-  /** Find one top-level arithmetic operator (outside quotes/parens;
-    * never at position 0, so negative literals parse as operands). */
-  private def splitTopOperator(s: String): Option[(String, Char, String)] = {
-    var inQ = false
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (inQ) { if (ch == '\'') inQ = false }
-      else ch match {
-        case '\'' => inQ = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case '+' | '*' | '/' if depth == 0 =>
-          return Some((s.substring(0, i), ch, s.substring(i + 1)))
-        case '-' if depth == 0 && i > 0 =>
-          return Some((s.substring(0, i), ch, s.substring(i + 1)))
-        case _ =>
+        name -> sides(1).trim
       }
-      i += 1
+      val (cond, sets) =
+        SqlFrontEnd.overTable(t.spark, schema, clock, whereRaw, assignments)
+      t.updateWhere(cond, sets.toMap, clock)
     }
-    None
-  }
 
   // ---- CREATE / INSERT -----------------------------------------------------
 
@@ -881,16 +835,16 @@ object GraftSql {
 
   // ---- DELETE -------------------------------------------------------------
 
-  /** `DELETE FROM t [WHERE <conjunction>]` — Trino's row-level DELETE on
+  /** `DELETE FROM t [WHERE <predicate>]` — Trino's row-level DELETE on
     * an Iceberg v2 table, whose default delete mode is merge-on-read:
     * a predicate delete writes position-delete files
     * ([[GraftTable.deleteWhereMOR]]) instead of rewriting data. A bare
     * `DELETE FROM t` (truncate shape) takes the copy-on-write path — one
     * metadata commit replacing the file list beats writing a delete
-    * entry per row. The WHERE clause takes the closed conjunction
-    * grammar first, then the general-predicate fallback
-    * ([[parseWhereGeneral]]) — OR/NOT/BETWEEN/LIKE/functions all work;
-    * unknown columns fail loudly at analysis. */
+    * entry per row. The WHERE clause is any Spark predicate over the
+    * table's columns ([[SqlFrontEnd.overTable]]) — OR/NOT/BETWEEN/LIKE/
+    * functions all work; unknown columns fail loudly at once, even on a
+    * table with no files. */
   // DELETE ... WHERE col [NOT] IN (SELECT ...) — the subquery is any
   // dispatcher SELECT body (graft tables, CTEs, derived tables)
   private val DeleteInSubquery =
@@ -902,7 +856,7 @@ object GraftSql {
       case Some(DeleteInSubquery(c, not, body)) =>
         val k = unquote(c)
         require(t.schema.fieldNames.contains(k), s"no such column $k")
-        val sub = selectBody(spark, resolve, body.trim)
+        val sub = selectBody(spark, resolve, clock, body.trim)
         require(sub.columns.length == 1,
           s"IN subquery must return exactly one column, got ${sub.columns.length}")
         // The comparison happens in the analyzer-chosen COMMON type of
@@ -939,7 +893,9 @@ object GraftSql {
                 .join(keyVals, col(k) === col("__in_v"), "left_anti"), clock)
           }
         } finally keyVals.unpersist()
-      case Some(w) => t.deleteWhereMOR(parseWhereGeneral(t.schema, w), clock)
+      case Some(w) =>
+        t.deleteWhereMOR(SqlFrontEnd.overTable(spark, t.schema, clock, w)._1,
+          clock)
       case None => t.deleteWhere(lit(true), clock)
     }
 
@@ -973,25 +929,22 @@ object GraftSql {
                     whenTail: String, clock: Clock): Unit = {
     val schema = t.schema
     val names = schema.fieldNames.toSeq
-    // `a.k` → (qualifier, column); a bare `k` has no qualifier
-    def ref(e: String): (Option[String], String) = {
-      val tr = unquote(e.trim)
-      tr.lastIndexOf('.') match {
-        case -1 => (None, tr)
-        case i => (Some(tr.substring(0, i)), tr.substring(i + 1))
-      }
-    }
+    def parsed(e: String): Expression = SqlFrontEnd.expression(spark, e, clock)
     def requireSide(q: Option[String], side: String, what: String): Unit =
       require(q.forall(_.equalsIgnoreCase(side)),
         s"$what must reference $side, got ${q.getOrElse("")}")
+    def target(e: String): (Option[String], String) = parsed(e) match {
+      case Ref(q, c) => (q, c)
+      case _ => throw new IllegalArgumentException(s"bad SET target: $e")
+    }
 
     // ON: conjunction of targetKey = sourceKey with equal column names
-    val keys = splitTopAnd(on).map { term =>
-      val sides = term.split("=", 2)
-      require(sides.length == 2, s"unsupported ON term: $term " +
-        "(closed grammar: t.key = s.key joined by AND)")
-      val (q1, c1) = ref(sides(0))
-      val (q2, c2) = ref(sides(1))
+    val keys = conjuncts(parsed(on)).map { term =>
+      val ((q1, c1), (q2, c2)) = term match {
+        case EqualTo(Ref(l), Ref(r)) => (l, r)
+        case _ => throw new IllegalArgumentException(
+          s"unsupported ON term: ${term.sql} (t.key = s.key joined by AND)")
+      }
       val (tq, tc, sq, sc) =
         if (q1.exists(_.equalsIgnoreCase(sAlias))) (q2, c2, q1, c1)
         else (q1, c1, q2, c2)
@@ -1008,24 +961,24 @@ object GraftSql {
     // fast path: the unconditioned full-row upsert shape → one commit
     val fastPath = clauses match {
       case Seq(MatchedUpdate(null, set), NotMatchedInsert(null, insCols, insVals)) =>
-        val setCols = splitTop(set, ',').map { a =>
-          val sides = a.split("=", 2)
-          if (sides.length != 2) None
-          else {
-            val (tq, tc) = ref(sides(0))
-            val (sq, sc) = ref(sides(1))
-            if (tq.forall(_.equalsIgnoreCase(tAlias)) &&
-              sq.forall(_.equalsIgnoreCase(sAlias)) && tc == sc) Some(tc)
-            else None
+        val setCols = splitTop(set, ',').map(_.split("=", 2) match {
+          case Array(l, r) => (parsed(l), parsed(r)) match {
+            case (Ref(tq, tc), Ref(sq, sc)) if tc == sc &&
+                tq.forall(_.equalsIgnoreCase(tAlias)) &&
+                sq.forall(_.equalsIgnoreCase(sAlias)) => Some(tc)
+            case _ => None
           }
-        }
+          case _ => None
+        })
         val insNames = Option(insCols)
           .map(_.split(",").map(c => unquote(c.trim)).toSeq).getOrElse(names)
-        val insRefs = splitTop(insVals, ',').map(ref)
+        val insRefs = splitTop(insVals, ',').map(v => parsed(v) match {
+          case Ref(q, c) if q.forall(_.equalsIgnoreCase(sAlias)) => Some(c)
+          case _ => None
+        })
         setCols.forall(_.isDefined) &&
           setCols.flatten.toSet == names.filterNot(keys.contains).toSet &&
-          insRefs.forall(_._1.forall(_.equalsIgnoreCase(sAlias))) &&
-          insNames == insRefs.map(_._2) && insNames.toSet == names.toSet
+          insRefs == insNames.map(Some(_)) && insNames.toSet == names.toSet
       case _ => false
     }
     if (fastPath) t.upsert(source.select(names.map(col): _*), keys, clock)
@@ -1058,7 +1011,7 @@ object GraftSql {
             val sets = splitTop(set, ',').map { a =>
               val sides = a.split("=", 2)
               require(sides.length == 2, s"bad SET assignment: $a")
-              val (tq, tc) = ref(sides(0))
+              val (tq, tc) = target(sides(0))
               requireSide(tq, tAlias, "a SET target")
               require(names.contains(tc), s"unknown SET column $tc")
               require(!keys.contains(tc), s"MERGE cannot SET key column $tc")
@@ -1068,14 +1021,15 @@ object GraftSql {
             // (target side) everywhere else
             val proj = names.map(n =>
               castAs(sets.getOrElse(n, s"`$tAlias`.`$n`"), n)).mkString(", ")
-            updated = Some(spark.sql(
-              s"SELECT $proj $joinFrom WHERE ${eff(Option(cond))}"))
+            updated = Some(SqlFrontEnd.query(spark,
+              s"SELECT $proj $joinFrom WHERE ${eff(Option(cond))}", clock))
             priorConds :+= Option(cond).getOrElse("TRUE")
           case MatchedDelete(cond) =>
             require(delKeys.isEmpty, "at most one WHEN MATCHED ... DELETE")
             val proj = keys.map(k => s"`$tAlias`.`$k` AS `$k`").mkString(", ")
-            delKeys = Some(spark.sql(
-              s"SELECT DISTINCT $proj $joinFrom WHERE ${eff(Option(cond))}"))
+            delKeys = Some(SqlFrontEnd.query(spark,
+              s"SELECT DISTINCT $proj $joinFrom WHERE ${eff(Option(cond))}",
+              clock))
             priorConds :+= Option(cond).getOrElse("TRUE")
           case NotMatchedInsert(cond, insCols, insVals) =>
             require(inserted.isEmpty, "at most one WHEN NOT MATCHED ... INSERT")
@@ -1093,10 +1047,10 @@ object GraftSql {
               castAs(byName.getOrElse(n, "NULL"), n)).mkString(", ")
             // anti join = source rows with no key match in the target;
             // the projection can only see the source side, as in Trino
-            inserted = Some(spark.sql(
+            inserted = Some(SqlFrontEnd.query(spark,
               s"SELECT $proj FROM $sv AS `$sAlias` LEFT ANTI JOIN $tv " +
                 s"AS `$tAlias` ON $on" +
-                Option(cond).map(c => s" WHERE $c").getOrElse("")))
+                Option(cond).map(c => s" WHERE $c").getOrElse(""), clock))
           case other => throw new IllegalArgumentException(
             s"unsupported MERGE clause: WHEN $other")
         }
@@ -1109,10 +1063,11 @@ object GraftSql {
         if (clauses.exists { case MatchedUpdate(_, _) | MatchedDelete(_) => true
                              case _ => false }) {
           val kProj = keys.map(k => s"`$k`").mkString(", ")
-          val dup = spark.sql(
+          val dup = SqlFrontEnd.query(spark,
             s"SELECT $kProj FROM (SELECT $kProj FROM $sv GROUP BY $kProj " +
               s"HAVING count(*) > 1) d WHERE EXISTS (SELECT 1 FROM $tv " +
-              s"WHERE ${keys.map(k => s"$tv.`$k` = d.`$k`").mkString(" AND ")})")
+              s"WHERE ${keys.map(k => s"$tv.`$k` = d.`$k`").mkString(" AND ")})",
+            clock)
             .limit(1).collect()
           require(dup.isEmpty, "MERGE: one target row matched more than " +
             s"one source row (duplicate source key ${dup.headOption.getOrElse("")})")
@@ -1177,128 +1132,20 @@ object GraftSql {
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  private def parseWhere(schema: StructType, w: String): org.apache.spark.sql.Column =
-    splitTopAnd(w).map(parseWhereTerm(schema, _)).reduce(_ && _)
-
-  /** WHERE predicate for UPDATE / DELETE: the closed conjunction
-    * grammar first (bit-exact legacy behavior, driver-side column
-    * checks), then any predicate outside it — OR, NOT, BETWEEN, LIKE,
-    * function calls — falls back to Spark's expression parser, with
-    * Trino's double-quoted identifiers converted to backticks (in
-    * Spark SQL a double-quoted token would silently parse as a STRING
-    * LITERAL — `"k" = 1` ≡ 'k' = 1 ≡ false — which is exactly the kind
-    * of quiet corruption the dispatcher must never allow). Unknown
-    * columns in the fallback still fail loudly, at analysis. */
-  private def parseWhereGeneral(schema: StructType,
-                                w: String): org.apache.spark.sql.Column =
-    try parseWhere(schema, w)
-    catch {
-      case _: IllegalArgumentException => expr(
-        graft.functions.TrinoCompat.rewriteSql(backtickIdents(w)))
-    }
-
-  /** Rewrite `"ident"` → `` `ident` `` outside single-quoted string
-    * literals (Trino quotes identifiers with double quotes; Spark's
-    * parser wants backticks). */
-  private[graft] def backtickIdents(s: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { // copy string literal verbatim ('' = escape)
-        out += c; i += 1
-        var closed = false
-        while (i < s.length && !closed) {
-          out += s.charAt(i)
-          if (s.charAt(i) == '\'') {
-            if (i + 1 < s.length && s.charAt(i + 1) == '\'') {
-              out += '\''; i += 1
-            } else closed = true
-          }
-          i += 1
-        }
-      } else if (c == '"') {
-        val end = s.indexOf('"', i + 1)
-        if (end < 0) { out += c; i += 1 }
-        else {
-          out += '`'; out ++= s.substring(i + 1, end); out += '`'
-          i = end + 1
-        }
-      } else { out += c; i += 1 }
-    }
-    out.result()
+  /** The terms of a top-level AND chain. */
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
   }
 
-  private val IsNullTerm = s"""(?i)^$Ident IS NULL$$""".r
-  private val IsNotNullTerm = s"""(?i)^$Ident IS NOT NULL$$""".r
-  private val InTerm = s"""(?is)^$Ident IN ?\\((.+)\\)$$""".r
-  private val CmpTerm = s"""(?is)^$Ident ?(=|<>|!=|<=|>=|<|>) ?(.+)$$""".r
-
-  private def parseWhereTerm(schema: StructType,
-                             term: String): org.apache.spark.sql.Column = {
-    // a literal the column type cannot hold exactly (`int_col = 1.5`,
-    // `int_col = 3000000000`) is outside the closed grammar: Spark's
-    // parser widens both sides and the term matches no row
-    def value(raw: String, dt: DataType): Any =
-      try coerce(parseLiteral(raw.trim), dt)
-      catch { case e: ArithmeticException => throw new IllegalArgumentException(e) }
-    def c(id: String) = {
-      val name = unquote(id)
-      require(schema.fieldNames.contains(name),
-        s"unknown column $name in WHERE (table has " +
-          s"${schema.fieldNames.mkString(", ")})")
-      col(name) -> schema(name).dataType
+  /** A parsed column reference: `a.k` → (Some(a), k), a bare `k` →
+    * (None, k). */
+  private object Ref {
+    def unapply(e: Expression): Option[(Option[String], String)] = e match {
+      case UnresolvedAttribute(parts) =>
+        Some((Some(parts.init.mkString(".")).filter(_.nonEmpty), parts.last))
+      case _ => None
     }
-    term.trim match {
-      case IsNotNullTerm(id) => c(id)._1.isNotNull
-      case IsNullTerm(id) => c(id)._1.isNull
-      case InTerm(id, vals) =>
-        val (column, dt) = c(id)
-        column.isin(splitTop(vals, ',').map(value(_, dt)): _*)
-      case CmpTerm(id, op, rawLit) =>
-        val (column, dt) = c(id)
-        val v = lit(value(rawLit, dt))
-        op match {
-          case "=" => column === v
-          case "<>" | "!=" => column =!= v
-          case "<" => column < v
-          case "<=" => column <= v
-          case ">" => column > v
-          case ">=" => column >= v
-        }
-      case other => throw new IllegalArgumentException(
-        s"unsupported WHERE term: $other (closed grammar: col op literal, " +
-          "IS [NOT] NULL, IN (...), joined by AND)")
-    }
-  }
-
-  /** Split on top-level ` AND ` (case-insensitive, outside quotes and
-    * brackets) — OR/NOT stay unsupported loudly via parseWhereTerm. */
-  private def splitTopAnd(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQuote = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        cur += c
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') { cur += '\''; i += 1 }
-          else inQuote = false
-        }
-      } else if (c == '\'') { inQuote = true; cur += c }
-      else if (c == '(' || c == '[') { depth += 1; cur += c }
-      else if (c == ')' || c == ']') { depth -= 1; cur += c }
-      else if (depth == 0 && (c == ' ') && i + 4 < s.length &&
-        s.regionMatches(true, i + 1, "AND", 0, 3) && s.charAt(i + 4) == ' ') {
-        out += cur.result(); cur.clear(); i += 4
-      } else cur += c
-      i += 1
-    }
-    if (cur.nonEmpty) out += cur.result()
-    out.result().map(_.trim).filter(_.nonEmpty)
   }
 
   // ---- SELECT * (incl. metadata tables) -----------------------------------
@@ -1321,11 +1168,11 @@ object GraftSql {
   private val SimpleSelectAll = s"""(?i)^SELECT \\* FROM $Ident$$""".r
 
   private def selectBody(spark: SparkSession, resolve: String => GraftTable,
-                         body: String): DataFrame = body.trim match {
+                         clock: Clock, body: String): DataFrame = body.trim match {
     // through select(), not .read: the source may be a named view or a
     // metadata-suffix relation
-    case SimpleSelectAll(src) => select(spark, resolve, unquote(src))
-    case b => runSelectBody(spark, resolve, b)
+    case SimpleSelectAll(src) => select(spark, resolve, clock, unquote(src))
+    case b => runSelectBody(spark, resolve, clock, b)
   }
 
   /** Table-reference tokens of a SELECT/WITH body: each `FROM x` /
@@ -1413,7 +1260,7 @@ object GraftSql {
     * CTEs registers no views and runs as-is; unknown real tables still
     * fail loudly in Spark's resolver. */
   private def runSelectBody(spark: SparkSession, resolve: String => GraftTable,
-                            body: String): DataFrame = {
+                            clock: Clock, body: String): DataFrame = {
     val shadowed = cteNames(body)
     val refs = tableRefs(body)
       .filterNot(r => shadowed.contains(unquote(r).toLowerCase))
@@ -1425,7 +1272,7 @@ object GraftSql {
         s"graft_body_${tag}_${i}_${unquote(raw).replaceAll("[^\\w]", "_")}"
       // metadata-suffix names ("t$files") resolve to metadata relations,
       // exactly like SELECT * does
-      select(spark, resolve, unquote(raw)).createOrReplaceTempView(view)
+      select(spark, resolve, clock, unquote(raw)).createOrReplaceTempView(view)
       raw -> view
     }
     try {
@@ -1435,15 +1282,15 @@ object GraftSql {
           ci + "(?<![\\w.$\"])" + java.util.regex.Pattern.quote(raw) + "(?![\\w$\"])",
           java.util.regex.Matcher.quoteReplacement(view))
       }
-      // analysis is eager: the plan is resolved here. Trino temporal
-      // spellings (date_diff('unit', ...)) rewrite to Spark's
-      // grammar-level timestampdiff first — see TrinoCompat.rewriteSql
-      spark.sql(graft.functions.TrinoCompat.rewriteSql(sql))
+      // analysis is eager: the plan is resolved here. The front end
+      // runs AFTER the table refs became view names, so a quoted table
+      // ref is a view and every other double-quoted token a column
+      SqlFrontEnd.query(spark, sql, clock)
     } finally views.foreach { case (_, v) => spark.catalog.dropTempView(v) }
   }
 
   private def select(spark: SparkSession, resolve: String => GraftTable,
-                     id: String): DataFrame = {
+                     clock: Clock, id: String): DataFrame = {
     val dollar = id.lastIndexOf('$')
     // only a KNOWN metadata suffix routes to the metadata relations — a
     // data table whose name happens to contain '$' stays a table read
@@ -1454,7 +1301,7 @@ object GraftSql {
     } else {
       val table = resolve(id)
       viewText(spark, table.location) match {
-        case Some(body) => expandView(spark, resolve, id, body)
+        case Some(body) => expandView(spark, resolve, clock, id, body)
         case None => table.read
       }
     }
@@ -1523,11 +1370,12 @@ object GraftSql {
     * the same [[selectBody]] recursion; the result plan holds graft
     * scans only (the view is a definition, never a materialization). */
   private def expandView(spark: SparkSession, resolve: String => GraftTable,
-                         name: String, body: String): DataFrame = {
+                         clock: Clock, name: String,
+                         body: String): DataFrame = {
     val stack = viewStack.get()
     require(!stack.contains(name), s"recursive view definition: $name")
     stack.push(name)
-    try selectBody(spark, resolve, body) finally stack.pop()
+    try selectBody(spark, resolve, clock, body) finally stack.pop()
   }
 
   // ---- literal scanner -----------------------------------------------------
@@ -1600,5 +1448,128 @@ object GraftSql {
     case (xs: Seq[_], ArrayType(et, _)) => xs.map(coerce(_, et))
     case (other, t) => throw new IllegalArgumentException(
       s"cannot coerce literal $other to ${t.simpleString}")
+  }
+}
+
+/** The one SQL expression front end: every WHERE, SET, ON, WHEN and
+  * SELECT text [[GraftSql]] hands to Spark goes through here, and only
+  * here reaches Spark's parser. One Trino normalization comes first
+  * ([[sparkText]]):
+  *   - double-quoted identifiers become backticked — in Spark SQL a
+  *     double-quoted token is a STRING LITERAL, so `"k" = 1` would
+  *     quietly compare the string 'k';
+  *   - Trino function spellings rewrite ([[TrinoCompat.rewriteSql]]);
+  *   - `current_timestamp[(p)]` becomes the injected clock's instant,
+  *     never Spark's own wall clock (the scheduler's gates and stamps
+  *     run on the caller's clock).
+  * Expressions over one table ([[overTable]]) also take Trino's literal
+  * typing where it differs from Spark's, and resolve against the table
+  * schema at once. */
+private[graft] object SqlFrontEnd {
+
+  /** A query (SELECT / WITH body), analyzed. */
+  def query(spark: SparkSession, text: String, clock: Clock): DataFrame =
+    spark.sql(sparkText(text, clock))
+
+  /** One expression, parsed but not resolved. */
+  def expression(spark: SparkSession, text: String, clock: Clock): Expression =
+    spark.sessionState.sqlParser.parseExpression(sparkText(text, clock))
+
+  /** One expression over the columns of `schema`, in Trino's typing. */
+  def tableExpression(spark: SparkSession, text: String, clock: Clock,
+                      schema: StructType): Expression =
+    trinoTyped(expression(spark, text, clock), schema)
+
+  /** A WHERE predicate and named SET right-hand sides (each cast to its
+    * column's type) on a table of `schema`, resolved now over an empty
+    * relation of that schema: an unknown column or a non-boolean WHERE
+    * fails here — before any job or commit, even on a table with no
+    * files. */
+  def overTable(spark: SparkSession, schema: StructType, clock: Clock,
+                where: String, sets: Seq[(String, String)] = Nil)
+      : (Column, Seq[(String, Column)]) = {
+    def typed(text: String) =
+      CatalystShims.column(tableExpression(spark, text, clock, schema))
+    val cond = typed(where)
+    val values = sets.map { case (c, text) =>
+      c -> typed(text).cast(schema(c).dataType)
+    }
+    spark.createDataFrame(java.util.List.of[Row](), schema)
+      .filter(cond).select(values.map(_._2): _*)
+    (cond, values)
+  }
+
+  private val CurrentTimestamp =
+    """(?i)(?<![\w.$`])current_timestamp(?![\w$`])(?:\s*\(\s*(\d?)\s*\))?""".r
+
+  private def sparkText(text: String, clock: Clock): String = {
+    val micros = ChronoUnit.MICROS.between(Instant.EPOCH, clock.instant())
+    TrinoCompat.outsideLiterals(
+      TrinoCompat.rewriteSql(backtickIdents(text)), CurrentTimestamp) { m =>
+      // TIMESTAMP(p): the instant truncated to p fractional digits
+      val p = Option(m.group(1)).filter(_.nonEmpty).fold(6)(_.toInt.min(6))
+      val unit = math.pow(10, 6 - p).toLong
+      s"timestamp_micros(${Math.floorDiv(micros, unit) * unit})"
+    }
+  }
+
+  /** Rewrite `"ident"` → `` `ident` `` outside single-quoted string
+    * literals (Trino quotes identifiers with double quotes; Spark's
+    * parser wants backticks). */
+  private def backtickIdents(s: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\'') { // copy string literal verbatim ('' = escape)
+        out += c; i += 1
+        var closed = false
+        while (i < s.length && !closed) {
+          out += s.charAt(i)
+          if (s.charAt(i) == '\'') {
+            if (i + 1 < s.length && s.charAt(i + 1) == '\'') {
+              out += '\''; i += 1
+            } else closed = true
+          }
+          i += 1
+        }
+      } else if (c == '"') {
+        val end = s.indexOf('"', i + 1)
+        if (end < 0) { out += c; i += 1 }
+        else {
+          out += '`'; out ++= s.substring(i + 1, end); out += '`'
+          i = end + 1
+        }
+      } else { out += c; i += 1 }
+    }
+    out.result()
+  }
+
+  /** Trino's typing of a numeric literal compared with a REAL or VARCHAR
+    * column, where Spark's differs: the literal takes the column's type.
+    * Spark compares `real_col = 0.1` in DOUBLE, where the stored REAL
+    * 0.1 is not 0.1, so the row is missed; it compares `varchar_col = 5`
+    * as numbers, failing mid-job on the first non-numeric value. The
+    * cast also keeps a REAL comparison an `attr = literal` that file
+    * skipping prunes on. */
+  private def trinoTyped(e: Expression, schema: StructType): Expression = {
+    def typed(column: Expression, value: Expression): Expression =
+      (column, value) match {
+        case (UnresolvedAttribute(Seq(name)), l @ Literal(_, _: NumericType)) =>
+          schema.find(_.name.equalsIgnoreCase(name)).map(_.dataType) match {
+            case Some(dt @ (FloatType | StringType)) => Cast(l, dt)
+            case _ => l
+          }
+        case _ => value
+      }
+    e.transformUp {
+      case c: BinaryComparison =>
+        c.withNewChildren(Seq(typed(c.right, c.left), typed(c.left, c.right)))
+      case in: In => in.copy(list = in.list.map(typed(in.value, _)))
+      case f: UnresolvedFunction if f.arguments.size == 3 &&
+          f.nameParts.map(_.toLowerCase) == Seq("between") =>
+        val Seq(v, lo, hi) = f.arguments
+        f.copy(arguments = Seq(v, typed(v, lo), typed(v, hi)))
+    }
   }
 }

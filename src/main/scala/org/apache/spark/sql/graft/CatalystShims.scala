@@ -44,6 +44,9 @@ object CatalystShims {
       new XxHash64(Seq(l)).eval(InternalRow.empty).asInstanceOf[Long])
   }
 
+  /** A Catalyst expression (parsed, possibly unresolved) as a Column. */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+
   /** A Catalyst-internal value of type `dt` as a literal Column. */
   def literal(value: Any, dt: DataType): Column =
     ExpressionUtils.column(Literal(value, dt))

@@ -459,11 +459,13 @@ class GraftSqlSpec extends SparkSpec {
     // column-to-column assignment
     fx.sql("UPDATE t SET price = k WHERE seg = 'moved'")
     assert(t.read.filter($"k" === 3).select("price").as[Double].head() == 3.0)
-    // unknown SET column / unsupported rhs fail loudly
+    // unknown SET column fails loudly; any Spark expression is a rhs
     intercept[IllegalArgumentException](
       fx.sql("UPDATE t SET nope = 1 WHERE k = 1"))
-    intercept[Exception](
-      fx.sql("UPDATE t SET price = sqrt(price) WHERE k = 1"))
+    val old = t.read.filter($"k" === 1).select("price").as[Double].head()
+    fx.sql("UPDATE t SET price = sqrt(price) WHERE k = 1")
+    assert(t.read.filter($"k" === 1).select("price").as[Double].head() ==
+      math.sqrt(old))
   }
 
   test("CTAS and INSERT INTO ... SELECT copy tables through the dispatcher") {
@@ -690,15 +692,15 @@ class GraftSqlSpec extends SparkSpec {
     fx.sql("DELETE FROM t WHERE \"k\" BETWEEN 4 AND 6 AND grp LIKE 'g%'")
     assert(t.read.filter($"k".between(4, 6)).count() == 0)
 
-    // unknown columns still fail loudly (fallback analysis; checked
-    // while the table is non-empty — an empty table short-circuits
-    // before the predicate is ever analyzed)
+    // unknown columns still fail loudly, at analysis
     intercept[Exception](
       fx.sql("DELETE FROM t WHERE nosuch = 1 OR nosuch = 2"))
 
     // truncate shape takes the CoW path and empties the table
     fx.sql("DELETE FROM t")
     assert(t.rowCount == 0)
+    // an unknown column fails loudly on a table with no live files too
+    intercept[Exception](fx.sql("DELETE FROM t WHERE nosuch = 1"))
   }
 
   test("UPDATE takes general WHERE predicates through the fallback") {
@@ -716,6 +718,49 @@ class GraftSqlSpec extends SparkSpec {
     fx.sql("UPDATE t SET v = 0 WHERE \"grp\" = 'g0' AND k >= 8")
     assert(t.read.filter($"k" === 8).select("v").as[Double].head() == 0.0)
     intercept[Exception](fx.sql("UPDATE t SET v = 0 WHERE nope = 1 OR k = 1"))
+  }
+
+  test("double-quoted identifiers are columns in SELECT bodies and MERGE") {
+    import spark.implicits._
+    val fx = fixture("sqlquoted")
+    fx.sql("CREATE TABLE f (k BIGINT, s VARCHAR)")
+    fx.sql("INSERT INTO f VALUES (1, 'abc'), (2, 'xyz')")
+    // a double-quoted token is a column, never the string constant 'k'
+    assert(fx.rows("""SELECT "k" FROM f ORDER BY "k"""")
+      .map(_.getLong(0)).toSeq == Seq(1L, 2L))
+    assert(fx.rows("""SELECT k FROM f WHERE "s" = 'abc'""")
+      .map(_.getLong(0)).toSeq == Seq(1L))
+    // ... in a quoted table ref's projection too
+    assert(fx.rows("""SELECT "k" FROM "f" WHERE "k" > 1""")
+      .map(_.getLong(0)).toSeq == Seq(2L))
+    // MERGE: ON, WHEN condition and SET all read quoted names as columns
+    fx.sql("CREATE TABLE src (k BIGINT, s VARCHAR)")
+    fx.sql("INSERT INTO src VALUES (1, 'new'), (2, 'skip')")
+    fx.sql("""MERGE INTO f USING src ON f."k" = src."k"
+      WHEN MATCHED AND src."s" = 'new' THEN UPDATE SET "s" = src."s" """)
+    assert(fx.resolve("f").read.as[(Long, String)].collect().sortBy(_._1)
+      .toSeq == Seq((1L, "new"), (2L, "xyz")))
+  }
+
+  test("Trino literal typing: REAL and VARCHAR columns against numbers") {
+    import spark.implicits._
+    val fx = fixture("sqltyping")
+    fx.sql("CREATE TABLE t (k BIGINT, f REAL, s VARCHAR)")
+    fx.sql("INSERT INTO t VALUES (1, 0.1, '5'), (2, 0.5, 'abc'), " +
+      "(3, 0.25, '7'), (4, NULL, NULL)")
+    val t = fx.resolve("t")
+    def keys(): Seq[Long] = t.read.select($"k").as[Long].collect().sorted.toSeq
+    // the REAL 0.1 equals the literal 0.1 (compared as REAL, as in Trino)
+    fx.sql("UPDATE t SET s = 'hit' WHERE f = 0.1")
+    assert(t.read.filter($"s" === "hit").select($"k").as[Long].collect()
+      .toSeq == Seq(1L))
+    fx.sql("DELETE FROM t WHERE f IN (0.1, 0.2)")
+    assert(keys() == Seq(2L, 3L, 4L))
+    // a number against a VARCHAR compares as text, never failing on 'abc'
+    fx.sql("DELETE FROM t WHERE s = 7")
+    assert(keys() == Seq(2L, 4L))
+    fx.sql("DELETE FROM t WHERE s BETWEEN 0 AND 9 OR f > 0.4")
+    assert(keys() == Seq(4L))
   }
 
   test("MERGE INTO in the upsert shape is exactly GraftTable.upsert") {
