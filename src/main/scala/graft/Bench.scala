@@ -4,10 +4,10 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
   * Cold-JVM runs in this environment pay a large one-time class-loading /
-  * codegen warm-up (~10-30 s per distinct operator shape, near-zero CPU —
-  * measured in DevTiming). A warm-up pass executes every query once so the
-  * timed pass measures engine throughput, not JVM bootstrap; the warm-up
-  * cost is reported separately as "warmup_sec".
+  * codegen warm-up (~10-30 s per distinct operator shape, near-zero CPU).
+  * A warm-up pass executes every query once so the timed pass measures
+  * engine throughput, not JVM bootstrap; the warm-up cost is reported
+  * separately as "warmup_sec".
   */
 object Bench {
   def main(args: Array[String]): Unit = {

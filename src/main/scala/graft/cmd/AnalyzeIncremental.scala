@@ -60,13 +60,13 @@ object AnalyzeIncremental {
   /** Sketch uncovered live files; returns how many files were scanned. */
   def run(table: GraftTable, clock: Clock): Long = table.lock.synchronized {
     val spark = table.spark
-    val livePairs = table.liveFilePairs
+    val live = table.currentSnapshot.fold(graft.meta.FileScope.Empty)(table.scopeOf)
     val covered: Set[String] =
       if (!table.fileSystem.exists(storeDir(table))) Set.empty
       else spark.read.schema(StoreSchema).parquet(storeDir(table).toString)
         .select("path").distinct().collect().map(_.getString(0)).toSet
-    val todo = livePairs.filterNot(p => covered(p._1)).sortBy(_._1)
-    if (todo.isEmpty) return 0L
+    val todo = live.subset(f => !covered(f.path))
+    if (todo.files.isEmpty) return 0L
 
     val schema = table.schema
     // Schema-aligned read: sketches are keyed by CURRENT column names
@@ -111,7 +111,7 @@ object AnalyzeIncremental {
         col("e.max_str"), col("e.kll_sketch"))
     rows.write.mode("append").parquet(storeDir(table).toString)
     table.fileSystem.delete(new Path(storeDir(table), "_SUCCESS"), false)
-    todo.size.toLong
+    todo.files.size.toLong
   }
 
   /** Merged table-level stats from the per-file sketches, restricted to

@@ -62,11 +62,10 @@ object ExpireSnapshots {
       val spark = table.spark
       import spark.implicits._
       val doomed = reclaimable(table, expired, retained).as[String]
-      // Executors must see the session's Hadoop conf (s3a credentials,
+      // Executors must see the table's Hadoop conf (s3a credentials,
       // endpoints, …), not a from-scratch Configuration.
       val confB = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
+        new org.apache.spark.util.SerializableConfiguration(table.hadoopConf))
       val deleted = spark.sparkContext.longAccumulator("deletedFiles")
       doomed.foreachPartition { (it: Iterator[String]) =>
         val conf = confB.value.value

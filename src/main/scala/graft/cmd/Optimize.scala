@@ -124,13 +124,14 @@ object Optimize {
     // lone small files aren't worth a rewrite; any oversized or
     // delete-laden file always is
     if (numSmall < MinInputFiles && numForced == 0) return
-    val candPairs = candRows.map(r =>
-      (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1))).toIndexedSeq
-    val candBytes = candRows.map(_.getLong(2)).sum
+    val cands = candRows.toIndexedSeq.map(r => graft.meta.ManifestEntry(
+      r.getString(0), r.getLong(2), if (r.isNullAt(1)) 0L else r.getLong(1)))
+    val candBytes = cands.map(_.sizeBytes).sum
     val nOut = math.max(1L,
       (candBytes + targetFileBytes - 1) / targetFileBytes).toInt
 
-    val toRewrite = table.morReadFiles(current, candPairs)
+    val toRewrite = table.morReadFiles(current,
+      graft.meta.FileScope(current.manifests, cands))
     // keep partitioned/sorted tables clustered — a round-robin rewrite
     // would widen every file's transform/sort bounds and kill pruning
     val exprs = table.partitionSpec.map(f =>
@@ -146,6 +147,6 @@ object Optimize {
     table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
     if (exprs.nonEmpty) table.pruneEmptyFiles(commitDir)
     table.commitReplacement("optimize", Some(current),
-      candPairs.map(_._1).toSet, commitDir, clock)
+      cands.map(_.path).toSet, commitDir, clock)
   }
 }

@@ -38,11 +38,10 @@ object RemoveOrphanFiles {
       val cutoffMs = clock.millis() - retentionDays.toLong * 86400000L
       val orphans = orphanSet(table, cutoffMs).as[String]
 
-      // Ship the session's Hadoop conf to executors (credentials/endpoint
+      // Ship the table's Hadoop conf to executors (credentials/endpoint
       // for non-default filesystems), instead of a from-scratch Configuration.
       val confB = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
+        new org.apache.spark.util.SerializableConfiguration(table.hadoopConf))
       val deleted = spark.sparkContext.longAccumulator("deletedOrphans")
       orphans.foreachPartition { (it: Iterator[String]) =>
         val conf = confB.value.value
@@ -177,8 +176,7 @@ object RemoveOrphanFiles {
     if (dirs.isEmpty) return loose.toDF("path", "mtime")
     // only the Hadoop conf crosses the closure — never the table handle
     val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
+      new org.apache.spark.util.SerializableConfiguration(table.hadoopConf))
     val shards = dirs.map(_.getPath.toString)
     val sharded = spark.createDataset(shards)
       .repartition(math.min(shards.size,

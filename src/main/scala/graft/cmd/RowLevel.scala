@@ -46,23 +46,10 @@ object RowLevel {
       val matched = coalesce(cond, lit(false))
       val before = table.currentSnapshot.map(_.totalRows).getOrElse(0L)
       rewrite(table, "cow_delete",
-        affected = discover(table, matched),
+        affected = table.affectedFiles(matched),
         survivorsOf = df => df.filter(!matched),
         extra = None, clock)
       before - table.currentSnapshot.map(_.totalRows).getOrElse(0L)
-    }
-
-  /** Affected-file discovery for a predicate: the bounds/bloom-pruned
-    * raw scan when available ([[GraftTable.affectedFilesRaw]] — on a
-    * clustered table a selective predicate reads only candidate files),
-    * else the aligned full scan. Raw discovery may over-mark files
-    * whose matches are all MOR-deleted; those files are delete-targeted
-    * and the rewrite unions [[GraftTable.deleteTargets]], so the final
-    * affected set is identical either way. */
-  private def discover(table: GraftTable, matched: Column): DataFrame =
-    table.affectedFilesRaw(matched).getOrElse {
-      table.morReadLive(table.liveFilePairs, Some(FP))
-        .filter(matched).select(col(FP).as("path")).distinct()
     }
 
   /** UPDATE ... SET col = expr WHERE cond (Trino's general row-level
@@ -89,7 +76,7 @@ object RowLevel {
       // previous no-op behavior when raw discovery over-marked files
       // whose matches are all MOR-deleted.
       rewrite(table, "update",
-        affected = discover(table, matched),
+        affected = table.affectedFiles(matched),
         // withColumns applies all SETs against the OLD row at once —
         // `SET a = b, b = a` swaps, like SQL requires
         survivorsOf = df => df.withColumns(sets.map { case (c, e) =>
@@ -127,7 +114,7 @@ object RowLevel {
       val spark = table.spark
       val srcKeysDf = source.select(keys.map(col): _*).distinct()
       val localKeys = srcKeysDf.limit(MaxLocalKeys + 1).collect()
-      val (srcKeys, pairs, keyCount) =
+      val (srcKeys, candidates, keyCount) =
         if (localKeys.length <= MaxLocalKeys)
           // LOCALIZED path (r19): the distinct key set is materialized
           // ONCE and reused for bounds pruning, the semi-join, and the
@@ -149,7 +136,7 @@ object RowLevel {
           // non-bulk shape.
           (srcKeysDf, table.pairsOverlappingKeys(srcKeysDf, keys),
             srcKeysDf.count())
-      val withPath = table.morReadLive(pairs, Some(FP))
+      val withPath = table.morReadLive(candidates, Some(FP))
       rewrite(table, "merge",
         affected = withPath.join(srcKeys, keys, "left_semi")
           .select(col(FP).as("path")).distinct(),
@@ -192,7 +179,7 @@ object RowLevel {
       s"cow-pre-${UUID.randomUUID()}")
     val rewrittenRows = {
       val base = table.morReadLive(
-        table.liveFilePairs.filter(p => affectedPaths(p._1)))
+        table.liveFiles.filter(f => affectedPaths(f.path)))
       val observed = preAgg.fold(base)(a => base.observe(preObs, a.as("pre")))
       val surv = survivorsOf(observed)
       extra.fold(surv.select(cols: _*))(e =>

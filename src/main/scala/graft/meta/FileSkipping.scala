@@ -56,11 +56,15 @@ object FileSkipping {
   val KeepAll: Column = lit(true)
 
   /** The manifest's typed lower / upper bound of `c` (NULL when
-    * missing); public as the probe range of a join between manifests. */
+    * missing); public as the probe range of a join between manifests.
+    * A bound that does not decode as `dt` reads as missing: a file index
+    * over one schema generation filters manifests that also list files
+    * written under another (a since-widened or re-added column), whose
+    * rows it intersects away but must not fail on. */
   def lowerBound(c: String, dt: DataType, m: String => Column = col(_)): Column =
-    element_at(m("min_values"), c).cast(dt)
+    element_at(m("min_values"), c).try_cast(dt)
   def upperBound(c: String, dt: DataType, m: String => Column = col(_)): Column =
-    element_at(m("max_values"), c).cast(dt)
+    element_at(m("max_values"), c).try_cast(dt)
 
   /** Might the file hold a value in `[lo, hi]`? A missing bound on
     * either side — the file's or the probe's — keeps the file. */
@@ -169,12 +173,14 @@ object FileSkipping {
       (substring(mn, 1, p.length) <= p && substring(mx, 1, p.length) >= p)
   }
 
-  /** (path, added_snapshot_id) of the manifest rows `keep` admits —
-    * the scan list every pruned read and row-level discovery hands to
-    * [[GraftTable.readFilesAligned]] (a missing added id reads as 0). */
-  def survivingPairs(manifests: DataFrame,
-                     keep: Column): IndexedSeq[(String, Long)] =
-    manifests.filter(keep).select("path", "added_snapshot_id").collect()
-      .map(r => (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-      .toIndexedSeq
+  /** The manifest rows `keep` admits, as the entries a
+    * [[graft.sources.GraftFileIndex]] lists: path and size straight from
+    * the manifest (no file is listed or stat'ed), and the added id that
+    * picks each data file's schema generation (a missing one reads as
+    * 0). */
+  def survivingFiles(manifests: DataFrame,
+                     keep: Column): IndexedSeq[ManifestEntry] =
+    manifests.filter(keep).select("path", "size_bytes", "added_snapshot_id")
+      .collect().toIndexedSeq.map(r => ManifestEntry(r.getString(0),
+        r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
 }

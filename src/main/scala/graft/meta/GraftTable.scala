@@ -222,7 +222,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     if (range.isEmpty || to.manifests.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val compactionIds = range.filter(compaction).map(_.snapshotId)
-    readFilesAligned(FileSkipping.survivingPairs(manifestDf(to.manifests),
+    readFilesAligned(scopeOf(to,
       col("added_snapshot_id") > fromId && col("added_snapshot_id") <= toId &&
         !col("added_snapshot_id").isin(compactionIds: _*)))
   }
@@ -330,20 +330,18 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         // remains is exactly the deleted rows (cow_delete) or the
         // delete+insert pairs of replaced keys plus new-key inserts
         // (merge).
-        val pPairs = parent.map(filePairsOf).getOrElse(Seq.empty)
-        val sPairs =
-          if (s.manifests.isEmpty || s.numFiles == 0) Seq.empty
-          else filePairsOf(s)
-        val pPaths = pPairs.map(_._1).toSet
-        val sPaths = sPairs.map(_._1).toSet
-        val removed = pPairs.filterNot(p => sPaths(p._1))
-        val added = sPairs.filterNot(p => pPaths(p._1))
+        val pScope = parent.fold(FileScope.Empty)(scopeOf)
+        val sScope = scopeOf(s)
+        val pPaths = pScope.files.map(_.path).toSet
+        val sPaths = sScope.files.map(_.path).toSet
+        val removed = pScope.subset(f => !sPaths(f.path))
+        val added = sScope.subset(f => !pPaths(f.path))
         val names = schema.fieldNames.toSeq
         val before =
-          if (removed.isEmpty || parent.isEmpty) empty
+          if (removed.files.isEmpty || parent.isEmpty) empty
           else morReadFiles(parent.get, removed).select(names.map(col): _*)
         val after =
-          if (added.isEmpty) empty
+          if (added.files.isEmpty) empty
           else readFilesAligned(added).select(names.map(col): _*)
         val (dels, ins) = netRowDiff(before, after)
         Seq(stamp(dels, "delete"), stamp(ins, "insert"))
@@ -353,21 +351,19 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val inserts: Option[DataFrame] =
         if (s.manifests.isEmpty) None
         else {
-          val pairs = FileSkipping.survivingPairs(manifestDf(s.manifests),
-            col("added_snapshot_id") === s.snapshotId)
-          if (pairs.isEmpty) None else Some(stamp(readFilesAligned(pairs), "insert"))
+          val added = scopeOf(s, col("added_snapshot_id") === s.snapshotId)
+          if (added.files.isEmpty) None
+          else Some(stamp(readFilesAligned(added), "insert"))
         }
 
       // position-delete events: rows the delta pos manifests removed
       val posDeletes: Option[DataFrame] = {
         val prior = parent.map(_.deleteManifests.toSet).getOrElse(Set.empty)
-        val delta = s.deleteManifests.filterNot(prior)
-        val delFiles = manifestDf(delta).select("path")
-          .collect().map(_.getString(0)).toIndexedSeq
-        if (delFiles.isEmpty) None
+        val dels = listedScope(s.deleteManifests.filterNot(prior))
+        if (dels.files.isEmpty) None
         else {
-          val del = spark.read.schema(DeleteSchema).parquet(delFiles: _*)
-          val data = readFilesAligned(filePairsOf(s), Some(MorPathCol),
+          val del = positionDeletes(dels)
+          val data = readFilesAligned(scopeOf(s), Some(MorPathCol),
             Some(MorPosCol))
           Some(stamp(data.join(del,
               data(MorPathCol) === del("file_path") &&
@@ -385,11 +381,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           // view as of the PARENT (the rows the delete acted on),
           // restricted to key matches — null-safe, one scan over the
           // delta manifests, one semi-join per key set
-          val base = parent.map(p => morReadFiles(p, filePairsOf(p)))
+          val base = parent.map(p => morReadFiles(p, scopeOf(p)))
             .getOrElse(empty)
           val dfs = eqFileInfos(delta).groupBy(_.keys).toSeq
             .map { case (keyNames, group) =>
-              val entries = eqEntriesOf(group)
+              val entries = eqEntriesOf(delta, group)
               val cond = keyNames.map(k => base(k) <=> entries(k))
                 .reduce(_ && _)
               base.join(entries, cond, "left_semi")
@@ -458,25 +454,36 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   private def readSnapshot(snap: Option[Snapshot]): DataFrame = snap match {
     case Some(s) if s.numFiles > 0 && s.manifests.nonEmpty =>
-      morReadFiles(s, filePairsOf(s))
+      morReadFiles(s, scopeOf(s))
     case _ =>
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
-  /** (path, added_snapshot_id) of a snapshot's live data files. */
-  private def filePairsOf(s: Snapshot): Seq[(String, Long)] =
-    FileSkipping.survivingPairs(manifestDf(s.manifests), FileSkipping.KeepAll)
+  /** Every live data file of `s`: the whole-snapshot scope. */
+  private[graft] def scopeOf(s: Snapshot): FileScope =
+    new FileScope(s.manifests, FileSkipping.survivingFiles(manifestDf(s.manifests),
+      FileSkipping.KeepAll), Some(s))
 
-  private[graft] def liveFilePairs: Seq[(String, Long)] = livePairs(FileSkipping.KeepAll)
+  /** The live data files of `s` that `keep` admits (a subset scope). */
+  private[graft] def scopeOf(s: Snapshot, keep: Column): FileScope =
+    listedScope(s.manifests, keep)
+
+  /** The files `manifests` list (data or delete) that `keep` admits. */
+  private def listedScope(manifests: Seq[String],
+                          keep: Column = FileSkipping.KeepAll): FileScope =
+    FileScope(manifests, FileSkipping.survivingFiles(manifestDf(manifests), keep))
+
+  private[graft] def liveFiles: IndexedSeq[ManifestEntry] =
+    liveFiles(FileSkipping.KeepAll)
 
   /** The current snapshot's live files that `keep` admits. */
-  private def livePairs(keep: => Column): Seq[(String, Long)] = currentSnapshot match {
-    case Some(s) if s.numFiles > 0 && s.manifests.nonEmpty =>
-      FileSkipping.survivingPairs(manifestDf(s.manifests), keep)
-    case _ => Seq.empty
-  }
+  private def liveFiles(keep: => Column): IndexedSeq[ManifestEntry] =
+    currentSnapshot match {
+      case Some(s) if s.numFiles > 0 && s.manifests.nonEmpty => scopeOf(s, keep).files
+      case _ => IndexedSeq.empty
+    }
 
-  /** [[liveFilePairs]] bounds-pruned to files whose per-key-column value
+  /** [[liveFiles]] bounds-pruned to files whose per-key-column value
     * range overlaps the key set's min/max — the same manifest
     * file-skipping [[matchingRows]] performs for eq-deletes, applied to
     * the CoW merge's affected-file discovery so it scans only candidate
@@ -490,8 +497,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * filter folds into the driver-local manifest relation, job-free
     * below the local-read gate. */
   private[graft] def pairsOverlappingKeys(keys: DataFrame,
-                                          keyCols: Seq[String]): Seq[(String, Long)] =
-    livePairs {
+                                          keyCols: Seq[String]): IndexedSeq[ManifestEntry] =
+    liveFiles {
       val tableSchema = schema
       val bounded = keyCols.filter(k => FileSkipping.boundable(tableSchema(k).dataType))
       if (bounded.isEmpty) FileSkipping.KeepAll
@@ -522,8 +529,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * the hull test — no extra job. */
   private[graft] def pairsMatchingKeySet(keyRows: Seq[Row],
                                          keySchema: StructType,
-                                         keyCols: Seq[String]): Seq[(String, Long)] =
-    livePairs {
+                                         keyCols: Seq[String]): IndexedSeq[ManifestEntry] =
+    liveFiles {
       val tableSchema = schema
       keyCols.map { k =>
         val idx = keySchema.fieldIndex(k)
@@ -542,14 +549,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def manifestDf(paths: Seq[String]): DataFrame =
     ManifestIO.relation(spark, hadoopConf, paths)
 
-  /** All (file_path, pos) delete entries of a snapshot as a DataFrame. */
-  private def deleteRowsOf(s: Snapshot): DataFrame = {
-    val files = manifestDf(s.deleteManifests).select("path")
-      .collect().map(_.getString(0)).toIndexedSeq
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], DeleteSchema)
-    else spark.read.schema(DeleteSchema).parquet(files: _*)
-  }
+  /** The (file_path, pos) entries of the position-delete files `dels`
+    * lists, through the same index as data scans. */
+  private def positionDeletes(dels: FileScope): DataFrame =
+    graft.sources.GraftFileIndex.scan(spark, this, DeleteSchema, dels)
 
   /** Live equality-delete file inventory of the current snapshot. */
   def eqDeleteFiles: DataFrame =
@@ -580,19 +583,19 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * (`added_snapshot_id`); log derivation is the legacy fallback. */
   private def eqFileInfos(manifests: Seq[String]): Seq[EqFileInfo] = {
     if (manifests.isEmpty) return Seq.empty
-    // (data-file path, intro id or null, key names or null, manifest dir)
-    // — one aggregate-gated driver read with per-dir attribution when
-    // local; one distributed scan otherwise, with `_metadata.file_path`
-    // substituting for the known dir. Defense against zero-row eq files
-    // (writers no longer commit them, but a legacy manifest may carry
-    // one): null key names → deletes nothing → skip, instead of reading
-    // its NULL key record.
+    // (eq file path, size, intro id or null, key names or null,
+    // manifest dir) — one aggregate-gated driver read with per-dir
+    // attribution when local; one distributed scan otherwise, with
+    // `_metadata.file_path` substituting for the known dir. Defense
+    // against zero-row eq files (writers no longer commit them, but a
+    // legacy manifest may carry one): null key names → deletes nothing
+    // → skip, instead of reading its NULL key record.
     val locals = ManifestIO.readLocalByDir(hadoopConf, manifests)
-    val rows: Seq[(String, java.lang.Long, Seq[String], String)] =
+    val rows: Seq[(String, Long, java.lang.Long, Seq[String], String)] =
       if (locals.isDefined)
         locals.get.flatMap { case (m, rs) =>
           rs.collect { case r if !r.isNullAt(3) =>
-            (r.getString(0),
+            (r.getString(0), r.getLong(1),
               if (r.isNullAt(7)) null else java.lang.Long.valueOf(r.getLong(7)),
               r.getMap[String, Any](3).keys.toSeq, new Path(m).toUri.getPath)
           }
@@ -604,25 +607,25 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         // no _metadata column — the file-source scan always does
         // (ADVICE r16)
         spark.read.schema(GraftTable.ManifestSchema).parquet(manifests: _*)
-          .select(col("path"), col("added_snapshot_id"),
+          .select(col("path"), col("size_bytes"), col("added_snapshot_id"),
             map_keys(col("null_counts")).as("keys"),
             col("_metadata.file_path").as("mfile"))
           .filter(col("keys").isNotNull)
           .collect().toIndexedSeq.map(r =>
-            (r.getString(0),
-              if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1)),
-              r.getSeq[String](2),
-              new Path(r.getString(3)).getParent.toUri.getPath))
+            (r.getString(0), r.getLong(1),
+              if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2)),
+              r.getSeq[String](3),
+              new Path(r.getString(4)).getParent.toUri.getPath))
     lazy val fromLog = eqIntroducedBy(snapshots).map { case (m, id) =>
       new Path(m).toUri.getPath -> id
     }
-    rows.toIndexedSeq.map { case (path, added, keys, mdir) =>
+    rows.toIndexedSeq.map { case (path, size, added, keys, mdir) =>
       val keyNames = keys.filterNot(_ == EqIntroCol).sorted
       val intro =
         if (added != null) added.longValue
         else fromLog.getOrElse(mdir, throw new IllegalStateException(
           s"eq manifest $mdir not in log"))
-      EqFileInfo(path, intro, keyNames)
+      EqFileInfo(ManifestEntry(path, size, intro), keyNames)
     }
   }
 
@@ -637,15 +640,17 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       StructField(EqIntroCol, LongType, nullable = true))
   }
 
-  /** Scan a group of same-keyed eq-delete files as (key columns,
-    * [[MorEqSnapCol]]): the per-entry intro of compacted files when
-    * present, else the per-file stamp broadcast in. */
-  private def eqEntriesOf(group: Seq[EqFileInfo]): DataFrame = {
+  /** Scan a group of same-keyed eq-delete files (rows of `manifests`)
+    * as (key columns, [[MorEqSnapCol]]): the per-entry intro of
+    * compacted files when present, else the per-file stamp broadcast
+    * in. */
+  private def eqEntriesOf(manifests: Seq[String], group: Seq[EqFileInfo]): DataFrame = {
     import spark.implicits._
     val introDf = broadcast(
       spark.createDataset(group.map(g => (g.path, g.intro)))
         .toDF(MorJoinCol, MorEqSnapCol))
-    spark.read.schema(eqKeySchema(group.head)).parquet(group.map(_.path): _*)
+    graft.sources.GraftFileIndex.scan(spark, this, eqKeySchema(group.head),
+        FileScope(manifests, group.map(_.file).toIndexedSeq))
       .withColumn(MorJoinCol, normalizeCol(col("_metadata.file_path")))
       .join(introDf, Seq(MorJoinCol))
       .withColumn(MorEqSnapCol,
@@ -669,7 +674,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       case Some(s) =>
         val pos =
           if (s.deleteManifests.isEmpty) none
-          else deleteRowsOf(s).select(col("file_path").as("path")).distinct()
+          else positionDeletes(listedScope(s.deleteManifests))
+            .select(col("file_path").as("path")).distinct()
         val eq =
           if (s.eqDeleteManifests.isEmpty) none
           else {
@@ -715,45 +721,45 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
   }
 
-  /** Schema-aligned scan of `pairs` with the snapshot's outstanding
-    * deletes anti-joined away — position deletes by (source file, row
-    * ordinal), equality deletes by key columns against data files added
-    * strictly before the deleting commit. All applications are
-    * distributed joins; files without delete entries stream through
+  /** Schema-aligned scan of `scope` (files of `s`) with the snapshot's
+    * outstanding deletes anti-joined away — position deletes by (source
+    * file, row ordinal), equality deletes by key columns against data
+    * files added strictly before the deleting commit. All applications
+    * are distributed joins; files without delete entries stream through
     * untouched. */
-  private[graft] def morReadFiles(s: Snapshot, pairs: Seq[(String, Long)],
+  private[graft] def morReadFiles(s: Snapshot, scope: FileScope,
                                   pathCol: Option[String] = None,
                                   posCol: Option[String] = None): DataFrame = {
     val needPos = s.deleteManifests.nonEmpty || posCol.nonEmpty
     val needEq = s.eqDeleteManifests.nonEmpty
-    if (!needPos && !needEq) return readFilesAligned(pairs, pathCol)
+    if (!needPos && !needEq) return readFilesAligned(scope, pathCol)
     val p = pathCol.getOrElse(MorPathCol)
     val pos = posCol.getOrElse(MorPosCol)
     var df = applyDeletes(s,
-      readFilesAligned(pairs, Some(p), if (needPos) Some(pos) else None),
-      p, pos, pairs)
+      readFilesAligned(scope, Some(p), if (needPos) Some(pos) else None),
+      p, pos, scope)
     if (needPos && posCol.isEmpty) df = df.drop(pos)
     if (pathCol.isEmpty) df.drop(p) else df
   }
 
   /** Apply `s`'s outstanding deletes (both kinds) to `df0`, which must
     * expose the normalized source path in column `p` and — whenever
-    * position deletes exist — the row ordinal in column `pos`. `pairs`
-    * supplies the per-file added ids the equality strictly-before rule
-    * compares against. */
+    * position deletes exist — the row ordinal in column `pos`. `scope`
+    * (the scanned files) supplies the per-file added ids the equality
+    * strictly-before rule compares against. */
   private def applyDeletes(s: Snapshot, df0: DataFrame, p: String,
-                           pos: String, pairs: Seq[(String, Long)]): DataFrame = {
+                           pos: String, scope: FileScope): DataFrame = {
     var df = df0
     if (s.deleteManifests.nonEmpty) {
-      val del = deleteRowsOf(s)
+      val del = positionDeletes(listedScope(s.deleteManifests))
       df = df.join(del,
         df(p) === del("file_path") && df(pos) === del("pos"), "left_anti")
     }
     if (s.eqDeleteManifests.nonEmpty) {
       // per-row added id via a broadcast of the (tiny) path→added map
       import spark.implicits._
-      val pathAdded = broadcast(
-        spark.createDataset(pairs).toDF(MorJoinCol, MorAddedCol))
+      val pathAdded = broadcast(spark.createDataset(
+        scope.files.map(f => (f.path, f.addedSnapshotId))).toDF(MorJoinCol, MorAddedCol))
       df = df.join(pathAdded, df(p) === col(MorJoinCol), "left")
         .drop(MorJoinCol)
       // ONE anti-join per distinct key set, not per manifest — and ONE
@@ -764,7 +770,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       // Iceberg eq-delete semantics match null keys to null rows.
       eqFileInfos(s.eqDeleteManifests).groupBy(_.keys)
         .foreach { case (keyNames, group) =>
-          val entries = eqEntriesOf(group)
+          val entries = eqEntriesOf(s.eqDeleteManifests, group)
           val keyCond = keyNames.map(k => df(k) <=> entries(k)).reduce(_ && _)
           df = df.join(entries,
             keyCond && col(MorAddedCol) < entries(MorEqSnapCol), "left_anti")
@@ -774,44 +780,31 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     df
   }
 
-  /** [[morReadFiles]] against the current snapshot (empty-table safe). */
-  private[graft] def morReadLive(pairs: Seq[(String, Long)],
+  /** [[morReadFiles]] over `files` of the current snapshot (empty-table
+    * safe). */
+  private[graft] def morReadLive(files: IndexedSeq[ManifestEntry],
                                  pathCol: Option[String] = None): DataFrame =
     currentSnapshot match {
-      case Some(s) => morReadFiles(s, pairs, pathCol)
-      case None => readFilesAligned(pairs, pathCol)
+      case Some(s) => morReadFiles(s, FileScope(s.manifests, files), pathCol)
+      case None => readFilesAligned(FileScope.Empty, pathCol)
     }
 
   /** Paths of live data files containing at least one RAW row matching
-    * `matched` — the CoW affected-file discovery, pruned. Single-
-    * generation tables scan through the registered source so Catalyst
-    * pushes the predicate into [[graft.sources.GraftFileIndex]]:
-    * manifest bounds, null counts, and blooms SKIP non-matching files
-    * before a row is read (the same fast path [[deleteWhereMOR]] uses),
-    * so a selective CoW delete/update on a clustered 100 TB table scans
-    * candidate files, not the table. Raw rows (outstanding MOR deletes
-    * NOT applied) make the result a SUPERSET of the MOR-applied
-    * affected set per file — and every file whose matches are all
-    * MOR-deleted is delete-targeted, which the CoW rewrite unions in
-    * anyway, so the final affected set is identical. None = evolved
-    * table (caller falls back to the aligned scan). */
-  private[graft] def affectedFilesRaw(matched: Column): Option[DataFrame] =
-    if (schemaVersions.size <= 1 && currentSnapshot.isDefined)
-      Some(rawScan.filter(matched)
-        .select(normalizeCol(col("_metadata.file_path")).as("path"))
-        .distinct())
-    else None
-
-  /** The current snapshot's raw rows (outstanding deletes NOT applied)
-    * through [[graft.sources.GraftFileIndex]] over this handle: Catalyst
-    * pushes predicates into the index, so manifest bounds, null counts
-    * and blooms skip files before a row is read. The same relation the
-    * `graft` data source serves, without its refusal of delete-bearing
-    * snapshots — callers apply the delete joins themselves. Un-evolved
-    * tables only. */
-  private[graft] def rawScan: DataFrame =
-    spark.baseRelationToDataFrame(
-      graft.sources.DefaultSource.relation(spark, this, None))
+    * `matched` — the CoW affected-file discovery, pruned: Catalyst
+    * pushes the predicate into each generation's
+    * [[graft.sources.GraftFileIndex]], so manifest bounds, null counts,
+    * and blooms SKIP non-matching files before a row is read (as in
+    * [[deleteWhereMOR]]), and a selective CoW delete/update on a
+    * clustered 100 TB table scans candidate files, not the table. Raw
+    * rows (outstanding MOR deletes NOT applied) make the result a
+    * SUPERSET of the MOR-applied affected set per file — and every file
+    * whose matches are all MOR-deleted is delete-targeted, which the
+    * CoW rewrite unions in anyway, so the final affected set is
+    * identical. One column: `path`. */
+  private[graft] def affectedFiles(matched: Column): DataFrame =
+    readFilesAligned(currentSnapshot.fold(FileScope.Empty)(scopeOf),
+        Some(MorPathCol)).filter(matched)
+      .select(col(MorPathCol).as("path")).distinct()
 
   /** Merge-on-read DELETE (Iceberg v2 position deletes): rather than
     * rewriting every affected data file (the copy-on-write
@@ -838,28 +831,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val cur = currentSnapshot.getOrElse(return 0L)
       if (cur.numFiles == 0) return 0L
       val matched = coalesce(cond, lit(false))
-      val pairs = filePairsOf(cur)
-      // the live view with ALL outstanding deletes (pos + eq) applied,
-      // path and position retained for the new entries
-      val newDeletes = {
-        if (schemaVersions.size <= 1) {
-          // pruned fast path: scanning through the registered source
-          // lets Catalyst push `cond` into the FileIndex — manifest
-          // bounds, null counts, and blooms SKIP non-matching files
-          // before a single row is read, so a selective delete on a
-          // 100 TB table scans only candidate files. (The relation
-          // serves the raw rows; the delete joins are applied here.)
-          val base = rawScan
-          val cols = base.columns.toSeq.map(col)
-          val df = base.filter(matched)
-            .select(cols :+
-              normalizeCol(col("_metadata.file_path")).as(MorPathCol) :+
-              col("_metadata.row_index").as(MorPosCol): _*)
-          applyDeletes(cur, df, MorPathCol, MorPosCol, pairs)
-        } else // evolved tables: aligned multi-generation scan
-          morReadFiles(cur, pairs, Some(MorPathCol), Some(MorPosCol))
-            .filter(matched)
-      }.select(col(MorPathCol).as("file_path"), col(MorPosCol).as("pos"))
+      val scope = scopeOf(cur)
+      // the matching rows, `cond` pushed into each generation's index
+      // (manifest bounds, null counts, and blooms SKIP non-matching
+      // files before a row is read, so a selective delete on a 100 TB
+      // table scans only candidate files), with ALL outstanding deletes
+      // (pos + eq) applied; path and position retained for the entries
+      val newDeletes = applyDeletes(cur,
+          readFilesAligned(scope, Some(MorPathCol), Some(MorPosCol)).filter(matched),
+          MorPathCol, MorPosCol, scope)
+        .select(col(MorPathCol).as("file_path"), col(MorPosCol).as("pos"))
       val commitDir = new Path(tableDir, s"data/${UUID.randomUUID()}")
       // HASH-cluster by target file: every file's entries land in exactly
       // one output file (contiguous after the sort), and unlike a range
@@ -928,7 +909,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       if (nKeys == 0L) { fs.delete(eqDir, true); return 0L }
       var removed = 0L
       val memo = scala.collection.mutable.Map.empty[
-        (IndexedSeq[(String, Long)], Seq[String], Seq[String]), Long]
+        (IndexedSeq[ManifestEntry], Seq[String], Seq[String]), Long]
       commitEqDelete("delete", emptyManifest, eqDir, clock) { b =>
         removed = matchingRows(b, keys, keyCols, keyStats, memo); removed
       }
@@ -986,7 +967,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
     var removed = 0L
     val memo = scala.collection.mutable.Map.empty[
-      (IndexedSeq[(String, Long)], Seq[String], Seq[String]), Long]
+      (IndexedSeq[ManifestEntry], Seq[String], Seq[String]), Long]
     commitEqDelete(op, if (hasData) inventory(commitDir) else emptyManifest,
         eqDir, clock) { b =>
       removed = matchingRows(b, delKeys, keys, keyStats, memo); removed
@@ -1013,7 +994,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def matchingRows(b: Snapshot, keys: DataFrame,
                            keyCols: Seq[String], stats: Row,
                            memo: scala.collection.mutable.Map[
-                             (IndexedSeq[(String, Long)], Seq[String], Seq[String]),
+                             (IndexedSeq[ManifestEntry], Seq[String], Seq[String]),
                              Long] = null): Long = {
     if (b.numFiles == 0) return 0L
     val kd = keys.select(keyCols.map(col): _*).distinct()
@@ -1023,7 +1004,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // may contain nulls while the key set does. `stats` was computed
     // during the eq-file write ([[writeEqDeleteFile]]) — no extra scan.
     val tableSchema = schema
-    val pairs = FileSkipping.survivingPairs(manifestDf(b.manifests),
+    val scope = scopeOf(b,
       keyCols.zipWithIndex.map { case (k, i) =>
         // sum over an empty key set observes null — treat as zero
         val nullKeys = Option(stats.get(3 * i + 2)).exists(_.asInstanceOf[Long] > 0)
@@ -1032,12 +1013,12 @@ final class GraftTable(val spark: SparkSession, val location: String) {
             stats.get(3 * i), stats.get(3 * i + 1)),
           lit(nullKeys))
       }.reduce(_ && _))
-    if (pairs.isEmpty) 0L
+    if (scope.files.isEmpty) 0L
     else {
-      val memoKey = (pairs, b.deleteManifests, b.eqDeleteManifests)
+      val memoKey = (scope.files, b.deleteManifests, b.eqDeleteManifests)
       if (memo != null && memo.contains(memoKey)) memo(memoKey)
       else {
-        val live = morReadFiles(b, pairs)
+        val live = morReadFiles(b, scope)
         val cond = keyCols.map(k => live(k) <=> kd(k)).reduce(_ && _)
         val n = live.join(kd, cond, "left_semi").count()
         if (memo != null) memo(memoKey) = n
@@ -1100,17 +1081,14 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   def rewriteDeleteFiles(clock: Clock = Clock.systemUTC()): Long =
     commitLock.synchronized {
       val cur = currentSnapshot.getOrElse(return 0L)
-      val delRows = manifestDf(cur.deleteManifests)
-        .select("path", "size_bytes").collect()
-      val delFiles = delRows.map(_.getString(0)).toIndexedSeq
-      if (delFiles.size <= 1) return 0L
-      val merged = spark.read.schema(DeleteSchema).parquet(delFiles: _*)
+      val dels = listedScope(cur.deleteManifests)
+      if (dels.files.size <= 1) return 0L
       val commitDir = new Path(tableDir, s"data/${UUID.randomUUID()}")
       // size the output from the manifest: delete sets are small, so
       // this is typically ONE file (which also makes the op idempotent)
       val nOut = math.max(1L,
-        (delRows.map(_.getLong(1)).sum + (64L << 20) - 1) / (64L << 20)).toInt
-      dataWrite(merged
+        (dels.files.map(_.sizeBytes).sum + (64L << 20) - 1) / (64L << 20)).toInt
+      dataWrite(positionDeletes(dels)
         .repartition(nOut, col("file_path"))
         .sortWithinPartitions("file_path", "pos"))
         .parquet(commitDir.toString)
@@ -1125,7 +1103,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           deleteManifests = Seq(manifest.path),
           deleteFileCount = Some(mergedCount))
       }
-      delFiles.size.toLong
+      dels.files.size.toLong
     }
 
   /** Compact accumulated equality-delete files AND their manifests
@@ -1154,7 +1132,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         infos.groupBy(_.keys).forall(_._2.size <= 1)) return 0L
       val groups = infos.groupBy(_.keys).toSeq
       val mergedDirs = groups.map { case (keyNames, group) =>
-        val entries = eqEntriesOf(group)
+        val entries = eqEntriesOf(cur.eqDeleteManifests, group)
           .withColumnRenamed(MorEqSnapCol, EqIntroCol)
         // same key at several intros → keep the max window only
         val merged = entries.groupBy(keyNames.map(col): _*)
@@ -1188,7 +1166,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Every schema version ever committed, oldest first. Empty until the
     * first evolution — an un-evolved table has just `schema.json` and
-    * takes the exact pre-evolution fast read path. */
+    * reads as one generation. */
   def schemaVersions: Seq[SchemaVersion] =
     if (!fs.exists(schemasDir)) Seq.empty
     else fs.listStatus(schemasDir).toSeq
@@ -1316,18 +1294,20 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * `posCol` likewise exposes `_metadata.row_index` (the row's ordinal
     * within its parquet file) — the position merge-on-read deletes key on.
     *
-    * Un-evolved tables (≤1 schema version) take the single-scan fast
-    * path — one parquet relation, full pushdown, no union. Evolved
-    * tables get one scan per distinct write-schema generation (a handful
-    * at most), each still a plain pushdown-friendly parquet scan. */
-  private[graft] def readFilesAligned(pathsWithAdded: Seq[(String, Long)],
+    * One relation per write-schema generation (an un-evolved table has
+    * one; an evolved one a handful at most), each over a
+    * [[graft.sources.GraftFileIndex]] listing that generation's files of
+    * `scope`, so predicates push through the alignment projection into
+    * manifest-bounds pruning. Only a one-generation read at the current
+    * schema keeps `scope`'s whole-snapshot standing. */
+  private[graft] def readFilesAligned(scope: FileScope,
                                       pathCol: Option[String] = None,
                                       posCol: Option[String] = None): DataFrame = {
     val cur = schema
-    def pathProj(df: DataFrame): Seq[Column] =
+    val pathProj: Seq[Column] =
       pathCol.map(n => normalizeCol(col("_metadata.file_path")).as(n)).toSeq ++
         posCol.map(n => col("_metadata.row_index").as(n)).toSeq
-    if (pathsWithAdded.isEmpty) {
+    if (scope.isEmpty) {
       val base = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], cur)
       val withPath = pathCol.fold(base)(n =>
         base.withColumn(n, lit(null).cast(StringType)))
@@ -1335,24 +1315,26 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         withPath.withColumn(n, lit(null).cast(LongType)))
     }
     val vs = schemaVersions
-    if (vs.size <= 1) {
-      val raw = spark.read.schema(cur).parquet(pathsWithAdded.map(_._1): _*)
-      return raw.select(raw.columns.map(col).toSeq ++ pathProj(raw): _*)
-    }
-    val groups = pathsWithAdded.groupBy { case (_, added) =>
-      val elig = vs.filter(_.since <= added)
-      (if (elig.isEmpty) vs.head else elig.last).version
-    }
-    groups.toSeq.sortBy(_._1).map { case (ver, ps) =>
-      val vSchema = vs.find(_.version == ver).get.schema
-      val raw = spark.read.schema(vSchema).parquet(ps.map(_._1): _*)
-      val aligned = cur.fields.toSeq.map { f =>
-        vSchema.fields.find(vf => gidOf(vf) == gidOf(f)) match {
-          case Some(vf) => col(vf.name).cast(f.dataType).as(f.name)
-          case None => lit(null).cast(f.dataType).as(f.name)
-        }
+    val gens: Seq[(StructType, FileScope)] =
+      if (vs.size <= 1) Seq(cur -> scope)
+      else scope.files.groupBy { f =>
+        val elig = vs.filter(_.since <= f.addedSnapshotId)
+        if (elig.isEmpty) vs.head else elig.last
+      }.toSeq.sortBy(_._1.version).map {
+        case (v, fs) if v.schema == cur && fs.size == scope.files.size => cur -> scope
+        case (v, fs) => v.schema -> FileScope(scope.manifests, fs)
       }
-      raw.select(aligned ++ pathProj(raw): _*)
+    gens.map { case (vSchema, gen) =>
+      val raw = graft.sources.GraftFileIndex.scan(spark, this, vSchema, gen)
+      val aligned =
+        if (vSchema == cur) cur.fieldNames.toSeq.map(col)
+        else cur.fields.toSeq.map { f =>
+          vSchema.fields.find(vf => gidOf(vf) == gidOf(f)) match {
+            case Some(vf) => col(vf.name).cast(f.dataType).as(f.name)
+            case None => lit(null).cast(f.dataType).as(f.name)
+          }
+        }
+      raw.select(aligned ++ pathProj: _*)
     }.reduce(_ unionByName _)
   }
 
@@ -1446,8 +1428,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def prunedScan(keep: => Column): PrunedScan =
     currentSnapshot match {
       case Some(s) if s.numFiles > 0 =>
-        val pa = FileSkipping.survivingPairs(manifestDf(s.manifests), keep)
-        PrunedScan(readFilesAligned(pa), pa.size.toLong, s.numFiles)
+        val scope = scopeOf(s, keep)
+        PrunedScan(readFilesAligned(scope), scope.files.size.toLong, s.numFiles)
       case _ =>
         PrunedScan(
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), 0L, 0L)
@@ -1508,7 +1490,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val inv = inventory(src)
       val paths = inv.select("path").collect().map(_.getString(0))
       require(paths.nonEmpty, s"add_files: no parquet files under $location")
-      val live = currentSnapshot.toSeq.flatMap(filePairsOf).map(_._1).toSet
+      val live = currentSnapshot.toSeq.flatMap(scopeOf(_).files).map(_.path).toSet
       val dup = paths.filter(live)
       require(dup.isEmpty, "add_files: already referenced by the table: " +
         dup.take(3).mkString(", "))
@@ -2281,6 +2263,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   // ---- internals shared with graft.cmd ---------------------------------
 
   private[graft] def fileSystem: FileSystem = fs
+  /** Whether a graft table (its snapshot log) lives at [[location]]. */
+  def exists: Boolean = SnapshotLog.exists(fs, tableDir)
   private[graft] def dir: Path = tableDir
   private[graft] def lock: Object = commitLock
   private[graft] def emptyManifest: DataFrame =
@@ -2412,8 +2396,12 @@ object GraftTable {
     * introduced it (per-file stamp or legacy log derivation), and its
     * key column names (sorted; derived from the manifest's null_counts
     * keys, minus the embedded intro column of compacted files). */
-  private[meta] final case class EqFileInfo(path: String, intro: Long,
-                                            keys: Seq[String])
+  /** An eq-delete file (its added id the introducing snapshot) and its
+    * key columns. */
+  private[meta] final case class EqFileInfo(file: ManifestEntry, keys: Seq[String]) {
+    def path: String = file.path
+    def intro: Long = file.addedSnapshotId
+  }
 
   /** Per-ENTRY introducing-snapshot column embedded in COMPACTED
     * eq-delete files ([[GraftTable.rewriteEqDeleteFiles]]): merging

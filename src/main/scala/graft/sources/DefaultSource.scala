@@ -1,13 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
 import org.apache.spark.sql.execution.streaming.Source
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
-import graft.meta.GraftTable
+import graft.meta.{FileScope, GraftTable}
 
 /** The graft table format as a registered Spark data source
   * (META-INF/services) — `spark.read.format("graft").load(path)` and
@@ -67,7 +65,7 @@ final class DefaultSource extends RelationProvider
       throw new IllegalArgumentException("graft source requires a path"))
     val spark = sqlContext.sparkSession
     val table = GraftTable.load(spark, path)
-    require(GraftTable.exists(spark, path), s"no graft table at $path")
+    require(table.exists, s"no graft table at $path")
     // metadata tables, the Iceberg `t.files` / `t.snapshots` analogue:
     //   spark.read.format("graft").option("metadata", "files").load(p)
     parameters.get("metadata") match {
@@ -107,15 +105,17 @@ final class DefaultSource extends RelationProvider
     }
     // A HadoopFsRelation is a plain parquet scan — it cannot anti-join
     // position-delete files, and silently serving deleted rows would be
-    // a correctness trap. Refuse loudly instead. (GraftTable's own MOR
-    // machinery builds the relation directly — GraftTable.rawScan — and
-    // applies the delete joins itself.)
+    // a correctness trap. Refuse loudly instead. (GraftTable.read lists
+    // the same snapshot through the same GraftFileIndex and applies the
+    // delete joins above it.)
     require(asOf.orElse(table.currentSnapshot).forall(s =>
         s.deleteManifests.isEmpty && s.eqDeleteManifests.isEmpty),
       "this graft table has outstanding merge-on-read delete files; " +
         "read via GraftTable.read (applies deletes) or run optimize() " +
         "to materialize them first")
-    DefaultSource.relation(spark, table, asOf)
+    // the whole snapshot; an unpinned read re-pins to the head on refresh
+    GraftFileIndex.relation(spark, table, table.schema, () =>
+      asOf.orElse(table.currentSnapshot).fold(FileScope.Empty)(table.scopeOf))
   }
 
   /** A simple scan-only relation over one of the table's metadata
@@ -184,8 +184,7 @@ final class DefaultSource extends RelationProvider
         table.properties.toSeq.sortBy(_._1).toDF("key", "value")
       case "manifests" =>
         // the CURRENT snapshot's manifest list (Iceberg's manifests table)
-        val fs = new org.apache.hadoop.fs.Path(table.location)
-          .getFileSystem(spark.sessionState.newHadoopConf())
+        val fs = table.fileSystem
         table.currentSnapshot.map(_.manifests).getOrElse(Seq.empty)
           .map { m =>
             val p = new org.apache.hadoop.fs.Path(m)
@@ -224,26 +223,5 @@ final class DefaultSource extends RelationProvider
       case SaveMode.Ignore => if (!exists) table.append(data)
     }
     createRelation(sqlContext, parameters)
-  }
-}
-
-object DefaultSource {
-  /** The scan relation over `table` as of `asOf` (None: its current
-    * snapshot): a plain parquet HadoopFsRelation whose file listing is
-    * [[GraftFileIndex]]'s. Raw rows — outstanding deletes are the
-    * caller's to refuse or apply. */
-  private[graft] def relation(spark: SparkSession, table: GraftTable,
-                              asOf: Option[graft.meta.Snapshot]): HadoopFsRelation = {
-    // ANALYZE stats → Catalyst CBO (see GraftStatsRule): installed on
-    // first load, rewrites this relation's plan stats at optimize time
-    GraftStatsRule.ensureInstalled(spark)
-    GraftCountRule.ensureInstalled(spark)
-    HadoopFsRelation(
-      location = new GraftFileIndex(spark, table, asOf),
-      partitionSchema = new StructType(),
-      dataSchema = table.schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat(),
-      options = Map.empty)(spark)
   }
 }

@@ -2,150 +2,152 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.CatalystShims
 import org.apache.spark.sql.types._
 
-import graft.meta.{FileSkipping, GraftTable, ManifestIO}
+import graft.meta.{FileScope, FileSkipping, GraftTable, ManifestEntry, ManifestIO}
 
-/** A Catalyst [[FileIndex]] over the graft manifest — the integration
-  * point that makes file skipping AUTOMATIC: any `WHERE` predicate a
-  * query pushes into the scan is tested against each data file's
-  * manifest statistics (min/max bounds AND per-column null counts), and
-  * non-overlapping files are never listed to the parquet reader. This is
-  * the same architecture Delta Lake's TahoeFileIndex and Iceberg's
-  * SparkScan use — the table format owns file listing, Catalyst owns
-  * everything else (the parquet row-group pruning below us still applies
-  * to the files we do list).
+/** The one Catalyst [[FileIndex]] over table-owned parquet: every scan
+  * of data, position-delete and equality-delete files lists its files
+  * here, from the manifest rows of a [[FileScope]] — the (path, size)
+  * the manifest already holds, with no listing and no stat. That makes
+  * file skipping AUTOMATIC: any `WHERE` predicate a query pushes into
+  * the scan is tested against each file's manifest statistics (min/max
+  * bounds, null counts, blooms), and non-overlapping files are never
+  * listed to the parquet reader. This is the same architecture Delta
+  * Lake's TahoeFileIndex and Iceberg's SparkScan use — the table format
+  * owns file listing, Catalyst owns everything else (the parquet
+  * row-group pruning below us still applies to the files we do list).
   *
-  * Scale: the ONLY driver-resident state is the (path, size) pair per
-  * live file — the same footprint Spark's own InMemoryFileIndex keeps
-  * for any parquet scan. The per-column min/max and null-count maps are
-  * evaluated at [[listFiles]] time: pushed predicates are translated to
-  * a keep-file Column over the manifest rows ([[FileSkipping]]), and
-  * only the surviving (path, size) list is collected. Below the
-  * [[ManifestIO.LocalReadMaxBytes]] gate (32 MB of manifest) the
-  * manifest is a driver-local relation and the filter folds into it,
-  * with no Spark job; above it the manifest is filtered distributively
-  * AS A SPARK JOB — at ~1M files the bounds maps would be multi-GB of
-  * driver heap if materialized, and there they never leave the
-  * executors.
+  * Scale: the ONLY driver-resident state is the scope's (path, size)
+  * entries — the same footprint Spark's own InMemoryFileIndex keeps for
+  * any parquet scan. Pushed predicates are translated at [[listFiles]]
+  * time to a keep-file Column over the scope's manifest rows
+  * ([[FileSkipping]]): a whole snapshot lists just the surviving rows
+  * (its full list is never read then), a subset keeps its own files
+  * among them. Below the [[ManifestIO.LocalReadMaxBytes]] gate (32
+  * MB of manifest) the manifest is a driver-local relation and the
+  * filter folds into it, with no Spark job; above it the manifest is
+  * filtered distributively AS A SPARK JOB — at ~1M files the bounds
+  * maps would be multi-GB of driver heap if materialized, and there
+  * they never leave the executors.
   *
-  * Snapshot isolation: the manifest path list is pinned at construction
-  * (and re-pinned by [[refresh]]), so a concurrent commit never changes
-  * what an already-planned query reads.
+  * Snapshot isolation: the scope is pinned at construction (and
+  * re-pinned by [[refresh]], through `pin`), so a concurrent commit
+  * never changes what an already-planned query reads.
+  *
+  * Only a scope that is a whole snapshot ([[FileScope.whole]]) answers
+  * [[metadataRowCount]] or [[catalogTableWithStats]]: a subset scan
+  * (one schema generation, an optimize bin, an affected-file set)
+  * reports its size only, so [[GraftCountRule]] and [[GraftStatsRule]]
+  * never fold it to the table's totals.
   *
   * Unknown or non-translatable predicates keep every file (superset
   * guarantee; the row filter still runs) — and when NO pushed predicate
   * is translatable the manifest filter is skipped entirely and the
-  * cached (path, size) list is served.
-  *
-  * Evolution note: this path serves tables whose schema never evolved
-  * (one schema generation). [[GraftTable.read]] handles evolved tables
-  * via per-generation aligned scans.
+  * pinned list is served.
   */
 final class GraftFileIndex(spark: SparkSession, table: GraftTable,
-                           asOf: Option[graft.meta.Snapshot] = None)
+                           pin: () => FileScope)
   extends FileIndex {
 
-  /** THE pinned snapshot — captured exactly once at construction (and
+  /** THE pinned scope — captured exactly once at construction (and
     * re-captured only by [[refresh]]), so every view of this index
-    * derives from ONE snapshot: the file list, [[sizeInBytes]], the
+    * derives from it: the file list, [[sizeInBytes]], the
     * [[metadataRowCount]] the count fold serves, and the stats-bearing
     * catalog table. Deriving any of them from `table.currentSnapshot`
     * at first-access time instead would let a DataFrame held across a
     * concurrent commit fold `count(*)` to the NEW snapshot's total
-    * while its `collect()` scans the OLD pinned files — breaking the
-    * snapshot isolation documented above (ADVICE r17). */
-  @volatile private var pinnedSnap: Option[graft.meta.Snapshot] =
-    asOf.orElse(table.currentSnapshot)
-
-  /** (manifest parquet paths of the pinned snapshot, live (path, size)). */
-  private var pinned: (Seq[String], Seq[(String, Long)]) = load()
+    * while its `collect()` scans the OLD pinned files. */
+  @volatile private var scope: FileScope = pin()
   // listFiles can be re-entered during (re)planning of the same query
   // (AQE, multiple scan nodes over one relation) — memoize per filter
-  // set so each distinct predicate pays the manifest job once.
+  // set so each distinct predicate pays the manifest filter once.
   // Concurrent: two threads may plan queries over one shared DataFrame.
   private val listCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]
-
-  private def load(): (Seq[String], Seq[(String, Long)]) = {
-    val manifests = pinnedSnap.map(_.manifests).getOrElse(Seq.empty)
-    (manifests, pathSizes(manifests, FileSkipping.KeepAll))
-  }
-
-  /** (path, size) of the manifest rows `keep` admits. */
-  private def pathSizes(manifests: Seq[String], keep: Column): Seq[(String, Long)] =
-    ManifestIO.relation(spark, hadoopConf, manifests).filter(keep)
-      .select("path", "size_bytes")
-      .collect().toIndexedSeq.map(r => (r.getString(0), r.getLong(1)))
+    new java.util.concurrent.ConcurrentHashMap[String, Seq[ManifestEntry]]
 
   override def rootPaths: Seq[Path] = Seq(new Path(table.location))
 
   override def partitionSchema: StructType = new StructType()
 
-  override def sizeInBytes: Long = pinned._2.map(_._2).sum
+  override def sizeInBytes: Long = scope.sizeInBytes
 
-  /** Stats-bearing CatalogTable for [[GraftStatsRule]] — memoized per
-    * pinned snapshot (the ANALYZE store and row count are read at the
-    * same consistency as the file list; [[refresh]] invalidates). */
-  private var catalogMemo
-      : Option[Option[org.apache.spark.sql.catalyst.catalog.CatalogTable]] =
-    None
+  /** Stats-bearing CatalogTable for [[GraftStatsRule]] — whole-snapshot
+    * scopes only, memoized per pinned scope and plan-stats setting (the
+    * ANALYZE store and row count are read at the same consistency as
+    * the file list; [[refresh]] invalidates). */
+  private var catalogMemo: Map[Boolean,
+      Option[org.apache.spark.sql.catalyst.catalog.CatalogTable]] = Map.empty
   def catalogTableWithStats
       : Option[org.apache.spark.sql.catalyst.catalog.CatalogTable] =
     synchronized {
-      catalogMemo.getOrElse {
-        val ct = GraftStatsRule.catalogTableFor(table, pinnedSnap, sizeInBytes)
-        catalogMemo = Some(ct)
+      val conf = spark.sessionState.conf
+      val planStats = conf.cboEnabled || conf.planStatsEnabled
+      catalogMemo.getOrElse(planStats, {
+        val ct = GraftStatsRule.catalogTableFor(table, scope.whole,
+          sizeInBytes, planStats)
+        catalogMemo += planStats -> ct
         ct
-      }
+      })
     }
 
-  /** For [[GraftCountRule]]'s manifest-aggregate rewrite. */
+  /** For [[GraftCountRule]]'s manifest-aggregate rewrite, which runs
+    * only where [[metadataRowCount]] is defined: there these are the
+    * whole snapshot's manifests. */
   private[sources] def session: SparkSession = spark
   private[sources] def hadoopConf: Configuration = table.hadoopConf
-  private[sources] def manifestPaths: Seq[String] = pinned._1
-  private[sources] def snapshot: Option[graft.meta.Snapshot] = pinnedSnap
+  private[sources] def manifestPaths: Seq[String] = scope.manifests
 
-  /** The exact LOGICAL row count of the pinned snapshot, when a bare
-    * unfiltered scan of this index returns exactly that many rows —
-    * i.e. no outstanding merge-on-read delete files (with deletes, the
-    * physical scan over-returns and [[GraftCountRule]] must not fire).
-    * Snapshot `totalRows` is maintained by every commit. Reads the SAME
-    * [[pinnedSnap]] the file list came from, so a count folded here can
-    * never disagree with what a scan of this index would return. */
+  /** The exact LOGICAL row count of the pinned snapshot, when this
+    * index lists every live file of it and a bare unfiltered scan
+    * returns exactly that many rows — i.e. no outstanding merge-on-read
+    * delete files (with deletes, the physical scan over-returns and
+    * [[GraftCountRule]] must not fire). None for a subset scope.
+    * Snapshot `totalRows` is maintained by every commit. */
   def metadataRowCount: Option[Long] =
-    pinnedSnap.collect {
+    scope.whole.collect {
       case s if s.deleteManifests.isEmpty && s.eqDeleteManifests.isEmpty =>
         s.totalRows
     }
 
-  override def inputFiles: Array[String] = pinned._2.map(_._1).toArray
+  override def inputFiles: Array[String] = scope.files.map(_.path).toArray
 
   override def refresh(): Unit = synchronized {
-    // time travel pins the index to a named snapshot; refresh()
-    // deliberately re-pins to the SAME one (an as-of read never moves)
-    pinnedSnap = asOf.orElse(table.currentSnapshot)
-    pinned = load()
+    // a time-travel or subset pin re-pins to the SAME scope (an as-of
+    // read never moves); the public source's re-pins to the head
+    scope = pin()
     listCache.clear()
-    catalogMemo = None
+    catalogMemo = Map.empty
   }
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val s = scope
     val conds = dataFilters.flatMap(keepFile)
     val kept =
-      if (conds.isEmpty) pinned._2
+      if (conds.isEmpty) s.files
       else {
         val key = dataFilters.map(_.canonicalized.toString).sorted.mkString("&")
-        listCache.computeIfAbsent(key, _ => pathSizes(pinned._1, conds.reduce(_ && _)))
+        listCache.computeIfAbsent(key, _ => {
+          val survivors = FileSkipping.survivingFiles(
+            ManifestIO.relation(spark, hadoopConf, s.manifests), conds.reduce(_ && _))
+          // a whole snapshot's survivors are its files; a subset keeps
+          // its own among them
+          if (s.whole.isDefined) survivors
+          else {
+            val paths = survivors.iterator.map(_.path).toSet
+            s.files.filter(f => paths(f.path))
+          }
+        })
       }
-    val statuses = kept.map { case (p, sz) =>
-      new FileStatus(sz, false, 1, 128L * 1024 * 1024, 0L, new Path(p)) }
+    val statuses = kept.map { f =>
+      new FileStatus(f.sizeBytes, false, 1, 128L * 1024 * 1024, 0L, new Path(f.path)) }
     Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))
   }
 
@@ -212,6 +214,36 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
 
   private def below(a: AttributeReference, v: Any, strict: Boolean): Option[Column] =
     withValue(a, v)(FileSkipping.mayHaveBelow(a.name, a.dataType, _, strict))
+}
+
+object GraftFileIndex {
+  /** The scan relation over `pin`'s files, decoded with `dataSchema`: a
+    * plain parquet HadoopFsRelation whose file listing is a
+    * [[GraftFileIndex]]'s. Raw rows — outstanding deletes are the
+    * caller's to refuse or apply. */
+  private[graft] def relation(spark: SparkSession, table: GraftTable,
+                              dataSchema: StructType,
+                              pin: () => FileScope): HadoopFsRelation = {
+    // ANALYZE stats → Catalyst CBO (see GraftStatsRule): installed on
+    // first load, rewrites this relation's plan stats at optimize time
+    GraftStatsRule.ensureInstalled(spark)
+    GraftCountRule.ensureInstalled(spark)
+    HadoopFsRelation(
+      location = new GraftFileIndex(spark, table, pin),
+      partitionSchema = new StructType(),
+      // nullable, as a path-list parquet read declares it: a file may
+      // hold NULLs a NOT NULL table column was later given (a MERGE
+      // INSERT omitting the column)
+      dataSchema = dataSchema.toNullable,
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat(),
+      options = Map.empty)(spark)
+  }
+
+  /** [[relation]] over a fixed scope, as a DataFrame. */
+  private[graft] def scan(spark: SparkSession, table: GraftTable,
+                          dataSchema: StructType, scope: FileScope): DataFrame =
+    spark.baseRelationToDataFrame(relation(spark, table, dataSchema, () => scope))
 }
 
 /** `literal op attribute` as the equivalent `attribute op' literal`, so

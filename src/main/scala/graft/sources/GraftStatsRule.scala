@@ -78,18 +78,22 @@ object GraftStatsRule extends Rule[LogicalPlan] {
   /** Build the stats-bearing CatalogTable for a pinned graft snapshot.
     * Row count comes from the snapshot (always live, like Trino's
     * summary row); per-column stats come from the ANALYZE store when
-    * present. Min/max attach only for plain numeric types — their
+    * present and `planStats` is set — Catalyst reads column stats only
+    * under `spark.sql.cbo.enabled` or `spark.sql.cbo.planStats.enabled`
+    * (else `LogicalRelation` keeps the size alone), so without them the
+    * store is not read. Min/max attach only for plain numeric types — their
     * store rendering (`cast(c as string)`) round-trips through
     * Catalyst's external-string parser; temporal/string renderings are
     * not guaranteed to, and NDV + null count carry most of the
     * estimation value. */
   private[sources] def catalogTableFor(
       table: GraftTable, snapshot: Option[graft.meta.Snapshot],
-      sizeInBytes: Long): Option[CatalogTable] =
+      sizeInBytes: Long, planStats: Boolean): Option[CatalogTable] =
     snapshot.map { snap =>
       val rowCount = math.max(snap.totalRows, 0L)
       val colStats: Map[String, CatalogColumnStat] =
-        Analyze.pinnedStats(table).flatMap { case (name, st) =>
+        if (!planStats) Map.empty
+        else Analyze.pinnedStats(table).flatMap { case (name, st) =>
           table.schema.fields.find(_.name == name).map { f =>
             val numeric = f.dataType match {
               case _: ByteType | _: ShortType | _: IntegerType | _: LongType |

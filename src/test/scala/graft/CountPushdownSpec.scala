@@ -251,9 +251,55 @@ class CountPushdownSpec extends SparkSpec {
     val viaRead = t.read.groupBy().count()
     assert(viaRead.collect().head.getLong(0) == 90L)
     // and even a forced bare relation must refuse (metadataRowCount None)
-    val bare = t.rawScan.groupBy().count()
+    val bare = t.readFilesAligned(t.scopeOf(t.currentSnapshot.get))
+      .groupBy().count()
     assert(!isMetadataOnly(bare),
       "a delete-bearing snapshot must never fold count(*) to metadata")
     assert(bare.collect().head.getLong(0) == 100L) // physical rows, pre-join
+  }
+
+  test("subset scans count their own files and never carry table totals") {
+    val t = GraftTable.create(spark, tmpDir("cntsub") + "/t", schema)
+    (0 until 4).foreach(i => t.append(rows(i * 100L, i * 100L + 50 + i * 10).coalesce(1)))
+    val s1 = t.currentSnapshot.get
+    val rowsOf = t.files.select("path", "record_count").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    def relationRowCounts(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.stats.rowCount
+    }
+    spark.conf.set("spark.sql.cbo.enabled", "true")
+    try {
+      // half the live files: counts exactly those, folds nothing, and
+      // reports no row count
+      val half = t.scopeOf(s1).subset(f => rowsOf(f.path) < 70L)
+      assert(half.files.size == 2)
+      val sub = t.readFilesAligned(half)
+      assert(!isMetadataOnly(sub.groupBy().count()))
+      assert(sub.count() == half.files.map(f => rowsOf(f.path)).sum)
+      assert(sub.queryExecution.optimizedPlan.stats.rowCount.isEmpty)
+      // the whole snapshot without deletes may fold, to its totalRows
+      val whole = t.readFilesAligned(t.scopeOf(s1))
+      assert(isMetadataOnly(whole.groupBy().count()))
+      assert(whole.count() == s1.totalRows && s1.totalRows == 260L)
+      assert(whole.queryExecution.optimizedPlan.stats.rowCount
+        .contains(BigInt(s1.totalRows)))
+
+      // an evolved table: each generation's relation is a subset
+      t.addColumn("w", LongType)
+      t.append(rows(1000, 1070).withColumn("w", $"id"))
+      val s2 = t.currentSnapshot.get
+      val gen1 = t.scopeOf(s2).subset(_.addedSnapshotId <= s1.snapshotId)
+      val oneGen = t.readFilesAligned(gen1)
+      assert(!isMetadataOnly(oneGen.groupBy().count()))
+      assert(oneGen.count() == 260L)
+      assert(oneGen.queryExecution.optimizedPlan.stats.rowCount.isEmpty)
+      val evolved = t.readFilesAligned(t.scopeOf(s2))
+      assert(!isMetadataOnly(evolved.groupBy().count()))
+      assert(evolved.count() == s2.totalRows && s2.totalRows == 330L)
+      val perGen = relationRowCounts(evolved)
+      assert(perGen.size == 2 && perGen.forall(_.isEmpty),
+        s"each generation must report its size only: $perGen")
+    } finally spark.conf.unset("spark.sql.cbo.enabled")
   }
 }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The long call site of every Spark job started while a body runs: the
-  * result stage's stack plus that of the SQL execution the job belongs
-  * to (jobs a query starts on Spark's own threads carry only pool
-  * frames in their stages). */
+  * job's description, the result stage's stack, and that of the SQL
+  * execution the job belongs to (jobs a query starts on Spark's own
+  * threads carry only pool frames in their stages). */
 object JobLog {
   def during[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
     val sites = new ConcurrentLinkedQueue[String]
@@ -26,10 +26,13 @@ object JobLog {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val stageSite =
           if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).details
-        val execSite = Option(e.properties)
+        val props = Option(e.properties)
+        val description = props
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        val execSite = props
           .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
           .flatMap(id => Option(execSites.get(id.toLong))).getOrElse("")
-        sites.add(stageSite + "\n" + execSite)
+        sites.add(description + "\n" + stageSite + "\n" + execSite)
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -43,6 +46,11 @@ object JobLog {
   /** Jobs whose stack passes through the commit (manifest write). */
   def atCommit(sites: Seq[String]): Seq[String] =
     sites.filter(_.contains("graft.meta.GraftTable.commit"))
+
+  /** Spark's parallel file listing (an `InMemoryFileIndex` over more
+    * paths than `spark.sql.sources.parallelPartitionDiscovery.threshold`). */
+  def listing(sites: Seq[String]): Seq[String] =
+    sites.filter(_.contains("Listing leaf files"))
 
   /** Jobs whose stack passes through a commit dir's inventory. */
   def inInventory(sites: Seq[String]): Seq[String] =
