@@ -86,11 +86,7 @@ object DevKernelAB {
         s""""kernel_all":[${ks.map(f3).mkString(",")}]}""")
     }
 
-    // the DedupQueries minhash constants, restated
-    val P = 4294967311L
-    val numHashes = 16
-    val hashA = (0 until numHashes).map(j => 2L * j + 3)
-    val hashB = (0 until numHashes).map(j => 104729L * (j + 1))
+    import graft.ext.DedupQueries.{P, hashA, hashB, NumHashes => numHashes}
 
     val hs = spark.read.parquet(docsIn)
     ab("minhash_sig",

@@ -4,8 +4,8 @@ import java.time.Clock
 import java.util.UUID
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, lit, when}
 
 import graft.meta.{Commit, GraftTable}
 
@@ -55,7 +55,7 @@ object Optimize {
         "scoped optimize on a table with outstanding merge-on-read " +
           "deletes would drop delete entries for out-of-scope files; " +
           "run optimize() or rewriteDeleteFiles() first")
-      binpack(table, current, withoutDeletes(table), table.partitionScope(preds),
+      binpack(table, current, Set.empty, table.partitionScope(preds),
         targetFileBytes, clock)
     }
 
@@ -93,29 +93,23 @@ object Optimize {
       // too (with the deletes applied) — the commit drops the delete
       // manifests, so every entry must be materialized here (Iceberg's
       // rewrite_position_delete_files folded into binpack). Tables
-      // without deletes skip the target join entirely.
-      val manifest =
-        if (!hasDeletes) withoutDeletes(table)
-        else table.files.join(
-          table.deleteTargets.withColumn("has_deletes", lit(true)),
-          Seq("path"), "left")
-      binpack(table, current, manifest, lit(true), targetFileBytes, clock)
+      // without deletes have no targets, found with no job.
+      binpack(table, current, table.deleteTargets(), lit(true),
+        targetFileBytes, clock)
     }
 
-  private def withoutDeletes(table: GraftTable): DataFrame =
-    table.files.withColumn("has_deletes", lit(null).cast("boolean"))
-
-  /** Binpack the `manifest` rows (`has_deletes` marks delete-laden
-    * files) inside `scope`: rewrite the undersized, oversized, AND
-    * delete-laden ones, carry the rest. */
+  /** Binpack the live files inside `scope`: rewrite the undersized,
+    * oversized, AND delete-laden (`targets`) ones, carry the rest. */
   private def binpack(table: GraftTable, current: graft.meta.Snapshot,
-                      manifest: DataFrame, scope: Column,
+                      targets: Set[String], scope: Column,
                       targetFileBytes: Long, clock: Clock): Unit = {
     val minBytes = (targetFileBytes * MinFileSizeRatio).toLong
     val maxBytes = (targetFileBytes * MaxFileSizeRatio).toLong
     val candidate = scope && (col("size_bytes") < minBytes ||
       col("size_bytes") > maxBytes || col("has_deletes").isNotNull)
-    val candRows = manifest.filter(candidate)
+    val candRows = table.files
+      .withColumn("has_deletes", when(col("path").isin(targets.toSeq: _*), lit(true)))
+      .filter(candidate)
       .select("path", "added_snapshot_id", "size_bytes", "has_deletes")
       .collect()
     val numSmall = candRows.count(r => r.getLong(2) < minBytes)

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.meta.GraftTable
+import graft.meta.{GraftTable, KeySet}
 
 /** Copy-on-write row-level DELETE and MERGE (upsert) over the graft
   * table format — the `UPDATE ... WHERE` the reference issues against
@@ -33,8 +33,6 @@ import graft.meta.GraftTable
   * unchanged on evolved tables (renamed/added/dropped columns).
   */
 object RowLevel {
-  private val FP = "__graft_fp"
-
   /** DELETE WHERE cond. SQL semantics: a row is deleted only where the
     * predicate is TRUE — rows where it evaluates NULL survive (a bare
     * `!cond` filter would silently drop them). Commits op `cow_delete`,
@@ -46,7 +44,7 @@ object RowLevel {
       val matched = coalesce(cond, lit(false))
       val before = table.currentSnapshot.map(_.totalRows).getOrElse(0L)
       rewrite(table, "cow_delete",
-        affected = table.affectedFiles(matched),
+        affected = table.affectedFiles(_.filter(matched)),
         survivorsOf = df => df.filter(!matched),
         extra = None, clock)
       before - table.currentSnapshot.map(_.totalRows).getOrElse(0L)
@@ -76,7 +74,7 @@ object RowLevel {
       // previous no-op behavior when raw discovery over-marked files
       // whose matches are all MOR-deleted.
       rewrite(table, "update",
-        affected = table.affectedFiles(matched),
+        affected = table.affectedFiles(_.filter(matched)),
         // withColumns applies all SETs against the OLD row at once —
         // `SET a = b, b = a` swaps, like SQL requires
         survivorsOf = df => df.withColumns(sets.map { case (c, e) =>
@@ -87,61 +85,39 @@ object RowLevel {
         commitIfAgg = _ > 0L)
     }
 
-  /** Distinct-source-key cap for the localized MERGE path: up to this
-    * many key tuples are collected to the driver and reused verbatim for
-    * bounds pruning and both joins (≲256 KB of driver state — the
-    * upsert shapes the entries exercise are far below it). Within the
-    * cap, discovery prunes by the exact key set up to
-    * [[graft.meta.FileSkipping.ExactValueCap]] values per column and by
-    * the job-free constant-folded hull beyond it. A bulk merge beyond
-    * the cap falls back to the DataFrame path (hull aggregate +
-    * re-executed source — requires a deterministic source, and pays one
-    * count for the insert-bytes estimate, both negligible at bulk
-    * scale). */
-  private val MaxLocalKeys = 8192
-
   /** MERGE (upsert): rows in `source` replace table rows with the same
-    * key; unmatched source rows are inserted. One commit. The
-    * affected-file discovery scans only files whose manifest bounds
-    * admit at least one source key ([[GraftTable.pairsMatchingKeySet]],
-    * hull fallback [[GraftTable.pairsOverlappingKeys]]): a file whose
-    * bounds exclude every key cannot contain a matching row, so on a
-    * clustered table an upsert reads only the files its keys land in,
-    * not the table. */
+    * key; unmatched source rows are inserted. One commit. Key equality
+    * is plain `=`: NULL keys never match.
+    *
+    * Up to [[KeySet.MaxLocal]] distinct source keys are collected once
+    * (one job, no shuffle) into one key-match predicate. Discovery
+    * filters RAW rows by it — its per-column `IN`s prune files by their
+    * manifest statistics, so on a clustered table an upsert reads only
+    * the files its keys land in — and the rewrite keeps the rows it
+    * does not match: no join, no broadcast. A bulk merge beyond the cap
+    * stays distributed: files whose bounds overlap the key hull
+    * ([[GraftTable.pairsOverlappingKeys]]) semi-joined with the source
+    * keys, survivors anti-joined. That path evaluates the source once
+    * per use, so it requires a deterministic source. */
   def merge(table: GraftTable, source: DataFrame, keys: Seq[String],
             clock: Clock): Unit =
     table.lock.synchronized {
-      val spark = table.spark
-      val srcKeysDf = source.select(keys.map(col): _*).distinct()
-      val localKeys = srcKeysDf.limit(MaxLocalKeys + 1).collect()
-      val (srcKeys, candidates, keyCount) =
-        if (localKeys.length <= MaxLocalKeys)
-          // LOCALIZED path (r19): the distinct key set is materialized
-          // ONCE and reused for bounds pruning, the semi-join, and the
-          // anti-join — one job over the source instead of three, a
-          // non-deterministic source can no longer disagree between the
-          // discovery bounds and the joins (r18 ADVICE), and the per-file
-          // overlap test runs against the ACTUAL key tuples
-          // ([[GraftTable.pairsMatchingKeySet]]): scattered keys prune to
-          // the files containing SOME key, not every file in their
-          // min/max hull.
-          (spark.createDataFrame(
-            java.util.Arrays.asList(localKeys: _*), srcKeysDf.schema),
-            table.pairsMatchingKeySet(localKeys.toSeq, srcKeysDf.schema, keys),
-            localKeys.length.toLong)
-        else
-          // bulk fallback: the r18 hull-bounds path. Requires a
-          // deterministic source (the key aggregate and the joins
-          // re-evaluate it) — the localized path above covers every
-          // non-bulk shape.
-          (srcKeysDf, table.pairsOverlappingKeys(srcKeysDf, keys),
-            srcKeysDf.count())
-      val withPath = table.morReadLive(candidates, Some(FP))
-      rewrite(table, "merge",
-        affected = withPath.join(srcKeys, keys, "left_semi")
-          .select(col(FP).as("path")).distinct(),
-        survivorsOf = df => df.join(srcKeys, keys, "left_anti"),
-        extra = Some(source), clock, extraRowsEst = keyCount)
+      val srcKeys = source.select(keys.map(col): _*)
+      KeySet.collect(srcKeys) match {
+        case Some(ks) =>
+          val keyMatch = ks.matches(nullSafe = false)
+          rewrite(table, "merge",
+            affected = table.affectedFiles(_.filter(keyMatch)),
+            survivorsOf = _.filter(!coalesce(keyMatch, lit(false))),
+            extra = Some(source), clock, extraRowsEst = ks.rows.size)
+        case None =>
+          val distinct = srcKeys.distinct()
+          rewrite(table, "merge",
+            affected = table.affectedFiles(_.join(distinct, keys, "left_semi"),
+              Some(table.pairsOverlappingKeys(distinct, keys))),
+            survivorsOf = _.join(distinct, keys, "left_anti"),
+            extra = Some(source), clock, extraRowsEst = distinct.count())
+      }
     }
 
   /** Shared CoW machinery: rewrite the affected files via `survivorsOf`
@@ -167,13 +143,10 @@ object RowLevel {
                       preAgg: Option[Column] = None,
                       commitIfAgg: Long => Boolean = _ => true,
                       extraRowsEst: Long = 0L): Long = {
-    val spark = table.spark
-    import spark.implicits._
     val basis = table.currentSnapshot
     val schema = table.schema
     val cols = schema.fieldNames.toSeq.map(col)
-    val affectedPaths = affected.unionByName(table.deleteTargets)
-      .as[String].collect().toSet
+    val affectedPaths = table.deleteTargets(Some(affected))
 
     val preObs = new org.apache.spark.sql.Observation(
       s"cow-pre-${UUID.randomUUID()}")

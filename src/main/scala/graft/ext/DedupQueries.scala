@@ -25,10 +25,15 @@ object DedupQueries {
     Tables.load(s, dir, name)
 
   // ---- shared MinHash parameters (mirrored verbatim in the oracles) ----
-  private val P = 4294967311L // prime > 2^32
-  private val NumHashes = 16
-  private val hashA: Seq[Long] = (0 until NumHashes).map(j => 2L * j + 3)
-  private val hashB: Seq[Long] = (0 until NumHashes).map(j => 104729L * (j + 1))
+  private[graft] val P = 4294967311L // prime > 2^32
+  private[graft] val NumHashes = 16
+  // independent multipliers in [1, 2^31) from a fixed seed, so that
+  // h·a + b stays inside BIGINT for a 32-bit h in Spark and DuckDB alike.
+  // Correlated ones (a = 2j + 3) let one extra shingle take the minimum
+  // in every band at once, and a one-word-apart pair then shares none.
+  private[graft] val hashA: Seq[Long] =
+    new java.util.Random(0x6d696e68L).longs(NumHashes, 1L, 1L << 31).toArray.toSeq
+  private[graft] val hashB: Seq[Long] = (0 until NumHashes).map(j => 104729L * (j + 1))
   private val BandSize = 4 // 4 bands x 4 rows
   private val JaccardThreshold = 0.8
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd expressions for the METADATA plane (manifest listings,
@@ -17,36 +18,35 @@ import org.apache.spark.unsafe.types.UTF8String
   * codegen span.
   */
 
-/** Per-row bloom-filter membership probe: `BloomProbe(bytes, hash)` is
-  * true unless the serialized filter in `bytes` definitely excludes
-  * `hash`. Catalyst's own `BloomFilterMightContain` requires a CONSTANT
-  * (foldable) filter — right for runtime join filters (d18's
-  * `graft_might_contain`), unusable for per-FILE blooms where every
-  * manifest row carries its own serialized filter. NULL bytes (file has
-  * no filter for the column) and NULL hash probe TRUE: absence of
-  * evidence never prunes a file. */
+/** Per-row bloom-filter membership probe: `BloomProbe(bytes, hashes)`
+  * is true unless the serialized filter in `bytes` definitely excludes
+  * every hash in the `hashes` array — one filter read per row, whatever
+  * the number of probes. Catalyst's own `BloomFilterMightContain`
+  * requires a CONSTANT (foldable) filter — right for runtime join
+  * filters (d18's `graft_might_contain`), unusable for per-FILE blooms
+  * where every manifest row carries its own serialized filter. An empty
+  * array probes FALSE (no candidate value is left to find); NULL bytes
+  * (file has no filter for the column), a NULL array and a NULL element
+  * probe TRUE: absence of evidence never prunes a file. */
 case class BloomProbe(left: Expression, right: Expression)
   extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (BINARY, BIGINT), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+    (left.dataType, right.dataType) match {
+      case (BinaryType, ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires (BINARY, ARRAY<BIGINT>), got " +
+          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+    }
 
   override def nullable: Boolean = false
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_bloom_probe"
 
   override def eval(input: InternalRow): Any = {
-    val bytes = left.eval(input)
-    if (bytes == null) true
-    else {
-      val h = right.eval(input)
-      h == null ||
-        BloomProbe.probe(bytes.asInstanceOf[Array[Byte]], h.asInstanceOf[Long])
-    }
+    val hashes = right.eval(input)
+    hashes == null || BloomProbe.probe(
+      left.eval(input).asInstanceOf[Array[Byte]], hashes.asInstanceOf[ArrayData])
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -55,14 +55,10 @@ case class BloomProbe(left: Expression, right: Expression)
     ev.copy(code =
       code"""
         ${l.code}
-        boolean ${ev.value} = true;
-        if (!${l.isNull}) {
-          ${r.code}
-          if (!${r.isNull}) {
-            ${ev.value} = graft.functions.BloomProbe.probe(
-              (byte[]) ${l.value}, ${r.value});
-          }
-        }
+        ${r.code}
+        boolean ${ev.value} = ${r.isNull} ||
+          graft.functions.BloomProbe.probe(
+            ${l.isNull} ? null : (byte[]) ${l.value}, ${r.value});
       """, isNull = FalseLiteral)
   }
 
@@ -74,10 +70,16 @@ case class BloomProbe(left: Expression, right: Expression)
 object BloomProbe {
   /** static entry point for generated code (Scala emits a forwarder on
     * the companion class, so Janino sees a plain static method). */
-  def probe(bytes: Array[Byte], hash: Long): Boolean =
-    org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(bytes))
-      .mightContainLong(hash)
+  def probe(bytes: Array[Byte], hashes: ArrayData): Boolean = {
+    val n = hashes.numElements()
+    if (n == 0) false
+    else if (bytes == null) true
+    else {
+      val filter = org.apache.spark.util.sketch.BloomFilter
+        .readFrom(new java.io.ByteArrayInputStream(bytes))
+      (0 until n).exists(i => hashes.isNullAt(i) || filter.mightContainLong(hashes.getLong(i)))
+    }
+  }
 }
 
 /** Hadoop-Path normalization of a string column — `file:///a/b` and

@@ -1,6 +1,6 @@
 package graft.meta
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CatalystShims
 import org.apache.spark.sql.types._
@@ -37,8 +37,8 @@ import org.apache.spark.sql.types._
 object FileSkipping {
 
   /** Per-column value-list cap for [[mayContainAny]]'s exact
-    * exists-test; larger value sets prune by the (constant-folded,
-    * job-free) hull alone. */
+    * per-value bounds test; larger value sets prune by the
+    * (constant-folded, job-free) hull and the bloom alone. */
   private[graft] val ExactValueCap = 1024
 
   /** Column types whose string-encoded min/max round-trip losslessly
@@ -89,27 +89,6 @@ object FileSkipping {
       ok: (Column, Column) => Column): Column =
     if (!boundable(dt)) KeepAll else b.isNull || v.isNull || ok(b, v)
 
-  /** `c = v` for a constant `v`: the bounds cover v AND, when the file
-    * carries a bloom filter for the column, the bloom might contain v —
-    * the point-lookup prune min/max can't provide on unsorted
-    * high-cardinality columns (every file's range covers every probe;
-    * the bloom says "definitely not here" per file). */
-  def mayEqual(c: String, dt: DataType, v: Column): Column =
-    if (!boundable(dt)) KeepAll
-    else mayOverlap(c, dt, v, v) && bloomMayContain(c, v)
-
-  /** The bloom probe: the probe hash is computed at planning time from
-    * the same XxHash64 the write side used, and the per-row probe is a
-    * codegen'd expression (a Scala UDF here would break whole-stage
-    * codegen for the whole manifest filter). A missing bloom keeps the
-    * file; a probe that is not a non-null literal keeps every file. */
-  def bloomMayContain(c: String, v: Column): Column =
-    CatalystShims.xxHash64Literal(v) match {
-      case Some(hash) =>
-        CatalystShims.bloomProbe(element_at(col("blooms"), c), hash)
-      case None => KeepAll
-    }
-
   /** Plain `=` against a key set given by its non-null min `lo` and max
     * `hi` (Scala values; `lo` NULL = the set has no non-null key, which
     * matches nothing). */
@@ -118,23 +97,42 @@ object FileSkipping {
     else if (lo == null) lit(false)
     else mayOverlap(c, dt, lit(lo).cast(dt), lit(hi).cast(dt))
 
-  /** Plain `=` against a set of Scala values: the hull first (array
-    * min/max of a literal array constant-fold, so it is O(1) per file
-    * and short-circuits the rest), then — up to [[ExactValueCap]]
-    * values — an exact test that SOME value lies within the file's
-    * bounds. Beyond the cap the hull stands alone (a linear probe of a
-    * huge value list per manifest row would not pay for the extra
-    * pruning). NULL values match nothing and are dropped; no non-null
+  /** `c = v` or `c IN (values)`, the values Scala values of type `dt`,
+    * a list of any length: the hull first (array min/max of a literal
+    * array constant-fold, so it is O(1) per file and short-circuits the
+    * rest; for one value it is the exact bounds test), then the bloom —
+    * the point-lookup prune min/max can't provide on unsorted
+    * high-cardinality columns — over the values' hashes, computed at
+    * planning time from the XxHash64 the write side used (a missing
+    * bloom keeps the file). Up to
+    * [[ExactValueCap]] values the bloom probes only the values within
+    * the file's bounds, so a file is kept only if SOME value passes both
+    * tests. Beyond the cap every hash is probed (a linear bounds test of
+    * a huge value list per manifest row would not pay for the extra
+    * pruning). The values are ONE array literal, so the rule's size, and
+    * the time to plan the manifest filter, does not grow with their
+    * number. NULL values match nothing and are dropped; no non-null
     * value prunes every file. */
   def mayContainAny(c: String, dt: DataType, values: Seq[Any]): Column = {
     val vs = values.filter(_ != null).distinct
     if (!boundable(dt)) KeepAll
     else if (vs.isEmpty) lit(false)
     else {
-      val arr = array(vs.map(v => lit(v).cast(dt)): _*)
+      val arr = CatalystShims.scalaLiteral(vs, ArrayType(dt, containsNull = false))
       val hull = mayOverlap(c, dt, array_min(arr), array_max(arr))
-      if (vs.size > ExactValueCap) hull
-      else hull && exists(arr, v => mayOverlap(c, dt, v, v))
+      val hashes = vs.map(CatalystShims.xxHash64(_, dt))
+      val probes =
+        if (vs.size == 1 || vs.size > ExactValueCap)
+          CatalystShims.scalaLiteral(hashes, ArrayType(LongType, containsNull = false))
+        else {
+          val pairs = CatalystShims.scalaLiteral(vs.zip(hashes).map(Row.fromTuple),
+            ArrayType(new StructType().add("v", dt, nullable = false)
+              .add("h", LongType, nullable = false), containsNull = false))
+          transform(filter(pairs, p => mayOverlap(c, dt, p("v"), p("v"))), _("h"))
+        }
+      // one codegen'd probe per file reads its bloom once (a Scala UDF
+      // would break whole-stage codegen for the whole manifest filter)
+      hull && CatalystShims.bloomProbe(element_at(col("blooms"), c), probes)
     }
   }
 

@@ -484,18 +484,14 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
 
   /** [[liveFiles]] bounds-pruned to files whose per-key-column value
-    * range overlaps the key set's min/max — the same manifest
-    * file-skipping [[matchingRows]] performs for eq-deletes, applied to
-    * the CoW merge's affected-file discovery so it scans only candidate
-    * files, not the table (on a 100 TB table an upsert landing in one
-    * key range reads the overlapping files, not every file).
-    *
-    * MERGE key equality is plain `=`
+    * range overlaps the key set's min/max: the candidates of a bulk
+    * MERGE's affected-file discovery, whose key set is too large to
+    * localize. MERGE key equality is plain `=`
     * ([[FileSkipping.mayMatchKeyRange]]). Only boundable key columns are
-    * aggregated: the min/max aggregate is one tiny job over the (small)
-    * source key set, skipped when no key column can prune; the manifest
-    * filter folds into the driver-local manifest relation, job-free
-    * below the local-read gate. */
+    * aggregated: the min/max aggregate is one job over the source key
+    * set, skipped when no key column can prune; the manifest filter
+    * folds into the driver-local manifest relation, job-free below the
+    * local-read gate. */
   private[graft] def pairsOverlappingKeys(keys: DataFrame,
                                           keyCols: Seq[String]): IndexedSeq[ManifestEntry] =
     liveFiles {
@@ -510,32 +506,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
             st.get(2 * i), st.get(2 * i + 1))
         }.reduce(_ && _)
       }
-    }
-
-  /** [[pairsOverlappingKeys]] refined to an ACTUAL-key-set overlap test
-    * (r19): given the MATERIALIZED distinct source keys, a file is kept
-    * only if for EVERY boundable key column SOME source key value lies
-    * within the file's recorded [min,max] — not merely if the file
-    * overlaps the key set's global min/max envelope. For scattered keys
-    * on a clustered table this prunes the files BETWEEN key clusters
-    * that the hull test kept. Still a provable superset of matches: a
-    * matching row with key k in file f implies min_f ≤ k_c ≤ max_f for
-    * every column c, so k witnesses every per-column exists.
-    *
-    * Same conservative edges as the hull test
-    * ([[FileSkipping.mayContainAny]]). The per-column value lists are
-    * literal arrays over the (small, already-collected) key set, so the
-    * filter folds into the driver-local manifest relation exactly like
-    * the hull test — no extra job. */
-  private[graft] def pairsMatchingKeySet(keyRows: Seq[Row],
-                                         keySchema: StructType,
-                                         keyCols: Seq[String]): IndexedSeq[ManifestEntry] =
-    liveFiles {
-      val tableSchema = schema
-      keyCols.map { k =>
-        val idx = keySchema.fieldIndex(k)
-        FileSkipping.mayContainAny(k, tableSchema(k).dataType, keyRows.map(_.get(idx)))
-      }.reduce(_ && _)
     }
 
   // ---- merge-on-read position deletes (Iceberg v2) -----------------------
@@ -572,10 +542,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       .groupBy(_._1).map { case (m, xs) => m -> xs.map(_._2).min }
 
   /** One row per eq-delete FILE across the given manifests: (file path,
-    * introducing snapshot id, key column names) — read in ONE Spark job
-    * over all manifests, NOT one per manifest. An upsert stream
-    * accumulates one eq manifest per micro-batch; per-manifest driver
-    * jobs would cost O(#batches) sequential plan time between
+    * introducing snapshot id, key column names, bounds) — read in ONE
+    * Spark job over all manifests, NOT one per manifest. An upsert
+    * stream accumulates one eq manifest per micro-batch; per-manifest
+    * driver jobs would cost O(#batches) sequential plan time between
     * compactions. The key columns come from the manifest row itself:
     * `null_counts` keys every column of the file, and an eq-delete
     * file's columns ARE its key set (minus the embedded intro column of
@@ -583,49 +553,44 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * (`added_snapshot_id`); log derivation is the legacy fallback. */
   private def eqFileInfos(manifests: Seq[String]): Seq[EqFileInfo] = {
     if (manifests.isEmpty) return Seq.empty
-    // (eq file path, size, intro id or null, key names or null,
-    // manifest dir) — one aggregate-gated driver read with per-dir
-    // attribution when local; one distributed scan otherwise, with
-    // `_metadata.file_path` substituting for the known dir. Defense
-    // against zero-row eq files (writers no longer commit them, but a
-    // legacy manifest may carry one): null key names → deletes nothing
-    // → skip, instead of reading its NULL key record.
-    val locals = ManifestIO.readLocalByDir(hadoopConf, manifests)
-    val rows: Seq[(String, Long, java.lang.Long, Seq[String], String)] =
-      if (locals.isDefined)
-        locals.get.flatMap { case (m, rs) =>
-          rs.collect { case r if !r.isNullAt(3) =>
-            (r.getString(0), r.getLong(1),
-              if (r.isNullAt(7)) null else java.lang.Long.valueOf(r.getLong(7)),
-              r.getMap[String, Any](3).keys.toSeq, new Path(m).toUri.getPath)
+    // (manifest row minus blooms, manifest dir) — one aggregate-gated
+    // driver read with per-dir attribution when local; one distributed
+    // scan otherwise, with `_metadata.file_path` substituting for the
+    // known dir. Defense against zero-row eq files (writers no longer
+    // commit them, but a legacy manifest may carry one): null key names
+    // → deletes nothing → skip, instead of reading its NULL key record.
+    val cols = Seq("path", "size_bytes", "added_snapshot_id", "null_counts",
+      "min_values", "max_values")
+    val rows: Seq[(Row, String)] =
+      ManifestIO.readLocalByDir(hadoopConf, manifests) match {
+        case Some(locals) =>
+          locals.flatMap { case (m, rs) =>
+            rs.map(r => Row.fromSeq(cols.map(c => r.get(ManifestSchema.fieldIndex(c)))) ->
+              new Path(m).toUri.getPath)
           }
-        }
-      else
-        // direct parquet read, NOT manifestDf→ManifestIO.relation: a
-        // retried relation() could serve a LocalRelation (partial cache
-        // warm shrank miss-bytes under the gate), and LocalRelation has
-        // no _metadata column — the file-source scan always does
-        // (ADVICE r16)
-        spark.read.schema(GraftTable.ManifestSchema).parquet(manifests: _*)
-          .select(col("path"), col("size_bytes"), col("added_snapshot_id"),
-            map_keys(col("null_counts")).as("keys"),
-            col("_metadata.file_path").as("mfile"))
-          .filter(col("keys").isNotNull)
-          .collect().toIndexedSeq.map(r =>
-            (r.getString(0), r.getLong(1),
-              if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2)),
-              r.getSeq[String](3),
-              new Path(r.getString(4)).getParent.toUri.getPath))
+        case None =>
+          // direct parquet read, NOT manifestDf→ManifestIO.relation: a
+          // retried relation() could serve a LocalRelation (partial
+          // cache warm shrank miss-bytes under the gate), and
+          // LocalRelation has no _metadata column — the file-source scan
+          // always does (ADVICE r16)
+          spark.read.schema(GraftTable.ManifestSchema).parquet(manifests: _*)
+            .select(cols.map(col) :+ col("_metadata.file_path"): _*)
+            .collect().toSeq.map(r => Row.fromSeq(r.toSeq.init) ->
+              new Path(r.getString(cols.size)).getParent.toUri.getPath)
+      }
     lazy val fromLog = eqIntroducedBy(snapshots).map { case (m, id) =>
       new Path(m).toUri.getPath -> id
     }
-    rows.toIndexedSeq.map { case (path, size, added, keys, mdir) =>
-      val keyNames = keys.filterNot(_ == EqIntroCol).sorted
+    def mapOf[V](r: Row, i: Int): Map[String, V] =
+      if (r.isNullAt(i)) Map.empty else r.getMap[String, V](i).toMap
+    rows.collect { case (r, mdir) if !r.isNullAt(3) =>
       val intro =
-        if (added != null) added.longValue
+        if (!r.isNullAt(2)) r.getLong(2)
         else fromLog.getOrElse(mdir, throw new IllegalStateException(
           s"eq manifest $mdir not in log"))
-      EqFileInfo(ManifestEntry(path, size, intro), keyNames)
+      EqFileInfo(ManifestEntry(r.getString(0), r.getLong(1), intro),
+        mapOf(r, 3), mapOf(r, 4), mapOf(r, 5))
     }
   }
 
@@ -658,67 +623,43 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       .drop(MorJoinCol, EqIntroCol)
   }
 
-  /** Distinct data-file paths targeted by outstanding delete entries —
-    * replacement commits (optimize, row-level CoW) rewrite exactly
-    * these to materialize the deletes. Position deletes name their
-    * files. Equality deletes are pruned metadata-only: a data file is
-    * a target only if it was added before the introducing commit AND
-    * its manifest bounds overlap the delete file's bounds on EVERY key
+  /** Paths of data files targeted by outstanding delete entries, plus
+    * the `path`s of `also` — replacement commits (optimize, row-level
+    * CoW) rewrite exactly these to materialize the deletes. Position
+    * deletes name their files; those names and `also`'s paths are
+    * collected in ONE job with no shuffle ([[KeySet.distinctRows]]).
+    * Equality deletes are pruned metadata-only: a data file is a target
+    * only if it was added before the introducing commit AND its
+    * manifest bounds overlap the delete file's bounds on EVERY key
     * column (necessary for any entry to match; missing bounds keep the
     * file conservatively) — an upsert touching one key range does not
-    * force a whole-table rewrite. One column: `path`. */
-  private[graft] def deleteTargets: DataFrame = {
-    val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("path", StringType, nullable = false))))
-    currentSnapshot match {
-      case Some(s) =>
-        val pos =
-          if (s.deleteManifests.isEmpty) none
-          else positionDeletes(listedScope(s.deleteManifests))
-            .select(col("file_path").as("path")).distinct()
-        val eq =
-          if (s.eqDeleteManifests.isEmpty) none
-          else {
-            // ONE overlap join per distinct key set, not per manifest:
-            // all eq manifests are read in a single scan (eqFileInfos),
-            // and each group's files join the data manifest once.
-            import spark.implicits._
-            val infos = eqFileInfos(s.eqDeleteManifests)
-            if (infos.isEmpty) none
-            else {
-              val data = manifestDf(s.manifests)
-              val tableSchema = schema
-              val introDf = broadcast(spark
-                .createDataset(infos.map(i => (i.path, i.intro)))
-                .toDF("path", "__graft_intro"))
-              val eqAll = manifestDf(s.eqDeleteManifests)
-                .drop("added_snapshot_id").join(introDf, Seq("path"))
-              infos.groupBy(_.keys).map { case (keyCols, group) =>
-                val eqFiles =
-                  eqAll.filter(col("path").isin(group.map(_.path): _*))
-                // null-safe equality: the eq file's bounds are the probe
-                // range, and its null entries match the data file's nulls
-                val overlap = keyCols.map { k =>
-                  val dt = tableSchema(k).dataType
-                  FileSkipping.mayMatchNullSafe(k,
-                    FileSkipping.mayOverlap(k, dt,
-                      FileSkipping.lowerBound(k, dt, eqFiles(_)),
-                      FileSkipping.upperBound(k, dt, eqFiles(_)), data(_)),
-                    FileSkipping.mayHaveNulls(k, eqFiles(_)), data(_))
-                }.reduce(_ && _)
-                // per-file intro (max-of-file for compacted files) —
-                // a conservative upper bound keeps the target SUPERSET
-                // guarantee; exact windows are applied at read time
-                val older = data("added_snapshot_id").isNull ||
-                  data("added_snapshot_id") < eqFiles("__graft_intro")
-                data.join(eqFiles, overlap && older, "left_semi")
-                  .select(data("path"))
-              }.reduce(_ unionByName _)
-            }
-          }
-        pos.unionByName(eq).distinct()
-      case _ => none
-    }
+    * force a whole-table rewrite. Each eq file's bounds and intro id
+    * enter one manifest filter as literals: job-free below the
+    * local-read gate. */
+  private[graft] def deleteTargets(also: Option[DataFrame] = None): Set[String] = {
+    val cur = currentSnapshot
+    val pos = cur.filter(_.deleteManifests.nonEmpty).map(s =>
+      positionDeletes(listedScope(s.deleteManifests))
+        .select(col("file_path").as("path")))
+    val named = (also ++ pos).reduceOption(_ unionByName _)
+      .fold(Set.empty[String])(KeySet.distinctRows(_).map(_.getString(0)).toSet)
+    val tableSchema = schema
+    cur.toSeq.flatMap(s => eqFileInfos(s.eqDeleteManifests)).map { f =>
+      // the per-file intro (max-of-file for compacted files) is a
+      // conservative upper bound: exact windows apply at read time
+      val older = col("added_snapshot_id").isNull ||
+        col("added_snapshot_id") < f.intro
+      f.keys.foldLeft(older) { (acc, k) =>
+        val dt = tableSchema(k).dataType
+        def probe(bounds: Map[String, String]) = lit(bounds.get(k).orNull).try_cast(dt)
+        // null-safe equality: the eq file's bounds are the probe range,
+        // and its null entries match the data file's nulls
+        acc && FileSkipping.mayMatchNullSafe(k,
+          FileSkipping.mayOverlap(k, dt, probe(f.lower), probe(f.upper)),
+          lit(f.nullCounts.get(k).forall(_ > 0)))
+      }
+    }.reduceOption(_ || _).fold(named)(keep =>
+      named ++ FileSkipping.survivingFiles(manifestDf(cur.get.manifests), keep).map(_.path))
   }
 
   /** Schema-aligned scan of `scope` (files of `s`) with the snapshot's
@@ -782,16 +723,15 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** [[morReadFiles]] over `files` of the current snapshot (empty-table
     * safe). */
-  private[graft] def morReadLive(files: IndexedSeq[ManifestEntry],
-                                 pathCol: Option[String] = None): DataFrame =
+  private[graft] def morReadLive(files: IndexedSeq[ManifestEntry]): DataFrame =
     currentSnapshot match {
-      case Some(s) => morReadFiles(s, FileScope(s.manifests, files), pathCol)
-      case None => readFilesAligned(FileScope.Empty, pathCol)
+      case Some(s) => morReadFiles(s, FileScope(s.manifests, files))
+      case None => readFilesAligned(FileScope.Empty)
     }
 
-  /** Paths of live data files containing at least one RAW row matching
-    * `matched` — the CoW affected-file discovery, pruned: Catalyst
-    * pushes the predicate into each generation's
+  /** Paths of live data files (or of the files `among`) with at least
+    * one RAW row in `matching(rows)` — the CoW affected-file discovery,
+    * pruned: Catalyst pushes a filter into each generation's
     * [[graft.sources.GraftFileIndex]], so manifest bounds, null counts,
     * and blooms SKIP non-matching files before a row is read (as in
     * [[deleteWhereMOR]]), and a selective CoW delete/update on a
@@ -800,11 +740,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * SUPERSET of the MOR-applied affected set per file — and every file
     * whose matches are all MOR-deleted is delete-targeted, which the
     * CoW rewrite unions in anyway, so the final affected set is
-    * identical. One column: `path`. */
-  private[graft] def affectedFiles(matched: Column): DataFrame =
-    readFilesAligned(currentSnapshot.fold(FileScope.Empty)(scopeOf),
-        Some(MorPathCol)).filter(matched)
-      .select(col(MorPathCol).as("path")).distinct()
+    * identical. One column: `path`, once per matching row —
+    * [[deleteTargets]] dedupes it without a shuffle. */
+  private[graft] def affectedFiles(matching: DataFrame => DataFrame,
+                                   among: Option[IndexedSeq[ManifestEntry]] = None): DataFrame =
+    matching(readFilesAligned(currentSnapshot.fold(FileScope.Empty)(s =>
+        among.fold(scopeOf(s))(FileScope(s.manifests, _))), Some(MorPathCol)))
+      .select(col(MorPathCol).as("path"))
 
   /** Merge-on-read DELETE (Iceberg v2 position deletes): rather than
     * rewriting every affected data file (the copy-on-write
@@ -899,21 +841,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     commitLock.synchronized {
       val cur = currentSnapshot.getOrElse(return 0L)
       if (cur.numFiles == 0) return 0L
-      val keyCols = keys.columns.toSeq
-      keyCols.foreach(k => require(schema.fieldNames.contains(k),
+      keys.columns.foreach(k => require(schema.fieldNames.contains(k),
         s"key column $k not in table schema"))
-      val (eqDir, keyStats, nKeys) = writeEqDeleteFile(keys)
-      // the key count rode on the eq write (no separate isEmpty scan);
-      // an empty key set must not commit — its zero-row eq file would
-      // carry a null key-schema record, poisoning read planning
-      if (nKeys == 0L) { fs.delete(eqDir, true); return 0L }
-      var removed = 0L
-      val memo = scala.collection.mutable.Map.empty[
-        (IndexedSeq[ManifestEntry], Seq[String], Seq[String]), Long]
-      commitEqDelete("delete", emptyManifest, eqDir, clock) { b =>
-        removed = matchingRows(b, keys, keyCols, keyStats, memo); removed
-      }
-      removed
+      eqDeleteCommit("delete", emptyManifest, keys, clock).getOrElse(0L)
     }
 
   /** One-commit UPSERT (the Flink-CDC-into-Iceberg shape): an equality
@@ -936,15 +866,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     keys.foreach(k => require(schema.fieldNames.contains(k),
       s"key column $k not in table schema"))
     require(keys.nonEmpty, "upsert requires at least one key column")
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    // MERGE's DELETE clause rides the same commit as its own keyed
-    // eq-deletes: the union lands in ONE eq file, so delete + update +
-    // insert are a single atomic snapshot (Trino MERGE semantics — a
-    // reader sees all of the MERGE or none of it)
-    val delKeys = extraDeleteKeys match {
-      case Some(d) => srcKeys.unionByName(d.select(keys.map(col): _*)).distinct()
-      case None => srcKeys
-    }
     val commitDir = new Path(tableDir, s"data/${UUID.randomUUID()}")
     // partitioned tables keep their clustering through upserts, exactly
     // like appends — otherwise upsert files span every transform value
@@ -956,30 +877,62 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // append write then emits only schema-only files, which must not
     // ride into the manifest as junk entries
     if (extraDeleteKeys.isDefined) pruneEmptyFiles(commitDir)
-    val hasData = GraftTable.listFiles(fs, commitDir).nonEmpty
-    val (eqDir, keyStats, nKeys) = writeEqDeleteFile(delKeys)
-    // empty source → nothing to delete, nothing to insert: no commit.
-    // Without this, the zero-row eq file's manifest row has a NULL
-    // key-schema record (null_counts) and poisons every later read's
-    // eq planning — one empty upsert must never brick the table.
-    if (nKeys == 0L) {
-      fs.delete(eqDir, true); fs.delete(commitDir, true); return 0L
+    val listed = GraftTable.listFiles(fs, commitDir)
+    val hasData = listed.nonEmpty
+    // the eq-delete keys are those of the rows just written, read back
+    // from their files: `source` runs once, so a non-deterministic
+    // source cannot delete other keys than it inserts. MERGE's DELETE
+    // clause rides the same commit as its own keyed eq-deletes: the
+    // union lands in ONE eq file, so delete + update + insert are a
+    // single atomic snapshot (Trino MERGE semantics — a reader sees all
+    // of the MERGE or none of it)
+    val written = Option.when(hasData)(scanWritten(listed, source.schema))
+    val delKeys = (written ++ extraDeleteKeys).map(_.select(keys.map(col): _*))
+      .reduceOption(_ unionByName _)
+    // no keys → nothing to delete, nothing to insert: no commit
+    val removed = delKeys.flatMap(eqDeleteCommit(op,
+      if (hasData) inventory(commitDir) else emptyManifest, _, clock))
+    if (removed.isEmpty || !hasData) fs.delete(commitDir, true)
+    removed.getOrElse(0L)
+  }
+
+  /** Commit an equality delete of the distinct tuples of `keys` plus
+    * `delta`'s files, as one snapshot; None, and no commit, for an empty
+    * key set — its zero-row eq file's manifest row would have a NULL
+    * key-schema record (null_counts) and poison every later read's eq
+    * planning. Up to [[KeySet.MaxLocal]] tuples are collected once: the
+    * eq file is written from them and [[matchingRows]] counts with their
+    * null-safe predicate. A larger set is written distributed, and the
+    * count semi-joins the eq file just written.
+    * @return rows deleted */
+  private def eqDeleteCommit(op: String, delta: => DataFrame, keys: DataFrame,
+                             clock: Clock): Option[Long] = {
+    val keyCols = keys.columns.toSeq
+    val local = KeySet.collect(keys)
+    val (eqDir, stats, nKeys) =
+      writeEqDeleteFile(local.fold(keys.distinct())(ks =>
+        spark.createDataFrame(java.util.Arrays.asList(ks.rows: _*), ks.schema)))
+    if (nKeys == 0L) { fs.delete(eqDir, true); return None }
+    val matching: DataFrame => DataFrame = local match {
+      case Some(ks) => _.filter(ks.matches(nullSafe = true))
+      case None =>
+        val kd = scanWritten(GraftTable.listFiles(fs, eqDir), keys.schema)
+        live => live.join(kd,
+          keyCols.map(k => live(k) <=> kd(k)).reduce(_ && _), "left_semi")
     }
     var removed = 0L
     val memo = scala.collection.mutable.Map.empty[
       (IndexedSeq[ManifestEntry], Seq[String], Seq[String]), Long]
-    commitEqDelete(op, if (hasData) inventory(commitDir) else emptyManifest,
-        eqDir, clock) { b =>
-      removed = matchingRows(b, delKeys, keys, keyStats, memo); removed
+    commitEqDelete(op, delta, eqDir, clock) { b =>
+      removed = matchingRows(b, keyCols, stats, matching, memo); removed
     }
-    if (!hasData) fs.delete(commitDir, true)
-    removed
+    Some(removed)
   }
 
-  /** Rows of `b` (all MOR deletes applied) matching the key set —
-    * the exact count an eq-delete commit must subtract. The scan is
-    * bounds-pruned first: `stats` holds the key set's min, max and NULL
-    * count per key column (observed during the eq-file write
+  /** Rows of `b` (all MOR deletes applied) in `matching` — the exact
+    * count an eq-delete commit must subtract. The scan is bounds-pruned
+    * first: `stats` holds the key set's min, max and NULL count per key
+    * column (observed during the eq-file write
     * ([[writeEqDeleteFile]]) — no extra scan), and only data files that
     * may hold a key under null-safe equality are read — an upsert
     * touching one key range counts against overlapping files, not the
@@ -991,18 +944,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * common concurrent-writer case — reuses the prior attempt's count
     * instead of re-paying the pruned scan. A retry where the data or
     * delete state actually changed misses the memo and recounts. */
-  private def matchingRows(b: Snapshot, keys: DataFrame,
-                           keyCols: Seq[String], stats: Row,
+  private def matchingRows(b: Snapshot, keyCols: Seq[String], stats: Row,
+                           matching: DataFrame => DataFrame,
                            memo: scala.collection.mutable.Map[
                              (IndexedSeq[ManifestEntry], Seq[String], Seq[String]),
-                             Long] = null): Long = {
+                             Long]): Long = {
     if (b.numFiles == 0) return 0L
-    val kd = keys.select(keyCols.map(col): _*).distinct()
     // per key column: value bounds over the non-null keys AND whether
     // any key is null — null keys match null rows (null-safe eq-delete
     // semantics), so a file qualifies if its value range overlaps OR it
-    // may contain nulls while the key set does. `stats` was computed
-    // during the eq-file write ([[writeEqDeleteFile]]) — no extra scan.
+    // may contain nulls while the key set does
     val tableSchema = schema
     val scope = scopeOf(b,
       keyCols.zipWithIndex.map { case (k, i) =>
@@ -1013,19 +964,18 @@ final class GraftTable(val spark: SparkSession, val location: String) {
             stats.get(3 * i), stats.get(3 * i + 1)),
           lit(nullKeys))
       }.reduce(_ && _))
+    // counted on the plan's rows: one job, where count()'s final
+    // aggregate would add a shuffle stage and a second
     if (scope.files.isEmpty) 0L
-    else {
-      val memoKey = (scope.files, b.deleteManifests, b.eqDeleteManifests)
-      if (memo != null && memo.contains(memoKey)) memo(memoKey)
-      else {
-        val live = morReadFiles(b, scope)
-        val cond = keyCols.map(k => live(k) <=> kd(k)).reduce(_ && _)
-        val n = live.join(kd, cond, "left_semi").count()
-        if (memo != null) memo(memoKey) = n
-        n
-      }
-    }
+    else memo.getOrElseUpdate((scope.files, b.deleteManifests, b.eqDeleteManifests),
+      matching(morReadFiles(b, scope)).select().queryExecution.toRdd.count())
   }
+
+  /** A scan of `files`, just written and listed by a commit that no
+    * manifest names yet. */
+  private def scanWritten(files: Seq[LocatedFileStatus], dataSchema: StructType): DataFrame =
+    graft.sources.GraftFileIndex.scan(spark, this, dataSchema, FileScope(Seq.empty,
+      files.map(f => ManifestEntry(normalize(f.getPath), f.getLen, 0L)).toIndexedSeq))
 
   /** Remove zero-row parquet files from a freshly written commit dir:
     * a shuffle write emits a schema-only file for an empty task (and
@@ -1042,7 +992,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
   }
 
-  /** Write a distinct key set as one eq-delete parquet dir, computing
+  /** Write a DISTINCT key set as one eq-delete parquet dir, computing
     * the per-key-column (min, max, null-count) stats DURING the write
     * via observe — [[matchingRows]] bounds-prunes with them, so the key
     * set is never scanned a second time just for statistics. Returned
@@ -1055,7 +1005,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val aggs = count(lit(1)).as("cnt") +: keyCols.flatMap(k =>
       Seq(min(col(k)).as(s"mn_$k"), max(col(k)).as(s"mx_$k"),
         sum(when(col(k).isNull, 1L).otherwise(0L)).as(s"nn_$k")))
-    dataWrite(keys.distinct().observe(obs, aggs.head, aggs.tail: _*)
+    dataWrite(keys.observe(obs, aggs.head, aggs.tail: _*)
       .coalesce(1)).parquet(dir.toString)
     fs.delete(new Path(dir, "_SUCCESS"), false)
     // an empty key write can run zero tasks → empty observation map;
@@ -2392,15 +2342,18 @@ object GraftTable {
     StructField("file_path", StringType, nullable = false),
     StructField("pos", LongType, nullable = false)))
 
-  /** One live equality-delete file: its path, the snapshot that
-    * introduced it (per-file stamp or legacy log derivation), and its
-    * key column names (sorted; derived from the manifest's null_counts
-    * keys, minus the embedded intro column of compacted files). */
-  /** An eq-delete file (its added id the introducing snapshot) and its
-    * key columns. */
-  private[meta] final case class EqFileInfo(file: ManifestEntry, keys: Seq[String]) {
+  /** One live equality-delete file: its manifest entry (the added id
+    * is the snapshot that introduced it, per-file stamp or legacy log
+    * derivation) and its manifest statistics. */
+  private[meta] final case class EqFileInfo(file: ManifestEntry,
+                                            nullCounts: Map[String, Long],
+                                            lower: Map[String, String],
+                                            upper: Map[String, String]) {
     def path: String = file.path
     def intro: Long = file.addedSnapshotId
+    /** Every column of the file but the embedded intro column of
+      * compacted files, sorted. */
+    def keys: Seq[String] = nullCounts.keys.filterNot(_ == EqIntroCol).toSeq.sorted
   }
 
   /** Per-ENTRY introducing-snapshot column embedded in COMPACTED

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -130,8 +130,10 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val s = scope
     val conds = dataFilters.flatMap(keepFile)
+    // files no manifest lists yet (a commit's own read-back) have no
+    // statistics to prune by
     val kept =
-      if (conds.isEmpty) s.files
+      if (conds.isEmpty || s.manifests.isEmpty) s.files
       else {
         val key = dataFilters.map(_.canonicalized.toString).sorted.mkString("&")
         listCache.computeIfAbsent(key, _ => {
@@ -166,19 +168,19 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
       for { a <- keepFile(l); b <- keepFile(r) } yield a || b
     case LiteralFirst(attrFirst) => keepFile(attrFirst)
     case Not(LiteralFirst(attrFirst)) => keepFile(Not(attrFirst))
-    case EqualTo(a: AttributeReference, Literal(v, _)) => mayEqual(a, v)
+    case EqualTo(a: AttributeReference, Literal(v, _)) => mayEqualAny(a, Seq(v))
     case EqualNullSafe(a: AttributeReference, Literal(v, _)) =>
-      if (v == null) prune(FileSkipping.mayHaveNulls(a.name)) else mayEqual(a, v)
+      if (v == null) prune(FileSkipping.mayHaveNulls(a.name)) else mayEqualAny(a, Seq(v))
     case EqualNullSafe(Literal(v, _), a: AttributeReference) =>
-      if (v == null) prune(FileSkipping.mayHaveNulls(a.name)) else mayEqual(a, v)
+      if (v == null) prune(FileSkipping.mayHaveNulls(a.name)) else mayEqualAny(a, Seq(v))
     case GreaterThan(a: AttributeReference, Literal(v, _)) => above(a, v, strict = true)
     case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) => above(a, v, strict = false)
     case LessThan(a: AttributeReference, Literal(v, _)) => below(a, v, strict = true)
     case LessThanOrEqual(a: AttributeReference, Literal(v, _)) => below(a, v, strict = false)
     case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      mayEqualAny(a, vs.collect { case Literal(v, _) if v != null => v })
+      mayEqualAny(a, vs.collect { case Literal(v, _) => v })
     case InSet(a: AttributeReference, vs) =>
-      mayEqualAny(a, vs.toSeq.filter(_ != null))
+      mayEqualAny(a, vs.toSeq)
     case IsNull(a: AttributeReference) => prune(FileSkipping.mayHaveNulls(a.name))
     case IsNotNull(a: AttributeReference) => prune(FileSkipping.mayHaveNonNulls(a.name))
     case Not(IsNull(a: AttributeReference)) => prune(FileSkipping.mayHaveNonNulls(a.name))
@@ -200,13 +202,15 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
       rule: Column => Column): Option[Column] =
     if (v == null) None else prune(rule(CatalystShims.literal(v, a.dataType)))
 
-  private def mayEqual(a: AttributeReference, v: Any): Option[Column] =
-    withValue(a, v)(FileSkipping.mayEqual(a.name, a.dataType, _))
-
+  /** `a = v` or `a IN (vs)` (Catalyst values), for a list of any length
+    * (a localized key set runs to thousands of values):
+    * [[FileSkipping.mayContainAny]], whose expression stays small
+    * whatever the list's length. No non-null value keeps every file. */
   private def mayEqualAny(a: AttributeReference, vs: Seq[Any]): Option[Column] = {
-    val opts = vs.map(v => mayEqual(a, v))
-    if (vs.isEmpty || opts.exists(_.isEmpty)) None
-    else Some(opts.flatten.reduce(_ || _))
+    val nn = vs.filter(_ != null)
+    if (nn.isEmpty) None
+    else prune(FileSkipping.mayContainAny(a.name, a.dataType,
+      nn.map(CatalystTypeConverters.convertToScala(_, a.dataType))))
   }
 
   private def above(a: AttributeReference, v: Any, strict: Boolean): Option[Column] =

@@ -31,18 +31,11 @@ object CatalystShims {
       new BloomFilterAggregate(new XxHash64(Seq(expr(child))),
         Literal(expectedItems), Literal(numBits)).toAggregateExpression())
 
-  /** XxHash64 of a non-null literal Column (`lit(v)` or [[literal]]),
+  /** XxHash64 of the external (`Row`-side) value `v` of type `dt`,
     * evaluated at planning time — the probe-side hash matching what
-    * [[bloomAgg]] put into the filter (None for anything else). */
-  def xxHash64Literal(c: Column): Option[Long] = {
-    val l = c.node match {
-      case org.apache.spark.sql.internal.Literal(v, dt, _) =>
-        Some(dt.fold(Literal.create(v))(Literal.create(v, _)))
-      case _ => Some(expr(c)).collect { case l: Literal => l }
-    }
-    l.filter(_.value != null).map(l =>
-      new XxHash64(Seq(l)).eval(InternalRow.empty).asInstanceOf[Long])
-  }
+    * [[bloomAgg]] put into the filter. */
+  def xxHash64(v: Any, dt: DataType): Long =
+    new XxHash64(Seq(Literal.create(v, dt))).eval(InternalRow.empty).asInstanceOf[Long]
 
   /** A Catalyst expression (parsed, possibly unresolved) as a Column. */
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -51,11 +44,16 @@ object CatalystShims {
   def literal(value: Any, dt: DataType): Column =
     ExpressionUtils.column(Literal(value, dt))
 
-  /** Per-row bloom probe as a Column (see [[graft.functions.BloomProbe]]
-    * — catalyst's own probe insists on a constant filter). */
-  def bloomProbe(bloom: Column, hash: Long): Column =
-    ExpressionUtils.column(
-      graft.functions.BloomProbe(expr(bloom), Literal(hash)))
+  /** An external (`Row`-side) value of type `dt` as a literal Column —
+    * a `Row` for a struct type. */
+  def scalaLiteral(value: Any, dt: DataType): Column =
+    ExpressionUtils.column(Literal.create(value, dt))
+
+  /** Per-row bloom probe of an ARRAY<BIGINT> of hashes as a Column
+    * (see [[graft.functions.BloomProbe]] — catalyst's own probe insists
+    * on a constant filter). */
+  def bloomProbe(bloom: Column, hashes: Column): Column =
+    ExpressionUtils.column(graft.functions.BloomProbe(expr(bloom), expr(hashes)))
 
   /** Manifest-path normalization as a codegen'd Column. */
   def normalizePath(c: Column): Column =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,17 +12,6 @@ import graft.meta.GraftTable
   * point-lookup skipping. */
 class BloomScanSpec extends SparkSpec {
   import spark.implicits._
-
-  private def numFilesScanned(df: org.apache.spark.sql.DataFrame): Long = {
-    df.collect()
-    def scan(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
-      p match {
-        case a: AdaptiveSparkPlanExec => scan(a.executedPlan)
-        case f: FileSourceScanExec => Seq(f)
-        case other => other.children.flatMap(scan)
-      }
-    scan(df.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum
-  }
 
   private val schema = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -61,6 +48,10 @@ class BloomScanSpec extends SparkSpec {
     val probe2 = g.filter($"id".isin(20L, 21L))
     assert(probe2.count() == 2L)
     assert(numFilesScanned(probe2) <= 2L)
+    // a long IN list probes the blooms too: 40 ids of one residue
+    val probe40 = g.filter($"id".isin((0 until 40).map(i => 3L + 4 * 49 * i): _*))
+    assert(probe40.count() == 40L)
+    assert(numFilesScanned(probe40) == 1L)
     // a value outside the table scans zero files
     assert(numFilesScanned(g.filter($"id" === 1000000L)) == 0L)
   }

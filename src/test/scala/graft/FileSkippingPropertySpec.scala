@@ -87,8 +87,7 @@ class FileSkippingPropertySpec extends SparkSpec {
       ("mayHaveAbove >=", FileSkipping.mayHaveAbove(c, dt, a, strict = false), x >= a),
       ("mayHaveBelow <", FileSkipping.mayHaveBelow(c, dt, a, strict = true), x < a),
       ("mayHaveBelow <=", FileSkipping.mayHaveBelow(c, dt, a, strict = false), x <= a),
-      ("mayEqual", FileSkipping.mayEqual(c, dt, a), x === a),
-      ("bloomMayContain", FileSkipping.bloomMayContain(c, a), x === a),
+      ("mayContainAny =", FileSkipping.mayContainAny(c, dt, Seq(p.a)), x === a),
       ("mayContainAny", FileSkipping.mayContainAny(c, dt, p.set),
         x.isin(p.set.filter(_ != null): _*)),
       ("mayMatchKeyRange", FileSkipping.mayMatchKeyRange(c, dt, p.a, p.b), range),

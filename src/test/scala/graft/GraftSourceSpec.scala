@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.meta.GraftTable
@@ -16,15 +15,6 @@ class GraftSourceSpec extends SparkSpec {
     col("id").as("k"),
     (col("id") % 97).as("v"),
     concat(lit("s"), col("id")).as("s"))
-
-  private def numFilesScanned(df: org.apache.spark.sql.DataFrame): Long = {
-    // collect() executes df's OWN queryExecution (count() would build and
-    // run a different plan, leaving these metrics at zero)
-    df.collect()
-    df.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f.metrics("numFiles").value
-    }.sum
-  }
 
   test("format(graft) reads the current snapshot only") {
     val loc = tmpDir("src") + "/t"

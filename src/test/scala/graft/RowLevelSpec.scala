@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.meta.GraftTable
+import graft.meta.{GraftTable, KeySet}
 
 /** Copy-on-write DELETE / MERGE: correctness plus the only-touched-files
   * rewrite guarantee. */
@@ -114,23 +114,74 @@ class RowLevelSpec extends SparkSpec {
     val t = freshTable()
     // 4 range-clustered files (0-249/250-499/500-749/750-999): keys
     // {10, 900} hull-span every file, but land in only two
-    val schema = Seq(10L).toDF("id").schema
-    def rows(ks: Seq[Option[Long]]) =
-      ks.map(k => org.apache.spark.sql.Row(k.orNull))
     val hull = t.pairsOverlappingKeys(Seq(10L, 900L).toDF("id"), Seq("id"))
     assert(hull.size == 4, s"the hull test keeps every spanned file: ${hull.size}")
-    val exact = t.pairsMatchingKeySet(
-      rows(Seq(Some(10L), Some(900L))), schema, Seq("id"))
-    assert(exact.size == 2,
-      s"keys 10/900 land in 2 of 4 files, got ${exact.size}")
+    // files the merge discovery scan reads for a localized key set
+    def scanned(ks: Seq[Option[Long]]): Long = {
+      val keyMatch = KeySet.collect(ks.toDF("id")).get.matches(nullSafe = false)
+      numFilesScanned(t.affectedFiles(_.filter(keyMatch)))
+    }
+    assert(scanned(Seq(Some(10L), Some(900L))) == 2,
+      "keys 10/900 land in 2 of 4 files")
+    // a long key list (per-value probes past their cap) prunes the same
+    assert(scanned(((0L until 20L) ++ (900L until 920L)).map(Some(_))) == 2)
     // null keys match nothing under MERGE's `=`
-    assert(t.pairsMatchingKeySet(rows(Seq(None)), schema, Seq("id")).isEmpty,
-      "null-only keys must prune every file")
+    assert(scanned(Seq(None)) == 0, "null-only keys must prune every file")
     // a null among real keys is dropped, not match-all
-    assert(t.pairsMatchingKeySet(
-      rows(Seq(None, Some(10L))), schema, Seq("id")).size == 1)
-    // superset sanity: every key-set-kept file is hull-kept
-    assert(exact.toSet.subsetOf(hull.toSet))
+    assert(scanned(Seq(None, Some(10L))) == 1)
+  }
+
+  test("merge of exactly KeySet.MaxLocal keys plans in bounded time") {
+    val t = freshTable()
+    // 8,192 keys, one in three of them an existing id (0, 3, ... 999):
+    // the localized path at its cap, where the key-match predicate
+    // carries 8,192 literals into the scan's manifest filter
+    val src = spark.range(0, KeySet.MaxLocal)
+      .select((col("id") * 3).as("id"), lit("K").as("tag"))
+    assert(KeySet.collect(src.select("id")).isDefined)
+    t.merge(src, Seq("id"))
+    assert(t.read.count() == 1000 + KeySet.MaxLocal - 334)
+    assert(t.read.filter(col("tag") === "K").count() == KeySet.MaxLocal)
+    assert(t.read.filter(col("id") === 4L).as[(Long, String)].collect().toSeq ==
+      Seq((4L, "v4")))
+  }
+
+  test("merge and upsert beyond KeySet.MaxLocal keys stay distributed and exact") {
+    // even ids 0 .. 2(MaxLocal + 99): 500 of them exist (0, 2, ... 998)
+    val n = KeySet.MaxLocal + 100
+    val src = spark.range(0, n).select((col("id") * 2).as("id"), lit("B").as("tag"))
+    assert(KeySet.collect(src.select("id")).isEmpty)
+    val m = freshTable()
+    m.merge(src, Seq("id"))
+    val u = freshTable()
+    assert(u.upsert(src, Seq("id")) == 500)
+    Seq(m, u).foreach { t =>
+      assert(t.read.count() == 1000 + n - 500 && t.rowCount == 1000 + n - 500)
+      assert(t.read.filter(col("tag") === "B").count() == n)
+    }
+  }
+
+  test("KeySet.collect ships a bounded share per partition and stays exact") {
+    def collected(df: org.apache.spark.sql.DataFrame) = {
+      val (ks, jobs) = JobLog.during(spark)(KeySet.collect(df))
+      (ks.map(_.rows.map(_.getLong(0)).toSet), jobs.size)
+    }
+    // 64 partitions of the same 100 keys: each fits its share (129
+    // rows), so one job is exact
+    assert(collected(spark.range(0, 6400, 1, 64).select((col("id") % 100).as("id"))) ==
+      (Some((0L until 100L).toSet), 1))
+    // 500 keys per partition overrun the share while the union (130
+    // keys) stays under the cap: the bounded shuffle settles the set
+    val (repeated, jobs) =
+      collected(spark.range(0, 32000, 1, 64).select((col("id") % 500).as("id")))
+    assert(repeated.contains((0L until 500L).toSet) && jobs > 1)
+    // one partition holding every key, beside three empty ones
+    assert(collected(spark.range(0, 3000, 1, 1).union(spark.range(0, 0, 1, 3)).toDF())._1 ==
+      Some((0L until 3000L).toSet))
+    // over the cap across 64 partitions: the shares alone say so
+    assert(collected(spark.range(0, 2L * KeySet.MaxLocal, 1, 64).toDF()) == (None, 1))
+    // FLOAT/DOUBLE keys take the join path (see the signed-zero property)
+    assert(KeySet.collect(spark.range(3).select(col("id").cast("double"))).isEmpty)
   }
 
   test("scattered-key merge rewrites only the landed-in files (r19)") {

@@ -18,7 +18,8 @@ class SigKernelSpec extends SparkSpec {
   // place breaks this pin
   private val P = 4294967311L
   private val NumHashes = 16
-  private val hashA: Seq[Long] = (0 until NumHashes).map(j => 2L * j + 3)
+  private val hashA: Seq[Long] =
+    new java.util.Random(0x6d696e68L).longs(NumHashes, 1L, 1L << 31).toArray.toSeq
   private val hashB: Seq[Long] = (0 until NumHashes).map(j => 104729L * (j + 1))
 
   test("graft_minhash equals the 16 array_min(transform) lambdas on real shingles") {

@@ -3,7 +3,9 @@ package graft
 import java.nio.file.Files
 import java.time.{Clock, Instant, ZoneOffset}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +25,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** Data files `df`'s scans read, after running it. collect() executes
+    * df's OWN queryExecution (count() would build and run a different
+    * plan, leaving these metrics at zero). */
+  def numFilesScanned(df: DataFrame): Long = {
+    df.collect()
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans)
+    }
+    scans(df.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum
+  }
 }
 
 object SparkSpec {
