@@ -1,9 +1,7 @@
 package graft.cmd
 
 import java.time.Clock
-import java.util.UUID
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit, when}
 
@@ -75,16 +73,12 @@ object Optimize {
 
       if (clusterBy.nonEmpty) {
         // sort-order compaction: full re-cluster, replaces every file
-        val commitDir = new Path(table.dir, s"data/${UUID.randomUUID()}")
         val nOut = math.max(1L,
           (current.totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-        table.dataWrite(table.read
+        val written = table.pruneEmptyFiles(table.writeFiles(table.read
           .repartitionByRange(nOut, clusterBy.map(col): _*)
-          .sortWithinPartitions(clusterBy.map(col): _*))
-          .parquet(commitDir.toString)
-        table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
-        table.pruneEmptyFiles(commitDir)
-        table.commitReplacing("optimize", table.inventory(commitDir), clock,
+          .sortWithinPartitions(clusterBy.map(col): _*)))
+        table.commitReplacing("optimize", table.inventory(written), clock,
           Commit.HeadIs(Some(current)))
         return
       }
@@ -136,11 +130,8 @@ object Optimize {
         toRewrite.repartitionByRange(nOut, exprs: _*)
           .sortWithinPartitions(exprs: _*)
       else toRewrite.repartition(nOut)
-    val commitDir = new Path(table.dir, s"data/${UUID.randomUUID()}")
-    table.dataWrite(rewritten).parquet(commitDir.toString)
-    table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
-    if (exprs.nonEmpty) table.pruneEmptyFiles(commitDir)
-    table.commitReplacement("optimize", Some(current),
-      cands.map(_.path).toSet, commitDir, clock)
+    val written = table.writeFiles(rewritten)
+    table.commitReplacement("optimize", Some(current), cands.map(_.path).toSet,
+      if (exprs.nonEmpty) table.pruneEmptyFiles(written) else written, clock)
   }
 }

@@ -3,8 +3,7 @@ package graft.cmd
 import java.time.Clock
 import java.util.UUID
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.meta.{GraftTable, KeySet}
@@ -61,8 +60,12 @@ object RowLevel {
              clock: Clock): Long =
     table.lock.synchronized {
       require(sets.nonEmpty, "UPDATE requires at least one SET column")
-      sets.keys.foreach(c => require(table.schema.fieldNames.contains(c),
-        s"no such column $c"))
+      // the SET projection passes the write rule over an empty relation
+      // of the table schema: a mistyped or unknown SET column is refused
+      // before discovery runs a job
+      val schema = table.schema
+      table.conform(table.spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), schema).withColumns(sets), schema)
       val matched = coalesce(cond, lit(false))
       // SINGLE-PASS (r19, guide §1): the matched-row count (MOR-applied,
       // the return value) rides the rewrite's own scan as an observed
@@ -102,26 +105,29 @@ object RowLevel {
   def merge(table: GraftTable, source: DataFrame, keys: Seq[String],
             clock: Clock): Unit =
     table.lock.synchronized {
-      val srcKeys = source.select(keys.map(col): _*)
+      val rows = table.conform(source)
+      val srcKeys = rows.select(keys.map(col): _*)
       KeySet.collect(srcKeys) match {
         case Some(ks) =>
           val keyMatch = ks.matches(nullSafe = false)
           rewrite(table, "merge",
             affected = table.affectedFiles(_.filter(keyMatch)),
             survivorsOf = _.filter(!coalesce(keyMatch, lit(false))),
-            extra = Some(source), clock, extraRowsEst = ks.rows.size)
+            extra = Some(rows), clock, extraRowsEst = ks.rows.size)
         case None =>
           val distinct = srcKeys.distinct()
           rewrite(table, "merge",
             affected = table.affectedFiles(_.join(distinct, keys, "left_semi"),
               Some(table.pairsOverlappingKeys(distinct, keys))),
             survivorsOf = _.join(distinct, keys, "left_anti"),
-            extra = Some(source), clock, extraRowsEst = distinct.count())
+            extra = Some(rows), clock, extraRowsEst = distinct.count())
       }
     }
 
   /** Shared CoW machinery: rewrite the affected files via `survivorsOf`
-    * (plus `extra` rows), keep every other file's manifest row as-is.
+    * (plus `extra` rows, already conformed), keep every other file's
+    * manifest row as-is. The rewrite output passes the write rule
+    * ([[GraftTable.conform]]).
     * On a table with outstanding merge-on-read deletes, every
     * delete-targeted file is treated as affected too: the commit drops
     * the delete manifests (its logical row count is the physical
@@ -144,27 +150,23 @@ object RowLevel {
                       commitIfAgg: Long => Boolean = _ => true,
                       extraRowsEst: Long = 0L): Long = {
     val basis = table.currentSnapshot
-    val schema = table.schema
-    val cols = schema.fieldNames.toSeq.map(col)
     val affectedPaths = table.deleteTargets(Some(affected))
+    val affectedFiles = table.liveFiles.filter(f => affectedPaths(f.path))
 
     val preObs = new org.apache.spark.sql.Observation(
       s"cow-pre-${UUID.randomUUID()}")
     val rewrittenRows = {
-      val base = table.morReadLive(
-        table.liveFiles.filter(f => affectedPaths(f.path)))
+      val base = table.morReadLive(affectedFiles)
       val observed = preAgg.fold(base)(a => base.observe(preObs, a.as("pre")))
-      val surv = survivorsOf(observed)
-      extra.fold(surv.select(cols: _*))(e =>
-        surv.select(cols: _*).unionByName(e.select(cols: _*)))
+      val surv = table.conform(survivorsOf(observed))
+      extra.fold(surv)(surv.unionByName(_))
     }
     if (affectedPaths.isEmpty && extra.isEmpty) return 0L // nothing matched
 
-    val commitDir = new Path(table.dir, s"data/${UUID.randomUUID()}")
     // count the rewrite output on the write itself: an empty-source
     // MERGE touching no files must not land a junk empty commit
     val obs = new org.apache.spark.sql.Observation(
-      s"cow-${commitDir.getName}")
+      s"cow-${UUID.randomUUID()}")
     // Size the output like optimize's binpack: ceil((affected bytes +
     // estimated inserted bytes) / target-file-size) files. Without this
     // a small CoW rewrite emits one fragment PER TASK (shuffle-partition
@@ -174,13 +176,12 @@ object RowLevel {
     // parallelism, so large rewrites keep their scan tasks. Inserted
     // rows (merge's `extra`) are estimated at the table's mean manifest
     // row width; with no width evidence (empty table) the write stays
-    // unsized rather than guessing (r18 ADVICE).
-    val fileStats = table.files.select("path", "size_bytes", "record_count")
-      .collect()
-    val affectedBytes = fileStats.iterator
-      .filter(r => affectedPaths(r.getString(0))).map(_.getLong(1)).sum
-    val totBytes = fileStats.iterator.map(_.getLong(1)).sum
-    val totRows = fileStats.iterator.map(_.getLong(2)).sum
+    // unsized rather than guessing. The bytes come from the listing
+    // above and the totals from the basis snapshot: no second manifest
+    // read.
+    val affectedBytes = affectedFiles.map(_.sizeBytes).sum
+    val totBytes = basis.fold(0L)(_.totalBytes)
+    val totRows = basis.fold(0L)(_.totalRows)
     val extraBytes: Option[Long] =
       if (extraRowsEst <= 0L) Some(0L)
       else if (totRows > 0L)
@@ -194,8 +195,7 @@ object RowLevel {
         toWrite.coalesce(outParts.toInt)
       case None => toWrite
     }
-    table.dataWrite(sized).parquet(commitDir.toString)
-    table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
+    val written = table.writeFiles(sized)
     val preVal: Long = preAgg.map { _ =>
       preObs.get.get("pre") match {
         case Some(l: java.lang.Long) => l.toLong
@@ -203,16 +203,16 @@ object RowLevel {
       }
     }.getOrElse(0L)
     if (preAgg.isDefined && !commitIfAgg(preVal)) {
-      table.fileSystem.delete(commitDir, true); return preVal
+      table.fileSystem.delete(written.dir, true); return preVal
     }
     if (affectedPaths.isEmpty &&
         obs.get.getOrElse("n", 0L).asInstanceOf[Long] == 0L) {
-      table.fileSystem.delete(commitDir, true); return preVal
+      table.fileSystem.delete(written.dir, true); return preVal
     }
     // shuffle writes emit schema-only files for empty tasks — junk
     // manifest entries at one per rewrite
-    table.pruneEmptyFiles(commitDir)
-    table.commitReplacement(op, basis, affectedPaths, commitDir, clock)
+    table.commitReplacement(op, basis, affectedPaths,
+      table.pruneEmptyFiles(written), clock)
     preVal
   }
 }

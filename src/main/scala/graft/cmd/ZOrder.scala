@@ -1,9 +1,7 @@
 package graft.cmd
 
 import java.time.Clock
-import java.util.UUID
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -88,14 +86,11 @@ object ZOrder {
 
     val nOut = math.max(1L,
       (current.totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val commitDir = new Path(table.dir, s"data/${UUID.randomUUID()}")
-    table.dataWrite(df.withColumn("__graft_z", interleave(ranks, bits))
+    val written = table.writeFiles(df.withColumn("__graft_z", interleave(ranks, bits))
       .repartitionByRange(nOut, col("__graft_z"))
       .sortWithinPartitions(col("__graft_z"))
       .drop("__graft_z"))
-      .parquet(commitDir.toString)
-    table.fileSystem.delete(new Path(commitDir, "_SUCCESS"), false)
-    table.commitReplacing("optimize_zorder", table.inventory(commitDir),
+    table.commitReplacing("optimize_zorder", table.inventory(written),
       clock, Commit.HeadIs(Some(current)))
   }
 }

@@ -112,12 +112,65 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     properties.get("write.target-file-size-bytes").map(_.toLong)
       .getOrElse(128L * 1024 * 1024)
 
-  /** Writer for table-owned parquet (data, delete, and eq-delete files)
-    * honoring Iceberg's `write.parquet.compression-codec` property —
-    * unset keeps Spark's session codec. */
-  private[graft] def dataWrite(df: DataFrame): org.apache.spark.sql.DataFrameWriter[Row] =
+  /** The one writer of table-owned parquet (data, position-delete and
+    * eq-delete files): `df` into a fresh commit dir `data/<uuid>`,
+    * honoring Iceberg's `write.parquet.compression-codec` property
+    * (unset keeps Spark's session codec), Spark's `_SUCCESS` marker
+    * dropped. Table rows pass [[conform]] before they get here. */
+  private[graft] def writeFiles(df: DataFrame): DataFiles = {
+    val dir = new Path(tableDir, s"data/${UUID.randomUUID()}")
     properties.get("write.parquet.compression-codec")
       .fold(df.write)(c => df.write.option("compression", c.toLowerCase))
+      .parquet(dir.toString)
+    fs.delete(new Path(dir, "_SUCCESS"), false)
+    DataFiles(dir, listFiles(fs, dir))
+  }
+
+  /** The write-schema contract of every table-row write, Iceberg's rule
+    * (https://iceberg.apache.org/spec/#schema-evolution): `df`'s columns
+    * match the table's `to` BY NAME under the session resolver (a case
+    * difference matches, as on read), a type may only be promoted
+    * ([[icebergWiden]]), nested types match apart from nullability,
+    * and a missing nullable column fills NULL. An unknown, mistyped,
+    * ambiguous or missing non-nullable column is refused. The result is
+    * projected in table order under the table's spelling — `df` itself
+    * when it already is. Schema-only: no Spark job, no row nullability
+    * check. Changing the schema goes through [[replace]] or the
+    * evolution DDL. */
+  private[graft] def conform(df: DataFrame, to: StructType = schema): DataFrame = {
+    val sources = writeSources(df.schema, to, promote = true)
+    if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+        to.fields.map(f => (f.name, f.dataType)).toSeq) df
+    else df.select(to.fields.toSeq.zip(sources).map {
+      case (t, None) => lit(null).cast(t.dataType).as(t.name)
+      case (t, Some(f)) =>
+        val c = df.col(s"`${f.name.replace("`", "``")}`")
+        (if (icebergWiden(f.dataType, t.dataType)) c.cast(t.dataType) else c).as(t.name)
+    }: _*)
+  }
+
+  /** Per column of `table`, the column of `frame` that feeds it (None:
+    * NULL fill), or the write refused as [[conform]] says — with
+    * `promote` false (adopted files, whose bytes are never rewritten)
+    * only equal types pass. */
+  private[graft] def writeSources(frame: StructType, table: StructType,
+                                  promote: Boolean): Seq[Option[StructField]] = {
+    val resolver = spark.sessionState.conf.resolver
+    val unknown = frame.fields.filterNot(f => table.exists(t => resolver(t.name, f.name)))
+      .map(f => s"unknown column ${f.name}")
+    val sources = table.fields.toSeq.map(t => t -> frame.fields.filter(f => resolver(f.name, t.name)))
+    val wrong = sources.collect {
+      case (t, Array()) if !t.nullable => s"missing non-nullable column ${t.name}"
+      case (t, Array(f)) if !sameIgnoringNullability(f.dataType, t.dataType) &&
+          !(promote && icebergWiden(f.dataType, t.dataType)) =>
+        s"column ${f.name} is ${f.dataType.simpleString}, table has ${t.dataType.simpleString}"
+      case (t, fs) if fs.length > 1 => s"ambiguous column ${t.name}: ${fs.map(_.name).mkString(", ")}"
+    }
+    require(unknown.isEmpty && wrong.isEmpty, s"write schema mismatch: " +
+      s"${(unknown ++ wrong).mkString("; ")} (table ${table.simpleString}, " +
+      s"frame ${frame.simpleString}); change a schema with replace or the evolution DDL")
+    sources.map(_._2.headOption)
+  }
 
   /** Merge properties in (null-valued keys are removed). Takes effect on
     * the NEXT write — existing files keep whatever stats they have. */
@@ -783,7 +836,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           readFilesAligned(scope, Some(MorPathCol), Some(MorPosCol)).filter(matched),
           MorPathCol, MorPosCol, scope)
         .select(col(MorPathCol).as("file_path"), col(MorPosCol).as("pos"))
-      val commitDir = new Path(tableDir, s"data/${UUID.randomUUID()}")
       // HASH-cluster by target file: every file's entries land in exactly
       // one output file (contiguous after the sort), and unlike a range
       // shuffle there is no boundary-sampling pass. No partition count:
@@ -794,26 +846,24 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       // (pruneEmptyFiles). The deleted-row count rides on the same write
       // via observe, not a separate count job.
       val obs = new org.apache.spark.sql.Observation(
-        s"mor-delete-${commitDir.getName}")
-      dataWrite(newDeletes
+        s"mor-delete-${UUID.randomUUID()}")
+      val written = writeFiles(newDeletes
         .observe(obs, count(lit(1)).as("n"))
         .repartition(col("file_path"))
         .sortWithinPartitions("file_path", "pos"))
-        .parquet(commitDir.toString)
-      fs.delete(new Path(commitDir, "_SUCCESS"), false)
       // a predicate matching nothing can run ZERO tasks (AQE collapses
       // the empty shuffle) — no task, no accumulator update, empty
       // observation map
       val deleted = obs.get.getOrElse("n", 0L).asInstanceOf[Long]
-      if (deleted == 0L) { fs.delete(commitDir, true); return 0L }
-      pruneEmptyFiles(commitDir) // shuffle writes emit schema-only files
+      if (deleted == 0L) { fs.delete(written.dir, true); return 0L }
+      val files = pruneEmptyFiles(written) // shuffle writes emit schema-only files
       // a new delete manifest, written once (no lineage stamp): data
       // manifests are carried from the fresh head each attempt, so
       // concurrent appends compose; positions go stale under any other
       // commit since `cur`
-      val manifest = stage(inventory(commitDir))
+      val manifest = stage(inventory(files))
       manifest.write(None)
-      val filesAdded = GraftTable.listFiles(fs, commitDir).size.toLong
+      val filesAdded = files.files.size.toLong
       Commit.snapshot(fs, tableDir, "delete", "main",
           Commit.AppendsSince(cur)) { (id, head) =>
         val h = head.get
@@ -852,7 +902,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * neither. The new data files are added AT this commit, so the eq
     * entries (strictly-before rule) do not touch them. Unlike the CoW
     * [[merge]], no existing data file is rewritten — O(source) cost on
-    * a 100 TB table, deferred to the next optimize.
+    * a 100 TB table, deferred to the next optimize. `source` passes the
+    * write rule of [[conform]] before anything is written.
     * @return rows replaced (matched and superseded) */
   def upsert(source: DataFrame, keys: Seq[String],
              clock: Clock = Clock.systemUTC()): Long =
@@ -863,22 +914,20 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private[graft] def upsertOp(source: DataFrame, keys: Seq[String],
                               op: String, clock: Clock,
                               extraDeleteKeys: Option[DataFrame] = None): Long = {
-    keys.foreach(k => require(schema.fieldNames.contains(k),
+    val tableSchema = schema
+    keys.foreach(k => require(tableSchema.fieldNames.contains(k),
       s"key column $k not in table schema"))
     require(keys.nonEmpty, "upsert requires at least one key column")
-    val commitDir = new Path(tableDir, s"data/${UUID.randomUUID()}")
+    val rows = conform(source, tableSchema)
     // partitioned tables keep their clustering through upserts, exactly
     // like appends — otherwise upsert files span every transform value
     // and degrade partition pruning
-    dataWrite(clusterBySpec(source)).parquet(commitDir.toString)
-    fs.delete(new Path(commitDir, "_SUCCESS"), false)
-    writeSchemaIfAbsent(source.schema)
+    val written = writeFiles(clusterBySpec(rows))
     // a delete-heavy MERGE can have zero update/insert rows — its
     // append write then emits only schema-only files, which must not
     // ride into the manifest as junk entries
-    if (extraDeleteKeys.isDefined) pruneEmptyFiles(commitDir)
-    val listed = GraftTable.listFiles(fs, commitDir)
-    val hasData = listed.nonEmpty
+    val files = if (extraDeleteKeys.isDefined) pruneEmptyFiles(written) else written
+    val hasData = files.files.nonEmpty
     // the eq-delete keys are those of the rows just written, read back
     // from their files: `source` runs once, so a non-deterministic
     // source cannot delete other keys than it inserts. MERGE's DELETE
@@ -886,13 +935,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // union lands in ONE eq file, so delete + update + insert are a
     // single atomic snapshot (Trino MERGE semantics — a reader sees all
     // of the MERGE or none of it)
-    val written = Option.when(hasData)(scanWritten(listed, source.schema))
-    val delKeys = (written ++ extraDeleteKeys).map(_.select(keys.map(col): _*))
+    val scanned = Option.when(hasData)(scanWritten(files.files, rows.schema))
+    val delKeys = (scanned ++ extraDeleteKeys).map(_.select(keys.map(col): _*))
       .reduceOption(_ unionByName _)
     // no keys → nothing to delete, nothing to insert: no commit
     val removed = delKeys.flatMap(eqDeleteCommit(op,
-      if (hasData) inventory(commitDir) else emptyManifest, _, clock))
-    if (removed.isEmpty || !hasData) fs.delete(commitDir, true)
+      if (hasData) inventory(files) else emptyManifest, _, clock))
+    if (removed.isEmpty || !hasData) fs.delete(files.dir, true)
     removed.getOrElse(0L)
   }
 
@@ -909,21 +958,21 @@ final class GraftTable(val spark: SparkSession, val location: String) {
                              clock: Clock): Option[Long] = {
     val keyCols = keys.columns.toSeq
     val local = KeySet.collect(keys)
-    val (eqDir, stats, nKeys) =
+    val (eqFiles, stats, nKeys) =
       writeEqDeleteFile(local.fold(keys.distinct())(ks =>
         spark.createDataFrame(java.util.Arrays.asList(ks.rows: _*), ks.schema)))
-    if (nKeys == 0L) { fs.delete(eqDir, true); return None }
+    if (nKeys == 0L) { fs.delete(eqFiles.dir, true); return None }
     val matching: DataFrame => DataFrame = local match {
       case Some(ks) => _.filter(ks.matches(nullSafe = true))
       case None =>
-        val kd = scanWritten(GraftTable.listFiles(fs, eqDir), keys.schema)
+        val kd = scanWritten(eqFiles.files, keys.schema)
         live => live.join(kd,
           keyCols.map(k => live(k) <=> kd(k)).reduce(_ && _), "left_semi")
     }
     var removed = 0L
     val memo = scala.collection.mutable.Map.empty[
       (IndexedSeq[ManifestEntry], Seq[String], Seq[String]), Long]
-    commitEqDelete(op, delta, eqDir, clock) { b =>
+    commitEqDelete(op, delta, eqFiles, clock) { b =>
       removed = matchingRows(b, keyCols, stats, matching, memo); removed
     }
     Some(removed)
@@ -984,12 +1033,12 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * stream would accumulate hundreds. Row counts come from the
     * footers, driver-side; the file count is bounded by the shuffle
     * partition count. */
-  private[graft] def pruneEmptyFiles(dir: Path): Unit = {
+  private[graft] def pruneEmptyFiles(written: DataFiles): DataFiles = {
     import scala.jdk.CollectionConverters._
-    GraftTable.listFiles(fs, dir).foreach { f =>
-      if (ManifestIO.footer(hadoopConf, f.getPath).getBlocks.asScala
-          .forall(_.getRowCount == 0L)) fs.delete(f.getPath, false)
-    }
+    val (empty, kept) = written.files.partition(f =>
+      ManifestIO.footer(hadoopConf, f.getPath).getBlocks.asScala.forall(_.getRowCount == 0L))
+    empty.foreach(f => fs.delete(f.getPath, false))
+    written.copy(files = kept)
   }
 
   /** Write a DISTINCT key set as one eq-delete parquet dir, computing
@@ -998,23 +1047,20 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * set is never scanned a second time just for statistics. Returned
     * stats are laid out `(mn_0, mx_0, nn_0, mn_1, ...)` per key column
     * in `keys.columns` order. */
-  private def writeEqDeleteFile(keys: DataFrame): (Path, Row, Long) = {
-    val dir = new Path(tableDir, s"data/${UUID.randomUUID()}")
+  private def writeEqDeleteFile(keys: DataFrame): (DataFiles, Row, Long) = {
     val keyCols = keys.columns.toSeq
-    val obs = new org.apache.spark.sql.Observation(s"eq-${dir.getName}")
+    val obs = new org.apache.spark.sql.Observation(s"eq-${UUID.randomUUID()}")
     val aggs = count(lit(1)).as("cnt") +: keyCols.flatMap(k =>
       Seq(min(col(k)).as(s"mn_$k"), max(col(k)).as(s"mx_$k"),
         sum(when(col(k).isNull, 1L).otherwise(0L)).as(s"nn_$k")))
-    dataWrite(keys.observe(obs, aggs.head, aggs.tail: _*)
-      .coalesce(1)).parquet(dir.toString)
-    fs.delete(new Path(dir, "_SUCCESS"), false)
+    val written = writeFiles(keys.observe(obs, aggs.head, aggs.tail: _*).coalesce(1))
     // an empty key write can run zero tasks → empty observation map;
     // null mins/maxes + zero null-count is what an empty set observes
     val m = obs.get
     val stats = Row(keyCols.flatMap(k =>
       Seq(m.getOrElse(s"mn_$k", null), m.getOrElse(s"mx_$k", null),
         m.getOrElse(s"nn_$k", 0L))): _*)
-    (dir, stats, m.getOrElse("cnt", 0L).asInstanceOf[Long])
+    (written, stats, m.getOrElse("cnt", 0L).asInstanceOf[Long])
   }
 
   /** Compact accumulated position-delete files into one clustered
@@ -1033,19 +1079,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val cur = currentSnapshot.getOrElse(return 0L)
       val dels = listedScope(cur.deleteManifests)
       if (dels.files.size <= 1) return 0L
-      val commitDir = new Path(tableDir, s"data/${UUID.randomUUID()}")
       // size the output from the manifest: delete sets are small, so
       // this is typically ONE file (which also makes the op idempotent)
       val nOut = math.max(1L,
         (dels.files.map(_.sizeBytes).sum + (64L << 20) - 1) / (64L << 20)).toInt
-      dataWrite(positionDeletes(dels)
+      // shuffle writes emit schema-only files
+      val merged = pruneEmptyFiles(writeFiles(positionDeletes(dels)
         .repartition(nOut, col("file_path"))
-        .sortWithinPartitions("file_path", "pos"))
-        .parquet(commitDir.toString)
-      fs.delete(new Path(commitDir, "_SUCCESS"), false)
-      pruneEmptyFiles(commitDir) // shuffle writes emit schema-only files
-      val mergedCount = GraftTable.listFiles(fs, commitDir).size.toLong
-      val manifest = stage(inventory(commitDir))
+        .sortWithinPartitions("file_path", "pos")))
+      val mergedCount = merged.files.size.toLong
+      val manifest = stage(inventory(merged))
       manifest.write(None)
       Commit.snapshot(fs, tableDir, "rewrite_deletes", "main",
           Commit.AppendsSince(cur)) { (id, head) =>
@@ -1087,20 +1130,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         // same key at several intros → keep the max window only
         val merged = entries.groupBy(keyNames.map(col): _*)
           .agg(max(EqIntroCol).as(EqIntroCol))
-        val dir = new Path(tableDir, s"data/${UUID.randomUUID()}")
-        dataWrite(merged.coalesce(1)).parquet(dir.toString)
-        fs.delete(new Path(dir, "_SUCCESS"), false)
-        (dir, group.map(_.intro).max)
+        (writeFiles(merged.coalesce(1)), group.map(_.intro).max)
       }
-      val manifest = stage(mergedDirs.map { case (dir, maxIntro) =>
+      val manifest = stage(mergedDirs.map { case (files, maxIntro) =>
         // file-level stamp = max intro of the folded files: only a
         // conservative pruning bound — reads use the embedded per-entry
         // intro column
-        inventory(dir).withColumn("added_snapshot_id", lit(maxIntro))
+        inventory(files).withColumn("added_snapshot_id", lit(maxIntro))
       }.reduce(_ unionByName _))
       manifest.write(None)
-      val mergedCount = mergedDirs.map { case (d, _) =>
-        GraftTable.listFiles(fs, d).size.toLong }.sum
+      val mergedCount = mergedDirs.map(_._1.files.size.toLong).sum
       Commit.snapshot(fs, tableDir, "rewrite_eq_deletes", "main",
           Commit.AppendsSince(cur)) { (id, head) =>
         head.get.carried(id, "rewrite_eq_deletes", clock.millis()).copy(
@@ -1388,9 +1427,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   // ---- commits ----------------------------------------------------------
 
   /** Append rows as a new snapshot (reference analogue: INSERT INTO,
-    * tests/test_maintenance.py:48-49). Writes ONLY the delta manifest
-    * for the new files and carries the prior manifest list — commit
-    * metadata cost is O(new files), not O(table). */
+    * tests/test_maintenance.py:48-49). `df` passes the write rule of
+    * [[conform]] — matched by name, promotion only, missing nullable
+    * columns NULL — or nothing is written. Writes ONLY the delta
+    * manifest for the new files and carries the prior manifest list —
+    * commit metadata cost is O(new files), not O(table). */
   def append(df: DataFrame, clock: Clock = Clock.systemUTC()): Unit =
     appendOp(df, "append", clock)
 
@@ -1403,16 +1444,18 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private[graft] def appendOp(df: DataFrame, op: String, clock: Clock,
                               branch: String = "main"): Unit =
     commitLock.synchronized {
-      val commitDir = new Path(tableDir, s"data/${UUID.randomUUID()}")
-      val clustered = clusterBySpec(df)
-      dataWrite(clustered).parquet(commitDir.toString)
-      fs.delete(new Path(commitDir, "_SUCCESS"), false)
-      // range-clustered writes leave schema-only zero-row files behind
-      // for empty shuffle tasks — junk manifest entries otherwise
-      if (clustered ne df) pruneEmptyFiles(commitDir)
-      writeSchemaIfAbsent(df.schema)
-      commitAppend(op, inventory(commitDir), clock, branch)
+      commitAppend(op, inventory(writeClustered(conform(df))), clock, branch)
     }
+
+  /** Table rows through the one writer, clustered by the partition spec
+    * and sort order ([[clusterBySpec]]). Range-clustered writes leave
+    * schema-only zero-row files behind for empty shuffle tasks — junk
+    * manifest entries otherwise, so those are pruned. */
+  private def writeClustered(rows: DataFrame): DataFiles = {
+    val clustered = clusterBySpec(rows)
+    val written = writeFiles(clustered)
+    if (clustered ne rows) pruneEmptyFiles(written) else written
+  }
 
   /** Adopt EXISTING parquet files into the table without copying a
     * byte (Iceberg's `add_files`; Trino: `ALTER TABLE t EXECUTE
@@ -1422,21 +1465,18 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * path for a directory where copy-based ingestion would move 100 TB
     * to say nothing new. The files become TABLE-MANAGED (Iceberg
     * semantics): optimize may rewrite them and expire_snapshots may
-    * reclaim them once they leave retained history. The files' schema
-    * must equal the table's (names and types, in order); already-
-    * referenced paths are refused — adopting the same directory twice
-    * would double-count every row. @return files adopted. */
+    * reclaim them once they leave retained history. The files' footer
+    * schema passes the write rule of [[conform]] with no promotion (no
+    * byte is rewritten, so the types must already equal the table's);
+    * already-referenced paths are refused — adopting the same directory
+    * twice would double-count every row. @return files adopted. */
   def addFiles(location: String, clock: Clock = Clock.systemUTC()): Long =
     commitLock.synchronized {
       val src = new Path(location)
       require(fs.exists(src), s"add_files: no such location $location")
       val srcSchema = ManifestIO.parquetSchemaOf(hadoopConf, src)
         .getOrElse(spark.read.parquet(location).schema)
-      val cur = schema
-      require(srcSchema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        cur.fields.map(f => (f.name, f.dataType)).toSeq,
-        s"add_files: schema mismatch — table ${cur.simpleString}, " +
-          s"files ${srcSchema.simpleString}")
+      writeSources(srcSchema, schema, promote = false)
       val inv = inventory(src)
       val paths = inv.select("path").collect().map(_.getString(0))
       require(paths.nonEmpty, s"add_files: no parquet files under $location")
@@ -1479,15 +1519,15 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * touching a single data file (the Iceberg manifest-count shape). */
   def rowCount: Long = currentSnapshot.map(_.totalRows).getOrElse(0L)
 
-  /** Overwrite the table content entirely (used by tests / demos). */
+  /** Overwrite the table content entirely, keeping its schema: `df`
+    * passes the write rule of [[conform]] and is clustered by the
+    * partition spec and sort order like an [[append]]. A new schema
+    * goes through [[replace]]. */
   def overwrite(df: DataFrame, clock: Clock = Clock.systemUTC()): Unit =
     commitLock.synchronized {
-      val commitDir = new Path(tableDir, s"data/${UUID.randomUUID()}")
-      dataWrite(df).parquet(commitDir.toString)
-      fs.delete(new Path(commitDir, "_SUCCESS"), false)
-      writeSchemaIfAbsent(df.schema)
       // replacing the whole table is last-writer-wins by definition
-      commitReplacing("overwrite", inventory(commitDir), clock, Commit.Composes)
+      commitReplacing("overwrite", inventory(writeClustered(conform(df))), clock,
+        Commit.Composes)
     }
 
   /** CREATE OR REPLACE TABLE semantics (Trino/Iceberg): swap schema AND
@@ -1546,9 +1586,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         }
       // 1. Data first: cluster by the POST-replace spec/order so the new
       //    files prune on them; nothing visible has changed if this throws.
-      val commitDir = new Path(tableDir, s"data/${UUID.randomUUID()}")
-      dataWrite(clusterBy(df, spec, order)).parquet(commitDir.toString)
-      fs.delete(new Path(commitDir, "_SUCCESS"), false)
+      val written = writeFiles(clusterBy(df, spec, order))
       // 2. Metadata: schema + spec + sort property + overwrite snapshot,
       //    rolled back together on failure.
       val priorSpec = partitionSpec
@@ -1561,7 +1599,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         if (spec != priorSpec) PartitionSpec.write(fs, tableDir, spec)
         if (sortProp != priorSortProp)
           setProperties(Map("sorted_by" -> sortProp.orNull))
-        commitReplacing("overwrite", inventory(commitDir), clock,
+        commitReplacing("overwrite", inventory(written), clock,
           Commit.Composes)
       } catch {
         case e: Throwable =>
@@ -1603,15 +1641,19 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       cur.manifests.size.toLong
     }
 
+  /** [[inventory]] of the files under `commitDir`, listed now. */
+  private[graft] def inventory(commitDir: Path): DataFrame =
+    inventory(DataFiles(commitDir, listFiles(fs, commitDir)))
+
   /** Build the (path, size_bytes, record_count, null_counts) inventory
-    * of a freshly written commit directory: FS listing for path+size,
+    * of a freshly written commit directory: its listing for path+size,
     * one distributed `_metadata` aggregation for per-file row counts and
     * per-column null counts (files whose rows were all pruned — e.g. an
     * empty append — keep record_count 0).
     */
-  private[graft] def inventory(commitDir: Path): DataFrame = {
-    val listed = listFiles(fs, commitDir)
-      .map(f => (normalize(f.getPath), f.getLen))
+  private[graft] def inventory(written: DataFiles): DataFrame = {
+    val commitDir = written.dir
+    val listed = written.files.map(f => (normalize(f.getPath), f.getLen))
     if (listed.isEmpty) return ManifestIO.emptyRelation(spark)
     // schema from the footer's embedded Spark schema JSON (driver-side,
     // no inference job); inference only for non-Spark-written files
@@ -1977,11 +2019,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * since concurrent commits compose. The eq manifest is stamped with
     * the attempt's id: the durable introducing-snapshot id its
     * strictly-before rule reads, safe against the intro's expiry. */
-  private def commitEqDelete(op: String, delta: DataFrame, eqDir: Path,
+  private def commitEqDelete(op: String, delta: DataFrame, eqDir: DataFiles,
                              clock: Clock)(matched: Snapshot => Long): Unit = {
     val data = stage(delta)
     val eq = stage(inventory(eqDir))
-    val eqFiles = GraftTable.listFiles(fs, eqDir).size.toLong
+    val eqFiles = eqDir.files.size.toLong
     Commit.snapshot(fs, tableDir, op, "main", Commit.Composes) { (id, head) =>
       val b = head.getOrElse(Snapshot.Genesis)
       val s = withDelta(b, id, op, clock, data)
@@ -2120,11 +2162,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
   }
 
-  private def writeSchemaIfAbsent(s: StructType): Unit = {
-    val p = new Path(tableDir, "_graft/schema.json")
-    if (!fs.exists(p)) writeAtomic(p, s.json)
-  }
-
   private def writeAtomic(p: Path, content: String): Unit = {
     val tmp = new Path(p.getParent, s".${p.getName}.tmp-${System.nanoTime()}")
     val out = fs.create(tmp, true)
@@ -2186,12 +2223,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Row-level UPDATE (copy-on-write): matched rows get each SET column
     * replaced by its expression, evaluated against the old row. Only
-    * files containing matches are rewritten. @return matched rows. */
+    * files containing matches are rewritten. Each SET expression's type
+    * must equal or promote to its column's ([[conform]]), checked
+    * before any Spark job. @return matched rows. */
   def updateWhere(cond: Column, sets: Map[String, Column],
                   clock: Clock = Clock.systemUTC()): Long =
     graft.cmd.RowLevel.update(this, cond, sets, clock)
 
-  /** Copy-on-write MERGE (upsert by key); rewrites only affected files. */
+  /** Copy-on-write MERGE (upsert by key); rewrites only affected files.
+    * `source` passes the write rule of [[conform]] before any Spark
+    * job. */
   def merge(source: DataFrame, keys: Seq[String],
             clock: Clock = Clock.systemUTC()): Unit =
     graft.cmd.RowLevel.merge(this, source, keys, clock)
@@ -2222,16 +2263,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Replacement commit (CoW row-level rewrite, binpack optimize): the
     * new manifest is `basis`'s rows minus `removed` — lineage kept —
-    * plus the inventory of the files written to `commitDir`, which the
+    * plus the inventory of the `written` files, which the
     * commit stamps with its id. Outstanding delete manifests are
     * dropped; the caller has rewritten every file they target. Under
     * the [[ManifestIO.LocalReadMaxBytes]] gate and with a footer-served
     * inventory the manifest is assembled on the driver, so the commit
     * writes it with no Spark job; otherwise [[replacementManifestScan]]. */
   private[graft] def commitReplacement(op: String, basis: Option[Snapshot],
-                                       removed: Set[String], commitDir: Path,
+                                       removed: Set[String], written: DataFiles,
                                        clock: Clock): Unit = {
-    val fresh = inventory(commitDir)
+    val fresh = inventory(written)
     val local = for {
       base <- ManifestIO.readLocal(hadoopConf, basis.toSeq.flatMap(_.manifests))
       added <- ManifestIO.localRowsOf(fresh)
@@ -2259,6 +2300,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   }
 }
 
+/** A commit dir [[GraftTable.writeFiles]] filled, and the parquet files
+  * it holds. */
+final case class DataFiles(dir: Path, files: Seq[LocatedFileStatus])
+
 /** Result of [[GraftTable.readPruned]]: the pruned scan plus the file
   * counts proving (or disproving) that skipping happened. */
 final case class PrunedScan(df: DataFrame, filesScanned: Long, filesTotal: Long)
@@ -2280,6 +2325,19 @@ object GraftTable {
           parts(1).equalsIgnoreCase("DESC"))),
         s"bad sorted_by entry: $e")
       (parts.head, parts.length == 2 && parts(1).equalsIgnoreCase("DESC"))
+    }
+
+  /** Equal types, nested nullability aside (`containsNull`,
+    * `valueContainsNull`, struct field nullability). */
+  private def sameIgnoringNullability(a: DataType, b: DataType): Boolean =
+    (a, b) match {
+      case (ArrayType(x, _), ArrayType(y, _)) => sameIgnoringNullability(x, y)
+      case (MapType(k1, v1, _), MapType(k2, v2, _)) =>
+        sameIgnoringNullability(k1, k2) && sameIgnoringNullability(v1, v2)
+      case (StructType(xs), StructType(ys)) => xs.length == ys.length &&
+        xs.zip(ys).forall { case (x, y) =>
+          x.name == y.name && sameIgnoringNullability(x.dataType, y.dataType) }
+      case _ => a == b
     }
 
   private[meta] val GidKey = "gid"
@@ -2384,7 +2442,7 @@ object GraftTable {
              partitionBy: Seq[PartitionField] = Seq.empty): GraftTable = {
     val t = new GraftTable(spark, location)
     t.fileSystem.mkdirs(new Path(location, "_graft"))
-    t.writeSchemaIfAbsent(schema)
+    t.writeAtomic(new Path(location, "_graft/schema.json"), schema.json)
     if (partitionBy.nonEmpty)
       PartitionSpec.write(t.fileSystem, t.dir, partitionBy)
     // the empty log, keeping whatever refs a racing CREATE claimed

@@ -224,32 +224,20 @@ object GraftSql {
       case InsertSelect(t, colList, body) =>
         val target = notView(resolve(unquote(t)), t)
         val df = selectBody(spark, resolve, clock, body)
+        // the full row goes by name through the table's write rule; a
+        // column list maps the SELECT's columns to the listed target
+        // columns BY POSITION (Trino's rule), each cast to its column's
+        // type, and the write rule fills the unlisted ones with NULL
         Option(colList) match {
-          case None => // full-row: names and types must match exactly
-            val want = target.schema.fields.map(f => f.name -> f.dataType).toMap
-            val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
-            require(got == want, s"INSERT SELECT schema mismatch: source " +
-              s"${df.schema.simpleString}, target ${target.schema.simpleString}")
-            target.append(
-              df.select(target.schema.fieldNames.toSeq.map(col): _*), clock)
+          case None => target.append(df, clock)
           case Some(cl) =>
-            // Trino's column-list rule: the SELECT's columns map to the
-            // listed target columns BY POSITION; unlisted columns
-            // become typed NULLs
             val names = cl.split(",").map(c => unquote(c.trim)).toSeq
-            val unknown = names.filterNot(target.schema.fieldNames.contains)
-            require(unknown.isEmpty,
-              s"unknown INSERT column(s): ${unknown.mkString(", ")}")
             require(names.size == df.schema.size, "INSERT arity mismatch: " +
               s"${names.size} columns, ${df.schema.size} select outputs")
-            val byName = names.zip(df.schema.fieldNames).toMap
-            val proj = target.schema.fields.toSeq.map { f =>
-              byName.get(f.name) match {
-                case Some(src) => col(src).cast(f.dataType).as(f.name)
-                case None => lit(null).cast(f.dataType).as(f.name)
-              }
-            }
-            target.append(df.select(proj: _*), clock)
+            val schema = target.schema
+            target.append(df.select(names.zip(df.columns).map { case (n, src) =>
+              tableField(spark, schema, n).fold(col(src))(f => col(src).cast(f.dataType)).as(n)
+            }: _*), clock)
         }
         None
       case InsertStmt(t, cols, values) =>
@@ -805,25 +793,30 @@ object GraftSql {
     }
   }
 
+  /** `INSERT INTO t [(cols)] VALUES ...`: each literal is typed as its
+    * listed column (Trino's literal coercion). A listed name the table
+    * lacks stays an untyped NULL column, and the table's write rule
+    * refuses it; unlisted columns fill NULL there too. */
   private def insert(spark: SparkSession, t: GraftTable, cols: Option[String],
                      values: String, clock: Clock): Unit = {
     val schema = t.schema
-    val names = cols.map(_.split(",").map(c => unquote(c.trim)).toSeq)
+    val fields = cols.map(_.split(",").map(c => unquote(c.trim)).toSeq)
       .getOrElse(schema.fieldNames.toSeq)
-    val unknown = names.filterNot(schema.fieldNames.contains)
-    require(unknown.isEmpty, s"unknown column(s) in INSERT list: " +
-      s"${unknown.mkString(", ")} (table has ${schema.fieldNames.mkString(", ")})")
+      .map(n => StructField(n, tableField(spark, schema, n).fold[DataType](NullType)(_.dataType)))
     val rows = parseTuples(values).map { tuple =>
-      require(tuple.size == names.size,
-        s"INSERT arity mismatch: ${names.size} columns, ${tuple.size} values")
-      val byName = names.zip(tuple).toMap
-      Row(schema.fields.toSeq.map { f =>
-        byName.get(f.name)
-          .map(v => coerce(parseLiteral(v.trim), f.dataType)).orNull
+      require(tuple.size == fields.size,
+        s"INSERT arity mismatch: ${fields.size} columns, ${tuple.size} values")
+      Row(fields.zip(tuple).map { case (f, v) =>
+        if (f.dataType == NullType) null else coerce(parseLiteral(v.trim), f.dataType)
       }: _*)
     }
-    t.append(spark.createDataFrame(rows.asJava, schema), clock)
+    t.append(spark.createDataFrame(rows.asJava, StructType(fields)), clock)
   }
+
+  /** The column of `schema` an INSERT's column name resolves to. */
+  private def tableField(spark: SparkSession, schema: StructType,
+                         name: String): Option[StructField] =
+    schema.find(f => spark.sessionState.conf.resolver(f.name, name))
 
   /** `('a', 1), (NULL, ARRAY['x'])` → per-tuple raw literal texts. */
   private def parseTuples(values: String): Seq[Seq[String]] =
@@ -1001,7 +994,8 @@ object GraftSql {
           (s"($own)" +: priorConds.map(p => s"(NOT ($p))")).mkString(" AND ")
         }
         def castAs(e: String, n: String): String =
-          s"CAST(($e) AS ${schema(n).dataType.sql}) AS `$n`"
+          tableField(spark, schema, n).fold(s"($e)")(f =>
+            s"CAST(($e) AS ${f.dataType.sql})") + s" AS `$n`"
         var updated = Option.empty[DataFrame]
         var delKeys = Option.empty[DataFrame]
         var inserted = Option.empty[DataFrame]
@@ -1035,22 +1029,19 @@ object GraftSql {
             require(inserted.isEmpty, "at most one WHEN NOT MATCHED ... INSERT")
             val insNames = Option(insCols)
               .map(_.split(",").map(c => unquote(c.trim)).toSeq).getOrElse(names)
-            val unknown = insNames.filterNot(names.contains)
-            require(unknown.isEmpty,
-              s"unknown INSERT column(s): ${unknown.mkString(", ")}")
             val vals = splitTop(insVals, ',').map(_.trim)
             require(vals.size == insNames.size, s"INSERT arity mismatch: " +
               s"${insNames.size} columns, ${vals.size} values")
-            val byName = insNames.zip(vals).toMap
-            // unlisted columns become typed NULLs (Trino's rule)
-            val proj = names.map(n =>
-              castAs(byName.getOrElse(n, "NULL"), n)).mkString(", ")
+            val proj = insNames.zip(vals).map { case (n, v) => castAs(v, n) }
+              .mkString(", ")
             // anti join = source rows with no key match in the target;
-            // the projection can only see the source side, as in Trino
-            inserted = Some(SqlFrontEnd.query(spark,
+            // the projection can only see the source side, as in Trino.
+            // The write rule fills unlisted columns with NULL and refuses
+            // unknown ones, before any job
+            inserted = Some(t.conform(SqlFrontEnd.query(spark,
               s"SELECT $proj FROM $sv AS `$sAlias` LEFT ANTI JOIN $tv " +
                 s"AS `$tAlias` ON $on" +
-                Option(cond).map(c => s" WHERE $c").getOrElse(""), clock))
+                Option(cond).map(c => s" WHERE $c").getOrElse(""), clock), schema))
           case other => throw new IllegalArgumentException(
             s"unsupported MERGE clause: WHEN $other")
         }

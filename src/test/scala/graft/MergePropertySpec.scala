@@ -2,6 +2,8 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.sql.types.StructType
+
 import graft.meta.GraftTable
 import graft.sql.GraftSql
 
@@ -33,7 +35,9 @@ class MergePropertySpec extends SparkSpec {
     val source = srcKeys.map(k =>
       R(k.toLong, s"s$k", rnd.nextInt(100).toLong))
 
-    val t = GraftTable.create(spark, s"$dir/t", target.toDF().schema)
+    // n nullable: the INSERT clause leaves it out, so it fills NULL
+    val t = GraftTable.create(spark, s"$dir/t",
+      StructType(target.toDF().schema.map(_.copy(nullable = true))))
     t.append(target.toDF())
     val s = GraftTable.create(spark, s"$dir/src", source.toDF().schema)
     s.append(source.toDF())

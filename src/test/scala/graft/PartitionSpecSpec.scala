@@ -23,16 +23,20 @@ class PartitionSpecSpec extends SparkSpec {
   }
 
   test("days transform: one-day scan prunes to a file subset, same answer") {
-    val t = GraftTable.create(spark, tmpDir("pspec") + "/t", eventsDf.schema,
-      partitionBy = Seq(PartitionSpec.days("ts")))
-    t.append(eventsDf)
-    val day = PartitionSpec.days("ts")
-      .expr(lit("2026-01-03 00:00:00").cast("timestamp"))
-    val scan = t.readPrunedPartition("days_ts" -> day)
-    assert(scan.filesTotal > 1, "append must produce multiple files")
-    assert(scan.filesScanned < scan.filesTotal, "pruning must skip files")
-    val got = scan.df.filter(to_date($"ts") === "2026-01-03").count()
-    assert(got == 50)
+    // an overwrite clusters by the spec exactly like an append
+    Seq[(GraftTable, org.apache.spark.sql.DataFrame) => Unit](
+      _.append(_), _.overwrite(_)).foreach { write =>
+      val t = GraftTable.create(spark, tmpDir("pspec") + "/t", eventsDf.schema,
+        partitionBy = Seq(PartitionSpec.days("ts")))
+      write(t, eventsDf)
+      val day = PartitionSpec.days("ts")
+        .expr(lit("2026-01-03 00:00:00").cast("timestamp"))
+      val scan = t.readPrunedPartition("days_ts" -> day)
+      assert(scan.filesTotal > 1, "the write must produce multiple files")
+      assert(scan.filesScanned < scan.filesTotal, "pruning must skip files")
+      val got = scan.df.filter(to_date($"ts") === "2026-01-03").count()
+      assert(got == 50)
+    }
   }
 
   test("bucket transform prunes equality on the bucketed key") {
