@@ -176,9 +176,8 @@ object RowLevel {
     // parallelism, so large rewrites keep their scan tasks. Inserted
     // rows (merge's `extra`) are estimated at the table's mean manifest
     // row width; with no width evidence (empty table) the write stays
-    // unsized rather than guessing. The bytes come from the listing
-    // above and the totals from the basis snapshot: no second manifest
-    // read.
+    // unsized rather than guessing. The bytes come from the affected
+    // files' listing, the totals from the basis snapshot.
     val affectedBytes = affectedFiles.map(_.sizeBytes).sum
     val totBytes = basis.fold(0L)(_.totalBytes)
     val totRows = basis.fold(0L)(_.totalRows)
