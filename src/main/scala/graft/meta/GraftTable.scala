@@ -138,7 +138,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * check. Changing the schema goes through [[replace]] or the
     * evolution DDL. */
   private[graft] def conform(df: DataFrame, to: StructType = schema): DataFrame = {
-    val sources = writeSources(df.schema, to, promote = true)
+    val sources = writeSources(df.schema, to)
     if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
         to.fields.map(f => (f.name, f.dataType)).toSeq) df
     else df.select(to.fields.toSeq.zip(sources).map {
@@ -150,19 +150,23 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   }
 
   /** Per column of `table`, the column of `frame` that feeds it (None:
-    * NULL fill), or the write refused as [[conform]] says — with
-    * `promote` false (adopted files, whose bytes are never rewritten)
-    * only equal types pass. */
+    * NULL fill), or the write refused as [[conform]] says. With `adopt`
+    * (files taken in as they are, [[addFiles]]) only equal types and
+    * names spelled as the table's pass: no byte is rewritten, and the
+    * files' footer stats stay keyed by their own spelling while
+    * metadata answers look them up under the table's. */
   private[graft] def writeSources(frame: StructType, table: StructType,
-                                  promote: Boolean): Seq[Option[StructField]] = {
-    val resolver = spark.sessionState.conf.resolver
+                                  adopt: Boolean = false): Seq[Option[StructField]] = {
+    val resolver =
+      if (adopt) org.apache.spark.sql.catalyst.analysis.caseSensitiveResolution
+      else spark.sessionState.conf.resolver
     val unknown = frame.fields.filterNot(f => table.exists(t => resolver(t.name, f.name)))
       .map(f => s"unknown column ${f.name}")
     val sources = table.fields.toSeq.map(t => t -> frame.fields.filter(f => resolver(f.name, t.name)))
     val wrong = sources.collect {
       case (t, Array()) if !t.nullable => s"missing non-nullable column ${t.name}"
       case (t, Array(f)) if !sameIgnoringNullability(f.dataType, t.dataType) &&
-          !(promote && icebergWiden(f.dataType, t.dataType)) =>
+          !(!adopt && icebergWiden(f.dataType, t.dataType)) =>
         s"column ${f.name} is ${f.dataType.simpleString}, table has ${t.dataType.simpleString}"
       case (t, fs) if fs.length > 1 => s"ambiguous column ${t.name}: ${fs.map(_.name).mkString(", ")}"
     }
@@ -1466,8 +1470,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * to say nothing new. The files become TABLE-MANAGED (Iceberg
     * semantics): optimize may rewrite them and expire_snapshots may
     * reclaim them once they leave retained history. The files' footer
-    * schema passes the write rule of [[conform]] with no promotion (no
-    * byte is rewritten, so the types must already equal the table's);
+    * schema passes the write rule of [[conform]] with no promotion and
+    * no case folding (no byte is rewritten, so the types and names must
+    * already equal the table's; the order is free);
     * already-referenced paths are refused — adopting the same directory
     * twice would double-count every row. @return files adopted. */
   def addFiles(location: String, clock: Clock = Clock.systemUTC()): Long =
@@ -1476,7 +1481,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       require(fs.exists(src), s"add_files: no such location $location")
       val srcSchema = ManifestIO.parquetSchemaOf(hadoopConf, src)
         .getOrElse(spark.read.parquet(location).schema)
-      writeSources(srcSchema, schema, promote = false)
+      writeSources(srcSchema, schema, adopt = true)
       val inv = inventory(src)
       val paths = inv.select("path").collect().map(_.getString(0))
       require(paths.nonEmpty, s"add_files: no parquet files under $location")

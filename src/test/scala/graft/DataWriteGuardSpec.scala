@@ -9,36 +9,50 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every table-owned data file (data, position-delete and eq-delete
   * files) is written by `GraftTable.writeFiles`, the one writer: it
   * names the `data/<uuid>` commit dir, applies the table's write
-  * properties and drops Spark's `_SUCCESS` marker. A second site that
-  * names a commit dir, or deletes `_SUCCESS` after a data write, is a
-  * second writer with its own copy of that sequence. */
+  * properties and drops Spark's `_SUCCESS` marker. Only a Spark write
+  * leaves a `_SUCCESS` marker, so every site that deletes one is a
+  * writer, whatever its dir is called; the known writers of metadata
+  * files are listed here by name. A site outside that list, or a
+  * commit dir named outside `writeFiles`, is a second writer with its
+  * own copy of the sequence. */
 class DataWriteGuardSpec extends AnyFunSuite {
+
+  /** `file#enclosing def` of every `_SUCCESS` delete allowed. */
+  private val writers = Set(
+    "scala/graft/meta/GraftTable.scala#writeFiles",   // the data-file writer
+    "scala/graft/meta/Commit.scala#write",            // manifests
+    "scala/graft/cmd/Analyze.scala#saveStore",        // column-statistics store
+    "scala/graft/cmd/AnalyzeIncremental.scala#run")   // column-statistics store
 
   test("src/main writes data files only in GraftTable.writeFiles") {
     val root = Paths.get("src/main")
     val commitDir = """data/\$\{UUID""".r
-    val dataWrite = """dataWrite\s*\(""".r
-    val Window = 40
+    val defn = """^(\s*)(?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+)*def\s+(\w+)""".r
     val sites = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
       .flatMap { p =>
         val lines = Files.readAllLines(p).asScala.toIndexedSeq
-        def at(re: scala.util.matching.Regex) = lines.indices.filter(i =>
-          re.findFirstIn(lines(i)).isDefined && !lines(i).contains("def dataWrite"))
-        val dirs = at(commitDir)
-        val writes = dirs ++ at(dataWrite)
-        def follows(marks: Seq[Int], i: Int) = marks.exists(w => w < i && i - w <= Window)
-        // a `_SUCCESS` delete after a data write, not already counted
-        // with the commit dir its write went to
-        val deletes = lines.indices.filter(i => lines(i).contains("_SUCCESS") &&
-          follows(writes, i) && !follows(dirs, i))
-        (dirs ++ deletes).sorted.map(i => s"${root.relativize(p)}:${i + 1}")
+        // the innermost def that encloses line i
+        def owner(i: Int) = {
+          val indent = lines(i).takeWhile(_ == ' ').length
+          (i to 0 by -1).iterator.flatMap(j => defn.findFirstMatchIn(lines(j)))
+            .collectFirst { case m if m.group(1).length < indent => m.group(2) }
+            .getOrElse("?")
+        }
+        def site(i: Int) = s"${root.relativize(p)}#${owner(i)}"
+        lines.indices.collect {
+          case i if commitDir.findFirstIn(lines(i)).isDefined => ("dir", site(i))
+          case i if lines(i).contains("\"_SUCCESS\"") && lines(i).contains("delete") =>
+            ("delete", site(i))
+        }
       }
       .toList
-    val writer = Files.readAllLines(root.resolve("scala/graft/meta/GraftTable.scala"))
-      .asScala.indexWhere(_.contains("def writeFiles("))
-    assert(sites.size == 1 && sites.head.startsWith("scala/graft/meta/GraftTable.scala:") &&
-      sites.head.split(":").last.toInt - (writer + 1) <= 5,
-      s"data files written outside GraftTable.writeFiles: ${sites.mkString(", ")}")
+    val strays = sites.collect {
+      case ("dir", s) if s != "scala/graft/meta/GraftTable.scala#writeFiles" => s
+      case ("delete", s) if !writers(s) => s
+    }
+    assert(strays.isEmpty && sites.map(_._2).toSet == writers,
+      s"data files written outside GraftTable.writeFiles: ${strays.mkString(", ")} " +
+        s"(sites found: ${sites.map(_._2).distinct.mkString(", ")})")
   }
 }

@@ -91,17 +91,25 @@ class WriteSchemaSpec extends SparkSpec {
     refused(t)(t.append(Seq(3L).toDF("k")))
   }
 
-  test("add_files adopts files only under the rule with no promotion") {
+  test("add_files adopts files only under the rule with no promotion or case folding") {
     val t = table()
     val dir = tmpDir("wschema-add")
     Seq((3, 30L)).toDF("k", "v").write.parquet(s"$dir/int")
     val e = intercept[IllegalArgumentException](t.addFiles(s"$dir/int"))
     assert(e.getMessage.contains("schema mismatch") && e.getMessage.contains("int"))
-    // another column order and case: the files read back by name
-    Seq((30L, 3L)).toDF("V", "k").write.parquet(s"$dir/ok")
+    // another case: the footer stats would stay keyed `V`, where the
+    // metadata answer for max(v) never looks
+    Seq((30L, 3L)).toDF("V", "k").write.parquet(s"$dir/case")
+    val e2 = intercept[IllegalArgumentException](t.addFiles(s"$dir/case"))
+    assert(e2.getMessage.contains("unknown column V"), e2.getMessage)
+    // another column order only: adopted, read back by name, and in the
+    // metadata answer
+    Seq((30L, 3L)).toDF("v", "k").write.parquet(s"$dir/ok")
     assert(t.addFiles(s"$dir/ok") == 1L)
     assert(t.read.orderBy("k").collect().toSeq.map(_.toSeq) ==
       Seq(Seq(1L, 10L), Seq(2L, 20L), Seq(3L, 30L)))
+    assert(spark.read.format("graft").load(t.dir.toString).agg(max("v"))
+      .collect().head.getLong(0) == 30L)
   }
 
   // (k BIGINT NOT NULL, v DOUBLE, d DECIMAL(10,2), s STRING, n INT)
