@@ -52,7 +52,7 @@ object Analyze {
   }
 
   def run(table: GraftTable, columns: Option[Seq[String]], clock: Clock): Unit =
-    table.lock.synchronized {
+    table.writeOp {
       val spark = table.spark
       val schema = table.schema
       // An empty column list means "analyze ALL columns", matching the

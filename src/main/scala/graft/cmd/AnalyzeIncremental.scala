@@ -58,7 +58,7 @@ object AnalyzeIncremental {
   }
 
   /** Sketch uncovered live files; returns how many files were scanned. */
-  def run(table: GraftTable, clock: Clock): Long = table.lock.synchronized {
+  def run(table: GraftTable, clock: Clock): Long = table.writeOp {
     val spark = table.spark
     val live = table.currentSnapshot.fold(graft.meta.FileScope.Empty)(table.scopeOf)
     val covered: Set[String] =

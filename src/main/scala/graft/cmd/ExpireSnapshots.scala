@@ -4,7 +4,7 @@ import java.time.Clock
 
 import org.apache.hadoop.fs.Path
 
-import graft.meta.{Commit, GraftTable, SnapshotLog}
+import graft.meta.{GraftTable, SnapshotLog}
 
 /** Drop snapshots older than the retention threshold (the current
   * snapshot is always kept) and physically delete data files that only
@@ -30,7 +30,7 @@ object ExpireSnapshots {
     * definition shared by [[run]] (the commit loop re-evaluates it
     * against each fresh head) and [[plan]] (the x23 dry run) — the two
     * can never drift (judge r16). */
-  private[graft] def partitionByRetention(st: graft.meta.TableState,
+  private[graft] def partitionByRetention(st: graft.meta.TableMetadata,
       cutoffMs: Long)
       : (Seq[graft.meta.Snapshot], Seq[graft.meta.Snapshot]) = {
     val all = st.snapshots
@@ -41,7 +41,7 @@ object ExpireSnapshots {
         !refIds(s.snapshotId))
   }
   def run(table: GraftTable, retentionDays: Int, clock: Clock): Long =
-    table.lock.synchronized {
+    table.writeOp {
       val cutoffMs = clock.millis() - retentionDays.toLong * 86400000L
       // Recompute the partition against the fresh head on every attempt:
       // a concurrent cross-process commit between our read and our log
@@ -52,7 +52,7 @@ object ExpireSnapshots {
       // references already-deleted data.
       var expired: Seq[graft.meta.Snapshot] = Seq.empty
       var retained: Seq[graft.meta.Snapshot] = Seq.empty
-      Commit.claim(table.fileSystem, table.dir, "expire_snapshots") { st =>
+      table.claim("expire_snapshots") { st =>
         val (e, r) = partitionByRetention(st, cutoffMs)
         expired = e; retained = r
         if (e.isEmpty) None else Some(st.copy(snapshots = r))
@@ -116,7 +116,7 @@ object ExpireSnapshots {
     val spark = table.spark
     import spark.implicits._
     val cutoffMs = clock.millis() - retentionDays.toLong * 86400000L
-    val (_, st) = SnapshotLog.readState(table.fileSystem, table.dir)
+    val st = table.metadata
     val all = st.snapshots
     val (expired, retained) = partitionByRetention(st, cutoffMs)
     val nReclaimable =

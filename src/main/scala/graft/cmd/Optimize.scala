@@ -46,7 +46,7 @@ object Optimize {
     * [[graft.meta.GraftTable.optimizePartitions]] for semantics. */
   def runScoped(table: GraftTable, preds: Seq[(String, org.apache.spark.sql.Column)],
                 targetFileBytes: Long, clock: Clock): Unit =
-    table.lock.synchronized {
+    table.writeOp {
       val current = table.currentSnapshot.getOrElse(return)
       require(current.deleteManifests.isEmpty &&
         current.eqDeleteManifests.isEmpty,
@@ -64,7 +64,7 @@ object Optimize {
     *   selection does not apply there. */
   def run(table: GraftTable, targetFileBytes: Long, clock: Clock,
           clusterBy: Seq[String] = Seq.empty): Unit =
-    table.lock.synchronized {
+    table.writeOp {
       val current = table.currentSnapshot.getOrElse(return)
       val hasDeletes =
         current.deleteManifests.nonEmpty || current.eqDeleteManifests.nonEmpty

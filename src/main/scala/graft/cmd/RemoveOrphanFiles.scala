@@ -32,7 +32,7 @@ import graft.meta.GraftTable
   */
 object RemoveOrphanFiles {
   def run(table: GraftTable, retentionDays: Int, clock: Clock): Long =
-    table.lock.synchronized {
+    table.writeOp {
       val spark = table.spark
       import spark.implicits._
       val cutoffMs = clock.millis() - retentionDays.toLong * 86400000L
@@ -132,7 +132,7 @@ object RemoveOrphanFiles {
     // expire_snapshots deleting an old manifest made the dry run throw
     // FileNotFoundException). Driver-side metadata, O(referenced files)
     // strings; only the tiny anti-join count defers to the action.
-    table.lock.synchronized {
+    table.writeOp {
       import org.apache.spark.sql.functions.{col, count, lit}
       val spark = table.spark
       import spark.implicits._

@@ -39,7 +39,7 @@ object RowLevel {
     * treat this replacement commit as row-level-tracked and emit the
     * rewritten survivors as spurious inserts. @return rows deleted. */
   def delete(table: GraftTable, cond: Column, clock: Clock): Long =
-    table.lock.synchronized {
+    table.writeOp {
       val matched = coalesce(cond, lit(false))
       val before = table.currentSnapshot.map(_.totalRows).getOrElse(0L)
       rewrite(table, "cow_delete",
@@ -58,7 +58,7 @@ object RowLevel {
     * rows. */
   def update(table: GraftTable, cond: Column, sets: Map[String, Column],
              clock: Clock): Long =
-    table.lock.synchronized {
+    table.writeOp {
       require(sets.nonEmpty, "UPDATE requires at least one SET column")
       // the SET projection passes the write rule over an empty relation
       // of the table schema: a mistyped or unknown SET column is refused
@@ -104,7 +104,7 @@ object RowLevel {
     * per use, so it requires a deterministic source. */
   def merge(table: GraftTable, source: DataFrame, keys: Seq[String],
             clock: Clock): Unit =
-    table.lock.synchronized {
+    table.writeOp {
       val rows = table.conform(source)
       val srcKeys = rows.select(keys.map(col): _*)
       KeySet.collect(srcKeys) match {

@@ -42,7 +42,7 @@ object ZOrder {
   }
 
   def run(table: GraftTable, cols: Seq[String], targetFileBytes: Long,
-          bits: Int, clock: Clock): Unit = table.lock.synchronized {
+          bits: Int, clock: Clock): Unit = table.writeOp {
     require(cols.size >= 2, "z-order needs at least 2 columns")
     require(cols.size * bits <= 63, s"${cols.size} cols x $bits bits > 63")
     val current = table.currentSnapshot.getOrElse(return)

@@ -2,8 +2,9 @@ package graft.meta
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Atomic publish-rename for the JSON metadata files (snapshot-log CAS
-  * versions, properties, schemas, partition specs).
+/** The claim-rename of a snapshot-log version ([[SnapshotLog.tryWriteState]],
+  * its one caller): the table metadata is one file per version, so this
+  * is the only rename publishing table metadata.
   *
   * On a LOCAL filesystem this goes through `java.nio.file.Files.move`
   * (one `rename(2)` syscall). Hadoop's `FileContext.rename` on `file:`
@@ -62,13 +63,6 @@ private[meta] object AtomicRename {
         }
     }
   }
-
-  /** Overwrite-publish `src` onto `dst` (properties/schema/spec heads). */
-  def overwrite(fs: FileSystem, src: Path, dst: Path): Unit =
-    if (fs.getScheme == "file") moveLocal(fs, src, dst)
-    else
-      org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, fs.getConf)
-        .rename(src, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
 
   /** Claim-rename: an existing `dst` FAILS the rename (the snapshot-log
     * CAS). Throws `FileAlreadyExistsException`/`IOException` on a lost

@@ -8,21 +8,22 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** The table's commit protocol, written once. Every snapshot-log write —
+/** The table's commit protocol, written once. Every log write —
   * appends, upserts, deletes, rewrites, optimize, expiry, rollback,
-  * branch and tag moves, CREATE — is a step `TableState =>
-  * Option[TableState]` run by [[claim]]:
+  * branch and tag moves, schema, spec and property changes, CREATE — is
+  * a step `TableMetadata => Option[TableMetadata]` run by [[claim]]:
   *
-  *   1. read the head state (version N),
-  *   2. apply the step: the successor state, or None for "nothing to
-  *      commit"; a step refuses a conflicting head by throwing,
+  *   1. read the head metadata (version N),
+  *   2. apply the step: the successor, or None for "nothing to commit";
+  *      a step refuses a conflicting head by throwing,
   *   3. claim version N+1 ([[SnapshotLog.tryWriteState]]); on a lost
   *      claim re-read and recompute, at most [[MaxAttempts]] times.
   *
   * Snapshot commits run [[snapshot]], which states the successor as a
   * function of the fresh head: it checks one of the three [[Conflict]]
-  * rules, assigns the id and advances the branch ref in the same claim.
-  * Their manifests go through the one writer, [[Manifest]].
+  * rules and the schema the rows were written under, assigns the id and
+  * advances the branch ref in the same claim. Their manifests go through
+  * the one writer, [[Manifest]].
   *
   * In-process writers are serialized by [[GraftTable]]'s per-path lock,
   * so retries happen across processes (the Iceberg/Delta optimistic
@@ -36,10 +37,10 @@ private[graft] object Commit {
   val MaxAttempts = 50
 
   /** Run `step` against the fresh head until its successor is claimed.
-    * @return the claimed state, or None when the step had nothing to
+    * @return the claimed metadata, or None when the step had nothing to
     *         commit (then nothing was written) */
   def claim(fs: FileSystem, tableDir: Path, op: String)(
-      step: TableState => Option[TableState]): Option[TableState] = {
+      step: TableMetadata => Option[TableMetadata]): Option[TableMetadata] = {
     var attempt = 0
     while (attempt < MaxAttempts) {
       val (version, st) = SnapshotLog.readState(fs, tableDir)
@@ -54,41 +55,49 @@ private[graft] object Commit {
 
   /** Commit one snapshot on `branch`: per attempt, check `conflict`
     * against the fresh head and append `next(id, head)` as the branch's
-    * new head, the ref advance riding in the same claim. */
+    * new head, the ref advance riding in the same claim. `schemaId` is
+    * the schema version the commit's rows were conformed to (None: it
+    * writes no table rows); a head at another version is refused — the
+    * rows would be read under a schema they were not written for.
+    * @return the claimed metadata */
   def snapshot(fs: FileSystem, tableDir: Path, op: String, branch: String,
-               conflict: Conflict)(
-      next: (Long, Option[Snapshot]) => Snapshot): Unit =
+               conflict: Conflict, schemaId: Option[Int])(
+      next: (Long, Option[Snapshot]) => Snapshot): TableMetadata =
     claim(fs, tableDir, op) { st =>
       require(branch == "main" || st.refs.contains(branch),
         s"no branch named $branch — createBranch first")
+      schemaId.foreach(v => require(v == st.schemaId,
+        s"the table schema changed during $op — its rows were written " +
+          s"under schema version $v, the head is at ${st.schemaId}; " +
+          "rerun the operation"))
       val head = st.head(branch)
       conflict.check(op, st, head)
       Some(successor(st, branch)(next(_, head)))
-    }
+    }.get
 
   /** `st` plus `next(id)` as the head of `branch`, id = max + 1. Once
     * refs exist (or off main) the ref advance is written, pinning main's
     * implicit head on the way; refs-free tables keep the implicit
     * main == max id. */
-  def successor(st: TableState, branch: String)(
-      next: Long => Snapshot): TableState = {
-    val id = st.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
+  def successor(st: TableMetadata, branch: String)(
+      next: Long => Snapshot): TableMetadata = {
+    val id = st.nextSnapshotId
     val refs =
       if (st.refs.nonEmpty || branch != "main") st.branchRefs + (branch -> id)
       else st.refs
-    TableState(st.snapshots :+ next(id), refs, st.tags)
+    st.copy(snapshots = st.snapshots :+ next(id), refs = refs)
   }
 
   /** What a snapshot commit tolerates landing between its planning
     * basis and its claim. Throws (IllegalArgumentException) to refuse. */
   sealed trait Conflict {
-    def check(op: String, st: TableState, head: Option[Snapshot]): Unit
+    def check(op: String, st: TableMetadata, head: Option[Snapshot]): Unit
   }
 
   /** Appends and upserts: the successor is recomputed from the fresh
     * head on every attempt, so they compose with any concurrent commit. */
   case object Composes extends Conflict {
-    def check(op: String, st: TableState, head: Option[Snapshot]): Unit = ()
+    def check(op: String, st: TableMetadata, head: Option[Snapshot]): Unit = ()
   }
 
   /** MOR delete and the delete-file rewrites: positions and merged
@@ -100,7 +109,7 @@ private[graft] object Commit {
     * lands no snapshot, so the head's lineage is checked, not the
     * snapshots landed since. */
   final case class AppendsSince(basis: Snapshot) extends Conflict {
-    def check(op: String, st: TableState, head: Option[Snapshot]): Unit = {
+    def check(op: String, st: TableMetadata, head: Option[Snapshot]): Unit = {
       val byId = st.snapshots.map(s => s.snapshotId -> s).toMap
       // parent ids strictly decrease, so the walk ends
       @scala.annotation.tailrec
@@ -124,7 +133,7 @@ private[graft] object Commit {
     * silently dropped — the head must still be the basis (Iceberg's
     * rewrite validation). */
   final case class HeadIs(basis: Option[Snapshot]) extends Conflict {
-    def check(op: String, st: TableState, head: Option[Snapshot]): Unit = {
+    def check(op: String, st: TableMetadata, head: Option[Snapshot]): Unit = {
       val planned = basis.fold(-1L)(_.snapshotId)
       val headId = head.fold(-1L)(_.snapshotId)
       require(headId == planned,

@@ -15,10 +15,11 @@ import org.apache.spark.sql.types._
   * {{{
   * <table>/
   *   data/<commit-uuid>/part-*.parquet     immutable data files
-  *   _graft/log/v<N>.snapshots.json        versioned snapshot log (SnapshotLog)
+  *   _graft/log/v<N>.snapshots.json        versioned table metadata (SnapshotLog):
+  *                                         snapshots, refs, tags, schema
+  *                                         versions, partition spec, properties
   *   _graft/manifests/<uuid>/              per-snapshot file inventory
-  *   _graft/schema.json                    table schema (StructType JSON)
-  *   _graft/stats.json                     ANALYZE output (TableStats)
+  *   _graft/stats/, _graft/stats_inc/      ANALYZE output
   * }}}
   *
   * This re-implements, Spark-native over plain parquet, the Iceberg table
@@ -64,47 +65,75 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   // cross-process writers are handled by the log CAS instead.
   private val commitLock = GraftTable.lockFor(location)
 
-  // ---- metadata accessors ----------------------------------------------
+  // ---- metadata: one read per op ------------------------------------------
 
-  def snapshots: Seq[Snapshot] = SnapshotLog.read(fs, tableDir)
+  /** The metadata pinned by the op in progress on this thread (null
+    * outside an op). */
+  private val pinned = new ThreadLocal[TableMetadata]
 
-  /** One consistent read of snapshots + refs + tags (they share the
-    * CAS-claimed log file, so this is a true point-in-time view). */
-  private def tableState: TableState = SnapshotLog.readState(fs, tableDir)._2
+  /** The table metadata ([[TableMetadata]]): the value the op in
+    * progress pinned, else one read of the log head. Every accessor
+    * derives from it. */
+  private[graft] def metadata: TableMetadata = pinned.get match {
+    case null => SnapshotLog.readState(fs, tableDir)._2
+    case m => m
+  }
+
+  /** Run `body` as one op: the outermost op reads the metadata once and
+    * pins it, each claim the op makes re-pins the claimed value, and the
+    * pin ends with the op — nothing is cached across ops. */
+  private[graft] def op[T](body: => T): T =
+    if (pinned.get != null) body
+    else {
+      pinned.set(SnapshotLog.readState(fs, tableDir)._2)
+      try body finally pinned.remove()
+    }
+
+  /** [[op]] under the table's commit lock: the pin is read inside the
+    * lock, so it is the head this process's last commit left. */
+  private[graft] def writeOp[T](body: => T): T = commitLock.synchronized(op(body))
+
+  /** Claim `step` through the commit loop ([[Commit.claim]]); the op in
+    * progress follows the claimed metadata. */
+  private[graft] def claim(op: String)(
+      step: TableMetadata => Option[TableMetadata]): Option[TableMetadata] = {
+    val claimed = Commit.claim(fs, tableDir, op)(step)
+    if (pinned.get != null) claimed.foreach(pinned.set)
+    claimed
+  }
+
+  /** Commit one snapshot on `branch` ([[Commit.snapshot]]). With `rows`,
+    * the commit writes table rows, conformed to the op's schema: a head
+    * whose schema changed since is refused. */
+  private def commitSnapshot(op: String, branch: String, conflict: Commit.Conflict,
+                             rows: Boolean)(next: (Long, Option[Snapshot]) => Snapshot): Unit = {
+    val schemaId = Option.when(rows)(metadata.schemaId)
+    val claimed = Commit.snapshot(fs, tableDir, op, branch, conflict, schemaId)(next)
+    if (pinned.get != null) pinned.set(claimed)
+  }
+
+  def snapshots: Seq[Snapshot] = metadata.snapshots
 
   /** Head of `main`: the branch ref once refs are materialized, else
     * the implicit pre-branching head (max snapshot id). */
-  def currentSnapshot: Option[Snapshot] = tableState.head("main")
+  def currentSnapshot: Option[Snapshot] = metadata.head("main")
 
   def schema: StructType = {
-    val p = new Path(tableDir, "_graft/schema.json")
-    val in = fs.open(p)
-    val txt =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    DataType.fromJson(txt).asInstanceOf[StructType]
+    val m = metadata
+    if (m.schemas.isEmpty) throw new IllegalArgumentException(s"no graft table at $location")
+    m.schema
   }
 
   // ---- table properties --------------------------------------------------
 
-  /** Table properties (`_graft/properties.json`) — the Iceberg
-    * table-property surface. Recognized keys:
+  /** Table properties — the Iceberg table-property surface. Recognized
+    * keys:
     *   - `write.bloom-filter.columns`: comma-separated column names that
     *     get a per-file bloom filter in the manifest at write time
     *     (point-lookup file skipping on columns min/max can't prune).
     *   - `write.bloom-filter.expected-rows`: sizing hint per file
     *     (default 200000; 8 bits/row ⇒ ~2% false-positive rate). */
-  def properties: Map[String, String] = {
-    val p = new Path(tableDir, "_graft/properties.json")
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      PropEntry.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2)).toMap
-    }
-  }
+  def properties: Map[String, String] = metadata.properties
 
   /** Compaction target size: Iceberg's `write.target-file-size-bytes`
     * table property when set, else the 128 MB Iceberg default. */
@@ -176,17 +205,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     sources.map(_._2.headOption)
   }
 
-  /** Merge properties in (null-valued keys are removed). Takes effect on
-    * the NEXT write — existing files keep whatever stats they have. */
+  /** Merge properties in (null-valued keys are removed), one claim.
+    * Takes effect on the NEXT write — existing files keep whatever stats
+    * they have. */
   def setProperties(kv: Map[String, String]): Unit =
     commitLock.synchronized {
-      val merged = (properties ++ kv).filter(_._2 != null)
-      merged.keys.foreach(k => require(!k.contains("\"") &&
-        merged(k) != null && !merged(k).contains("\""),
-        s"property keys/values must not contain double quotes: $k"))
-      val body = merged.toSeq.sorted
-        .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-      writeAtomic(new Path(tableDir, "_graft/properties.json"), body)
+      claim("set_properties")(m =>
+        Some(m.copy(properties = (m.properties ++ kv).filter(_._2 != null))))
     }
 
   /** Bloom-filter columns currently configured (∩ the given schema). */
@@ -226,16 +251,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   }
 
   /** Scan of the current snapshot. */
-  def read: DataFrame = readSnapshot(currentSnapshot)
+  def read: DataFrame = op(readSnapshot(currentSnapshot))
 
   /** Time travel: scan the table exactly as of `snapshotId`. Expired
     * snapshots read as absent (their manifests are gone). */
   def readAsOf(snapshotId: Long): DataFrame =
-    readSnapshot(snapshots.find(_.snapshotId == snapshotId))
+    op(readSnapshot(snapshots.find(_.snapshotId == snapshotId)))
 
   /** Time travel by wall clock: the latest snapshot committed at or
     * before `tsMillis` (Iceberg's `FOR TIMESTAMP AS OF`). */
-  def readAsOfTime(tsMillis: Long): DataFrame = {
+  def readAsOfTime(tsMillis: Long): DataFrame = op {
     val eligible = snapshots.filter(_.timestampMs <= tsMillis)
     readSnapshot(if (eligible.isEmpty) None else Some(eligible.maxBy(_.snapshotId)))
   }
@@ -255,7 +280,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * append that a later in-range compaction already rewrote (its rows
     * were folded into compaction-stamped files, indistinguishable from
     * older rows); that is still refused. */
-  def readIncremental(fromId: Long, toId: Long): DataFrame = {
+  def readIncremental(fromId: Long, toId: Long): DataFrame = op {
     require(fromId <= toId, s"bad incremental range ($fromId, $toId]")
     val all = snapshots
     val to = all.find(_.snapshotId == toId).getOrElse(
@@ -305,7 +330,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * logical rows, and emit nothing. Overwrites record no row-level
     * lineage at all and are refused loudly. Ranges must lie within
     * retained (un-expired) history. */
-  def readChanges(fromId: Long, toId: Long): DataFrame = {
+  def readChanges(fromId: Long, toId: Long): DataFrame = op {
     require(fromId <= toId, s"bad changelog range ($fromId, $toId]")
     val all = snapshots
     val byId = all.map(s => s.snapshotId -> s).toMap
@@ -826,7 +851,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     *
     * @return number of rows deleted */
   def deleteWhereMOR(cond: Column, clock: Clock = Clock.systemUTC()): Long =
-    commitLock.synchronized {
+    writeOp {
       val cur = currentSnapshot.getOrElse(return 0L)
       if (cur.numFiles == 0) return 0L
       val matched = coalesce(cond, lit(false))
@@ -868,8 +893,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val manifest = stage(inventory(files))
       manifest.write(None)
       val filesAdded = files.files.size.toLong
-      Commit.snapshot(fs, tableDir, "delete", "main",
-          Commit.AppendsSince(cur)) { (id, head) =>
+      commitSnapshot("delete", "main", Commit.AppendsSince(cur),
+          rows = false) { (id, head) =>
         val h = head.get
         h.carried(id, "delete", clock.millis()).copy(
           totalRows = h.totalRows - deleted,
@@ -892,12 +917,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * with null in that column.
     * @return rows deleted */
   def deleteByKeys(keys: DataFrame, clock: Clock = Clock.systemUTC()): Long =
-    commitLock.synchronized {
+    writeOp {
       val cur = currentSnapshot.getOrElse(return 0L)
       if (cur.numFiles == 0) return 0L
-      keys.columns.foreach(k => require(schema.fieldNames.contains(k),
-        s"key column $k not in table schema"))
-      eqDeleteCommit("delete", emptyManifest, keys, clock).getOrElse(0L)
+      eqDeleteCommit("delete", emptyManifest,
+        keys.toDF(keyColumns(schema, keys.columns.toSeq): _*), clock).getOrElse(0L)
     }
 
   /** One-commit UPSERT (the Flink-CDC-into-Iceberg shape): an equality
@@ -911,16 +935,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * @return rows replaced (matched and superseded) */
   def upsert(source: DataFrame, keys: Seq[String],
              clock: Clock = Clock.systemUTC()): Long =
-    commitLock.synchronized {
-      upsertOp(source, keys, "upsert", clock)
-    }
+    upsertOp(source, keys, "upsert", clock)
 
   private[graft] def upsertOp(source: DataFrame, keys: Seq[String],
                               op: String, clock: Clock,
-                              extraDeleteKeys: Option[DataFrame] = None): Long = {
+                              extraDeleteKeys: Option[DataFrame] = None): Long = writeOp {
     val tableSchema = schema
-    keys.foreach(k => require(tableSchema.fieldNames.contains(k),
-      s"key column $k not in table schema"))
+    val keyCols = keyColumns(tableSchema, keys)
     require(keys.nonEmpty, "upsert requires at least one key column")
     val rows = conform(source, tableSchema)
     // partitioned tables keep their clustering through upserts, exactly
@@ -940,13 +961,21 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // single atomic snapshot (Trino MERGE semantics — a reader sees all
     // of the MERGE or none of it)
     val scanned = Option.when(hasData)(scanWritten(files.files, rows.schema))
-    val delKeys = (scanned ++ extraDeleteKeys).map(_.select(keys.map(col): _*))
+    val delKeys = (scanned ++ extraDeleteKeys).map(_.select(keyCols.map(col): _*))
       .reduceOption(_ unionByName _)
     // no keys → nothing to delete, nothing to insert: no commit
     val removed = delKeys.flatMap(eqDeleteCommit(op,
       if (hasData) inventory(files) else emptyManifest, _, clock))
     if (removed.isEmpty || !hasData) fs.delete(files.dir, true)
     removed.getOrElse(0L)
+  }
+
+  /** `keys` as the table's columns in `tableSchema`, matched under the
+    * session resolver like every column of a write ([[conform]]). */
+  private def keyColumns(tableSchema: StructType, keys: Seq[String]): Seq[String] = {
+    val resolver = spark.sessionState.conf.resolver
+    keys.map(k => tableSchema.fields.find(f => resolver(f.name, k)).map(_.name)
+      .getOrElse(throw new IllegalArgumentException(s"key column $k not in table schema")))
   }
 
   /** Commit an equality delete of the distinct tuples of `keys` plus
@@ -1079,7 +1108,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * column.
     * @return number of delete files merged (0 = nothing to do) */
   def rewriteDeleteFiles(clock: Clock = Clock.systemUTC()): Long =
-    commitLock.synchronized {
+    writeOp {
       val cur = currentSnapshot.getOrElse(return 0L)
       val dels = listedScope(cur.deleteManifests)
       if (dels.files.size <= 1) return 0L
@@ -1094,8 +1123,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val mergedCount = merged.files.size.toLong
       val manifest = stage(inventory(merged))
       manifest.write(None)
-      Commit.snapshot(fs, tableDir, "rewrite_deletes", "main",
-          Commit.AppendsSince(cur)) { (id, head) =>
+      commitSnapshot("rewrite_deletes", "main", Commit.AppendsSince(cur),
+          rows = false) { (id, head) =>
         head.get.carried(id, "rewrite_deletes", clock.millis()).copy(
           deleteManifests = Seq(manifest.path),
           deleteFileCount = Some(mergedCount))
@@ -1120,7 +1149,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * like `rewrite_deletes`.
     * @return number of eq-delete files merged (0 = nothing to do) */
   def rewriteEqDeleteFiles(clock: Clock = Clock.systemUTC()): Long =
-    commitLock.synchronized {
+    writeOp {
       val cur = currentSnapshot.getOrElse(return 0L)
       if (cur.eqDeleteManifests.isEmpty) return 0L
       val infos = eqFileInfos(cur.eqDeleteManifests)
@@ -1144,8 +1173,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       }.reduce(_ unionByName _))
       manifest.write(None)
       val mergedCount = mergedDirs.map(_._1.files.size.toLong).sum
-      Commit.snapshot(fs, tableDir, "rewrite_eq_deletes", "main",
-          Commit.AppendsSince(cur)) { (id, head) =>
+      commitSnapshot("rewrite_eq_deletes", "main", Commit.AppendsSince(cur),
+          rows = false) { (id, head) =>
         head.get.carried(id, "rewrite_eq_deletes", clock.millis()).copy(
           eqDeleteManifests = Seq(manifest.path),
           eqDeleteFileCount = Some(mergedCount))
@@ -1155,69 +1184,49 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   // ---- schema evolution --------------------------------------------------
 
-  private def schemasDir = new Path(tableDir, "_graft/schemas")
-
-  /** Every schema version ever committed, oldest first. Empty until the
-    * first evolution — an un-evolved table has just `schema.json` and
-    * reads as one generation. */
-  def schemaVersions: Seq[SchemaVersion] =
-    if (!fs.exists(schemasDir)) Seq.empty
-    else fs.listStatus(schemasDir).toSeq
-      .flatMap { st =>
-        st.getPath.getName match {
-          case SchemaFileName(v, since) =>
-            val in = fs.open(st.getPath)
-            val txt = try new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-            Some(SchemaVersion(v.toInt, since.toLong,
-              DataType.fromJson(txt).asInstanceOf[StructType]))
-          case _ => None
-        }
-      }.sortBy(_.version)
+  /** Every schema version, oldest first: one for an un-evolved table. */
+  def schemaVersions: Seq[SchemaVersion] = metadata.schemas
 
   /** ADD COLUMN (always nullable — existing rows read as NULL). */
   def addColumn(name: String, dataType: DataType): Unit =
-    commitLock.synchronized {
-      val vs = ensureSchemaLog()
-      val cur = vs.last.schema
+    evolveSchema("add_column") { m =>
+      val cur = m.schema
       require(!cur.fieldNames.contains(name), s"column $name already exists")
       // Never recycle a dropped column's id — max over every version's
       // gids, or a re-added same-named column would resurrect old bytes.
-      val gid = vs.flatMap(_.schema.fields.map(gidOf)).foldLeft(-1L)(math.max) + 1
-      commitSchema(vs, StructType(cur.fields :+ StructField(name, dataType,
-        nullable = true, new MetadataBuilder().putLong(GidKey, gid).build())))
+      val gid = maxGid(m) + 1
+      StructType(cur.fields :+ StructField(name, dataType,
+        nullable = true, new MetadataBuilder().putLong(GidKey, gid).build()))
     }
 
   /** RENAME COLUMN — metadata-only: no data file is touched; files
     * written under the old name keep resolving through the stable field
     * id (the Iceberg field-id rename semantics, not a rewrite). */
   def renameColumn(from: String, to: String): Unit =
-    commitLock.synchronized {
-      val vs = ensureSchemaLog()
-      val cur = vs.last.schema
+    evolveSchema("rename_column") { m =>
+      val cur = m.schema
       require(cur.fieldNames.contains(from), s"no such column $from")
       require(!cur.fieldNames.contains(to), s"column $to already exists")
-      requireNotPartitionSource(from, "rename")
-      commitSchema(vs, StructType(cur.fields.map(f =>
-        if (f.name == from) f.copy(name = to) else f)))
+      requireNotPartitionSource(m.spec, from, "rename")
+      StructType(cur.fields.map(f => if (f.name == from) f.copy(name = to) else f))
     }
 
   /** DROP COLUMN — metadata-only; the bytes stay in old files and stop
     * being projected (and are physically shed by the next optimize). */
   def dropColumn(name: String): Unit =
-    commitLock.synchronized {
-      val vs = ensureSchemaLog()
-      val cur = vs.last.schema
+    evolveSchema("drop_column") { m =>
+      val cur = m.schema
       require(cur.fieldNames.contains(name), s"no such column $name")
       require(cur.fields.length > 1, "cannot drop the last column")
-      requireNotPartitionSource(name, "drop")
-      commitSchema(vs, StructType(cur.fields.filterNot(_.name == name)))
+      requireNotPartitionSource(m.spec, name, "drop")
+      StructType(cur.fields.filterNot(_.name == name))
     }
 
   /** A partition spec references source columns by name — evolving one
     * away would make every later append crash (or mis-cluster). */
-  private def requireNotPartitionSource(column: String, op: String): Unit =
-    require(!partitionSpec.exists(_.column == column),
+  private def requireNotPartitionSource(spec: Seq[PartitionField], column: String,
+                                        op: String): Unit =
+    require(!spec.exists(_.column == column),
       s"cannot $op $column: it is a partition-spec source column")
 
   /** Iceberg's exact type-promotion rules (spec §Schemas, "Type
@@ -1240,42 +1249,39 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * Data files keep the narrow type; reads up-cast through the field
     * id. */
   def updateColumnType(name: String, to: DataType): Unit =
-    commitLock.synchronized {
-      val vs = ensureSchemaLog()
-      val cur = vs.last.schema
+    evolveSchema("update_column_type") { m =>
+      val cur = m.schema
       require(cur.fieldNames.contains(name), s"no such column $name")
       require(icebergWiden(cur(name).dataType, to),
         s"cannot widen ${cur(name).dataType.simpleString} to " +
           s"${to.simpleString} (Iceberg promotion allows int->bigint, " +
           "real->double, decimal precision growth only)")
-      commitSchema(vs, StructType(cur.fields.map(f =>
-        if (f.name == name) f.copy(dataType = to) else f)))
+      StructType(cur.fields.map(f =>
+        if (f.name == name) f.copy(dataType = to) else f))
     }
 
-  /** First evolution on a table that predates the schema log: freeze the
-    * current schema as v1 (field ids = field positions), effective since
-    * the beginning of time. */
-  private def ensureSchemaLog(): Seq[SchemaVersion] = {
-    val vs = schemaVersions
-    if (vs.nonEmpty) vs
-    else {
-      val v = SchemaVersion(1, 0L, withGids(schema))
-      writeSchemaVersion(v)
-      Seq(v)
+  /** One schema change as a claim: `next` maps the claimed metadata to
+    * the new schema (or refuses by throwing). */
+  private def evolveSchema(op: String)(next: TableMetadata => StructType): Unit =
+    commitLock.synchronized {
+      claim(op)(m => Some(withSchema(m, next(stamped(m)))))
     }
+
+  /** `m` with `next` as its current schema: a new version, effective for
+    * the files of every snapshot from `m`'s next id on. The first
+    * evolution freezes version 1 with field ids = field positions. */
+  private def withSchema(m: TableMetadata, next: StructType): TableMetadata = {
+    val vs = stamped(m).schemas
+    m.copy(schemas = vs :+ SchemaVersion(vs.last.version + 1, m.nextSnapshotId, next))
   }
 
-  private def writeSchemaVersion(v: SchemaVersion): Unit = {
-    fs.mkdirs(schemasDir)
-    writeAtomic(new Path(schemasDir, f"v${v.version}%05d_s${v.since}.json"),
-      v.schema.json)
-  }
+  private def stamped(m: TableMetadata): TableMetadata =
+    if (m.schemas.size != 1) m
+    else m.copy(schemas = m.schemas.map(v => v.copy(schema = withGids(v.schema))))
 
-  private def commitSchema(prior: Seq[SchemaVersion], next: StructType): Unit = {
-    val since = snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-    writeSchemaVersion(SchemaVersion(prior.last.version + 1, since, next))
-    writeAtomic(new Path(tableDir, "_graft/schema.json"), next.json)
-  }
+  /** The largest field id any schema version holds (-1: none). */
+  private def maxGid(m: TableMetadata): Long =
+    m.schemas.flatMap(_.schema.fields.map(gidOf)).foldLeft(-1L)(math.max)
 
   /** Read data files, each decoded with the schema it was WRITTEN under
     * (resolved from its `added_snapshot_id`), then aligned to the current
@@ -1332,7 +1338,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   }
 
   /** The table's partition spec (empty = unpartitioned). */
-  def partitionSpec: Seq[PartitionField] = PartitionSpec.read(fs, tableDir)
+  def partitionSpec: Seq[PartitionField] = metadata.spec
 
   /** Iceberg partition evolution: replace the partition spec,
     * metadata-only. Already-written files keep their old clustering and
@@ -1344,8 +1350,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * at evolution time — the 100 TB requirement. */
   def updatePartitionSpec(newSpec: Seq[PartitionField]): Unit =
     commitLock.synchronized {
-      validateSpec(schema, newSpec)
-      PartitionSpec.write(fs, tableDir, newSpec)
+      claim("update_partition_spec") { m =>
+        validateSpec(m.schema, newSpec)
+        Some(m.copy(spec = newSpec))
+      }
     }
 
   /** Validate a partition spec against a target schema (column
@@ -1374,7 +1382,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * non-monotonic transforms (bucket) where raw-column min/max can't
     * prune. Superset guarantee — callers still apply the row predicate. */
   def readPrunedPartition(preds: (String, Column)*): PrunedScan =
-    prunedScan(partitionScope(preds))
+    op(prunedScan(partitionScope(preds)))
 
   /** Manifest-row predicate: might this file hold rows where each named
     * partition-transform output equals the given value? (missing bounds
@@ -1398,9 +1406,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * would drop delete entries targeting out-of-scope files): compact
     * deletes or run the full optimize first. */
   def optimizePartitions(preds: Seq[(String, Column)],
-                         targetFileBytes: Long = defaultTargetFileBytes,
+                         targetFileBytes: Long = 0L,
                          clock: Clock = Clock.systemUTC()): Unit =
-    graft.cmd.Optimize.runScoped(this, preds, targetFileBytes, clock)
+    writeOp(graft.cmd.Optimize.runScoped(this, preds, targetOr(targetFileBytes), clock))
 
   /** Stats-pruned scan: read only the data files whose manifest
     * min/max bounds for `column` overlap `[lo, hi]` — Iceberg-style
@@ -1414,7 +1422,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * applied by the caller — pruning is a superset guarantee.
     */
   def readPruned(column: String, lo: Column, hi: Column): PrunedScan =
-    prunedScan(FileSkipping.mayOverlap(column, schema(column).dataType, lo, hi))
+    op(prunedScan(FileSkipping.mayOverlap(column, schema(column).dataType, lo, hi)))
 
   /** The current snapshot's files that `keep` admits, read schema-aligned
     * (`keep` is built only when the snapshot has files). */
@@ -1447,9 +1455,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * range and [[readPrunedPartition]] can skip it. */
   private[graft] def appendOp(df: DataFrame, op: String, clock: Clock,
                               branch: String = "main"): Unit =
-    commitLock.synchronized {
-      commitAppend(op, inventory(writeClustered(conform(df))), clock, branch)
-    }
+    writeOp(commitAppend(op, inventory(writeClustered(conform(df))), clock, branch))
 
   /** Table rows through the one writer, clustered by the partition spec
     * and sort order ([[clusterBySpec]]). Range-clustered writes leave
@@ -1476,7 +1482,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * already-referenced paths are refused — adopting the same directory
     * twice would double-count every row. @return files adopted. */
   def addFiles(location: String, clock: Clock = Clock.systemUTC()): Long =
-    commitLock.synchronized {
+    writeOp {
       val src = new Path(location)
       require(fs.exists(src), s"add_files: no such location $location")
       val srcSchema = ManifestIO.parquetSchemaOf(hadoopConf, src)
@@ -1529,7 +1535,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * partition spec and sort order like an [[append]]. A new schema
     * goes through [[replace]]. */
   def overwrite(df: DataFrame, clock: Clock = Clock.systemUTC()): Unit =
-    commitLock.synchronized {
+    writeOp {
       // replacing the whole table is last-writer-wins by definition
       commitReplacing("overwrite", inventory(writeClustered(conform(df))), clock,
         Commit.Composes)
@@ -1546,13 +1552,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * spec — `newSpec` if given, else the current spec restricted to
     * surviving columns — is validated against the NEW schema up front,
     * the data is written FIRST (a failed write leaves the table
-    * untouched), and only then do schema + spec + the overwrite snapshot
-    * land; if the snapshot commit throws, the schema version and spec
-    * are rolled back so no new-schema/old-data hybrid is ever visible. */
+    * untouched), and then schema, spec, `sorted_by` and the overwrite
+    * snapshot land in ONE claim: no new-schema/old-data hybrid is ever
+    * visible. Like [[overwrite]], last writer wins. */
   def replace(df: DataFrame, clock: Clock = Clock.systemUTC(),
               newSpec: Option[Seq[PartitionField]] = None,
               newSortedBy: Option[Option[String]] = None): Unit =
-    commitLock.synchronized {
+    writeOp {
       val spec = newSpec.getOrElse(
         partitionSpec.filter(f => df.schema.fieldNames.contains(f.column)))
       validateSpec(df.schema, spec)
@@ -1560,9 +1566,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       // outer None (library callers) keeps the surviving columns of the
       // current order; Some(None) clears; Some(Some(v)) sets — always
       // validated against the NEW schema, never the pre-replace one
-      val priorSortProp = properties.get("sorted_by")
       val sortProp: Option[String] = newSortedBy.getOrElse(
-        priorSortProp.map(v => GraftTable.parseSortOrderProp(v)
+        properties.get("sorted_by").map(v => GraftTable.parseSortOrderProp(v)
           .filter { case (c, _) => df.schema.fieldNames.contains(c) }
           .map { case (c, d) => if (d) s"$c DESC" else c }.mkString(", "))
           .filter(_.nonEmpty))
@@ -1570,54 +1575,28 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       order.foreach { case (c, _) =>
         require(df.schema.fieldNames.contains(c),
           s"sorted_by column $c not in the replacing schema") }
+      // Data first: cluster by the POST-replace spec/order so the new
+      // files prune on them; nothing visible has changed if this throws.
+      val staged = stage(inventory(writeFiles(clusterBy(df, spec, order)), spec))
       val shape = (t: StructType) => t.fields.map(f => (f.name, f.dataType)).toSeq
-      // Compute (but do not commit) the post-replace schema version.
-      val nextVersion: Option[SchemaVersion] =
-        if (shape(schema) == shape(df.schema)) None
-        else {
-          val vs = ensureSchemaLog()
-          val maxGid = vs.flatMap(_.schema.fields.map(gidOf))
-            .foldLeft(-1L)(math.max)
-          val fields = df.schema.fields.zipWithIndex.map { case (f, i) =>
-            vs.last.schema.fields
-              .find(o => o.name == f.name && o.dataType == f.dataType) match {
-              case Some(o) => f.copy(metadata = o.metadata)
-              case None => f.copy(metadata = new MetadataBuilder()
-                .putLong(GidKey, maxGid + 1 + i).build())
-            }
+      claim("overwrite") { m =>
+        val evolved =
+          if (shape(m.schema) == shape(df.schema)) m
+          else {
+            val cur = stamped(m)
+            withSchema(m, StructType(df.schema.fields.zipWithIndex.map { case (f, i) =>
+              cur.schema.fields
+                .find(o => o.name == f.name && o.dataType == f.dataType) match {
+                case Some(o) => f.copy(metadata = o.metadata)
+                case None => f.copy(metadata = new MetadataBuilder()
+                  .putLong(GidKey, maxGid(cur) + 1 + i).build())
+              }
+            }))
           }
-          val since = snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
-          Some(SchemaVersion(vs.last.version + 1, since, StructType(fields)))
-        }
-      // 1. Data first: cluster by the POST-replace spec/order so the new
-      //    files prune on them; nothing visible has changed if this throws.
-      val written = writeFiles(clusterBy(df, spec, order))
-      // 2. Metadata: schema + spec + sort property + overwrite snapshot,
-      //    rolled back together on failure.
-      val priorSpec = partitionSpec
-      val priorSchemaJson = schema.json
-      try {
-        nextVersion.foreach { v =>
-          writeSchemaVersion(v)
-          writeAtomic(new Path(tableDir, "_graft/schema.json"), v.schema.json)
-        }
-        if (spec != priorSpec) PartitionSpec.write(fs, tableDir, spec)
-        if (sortProp != priorSortProp)
-          setProperties(Map("sorted_by" -> sortProp.orNull))
-        commitReplacing("overwrite", inventory(written), clock,
-          Commit.Composes)
-      } catch {
-        case e: Throwable =>
-          if (sortProp != priorSortProp)
-            setProperties(Map("sorted_by" -> priorSortProp.orNull))
-          if (spec != priorSpec) PartitionSpec.write(fs, tableDir, priorSpec)
-          nextVersion.foreach { v =>
-            fs.delete(new Path(schemasDir,
-              f"v${v.version}%05d_s${v.since}.json"), false)
-            writeAtomic(new Path(tableDir, "_graft/schema.json"),
-              priorSchemaJson)
-          }
-          throw e
+        val defined = evolved.copy(spec = spec, properties =
+          sortProp.fold(m.properties - "sorted_by")(v => m.properties + ("sorted_by" -> v)))
+        Some(Commit.successor(defined, "main")(
+          replacement(staged, _, "overwrite", clock, m.head("main"))))
       }
     }
 
@@ -1629,15 +1608,15 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * manifests stay owned by older snapshots until expiry.
     * @return number of manifests merged (0 = nothing to do) */
   def rewriteManifests(clock: Clock = Clock.systemUTC()): Long =
-    commitLock.synchronized {
+    writeOp {
       val cur = currentSnapshot.getOrElse(return 0L)
       if (cur.manifests.size <= 1) return 0L
       // Metadata-only: the rows keep their lineage, outstanding MOR
       // delete manifests ride through unchanged, and the logical row
       // count is carried, not recomputed from the (physical) manifest sum
       val manifest = stage(manifestDf(cur.manifests))
-      Commit.snapshot(fs, tableDir, "rewrite_manifests", "main",
-          Commit.HeadIs(Some(cur))) { (id, _) =>
+      commitSnapshot("rewrite_manifests", "main", Commit.HeadIs(Some(cur)),
+          rows = false) { (id, _) =>
         val w = manifest.write(Some(id))
         cur.carried(id, "rewrite_manifests", clock.millis()).copy(
           manifests = Seq(manifest.path), numFiles = w.files,
@@ -1654,9 +1633,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * of a freshly written commit directory: its listing for path+size,
     * one distributed `_metadata` aggregation for per-file row counts and
     * per-column null counts (files whose rows were all pruned — e.g. an
-    * empty append — keep record_count 0).
+    * empty append — keep record_count 0). Transform bounds follow
+    * `spec`: the table's, or the one a [[replace]] lands with the files.
     */
-  private[graft] def inventory(written: DataFiles): DataFrame = {
+  private[graft] def inventory(written: DataFiles,
+                               spec: Seq[PartitionField] = partitionSpec): DataFrame = {
     val commitDir = written.dir
     val listed = written.files.map(f => (normalize(f.getPath), f.getLen))
     if (listed.isEmpty) return ManifestIO.emptyRelation(spark)
@@ -1680,7 +1661,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // monotonic non-decreasing transforms days / truncate, where
     // transform(min)..transform(max) are exact output bounds. bucket
     // (a hash) is not monotonic — only the distributed path can bound it.
-    val specFields = partitionSpec.filter(s =>
+    val specFields = spec.filter(s =>
       dataSchema.fieldNames.contains(s.column))
     val specsDerivable = specFields.forall { s =>
       val dt = dataSchema(s.column).dataType
@@ -1721,7 +1702,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // Partition-transform outputs get their own manifest bounds (e.g.
     // bucket8_id) — identity transforms are already covered by the
     // column's own entry.
-    val specs = partitionSpec.filter(s =>
+    val specs = spec.filter(s =>
       data.columns.contains(s.column) && !bounded.contains(s.name))
     val nullMap = map_from_arrays(
       array(names.map(lit): _*),
@@ -2003,7 +1984,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def commitAppend(op: String, delta: DataFrame, clock: Clock,
                            branch: String = "main"): Unit = {
     val manifest = stage(delta)
-    Commit.snapshot(fs, tableDir, op, branch, Commit.Composes) { (id, head) =>
+    commitSnapshot(op, branch, Commit.Composes, rows = true) { (id, head) =>
       withDelta(head.getOrElse(Snapshot.Genesis), id, op, clock, manifest)
     }
   }
@@ -2029,7 +2010,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val data = stage(delta)
     val eq = stage(inventory(eqDir))
     val eqFiles = eqDir.files.size.toLong
-    Commit.snapshot(fs, tableDir, op, "main", Commit.Composes) { (id, head) =>
+    commitSnapshot(op, "main", Commit.Composes, rows = true) { (id, head) =>
       val b = head.getOrElse(Snapshot.Genesis)
       val s = withDelta(b, id, op, clock, data)
       eq.write(Some(id))
@@ -2047,24 +2028,29 @@ final class GraftTable(val spark: SparkSession, val location: String) {
                                      clock: Clock,
                                      conflict: Commit.Conflict): Unit = {
     val staged = stage(manifest)
-    Commit.snapshot(fs, tableDir, op, "main", conflict) { (id, head) =>
-      val w = staged.write(Some(id))
-      Snapshot(id, clock.millis(), op, Seq(staged.path), w.files, w.bytes,
-        w.rows, head.fold(-1L)(_.snapshotId),
-        deleteFileCount = Some(0L), eqDeleteFileCount = Some(0L))
-    }
+    commitSnapshot(op, "main", conflict, rows = true)(replacement(staged, _, op, clock, _))
+  }
+
+  /** Snapshot `id` of `op` listing exactly `staged`'s files (written now,
+    * stamped with `id`), on top of `head`. */
+  private def replacement(staged: Commit.Manifest, id: Long, op: String, clock: Clock,
+                          head: Option[Snapshot]): Snapshot = {
+    val w = staged.write(Some(id))
+    Snapshot(id, clock.millis(), op, Seq(staged.path), w.files, w.bytes,
+      w.rows, head.fold(-1L)(_.snapshotId),
+      deleteFileCount = Some(0L), eqDeleteFileCount = Some(0L))
   }
 
   // ---- branches / write-audit-publish -----------------------------------
 
   /** All branch refs, including the implicit main. */
-  def branches: Map[String, Long] = tableState.branchRefs
+  def branches: Map[String, Long] = metadata.branchRefs
 
   /** Claim a ref mutation through the commit loop: recomputed against
     * the fresh state on every attempt (cross-process safe — in-process
     * callers already hold the table lock). */
-  private def claimRefs(op: String)(mutate: TableState => TableState): Unit =
-    Commit.claim(fs, tableDir, op)(st => Some(mutate(st)))
+  private def claimRefs(op: String)(mutate: TableMetadata => TableMetadata): Unit =
+    claim(op)(st => Some(mutate(st)))
 
   /** Create a branch pointing at `at` (default: main's current head) —
     * the "write" staging area of write-audit-publish. */
@@ -2085,7 +2071,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Scan a branch head (same aligned read path as [[read]]). */
   def readBranch(name: String): DataFrame =
-    readSnapshot(tableState.head(name))
+    op(readSnapshot(metadata.head(name)))
 
   /** Append onto a branch WITHOUT moving main — audited writers land
     * data here, validate via [[readBranch]], then [[fastForward]]. */
@@ -2132,7 +2118,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   /** All tag refs. Tags are Iceberg's immutable ref kind: they pin a
     * snapshot forever — never advanced by commits, never fast-forwarded;
     * expiry keeps their targets like branch heads. */
-  def tags: Map[String, Long] = tableState.tags
+  def tags: Map[String, Long] = metadata.tags
 
   /** Create a tag at `at` (default: main's current head). The branch and
     * tag namespaces are shared, like Iceberg's — one name, one ref. */
@@ -2152,8 +2138,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
 
   /** Scan the snapshot a tag pins (same aligned read path as [[read]]). */
-  def readTag(name: String): DataFrame = {
-    val st = tableState
+  def readTag(name: String): DataFrame = op {
+    val st = metadata
     val id = st.tags.getOrElse(name,
       throw new IllegalArgumentException(s"no tag $name"))
     readSnapshot(st.snapshots.find(_.snapshotId == id))
@@ -2167,15 +2153,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
   }
 
-  private def writeAtomic(p: Path, content: String): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp-${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // Single-FS-op overwrite rename: no window with neither file present.
-    AtomicRename.overwrite(fs, tmp, p)
-  }
-
   /** DROP TABLE (reference analogue: tests/test_maintenance.py:20) —
     * removes data, metadata, and the table directory. */
   def drop(): Unit = commitLock.synchronized {
@@ -2184,18 +2161,23 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   // ---- maintenance commands (graft.cmd implements the bodies) -----------
 
-  def optimize(targetFileBytes: Long = defaultTargetFileBytes,
+  /** A compaction's `targetFileBytes` (0, the default, is
+    * [[defaultTargetFileBytes]], read within the op). */
+  private def targetOr(targetFileBytes: Long): Long =
+    if (targetFileBytes > 0) targetFileBytes else defaultTargetFileBytes
+
+  def optimize(targetFileBytes: Long = 0L,
                clock: Clock = Clock.systemUTC(),
                clusterBy: Seq[String] = Seq.empty): Unit =
-    graft.cmd.Optimize.run(this, targetFileBytes, clock, clusterBy)
+    writeOp(graft.cmd.Optimize.run(this, targetOr(targetFileBytes), clock, clusterBy))
 
   /** Z-order (Morton) compaction: cluster on the interleaved bits of
     * `cols` so file skipping works on every listed dimension. */
   def optimizeZOrder(cols: Seq[String],
-                     targetFileBytes: Long = defaultTargetFileBytes,
+                     targetFileBytes: Long = 0L,
                      bits: Int = 16,
                      clock: Clock = Clock.systemUTC()): Unit =
-    graft.cmd.ZOrder.run(this, cols, targetFileBytes, bits, clock)
+    writeOp(graft.cmd.ZOrder.run(this, cols, targetOr(targetFileBytes), bits, clock))
 
   def expireSnapshots(retentionDays: Int,
                       clock: Clock = Clock.systemUTC()): Long =
@@ -2313,11 +2295,6 @@ final case class DataFiles(dir: Path, files: Seq[LocatedFileStatus])
   * counts proving (or disproving) that skipping happened. */
 final case class PrunedScan(df: DataFrame, filesScanned: Long, filesTotal: Long)
 
-/** One committed table schema: effective for files added by snapshots
-  * with id >= `since`. Fields carry stable ids ([[GraftTable.gidOf]]) so
-  * renames resolve without touching data (Iceberg field-id semantics). */
-final case class SchemaVersion(version: Int, since: Long, schema: StructType)
-
 object GraftTable {
   /** Field-metadata key holding a column's stable id across renames. */
   /** Parse the stored `sorted_by` property value (`a, b DESC`) into
@@ -2346,7 +2323,6 @@ object GraftTable {
     }
 
   private[meta] val GidKey = "gid"
-  private[meta] val SchemaFileName = """v(\d+)_s(\d+)\.json""".r
 
   /** Stable field id; pre-evolution schemas have none (-1) — they are
     * stamped positionally when the schema log is first created. */
@@ -2396,8 +2372,6 @@ object GraftTable {
     StructField("blooms", MapType(StringType, BinaryType), nullable = true),
     StructField("added_snapshot_id", LongType, nullable = true)))
 
-  private[meta] val PropEntry = """"([^"]+)":"([^"]*)"""".r
-
   /** Row schema of a position-delete file (Iceberg v2 position-delete
     * shape): the (normalized) data-file path and the row's ordinal
     * within that file, as exposed by `_metadata.row_index`. */
@@ -2443,16 +2417,14 @@ object GraftTable {
   private[meta] def normalizeCol(c: org.apache.spark.sql.Column) =
     org.apache.spark.sql.graft.CatalystShims.normalizePath(c)
 
+  /** CREATE: one claim of the empty table with `schema` as version 1
+    * and `partitionBy` as its spec, keeping whatever refs, tags and
+    * properties a racing CREATE claimed. */
   def create(spark: SparkSession, location: String, schema: StructType,
              partitionBy: Seq[PartitionField] = Seq.empty): GraftTable = {
     val t = new GraftTable(spark, location)
-    t.fileSystem.mkdirs(new Path(location, "_graft"))
-    t.writeAtomic(new Path(location, "_graft/schema.json"), schema.json)
-    if (partitionBy.nonEmpty)
-      PartitionSpec.write(t.fileSystem, t.dir, partitionBy)
-    // the empty log, keeping whatever refs a racing CREATE claimed
-    Commit.claim(t.fileSystem, t.dir, "create")(st =>
-      Some(st.copy(snapshots = Seq.empty)))
+    t.claim("create")(st => Some(st.copy(snapshots = Seq.empty,
+      schemas = Seq(SchemaVersion(1, 0L, schema)), spec = partitionBy)))
     t
   }
 

@@ -1,6 +1,5 @@
 package graft.meta
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -93,35 +92,4 @@ object PartitionSpec {
     PartitionField(column, "bucket", n)
   def truncate(w: Int, column: String): PartitionField =
     PartitionField(column, "truncate", w)
-
-  private def specPath(tableDir: Path) = new Path(tableDir, "_graft/partition.json")
-
-  // tiny fixed-schema codec, same zero-dependency style as SnapshotLog
-  private val Entry =
-    """\{"column":"([^"]*)","transform":"([^"]*)","param":(-?\d+)\}""".r
-
-  def write(fs: FileSystem, tableDir: Path, spec: Seq[PartitionField]): Unit = {
-    val txt = spec.map(f =>
-        s"""{"column":"${f.column}","transform":"${f.transform}","param":${f.param}}""")
-      .mkString("[", ",", "]")
-    val p = specPath(tableDir)
-    val tmp = new Path(p.getParent, s".partition.json.tmp-${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write(txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    AtomicRename.overwrite(fs, tmp, p)
-  }
-
-  def read(fs: FileSystem, tableDir: Path): Seq[PartitionField] = {
-    val p = specPath(tableDir)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      Entry.findAllMatchIn(txt)
-        .map(m => PartitionField(m.group(1), m.group(2), m.group(3).toInt))
-        .toSeq
-    }
-  }
 }

@@ -1,7 +1,13 @@
 package graft.meta
 
 import java.nio.charset.StandardCharsets
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One committed table version.
   *
@@ -78,17 +84,47 @@ object Snapshot {
     deleteFileCount = Some(0L), eqDeleteFileCount = Some(0L))
 }
 
-/** The complete CAS-versioned table state: the snapshot list plus both
-  * ref kinds. Refs live IN the claimed log file (Iceberg's
-  * metadata.json shape) so a branch advance is atomic with the commit
-  * that caused it — a separate refs file would let two cross-process
-  * winners write their ref updates out of order (main regressing to a
-  * stale head). Empty refs = the implicit pre-branching "main" at the
-  * max snapshot id. */
-final case class TableState(
+
+/** One committed table schema: effective for files added by snapshots
+  * with id >= `since`. Fields carry stable ids ([[GraftTable.gidOf]]) so
+  * renames resolve without touching data (Iceberg field-id semantics). */
+final case class SchemaVersion(version: Int, since: Long, schema: StructType)
+
+/** The table metadata, claimed whole by every commit: the snapshots, both
+  * ref kinds, the schema versions, the partition spec and the
+  * properties — the set Iceberg keeps in one table-metadata file
+  * (https://iceberg.apache.org/spec/#table-metadata). Refs live in it so
+  * a branch advance is atomic with the commit that caused it (a separate
+  * refs file would let two cross-process winners write their ref updates
+  * out of order); the definition lives in it so a schema, spec or
+  * property change is ordered with every commit, and a commit can check
+  * the schema its rows were written under. Empty refs = the implicit
+  * pre-branching "main" at the max snapshot id.
+  *
+  * @param schemas every schema version, oldest first; the last is the
+  *                current schema. Empty only where no table exists.
+  * @param spec    the partition spec (empty = unpartitioned)
+  * @param formatVersion the metadata layout the value was read from:
+  *                [[TableMetadata.FormatVersion]], or 0 for a layout
+  *                that predates it — the next claim writes the current
+  *                layout and retires the old one's files
+  *                ([[SnapshotLog.tryWriteState]]) */
+final case class TableMetadata(
     snapshots: Seq[Snapshot],
     refs: Map[String, Long] = Map.empty,
-    tags: Map[String, Long] = Map.empty) {
+    tags: Map[String, Long] = Map.empty,
+    schemas: Seq[SchemaVersion] = Seq.empty,
+    spec: Seq[PartitionField] = Seq.empty,
+    properties: Map[String, String] = Map.empty,
+    formatVersion: Int = TableMetadata.FormatVersion) {
+  def schema: StructType = schemas.last.schema
+
+  /** The current schema's version (0 where no schema exists). */
+  def schemaId: Int = schemas.lastOption.fold(0)(_.version)
+
+  /** The id the next snapshot gets: max + 1. */
+  def nextSnapshotId: Long = snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1
+
   /** Head of `branch`: its ref once refs are materialized, else (main
     * only) the implicit pre-branching head, the max snapshot id. */
   def head(branch: String): Option[Snapshot] =
@@ -105,13 +141,20 @@ final case class TableState(
     else refs ++ SnapshotLog.current(snapshots).map("main" -> _.snapshotId)
 }
 
-/** The table's snapshot log: a small JSON array, committed as VERSIONED
-  * files `<table>/_graft/log/v<N>.snapshots.json` claimed by
+object TableMetadata {
+  /** The layout [[SnapshotLog.encode]] writes. */
+  val FormatVersion = 1
+  /** No table: no log version and no legacy log. */
+  val Empty: TableMetadata = TableMetadata(Seq.empty)
+}
+
+/** The table's log: its [[TableMetadata]] as JSON, committed as
+  * VERSIONED files `<table>/_graft/log/v<N>.snapshots.json` claimed by
   * rename-WITHOUT-overwrite — optimistic cross-process concurrency, the
   * Iceberg metadata-file CAS shape:
   *
-  *   1. writer reads the highest version N (the current state),
-  *   2. renders the full successor log to a hidden temp file,
+  *   1. writer reads the highest version N (the current metadata),
+  *   2. renders the full successor to a hidden temp file,
   *   3. claims `v(N+1)` by renaming the temp WITHOUT the OVERWRITE
   *      flag — if another process claimed N+1 first, the rename fails
   *      (atomically on HDFS; exists-checked on local/object FS) and the
@@ -129,17 +172,21 @@ final case class TableState(
   * reference's deployment model — a cron job racing ad-hoc writers —
   * hits exactly that). In-process writers are additionally serialized
   * by [[GraftTable]]'s per-path lock, so retries only ever happen
-  * across processes. Legacy single-file logs (`_graft/snapshots.json`)
-  * are read as version 0 and upgraded on the next commit.
+  * across processes. Tables written before the metadata moved into the
+  * log are read through [[LegacyLayout]] and upgraded by their next
+  * claim.
   *
-  * Hand-rolled JSON (fixed schema, no string escapes needed beyond
-  * paths we generate ourselves) — keeps zero extra dependencies.
+  * The codec is Jackson's tree model ([[encode]], [[decode]]): strings
+  * are escaped, unknown keys are ignored, schemas are Spark's own
+  * `StructType` JSON.
   */
 object SnapshotLog {
   private val LogName = "snapshots.json" // legacy single-file (read fallback)
   private val VersionFile = """v(\d{20})\.snapshots\.json""".r
   /** Versions kept behind the head for stragglers before cleanup. */
   private val KeepVersions = 10
+
+  private[meta] val Json = new ObjectMapper()
 
   def logPath(tableDir: Path): Path = new Path(tableDir, s"_graft/$LogName")
   private def logDir(tableDir: Path): Path = new Path(tableDir, "_graft/log")
@@ -160,36 +207,27 @@ object SnapshotLog {
     }).sorted
   }
 
-  private def readFile(fs: FileSystem, p: Path): String = {
+  private[meta] def readJson(fs: FileSystem, p: Path): JsonNode = {
     val in = fs.open(p)
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    finally in.close()
+    try Json.readTree(in) finally in.close()
   }
 
-  /** Current (version, state). Version 0 = no versioned file yet — the
-    * content is then the legacy single file (or empty). Version files
-    * written before refs were folded in (bare JSON arrays), and the
-    * legacy file, take their refs/tags from the standalone
-    * `refs.json`/`tags.json` fallback. */
-  def readState(fs: FileSystem, tableDir: Path): (Long, TableState) = {
+  /** Current (version, metadata). Version 0 = no versioned file yet —
+    * the content is then the legacy single file, a layout of its own
+    * that the next claim retires (or no table). */
+  def readState(fs: FileSystem, tableDir: Path): (Long, TableMetadata) = {
     var attempt = 0
     while (true) {
       val vs = listVersions(fs, tableDir)
       if (vs.isEmpty) {
         val legacy = logPath(tableDir)
-        val snaps =
-          if (fs.exists(legacy)) parse(readFile(fs, legacy)) else Seq.empty
-        return (0L, TableState(snaps,
-          Refs.read(fs, tableDir), Refs.readTags(fs, tableDir)))
+        return (0L,
+          if (fs.exists(legacy))
+            parse(fs, tableDir, readJson(fs, legacy)).copy(formatVersion = 0)
+          else TableMetadata.Empty)
       }
-      try {
-        val txt = readFile(fs, versionPath(tableDir, vs.last))
-        return (vs.last, parseState(txt) match {
-          case Some(st) => st // refs live in the file
-          case None => TableState(parse(txt), // pre-state array format
-            Refs.read(fs, tableDir), Refs.readTags(fs, tableDir))
-        })
-      } catch {
+      try return (vs.last, parse(fs, tableDir, readJson(fs, versionPath(tableDir, vs.last))))
+      catch {
         // head cleaned up between list and open (lagging lister) — re-list
         case _: java.io.FileNotFoundException if attempt < 3 => attempt += 1
       }
@@ -197,24 +235,21 @@ object SnapshotLog {
     throw new IllegalStateException("unreachable")
   }
 
-  def read(fs: FileSystem, tableDir: Path): Seq[Snapshot] =
-    readState(fs, tableDir)._2.snapshots
-
-  /** Compare-and-swap: publish `state` as version `expected + 1`.
+  /** Compare-and-swap: publish `meta` as version `expected + 1`.
     * Returns false if another writer claimed that version first, or the
     * claim failed — the caller re-reads and recomputes against the new
     * head. Its one caller is [[Commit.claim]], which bounds the retries;
-    * every log write (commits, expiry, ref moves, CREATE) goes through
-    * it. */
+    * every log write (commits, definition changes, expiry, ref moves,
+    * CREATE) goes through it. */
   def tryWriteState(fs: FileSystem, tableDir: Path, expected: Long,
-                    state: TableState): Boolean = {
+                    meta: TableMetadata): Boolean = {
     val target = versionPath(tableDir, expected + 1)
     fs.mkdirs(target.getParent)
     if (fs.exists(target)) return false // cheap pre-check; rename re-checks
     val tmp = new Path(target.getParent,
       s".tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
-    try out.write(renderState(state).getBytes(StandardCharsets.UTF_8))
+    try out.write(encode(meta).getBytes(StandardCharsets.UTF_8))
     finally out.close()
     val claimed =
       try {
@@ -228,12 +263,12 @@ object SnapshotLog {
           fs.delete(tmp, false); false
       }
     if (claimed) {
-      // best-effort housekeeping: retire the legacy/standalone files
-      // (their content now lives in the claimed state) and old versions
+      // best-effort housekeeping: the upgrading claim retires the old
+      // layout's files (their content now lives in the claimed
+      // metadata); every claim drops versions behind the window
       try {
-        fs.delete(logPath(tableDir), false)
-        fs.delete(Refs.path(tableDir), false)
-        fs.delete(Refs.tagsPath(tableDir), false)
+        if (meta.formatVersion < TableMetadata.FormatVersion)
+          LegacyLayout.retire(fs, tableDir)
         listVersions(fs, tableDir).dropRight(KeepVersions)
           .foreach(v => fs.delete(versionPath(tableDir, v), false))
       } catch { case _: java.io.IOException => }
@@ -241,105 +276,146 @@ object SnapshotLog {
     claimed
   }
 
+  private def parse(fs: FileSystem, tableDir: Path, head: JsonNode): TableMetadata =
+    if (head.has("formatVersion")) decode(head) else LegacyLayout.read(fs, tableDir, head)
+
   def current(snapshots: Seq[Snapshot]): Option[Snapshot] =
     if (snapshots.isEmpty) None else Some(snapshots.maxBy(_.snapshotId))
 
-  // ---- tiny fixed-schema JSON codec -------------------------------------
+  // ---- the codec ----------------------------------------------------------
 
-  private def renderMap(m: Map[String, Long]): String =
-    m.toSeq.sortBy(_._1).map { case (n, id) => s""""$n":$id""" }
-      .mkString("{", ",", "}")
+  /** `m` as the JSON of one log version, at [[TableMetadata.FormatVersion]]. */
+  def encode(m: TableMetadata): String = {
+    val root = Json.createObjectNode()
+    root.put("formatVersion", TableMetadata.FormatVersion)
+    val schemas = root.putArray("schemas")
+    m.schemas.foreach { case SchemaVersion(version, since, struct) =>
+      schemas.addObject().put("version", version).put("since", since)
+        .set[JsonNode]("schema", Json.readTree(struct.json))
+    }
+    val spec = root.putArray("spec")
+    m.spec.foreach(f => spec.addObject().put("column", f.column)
+      .put("transform", f.transform).put("param", f.param))
+    val props = root.putObject("properties")
+    m.properties.toSeq.sorted.foreach { case (k, v) => props.put(k, v) }
+    putLongs(root.putObject("refs"), m.refs)
+    putLongs(root.putObject("tags"), m.tags)
+    val snaps = root.putArray("snapshots")
+    m.snapshots.foreach { s =>
+      val o = snaps.addObject().put("snapshotId", s.snapshotId)
+        .put("parentId", s.parentId).put("timestampMs", s.timestampMs)
+        .put("operation", s.operation)
+      putStrings(o.putArray("manifests"), s.manifests)
+      putStrings(o.putArray("deleteManifests"), s.deleteManifests)
+      putStrings(o.putArray("eqDeleteManifests"), s.eqDeleteManifests)
+      s.deleteFileCount.foreach(n => o.put("deleteFileCount", n))
+      s.eqDeleteFileCount.foreach(n => o.put("eqDeleteFileCount", n))
+      o.put("numFiles", s.numFiles).put("totalBytes", s.totalBytes)
+        .put("totalRows", s.totalRows)
+    }
+    Json.writeValueAsString(root)
+  }
 
-  /** refs/tags first, snapshots last — snapshot objects contain no
-    * "refs"/"tags" keys, so the block regexes below stay unambiguous. */
-  private def renderState(st: TableState): String =
-    s"""{"refs":${renderMap(st.refs)},"tags":${renderMap(st.tags)},""" +
-      s""""snapshots":${render(st.snapshots)}}"""
+  /** The metadata [[encode]] wrote; unknown keys are ignored. */
+  def decode(txt: String): TableMetadata = decode(Json.readTree(txt))
 
-  private val RefsBlock = """"refs":\{([^}]*)\}""".r
-  private val TagsBlock = """"tags":\{([^}]*)\}""".r
-  private val MapEntry = """"([^"]+)":(-?\d+)""".r
+  private def decode(root: JsonNode): TableMetadata = {
+    val fv = root.get("formatVersion").asInt
+    require(fv <= TableMetadata.FormatVersion, s"table metadata format " +
+      s"$fv is newer than this reader's ${TableMetadata.FormatVersion}")
+    TableMetadata(snapshotsOf(root.path("snapshots")),
+      longsOf(root.path("refs")), longsOf(root.path("tags")),
+      elements(root.path("schemas")).map(n => SchemaVersion(
+        n.get("version").asInt, n.get("since").asLong, schemaOf(n.get("schema")))),
+      specOf(root.path("spec")), stringsOf(root.path("properties")), fv)
+  }
 
-  private def parseMap(inner: String): Map[String, Long] =
-    MapEntry.findAllMatchIn(inner).map(m => m.group(1) -> m.group(2).toLong).toMap
+  private def putLongs(o: ObjectNode, m: Map[String, Long]): Unit =
+    m.toSeq.sorted.foreach { case (k, v) => o.put(k, v) }
 
-  /** None = bare-array (pre-state) format. */
-  private def parseState(txt: String): Option[TableState] =
-    if (txt.trim.startsWith("[")) None
-    else Some(TableState(parse(txt),
-      RefsBlock.findFirstMatchIn(txt).map(m => parseMap(m.group(1)))
-        .getOrElse(Map.empty),
-      TagsBlock.findFirstMatchIn(txt).map(m => parseMap(m.group(1)))
-        .getOrElse(Map.empty)))
+  private def putStrings(a: ArrayNode, xs: Seq[String]): Unit =
+    xs.foreach(a.add)
 
-  private def renderList(ps: Seq[String]): String =
-    ps.map(p => s""""$p"""").mkString("[", ",", "]")
+  private def elements(n: JsonNode): Seq[JsonNode] = n.elements.asScala.toSeq
 
-  private def render(ss: Seq[Snapshot]): String =
-    ss.map { s =>
-      val counts =
-        s.deleteFileCount.map(n => s""""deleteFileCount":$n,""").getOrElse("") +
-          s.eqDeleteFileCount.map(n => s""""eqDeleteFileCount":$n,""").getOrElse("")
-      s"""{"snapshotId":${s.snapshotId},"parentId":${s.parentId},""" +
-        s""""timestampMs":${s.timestampMs},""" +
-        s""""operation":"${s.operation}","manifests":${renderList(s.manifests)},""" +
-        s""""deleteManifests":${renderList(s.deleteManifests)},""" +
-        s""""eqDeleteManifests":${renderList(s.eqDeleteManifests)},""" + counts +
-        s""""numFiles":${s.numFiles},"totalBytes":${s.totalBytes},"totalRows":${s.totalRows}}"""
-    }.mkString("[\n", ",\n", "\n]")
+  private def entries(n: JsonNode): Seq[(String, JsonNode)] =
+    n.properties.asScala.toSeq.map(e => e.getKey -> e.getValue)
 
-  // parentId, the delete-manifest lists, and the delete-file counts are
-  // optional on parse so logs written before branching / merge-on-read /
-  // summary counts stay readable
-  private val Entry =
-    ("""\{"snapshotId":(-?\d+),(?:"parentId":(-?\d+),)?"timestampMs":(-?\d+),"operation":"([^"]*)",""" +
-      """"manifests":\[([^\]]*)\],(?:"deleteManifests":\[([^\]]*)\],)?""" +
-      """(?:"eqDeleteManifests":\[([^\]]*)\],)?""" +
-      """(?:"deleteFileCount":(-?\d+),)?(?:"eqDeleteFileCount":(-?\d+),)?""" +
-      """"numFiles":(\d+),"totalBytes":(\d+),"totalRows":(\d+)\}""").r
+  private[meta] def longsOf(n: JsonNode): Map[String, Long] =
+    entries(n).map { case (k, v) => k -> v.asLong }.toMap
 
-  private def parseList(inner: String): Seq[String] =
-    if (inner == null || inner.isEmpty) Seq.empty
-    else inner.split(",").toSeq.map(_.stripPrefix("\"").stripSuffix("\""))
+  private[meta] def stringsOf(n: JsonNode): Map[String, String] =
+    entries(n).map { case (k, v) => k -> v.asText }.toMap
 
-  private def parse(txt: String): Seq[Snapshot] =
-    Entry.findAllMatchIn(txt).map { m =>
-      Snapshot(m.group(1).toLong, m.group(3).toLong, m.group(4),
-        parseList(m.group(5)), m.group(10).toLong, m.group(11).toLong,
-        m.group(12).toLong,
-        parentId = Option(m.group(2)).map(_.toLong).getOrElse(-1L),
-        deleteManifests = parseList(m.group(6)),
-        eqDeleteManifests = parseList(m.group(7)),
-        deleteFileCount = Option(m.group(8)).map(_.toLong),
-        eqDeleteFileCount = Option(m.group(9)).map(_.toLong))
-    }.toSeq
+  private[meta] def schemaOf(n: JsonNode): StructType =
+    DataType.fromJson(n.toString).asInstanceOf[StructType]
+
+  private[meta] def specOf(n: JsonNode): Seq[PartitionField] =
+    elements(n).map(f => PartitionField(f.get("column").asText,
+      f.get("transform").asText, f.path("param").asInt(0)))
+
+  // parentId, the delete-manifest lists and the delete-file counts are
+  // optional: snapshots written before branching, merge-on-read or the
+  // summary counts lack them
+  private[meta] def snapshotsOf(n: JsonNode): Seq[Snapshot] =
+    elements(n).map { s =>
+      def strings(k: String) = elements(s.path(k)).map(_.asText)
+      def count(k: String) = Option(s.get(k)).filterNot(_.isNull).map(_.asLong)
+      Snapshot(s.get("snapshotId").asLong, s.get("timestampMs").asLong,
+        s.get("operation").asText, strings("manifests"), s.get("numFiles").asLong,
+        s.get("totalBytes").asLong, s.get("totalRows").asLong,
+        parentId = s.path("parentId").asLong(-1L),
+        deleteManifests = strings("deleteManifests"),
+        eqDeleteManifests = strings("eqDeleteManifests"),
+        deleteFileCount = count("deleteFileCount"),
+        eqDeleteFileCount = count("eqDeleteFileCount"))
+    }
 }
 
-/** MIGRATION FALLBACK readers for the standalone `refs.json` /
-  * `tags.json` files earlier versions wrote beside the log. Refs and
-  * tags now live INSIDE the CAS-claimed [[TableState]] (so a ref
-  * advance is atomic with its commit); these files are read only when
-  * the log head predates the state format, and are retired by the
-  * next claim. */
-object Refs {
-  private val Name = "refs.json"
-  private val TagsName = "tags.json"
-  def path(tableDir: Path): Path = new Path(tableDir, s"_graft/$Name")
-  def tagsPath(tableDir: Path): Path = new Path(tableDir, s"_graft/$TagsName")
-  private val Entry = """"([^"]+)":(-?\d+)""".r
+/** The table layouts that predate [[TableMetadata.FormatVersion]], read
+  * once per op through [[read]] and retired by the first claim on the
+  * table ([[retire]]). Nothing else knows their files. */
+private[meta] object LegacyLayout {
+  private val SchemaFile = """v(\d+)_s(\d+)\.json""".r
 
-  def read(fs: FileSystem, tableDir: Path): Map[String, Long] =
-    readMap(fs, path(tableDir))
-
-  def readTags(fs: FileSystem, tableDir: Path): Map[String, Long] =
-    readMap(fs, tagsPath(tableDir))
-
-  private def readMap(fs: FileSystem, p: Path): Map[String, Long] =
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-        finally in.close()
-      Entry.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toLong).toMap
+  /** The metadata of a table whose log `head` predates the current
+    * layout: a bare snapshot array (the single-file log, or an early
+    * version) or a {refs, tags, snapshots} object, with the definition
+    * kept in side files beside the log. Format version 0. */
+  def read(fs: FileSystem, tableDir: Path, head: JsonNode): TableMetadata = {
+    import SnapshotLog._
+    def side(name: String): Option[JsonNode] = {
+      val p = new Path(tableDir, s"_graft/$name")
+      if (fs.exists(p)) Some(readJson(fs, p)) else None
     }
+    // bare arrays kept their refs and tags in refs.json / tags.json
+    val (snaps, refs, tags) =
+      if (head.isArray) (head, side("refs.json"), side("tags.json"))
+      else (head.path("snapshots"), Option(head.get("refs")), Option(head.get("tags")))
+    // schema.json is the current schema; _graft/schemas/ holds every
+    // version (v<version>_s<since>.json) once the table first evolved
+    val versionsDir = new Path(tableDir, "_graft/schemas")
+    val versions =
+      if (!fs.exists(versionsDir)) Seq.empty
+      else fs.listStatus(versionsDir).toSeq.flatMap(st => st.getPath.getName match {
+        case SchemaFile(v, since) =>
+          Some(SchemaVersion(v.toInt, since.toLong, schemaOf(readJson(fs, st.getPath))))
+        case _ => None
+      }).sortBy(_.version)
+    TableMetadata(snapshotsOf(snaps), refs.fold(Map.empty[String, Long])(longsOf),
+      tags.fold(Map.empty[String, Long])(longsOf),
+      if (versions.nonEmpty) versions
+      else side("schema.json").map(s => SchemaVersion(1, 0L, schemaOf(s))).toSeq,
+      side("partition.json").fold(Seq.empty[PartitionField])(specOf),
+      side("properties.json").fold(Map.empty[String, String])(stringsOf),
+      formatVersion = 0)
+  }
+
+  /** Delete the old layout's files: the claimed metadata now holds them. */
+  def retire(fs: FileSystem, tableDir: Path): Unit = {
+    fs.delete(SnapshotLog.logPath(tableDir), false)
+    Seq("refs.json", "tags.json", "schema.json", "partition.json", "properties.json")
+      .foreach(n => fs.delete(new Path(tableDir, s"_graft/$n"), false))
+    fs.delete(new Path(tableDir, "_graft/schemas"), true)
+  }
 }

@@ -68,10 +68,16 @@ final class DefaultSource extends RelationProvider
     require(table.exists, s"no graft table at $path")
     // metadata tables, the Iceberg `t.files` / `t.snapshots` analogue:
     //   spark.read.format("graft").option("metadata", "files").load(p)
-    parameters.get("metadata") match {
-      case Some(m) => return metadataRelation(sqlContext, table, m)
-      case None =>
-    }
+    table.op(parameters.get("metadata") match {
+      case Some(m) => metadataRelation(sqlContext, table, m)
+      case None => dataRelation(spark, table, parameters)
+    })
+  }
+
+  /** The scan relation of the table's head, or of the snapshot the
+    * time-travel options name. */
+  private def dataRelation(spark: org.apache.spark.sql.SparkSession, table: GraftTable,
+                           parameters: Map[String, String]): BaseRelation = {
     require(table.schemaVersions.size <= 1,
       "the graft DataSource serves un-evolved tables; use GraftTable.read " +
         "for schema-evolved tables (per-generation aligned scans)")

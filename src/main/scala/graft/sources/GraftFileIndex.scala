@@ -53,7 +53,7 @@ import graft.meta.{FileScope, FileSkipping, GraftTable, ManifestEntry, ManifestI
   * pinned list is served.
   */
 final class GraftFileIndex(spark: SparkSession, table: GraftTable,
-                           pin: () => FileScope)
+                           dataSchema: StructType, pin: () => FileScope)
   extends FileIndex {
 
   /** THE pinned scope — captured exactly once at construction (and
@@ -90,7 +90,7 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
       val conf = spark.sessionState.conf
       val planStats = conf.cboEnabled || conf.planStatsEnabled
       catalogMemo.getOrElse(planStats, {
-        val ct = GraftStatsRule.catalogTableFor(table, scope.whole,
+        val ct = GraftStatsRule.catalogTableFor(table, dataSchema, scope.whole,
           sizeInBytes, planStats)
         catalogMemo += planStats -> ct
         ct
@@ -233,7 +233,7 @@ object GraftFileIndex {
     GraftStatsRule.ensureInstalled(spark)
     GraftCountRule.ensureInstalled(spark)
     HadoopFsRelation(
-      location = new GraftFileIndex(spark, table, pin),
+      location = new GraftFileIndex(spark, table, dataSchema, pin),
       partitionSchema = new StructType(),
       // nullable, as a path-list parquet read declares it: a file may
       // hold NULLs a NOT NULL table column was later given (a MERGE

@@ -87,14 +87,14 @@ object GraftStatsRule extends Rule[LogicalPlan] {
     * not guaranteed to, and NDV + null count carry most of the
     * estimation value. */
   private[sources] def catalogTableFor(
-      table: GraftTable, snapshot: Option[graft.meta.Snapshot],
+      table: GraftTable, schema: StructType, snapshot: Option[graft.meta.Snapshot],
       sizeInBytes: Long, planStats: Boolean): Option[CatalogTable] =
     snapshot.map { snap =>
       val rowCount = math.max(snap.totalRows, 0L)
       val colStats: Map[String, CatalogColumnStat] =
         if (!planStats) Map.empty
         else Analyze.pinnedStats(table).flatMap { case (name, st) =>
-          table.schema.fields.find(_.name == name).map { f =>
+          schema.fields.find(_.name == name).map { f =>
             val numeric = f.dataType match {
               case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
                    _: FloatType | _: DoubleType => true
@@ -114,7 +114,7 @@ object GraftStatsRule extends Rule[LogicalPlan] {
           new org.apache.hadoop.fs.Path(table.location).getName),
         tableType = CatalogTableType.EXTERNAL,
         storage = CatalogStorageFormat.empty,
-        schema = table.schema,
+        schema = schema,
         provider = Some("graft"),
         stats = Some(CatalogStatistics(
           sizeInBytes = BigInt(math.max(sizeInBytes, 1L)),

@@ -444,8 +444,8 @@ object GraftSql {
       s"WHERE is only supported for optimize (got $op)")
     op.toLowerCase match {
       case "optimize" =>
-        val target = kv.get("file_size_threshold").map(parseDataSize)
-          .getOrElse(t.defaultTargetFileBytes)
+        // 0: the table's target, read within the optimize op
+        val target = kv.get("file_size_threshold").map(parseDataSize).getOrElse(0L)
         where match {
           case None => t.optimize(targetFileBytes = target, clock = clock)
           case Some(w) => // partition-scoped rewrite, metadata-pruned
@@ -622,7 +622,7 @@ object GraftSql {
     * 100 TB. */
   private def update(t: GraftTable, setsRaw: String, whereRaw: String,
                      clock: Clock): Unit =
-    t.lock.synchronized {
+    t.writeOp {
       val schema = t.schema
       val assignments = splitTop(setsRaw, ',').map { a =>
         val sides = a.split("=", 2)

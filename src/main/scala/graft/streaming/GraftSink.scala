@@ -76,7 +76,7 @@ object GraftSink {
                   clock: Clock = Clock.systemUTC(),
                   branch: String = "main")
                  (df: DataFrame, batchId: Long): Unit =
-    table.lock.synchronized {
+    table.writeOp {
       if (!lastBatch(table, queryName).exists(_ >= batchId))
         table.appendOp(df, opFor(OpPrefix, queryName, batchId), clock, branch)
       else drainReplay(df)
@@ -92,7 +92,7 @@ object GraftSink {
   def upsertBatch(table: GraftTable, queryName: String, keys: Seq[String],
                   clock: Clock = Clock.systemUTC())
                  (df: DataFrame, batchId: Long): Unit =
-    table.lock.synchronized {
+    table.writeOp {
       if (!lastBatch(table, queryName).exists(_ >= batchId))
         table.upsertOp(df, keys, opFor(UpsertPrefix, queryName, batchId), clock)
       else drainReplay(df)
@@ -128,7 +128,7 @@ object GraftSink {
     def latest(d: DataFrame): DataFrame =
       d.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
-    table.lock.synchronized {
+    table.writeOp {
       // Marker check BEFORE composing: a replayed batch must not pay
       // the table-side semi-join + window just to be discarded — the
       // raw micro-batch frame alone carries the stateful lineage whose

@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.meta.{Commit, Snapshot, SnapshotLog, TableState}
+import graft.meta.{Commit, Snapshot, SnapshotLog, TableMetadata}
 
 /** The one commit loop, driven directly over hand-built log states (no
   * Spark): the retry bound, and the three conflict rules against each
@@ -18,7 +18,7 @@ class CommitLoopSpec extends AnyFunSuite {
   private def freshTable(): Path =
     new Path(Files.createTempDirectory("commitloop").toUri)
 
-  private def seed(dir: Path, st: TableState): Unit =
+  private def seed(dir: Path, st: TableMetadata): Unit =
     Commit.claim(fs, dir, "seed")(_ => Some(st))
 
   private def snap(id: Long, op: String, parent: Long,
@@ -29,7 +29,7 @@ class CommitLoopSpec extends AnyFunSuite {
 
   test("a claim that loses every race gives up after the bound, naming the op") {
     val dir = freshTable()
-    seed(dir, TableState(Seq(snap(1, "append", -1, Seq("m1")))))
+    seed(dir, TableMetadata(Seq(snap(1, "append", -1, Seq("m1")))))
     var attempts = 0
     val e = intercept[IllegalStateException](
       Commit.claim(fs, dir, "expire_snapshots") { st =>
@@ -48,7 +48,7 @@ class CommitLoopSpec extends AnyFunSuite {
   test("each conflict rule composes with or refuses each racing commit") {
     val s1 = snap(1, "append", -1, Seq("m1"))
     val basis = snap(2, "append", 1, Seq("m1", "m2"))
-    val planned = TableState(Seq(s1, basis))
+    val planned = TableMetadata(Seq(s1, basis))
     // the log state each racing commit leaves behind
     val racing = Seq(
       "nothing" -> planned,
@@ -71,7 +71,7 @@ class CommitLoopSpec extends AnyFunSuite {
       seed(dir, race)
       val (v0, st0) = SnapshotLog.readState(fs, dir)
       val attempt = scala.util.Try(
-        Commit.snapshot(fs, dir, "probe", "main", rule) { (id, head) =>
+        Commit.snapshot(fs, dir, "probe", "main", rule, None) { (id, head) =>
           head.get.carried(id, "probe", 0L)
         })
       val (v1, st1) = SnapshotLog.readState(fs, dir)

@@ -89,6 +89,11 @@ class SummaryCountsSpec extends SparkSpec {
     val out = fs.create(logPath, true)
     try out.write(legacy.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    // that layout kept the schema beside the log
+    val schemaOut = fs.create(
+      new org.apache.hadoop.fs.Path(legacyLoc, "_graft/schema.json"), true)
+    try schemaOut.write(df.schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally schemaOut.close()
     val s = GraftTable.load(spark, legacyLoc).currentSnapshot.get
     assert(s.deleteFileCount.isEmpty && s.eqDeleteFileCount.isEmpty,
       "pre-counts log must read as unknown, not zero")

@@ -129,6 +129,9 @@ class WriteSchemaSpec extends SparkSpec {
   private val writes: Seq[(String, (GraftTable, DataFrame) => Any)] = Seq(
     "append" -> ((t, df) => t.append(df)),
     "upsert" -> ((t, df) => t.upsert(df, Seq("k"))),
+    // key names resolve like the frame's columns
+    "upsert and deleteByKeys keyed K" -> ((t, df) => {
+      t.upsert(df, Seq("K")); t.deleteByKeys(Seq(3L).toDF("K")) }),
     "merge" -> ((t, df) => t.merge(df, Seq("k"))),
     "appendBatch" -> ((t, df) => GraftSink.appendBatch(t, "q")(df, 0L)),
     "overwrite" -> ((t, df) => t.overwrite(df)))
