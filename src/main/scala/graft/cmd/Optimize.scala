@@ -3,9 +3,9 @@ package graft.cmd
 import java.time.Clock
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.functions.col
 
-import graft.meta.{Commit, GraftTable}
+import graft.meta.{Commit, FileSkipping, GraftTable}
 
 /** File-size compaction, Iceberg `rewrite_data_files` (binpack) shape:
   * SELECT the mis-sized files from the manifest — undersized ones to
@@ -88,7 +88,7 @@ object Optimize {
       // manifests, so every entry must be materialized here (Iceberg's
       // rewrite_position_delete_files folded into binpack). Tables
       // without deletes have no targets, found with no job.
-      binpack(table, current, table.deleteTargets(), lit(true),
+      binpack(table, current, table.deleteTargets(), FileSkipping.KeepAll,
         targetFileBytes, clock)
     }
 
@@ -99,21 +99,13 @@ object Optimize {
                       targetFileBytes: Long, clock: Clock): Unit = {
     val minBytes = (targetFileBytes * MinFileSizeRatio).toLong
     val maxBytes = (targetFileBytes * MaxFileSizeRatio).toLong
-    val candidate = scope && (col("size_bytes") < minBytes ||
-      col("size_bytes") > maxBytes || col("has_deletes").isNotNull)
-    val candRows = table.files
-      .withColumn("has_deletes", when(col("path").isin(targets.toSeq: _*), lit(true)))
-      .filter(candidate)
-      .select("path", "added_snapshot_id", "size_bytes", "has_deletes")
-      .collect()
-    val numSmall = candRows.count(r => r.getLong(2) < minBytes)
-    val numForced = candRows.count(r =>
-      !r.isNullAt(3) || r.getLong(2) > maxBytes)
+    def forced(f: graft.meta.ManifestEntry) = f.sizeBytes > maxBytes || targets(f.path)
+    val cands = table.scopeOf(current, scope).files
+      .filter(f => f.sizeBytes < minBytes || forced(f))
     // lone small files aren't worth a rewrite; any oversized or
     // delete-laden file always is
-    if (numSmall < MinInputFiles && numForced == 0) return
-    val cands = candRows.toIndexedSeq.map(r => graft.meta.ManifestEntry(
-      r.getString(0), r.getLong(2), if (r.isNullAt(1)) 0L else r.getLong(1)))
+    if (cands.count(_.sizeBytes < minBytes) < MinInputFiles && !cands.exists(forced))
+      return
     val candBytes = cands.map(_.sizeBytes).sum
     val nOut = math.max(1L,
       (candBytes + targetFileBytes - 1) / targetFileBytes).toInt

@@ -1,6 +1,6 @@
 package graft.meta
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CatalystShims
 import org.apache.spark.sql.types._
@@ -20,7 +20,10 @@ import org.apache.spark.sql.types._
   * Every function returns a Column over manifest rows that is TRUE for
   * every file holding at least one matching row — pruning only ever
   * returns a superset, and the caller's exact step (the row predicate,
-  * the join) runs on what survives. The conservative rules live here and
+  * the join) runs on what survives. [[ManifestIO.survivingFiles]] lists
+  * the files a rule admits: evaluated on the driver over the cached
+  * manifest rows below the local-read gate, as one Spark job above it,
+  * with the same result either way. The conservative rules live here and
   * nowhere else:
   *   - a missing statistic keeps the file (a missing bound on either
   *     side of a range comparison, a missing null count);
@@ -130,8 +133,8 @@ object FileSkipping {
               .add("h", LongType, nullable = false), containsNull = false))
           transform(filter(pairs, p => mayOverlap(c, dt, p("v"), p("v"))), _("h"))
         }
-      // one codegen'd probe per file reads its bloom once (a Scala UDF
-      // would break whole-stage codegen for the whole manifest filter)
+      // one probe per file reads its bloom once (a Scala UDF would break
+      // whole-stage codegen for the distributed manifest filter)
       hull && CatalystShims.bloomProbe(element_at(col("blooms"), c), probes)
     }
   }
@@ -170,15 +173,4 @@ object FileSkipping {
     mn.isNull || mx.isNull ||
       (substring(mn, 1, p.length) <= p && substring(mx, 1, p.length) >= p)
   }
-
-  /** The manifest rows `keep` admits, as the entries a
-    * [[graft.sources.GraftFileIndex]] lists: path and size straight from
-    * the manifest (no file is listed or stat'ed), and the added id that
-    * picks each data file's schema generation (a missing one reads as
-    * 0). */
-  def survivingFiles(manifests: DataFrame,
-                     keep: Column): IndexedSeq[ManifestEntry] =
-    manifests.filter(keep).select("path", "size_bytes", "added_snapshot_id")
-      .collect().toIndexedSeq.map(r => ManifestEntry(r.getString(0),
-        r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
 }

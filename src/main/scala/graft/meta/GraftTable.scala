@@ -543,8 +543,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Every live data file of `s`: the whole-snapshot scope. */
   private[graft] def scopeOf(s: Snapshot): FileScope =
-    new FileScope(s.manifests, FileSkipping.survivingFiles(manifestDf(s.manifests),
-      FileSkipping.KeepAll), Some(s))
+    new FileScope(s.manifests, survivingFiles(s.manifests, FileSkipping.KeepAll), Some(s))
 
   /** The live data files of `s` that `keep` admits (a subset scope). */
   private[graft] def scopeOf(s: Snapshot, keep: Column): FileScope =
@@ -553,7 +552,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   /** The files `manifests` list (data or delete) that `keep` admits. */
   private def listedScope(manifests: Seq[String],
                           keep: Column = FileSkipping.KeepAll): FileScope =
-    FileScope(manifests, FileSkipping.survivingFiles(manifestDf(manifests), keep))
+    FileScope(manifests, survivingFiles(manifests, keep))
+
+  private def survivingFiles(manifests: Seq[String], keep: Column): IndexedSeq[ManifestEntry] =
+    ManifestIO.survivingFiles(spark, hadoopConf, manifests, keep)
 
   private[graft] def liveFiles: IndexedSeq[ManifestEntry] =
     liveFiles(FileSkipping.KeepAll)
@@ -572,8 +574,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * ([[FileSkipping.mayMatchKeyRange]]). Only boundable key columns are
     * aggregated: the min/max aggregate is one job over the source key
     * set, skipped when no key column can prune; the manifest filter
-    * folds into the driver-local manifest relation, job-free below the
-    * local-read gate. */
+    * runs on the driver's cached manifest rows below the local-read
+    * gate, with no query. */
   private[graft] def pairsOverlappingKeys(keys: DataFrame,
                                           keyCols: Seq[String]): IndexedSeq[ManifestEntry] =
     liveFiles {
@@ -716,7 +718,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * column (necessary for any entry to match; missing bounds keep the
     * file conservatively) — an upsert touching one key range does not
     * force a whole-table rewrite. Each eq file's bounds and intro id
-    * enter one manifest filter as literals: job-free below the
+    * enter one manifest filter as literals: query-free below the
     * local-read gate. */
   private[graft] def deleteTargets(also: Option[DataFrame] = None): Set[String] = {
     val cur = currentSnapshot
@@ -741,7 +743,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           lit(f.nullCounts.get(k).forall(_ > 0)))
       }
     }.reduceOption(_ || _).fold(named)(keep =>
-      named ++ FileSkipping.survivingFiles(manifestDf(cur.get.manifests), keep).map(_.path))
+      named ++ survivingFiles(cur.get.manifests, keep).map(_.path))
   }
 
   /** Schema-aligned scan of `scope` (files of `s`) with the snapshot's
@@ -1208,6 +1210,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       require(cur.fieldNames.contains(from), s"no such column $from")
       require(!cur.fieldNames.contains(to), s"column $to already exists")
       requireNotPartitionSource(m.spec, from, "rename")
+      requireNotEqDeleteKey(m, from, "rename")
       StructType(cur.fields.map(f => if (f.name == from) f.copy(name = to) else f))
     }
 
@@ -1219,6 +1222,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       require(cur.fieldNames.contains(name), s"no such column $name")
       require(cur.fields.length > 1, "cannot drop the last column")
       requireNotPartitionSource(m.spec, name, "drop")
+      requireNotEqDeleteKey(m, name, "drop")
       StructType(cur.fields.filterNot(_.name == name))
     }
 
@@ -1228,6 +1232,17 @@ final class GraftTable(val spark: SparkSession, val location: String) {
                                         op: String): Unit =
     require(!spec.exists(_.column == column),
       s"cannot $op $column: it is a partition-spec source column")
+
+  /** An equality-delete file keys its entries by column name, and every
+    * read that applies it resolves those names against the current
+    * schema — evolving one away would make each such read fail. Any
+    * snapshot in the log can be read, so every eq-delete file any of
+    * them lists counts until optimize materializes it and expiry drops
+    * the snapshots that list it. */
+  private def requireNotEqDeleteKey(m: TableMetadata, column: String, op: String): Unit =
+    require(!eqFileInfos(m.snapshots.flatMap(_.eqDeleteManifests).distinct)
+        .exists(_.keys.contains(column)),
+      s"cannot $op $column: it keys an outstanding equality-delete file")
 
   /** Iceberg's exact type-promotion rules (spec §Schemas, "Type
     * Promotion"): int→long, float→double, decimal precision growth at

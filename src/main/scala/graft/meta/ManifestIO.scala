@@ -11,9 +11,13 @@ import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Literal, Predicate, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.graft.CatalystShims
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
@@ -31,14 +35,19 @@ import org.apache.spark.sql.types._
   * from coordinator-resident metadata).
   *
   * Scale posture: reads are SIZE-GATED. Below [[LocalReadMaxBytes]] of
-  * manifest bytes the rows are read on the driver (with a per-JVM cache —
-  * manifest dirs are UUID-named and immutable once a commit lands, so
-  * cached rows can never go stale) and served as a [[LocalRelation]]:
-  * Catalyst folds Filter/Project into it, so every planning-time manifest
-  * collect is job-free, and joins against it broadcast for free. Above
-  * the gate (a ~1M-file table's manifests are GBs) callers fall back to
-  * the distributed parquet read — the bounds maps never touch the driver,
-  * preserving the posture documented on [[graft.sources.GraftFileIndex]].
+  * manifest bytes the rows are read on the driver (with a per-JVM cache
+  * of Catalyst internal rows — manifest dirs are UUID-named and
+  * immutable once a commit lands, so cached rows can never go stale).
+  * File listing is [[survivingFiles]]: there the keep predicate is
+  * resolved against the manifest attributes and evaluated, interpreted,
+  * over the cached rows — no query is planned or executed, so listing a
+  * snapshot, pruning a scan or finding a write's candidate files starts
+  * no SQL execution. [[relation]] serves the same rows as a
+  * LocalRelation for callers that join or aggregate the manifest (joins
+  * against it broadcast for free). Above the gate (a ~1M-file table's
+  * manifests are GBs) both fall back to the distributed parquet read —
+  * the bounds maps never touch the driver, preserving the posture
+  * documented on [[graft.sources.GraftFileIndex]].
   *
   * Writes mirror the read gate: a commit whose inventory is already
   * driver-resident (the footer fast path) writes its single-file manifest
@@ -72,16 +81,17 @@ object ManifestIO {
     * regardless of how many tables one driver serves. */
   private val MaxCachedBytes = 256L << 20
 
-  /** manifest dir (or file) path → (decoded rows, on-disk bytes).
-    * Access-ordered LRU bounded by [[MaxCachedBytes]]; entries are
-    * immutable (UUID-named dirs, rewritten only before their commit's
-    * CAS lands — i.e. before any reader can name them). */
+  /** manifest dir (or file) path → (decoded rows in Catalyst's internal
+    * form, on-disk bytes). Access-ordered LRU bounded by
+    * [[MaxCachedBytes]]; entries are immutable (UUID-named dirs,
+    * rewritten only before their commit's CAS lands — i.e. before any
+    * reader can name them). */
   private val cache =
-    new java.util.LinkedHashMap[String, (IndexedSeq[Row], Long)](
+    new java.util.LinkedHashMap[String, (IndexedSeq[InternalRow], Long)](
       64, 0.75f, true)
   private var cachedBytes = 0L
 
-  private def cachePut(path: String, rows: IndexedSeq[Row],
+  private def cachePut(path: String, rows: IndexedSeq[InternalRow],
                        bytes: Long): Unit = cache.synchronized {
     Option(cache.remove(path)).foreach(old => cachedBytes -= old._2)
     cache.put(path, (rows, bytes))
@@ -93,32 +103,100 @@ object ManifestIO {
     }
   }
 
-  private def cacheGet(path: String): Option[(IndexedSeq[Row], Long)] =
+  private def cacheGet(path: String): Option[(IndexedSeq[InternalRow], Long)] =
     cache.synchronized(Option(cache.get(path)))
+
+  private lazy val toInternal =
+    CatalystTypeConverters.createToCatalystConverter(GraftTable.ManifestSchema)
+  private lazy val toScala =
+    CatalystTypeConverters.createToScalaConverter(GraftTable.ManifestSchema)
 
   /** Seed the cache with just-written rows, priced at the REAL bytes
     * [[writeLocal]] returned — bloom-bearing rows can be ~200 KB each,
     * so a flat per-row estimate would let the byte bound lie. */
   private[graft] def cacheSeed(path: String, rows: IndexedSeq[Row],
                                bytes: Long): Unit =
-    cachePut(path, rows, bytes)
+    cachePut(path, rows.map(r => toInternal(r).asInstanceOf[InternalRow]), bytes)
 
-  /** Test hook: how many manifest relations were served driver-locally. */
+  /** How many manifest reads were served driver-locally (one per
+    * [[relation]] or [[survivingFiles]] call the cache or a driver read
+    * answered). */
   private[graft] val localReadHits = new java.util.concurrent.atomic.AtomicLong
 
-  /** The manifest relation for `paths` — LocalRelation-backed under the
-    * size gate (planning-time filters/collects are then job-free), else
-    * the distributed parquet read. */
+  /** The manifest relation for `paths`, for callers that join or
+    * aggregate it — a LocalRelation over the cached rows under the size
+    * gate, else the distributed parquet read. File listing goes through
+    * [[survivingFiles]] instead. */
   def relation(spark: SparkSession, conf: Configuration,
                paths: Seq[String]): DataFrame =
     if (paths.isEmpty) emptyRelation(spark)
-    else readLocal(conf, paths) match {
+    else readLocalRows(conf, paths) match {
       case Some(rows) =>
-        import scala.jdk.CollectionConverters._
         localReadHits.incrementAndGet()
-        spark.createDataFrame(rows.asJava, GraftTable.ManifestSchema)
-      case None =>
-        spark.read.schema(GraftTable.ManifestSchema).parquet(paths: _*)
+        CatalystShims.ofRows(spark,
+          LocalRelation(DataTypeUtils.toAttributes(GraftTable.ManifestSchema), rows))
+      case None => distributedRelation(spark, paths)
+    }
+
+  private def distributedRelation(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema(GraftTable.ManifestSchema).parquet(paths: _*)
+
+  /** The files `paths` list whose manifest rows `keep` admits, as the
+    * entries a [[graft.sources.GraftFileIndex]] lists: path and size
+    * straight from the manifest (no file is listed or stat'ed), and the
+    * added id that picks each data file's schema generation (a missing
+    * one reads as 0). The one way src/main lists files from manifests.
+    *
+    * Under the size gate nothing is planned: `keep` is resolved once
+    * against the manifest attributes (the analyzer alone, over a
+    * relation with no rows), bound, and evaluated interpreted over the
+    * cached rows; [[FileSkipping.KeepAll]] evaluates nothing. Above the
+    * gate it is one Spark job over the manifest parquet. `keep` keeps a
+    * row when it is TRUE (NULL drops, as in a filter). */
+  def survivingFiles(spark: SparkSession, conf: Configuration, paths: Seq[String],
+                     keep: Column): IndexedSeq[ManifestEntry] =
+    if (paths.isEmpty) IndexedSeq.empty
+    else readLocalRows(conf, paths) match {
+      case Some(rows) =>
+        localReadHits.incrementAndGet()
+        val admitted =
+          if (keep == FileSkipping.KeepAll) rows
+          else rows.filter(admits(spark, keep))
+        admitted.map(r => ManifestEntry(r.getUTF8String(0).toString, r.getLong(1),
+          if (r.isNullAt(7)) 0L else r.getLong(7)))
+      case None => distributedFiles(spark, paths, keep)
+    }
+
+  /** [[survivingFiles]] above the size gate: one Spark job filters the
+    * manifest parquet. `private[graft]` so tests can run both paths
+    * over the same small manifests. */
+  private[graft] def distributedFiles(spark: SparkSession, paths: Seq[String],
+                                      keep: Column): IndexedSeq[ManifestEntry] =
+    distributedRelation(spark, paths).filter(keep)
+      .select("path", "size_bytes", "added_snapshot_id")
+      .collect().toIndexedSeq.map(r => ManifestEntry(r.getString(0),
+        r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
+
+  /** `keep` as an interpreted predicate over manifest rows: resolved by
+    * the analyzer against the manifest attributes, its runtime-replaced
+    * functions swapped for their replacements (the optimizer's
+    * `ReplaceExpressions`, which interpreted evaluation needs), its
+    * constant subexpressions folded (the optimizer's `ConstantFolding`:
+    * the hull of a value list is one comparison per row, not a pass over
+    * the list), bound to ordinals. */
+  private def admits(spark: SparkSession, keep: Column): InternalRow => Boolean =
+    emptyRelation(spark).filter(keep).queryExecution.analyzed match {
+      case Filter(cond, child) =>
+        val p = Predicate.createInterpreted(BindReferences.bindReference(
+          cond.transformDown { case e: RuntimeReplaceable => e.replacement }
+            .transformUp { case e if e.foldable && !e.isInstanceOf[Literal] =>
+              try Literal.create(e.eval(), e.dataType)
+              catch { case scala.util.control.NonFatal(_) => e } },
+          child.output))
+        p.initialize(0)
+        p.eval
+      case other => throw new IllegalStateException(
+        s"manifest filter analyzed to an unexpected plan:\n$other")
     }
 
   /** Empty manifest relation as a LocalRelation (an emptyRDD-backed frame
@@ -134,7 +212,12 @@ object ManifestIO {
     * undecodable (caller falls back to the distributed read — fallback
     * is always correct, local is only a latency optimization). */
   def readLocal(conf: Configuration, paths: Seq[String]): Option[IndexedSeq[Row]] =
-    readLocalByDir(conf, paths).map(_.flatMap(_._2))
+    readLocalRows(conf, paths).map(_.map(r => toScala(r).asInstanceOf[Row]))
+
+  /** [[readLocal]] in Catalyst's internal form, as cached. */
+  private def readLocalRows(conf: Configuration,
+                            paths: Seq[String]): Option[IndexedSeq[InternalRow]] =
+    readLocalInternal(conf, paths).map(_.flatMap(_._2))
 
   /** [[readLocal]] with per-dir attribution: (normalized dir path, its
     * rows) in input order — for callers that need to know which
@@ -147,7 +230,12 @@ object ManifestIO {
     * manifest set to a distributed re-read forever (worst case returned
     * from cache = the cache's own 256 MB byte bound). */
   def readLocalByDir(conf: Configuration, paths: Seq[String])
-      : Option[IndexedSeq[(String, IndexedSeq[Row])]] = {
+      : Option[IndexedSeq[(String, IndexedSeq[Row])]] =
+    readLocalInternal(conf, paths).map(_.map { case (dir, rows) =>
+      dir -> rows.map(r => toScala(r).asInstanceOf[Row]) })
+
+  private def readLocalInternal(conf: Configuration, paths: Seq[String])
+      : Option[IndexedSeq[(String, IndexedSeq[InternalRow])]] = {
     try {
       val parts = paths.map { p =>
         val key = GraftTable.normalize(p)
@@ -185,15 +273,18 @@ object ManifestIO {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  // ---- parquet-mr Group → ManifestSchema Row ------------------------------
+  // ---- parquet-mr Group → ManifestSchema row -----------------------------
 
-  private def readFile(conf: Configuration, file: Path): Iterator[Row] = {
+  private def readFile(conf: Configuration, file: Path): Iterator[InternalRow] = {
     val reader = ParquetReader
       .builder(new GroupReadSupport(), file).withConf(conf).build()
-    val buf = IndexedSeq.newBuilder[Row]
+    val buf = IndexedSeq.newBuilder[InternalRow]
     try {
       var g = reader.read()
-      while (g != null) { buf += toRow(g); g = reader.read() }
+      while (g != null) {
+        buf += toInternal(toRow(g)).asInstanceOf[InternalRow]
+        g = reader.read()
+      }
     } finally reader.close()
     buf.result().iterator
   }
@@ -279,8 +370,6 @@ object ManifestIO {
     if (fs.exists(dir))
       GraftTable.listFiles(fs, dir).foreach(f => fs.delete(f.getPath, false))
     val file = new Path(dir, s"part-00000-${UUID.randomUUID()}.snappy.parquet")
-    val toInternal =
-      CatalystTypeConverters.createToCatalystConverter(GraftTable.ManifestSchema)
     val writer = new RowWriterBuilder(
       HadoopOutputFile.fromPath(file, conf), new ParquetWriteSupport())
       .withConf(conf)

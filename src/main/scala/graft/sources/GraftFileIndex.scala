@@ -30,9 +30,10 @@ import graft.meta.{FileScope, FileSkipping, GraftTable, ManifestEntry, ManifestI
   * time to a keep-file Column over the scope's manifest rows
   * ([[FileSkipping]]): a whole snapshot lists just the surviving rows
   * (its full list is never read then), a subset keeps its own files
-  * among them. Below the [[ManifestIO.LocalReadMaxBytes]] gate (32
-  * MB of manifest) the manifest is a driver-local relation and the
-  * filter folds into it, with no Spark job; above it the manifest is
+  * among them ([[ManifestIO.survivingFiles]]). Below the
+  * [[ManifestIO.LocalReadMaxBytes]] gate (32 MB of manifest) the
+  * keep-file Column is evaluated on the driver over the cached manifest
+  * rows, with no query planned or executed; above it the manifest is
   * filtered distributively AS A SPARK JOB — at ~1M files the bounds
   * maps would be multi-GB of driver heap if materialized, and there
   * they never leave the executors.
@@ -137,8 +138,8 @@ final class GraftFileIndex(spark: SparkSession, table: GraftTable,
       else {
         val key = dataFilters.map(_.canonicalized.toString).sorted.mkString("&")
         listCache.computeIfAbsent(key, _ => {
-          val survivors = FileSkipping.survivingFiles(
-            ManifestIO.relation(spark, hadoopConf, s.manifests), conds.reduce(_ && _))
+          val survivors = ManifestIO.survivingFiles(spark, hadoopConf, s.manifests,
+            conds.reduce(_ && _))
           // a whole snapshot's survivors are its files; a subset keeps
           // its own among them
           if (s.whole.isDefined) survivors

@@ -66,6 +66,33 @@ class EqDeleteSpec extends SparkSpec {
     assert(t.rowCount === 10)
   }
 
+  test("a key column of an outstanding equality-delete file is not renamed or dropped") {
+    val clock = new TestClock
+    val t = GraftTable.create(spark, tmpDir("eqevolve") + "/t", schema)
+    t.append(rows(0, 10, "a"), clock)          // s1
+    t.deleteByKeys(Seq(1L).toDF("k"), clock)   // s2: eq file keyed by k
+    Seq[GraftTable => Unit](_.renameColumn("k", "k2"), _.dropColumn("k")).foreach { evolve =>
+      val e = intercept[IllegalArgumentException](evolve(t))
+      assert(e.getMessage.contains("equality-delete"), e.getMessage)
+    }
+    // nothing committed: reads still resolve the key; other columns evolve
+    assert(t.schema.fieldNames.toSeq == Seq("k", "v"))
+    t.renameColumn("v", "w")
+    assert(t.read.filter($"w" === "a2").count() == 1)
+    assert(t.read.count() == 9)
+    // optimize materializes the delete, but s2 still lists the file and
+    // can be read as of; once expiry drops it the key evolves
+    t.optimize(clock = clock)
+    assert(intercept[IllegalArgumentException](t.renameColumn("k", "k2"))
+      .getMessage.contains("equality-delete"))
+    clock.advanceDays(11)
+    t.append(rows(100, 101, "x").withColumnRenamed("v", "w"), clock)
+    t.expireSnapshots(retentionDays = 5, clock = clock)
+    t.renameColumn("k", "k2")
+    assert(t.read.filter($"k2" === 1L).count() == 0)
+    assert(t.read.count() == 10)
+  }
+
   test("eq-delete intro id survives expiry of the introducing snapshot") {
     val clock = new TestClock
     val t = GraftTable.create(spark, tmpDir("eqexp") + "/t", schema)

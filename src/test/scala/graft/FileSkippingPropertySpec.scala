@@ -5,11 +5,12 @@ import java.time.{Instant, LocalDate}
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystShims
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.meta.{FileSkipping, GraftTable}
+import graft.meta.{FileSkipping, GraftTable, ManifestIO}
 
 /** The superset contract of [[FileSkipping]]: for seeded random small
   * files and random probes, every file holding at least one row that
@@ -24,6 +25,11 @@ import graft.meta.{FileSkipping, GraftTable}
   * predicate evaluated per row next to `_metadata.file_path`. A few
   * predicates per table also go through the `graft` source, whose
   * pruned scan must return exactly the rows a plain scan returns.
+  *
+  * The same rules, over those tables' manifests and over random
+  * manifest rows, admit exactly the same files on the driver path
+  * (interpreted over the cached rows) as on the Spark path that serves
+  * manifests above the local-read gate.
   *
   * A second input is an evolved table (one widened, one renamed and one
   * added column) read through [[GraftTable.read]] with random
@@ -158,6 +164,87 @@ class FileSkippingPropertySpec extends SparkSpec {
     val idle = (rules("s", StringType, Probe(null, null, Nil, false, "")).map(_._1)
       .toSet -- pruned.filter(_._2 > 0).keySet)
     assert(idle.isEmpty, s"rules that never pruned a file: $idle")
+  }
+
+  /** Random manifest rows written straight to a manifest dir: missing
+    * stat maps and missing entries, bounds from the value domain (NaN,
+    * -0.0 and 0.0 among them) or undecodable, min above max, blooms
+    * over random values or none, missing added ids. */
+  private def randomManifest(seed: Seed): Seq[Row] = {
+    val rnd = new scala.util.Random(seed.long._1)
+    def sometimes(pct: Int) = rnd.nextInt(100) < pct
+    def bound(c: String): String =
+      if (sometimes(10)) Seq("x", "", "1e999", "2020-13-45")(rnd.nextInt(4))
+      else String.valueOf(domain(c)(rnd.nextInt(domain(c).size)))
+    def bloom(c: String, dt: DataType): Array[Byte] = {
+      val f = org.apache.spark.util.sketch.BloomFilter.create(4, 0.05)
+      (0 to rnd.nextInt(3)).foreach(_ => f.putLong(CatalystShims.xxHash64(
+        domain(c)(rnd.nextInt(domain(c).size)), dt)))
+      val out = new java.io.ByteArrayOutputStream
+      f.writeTo(out)
+      out.toByteArray
+    }
+    (0 until 12).map { i =>
+      val n = 1L + rnd.nextInt(12)
+      def statMap[V](pct: Int)(v: StructField => V): Map[String, V] =
+        if (sometimes(15)) null
+        else schema.fields.filter(_ => sometimes(pct)).map(f => f.name -> v(f)).toMap
+      Row(s"file:/fsprop/random/part-$i.parquet", 100L + i, n,
+        statMap(85)(_ => java.lang.Long.valueOf(rnd.nextInt(n.toInt + 1).toLong)),
+        statMap(80)(f => bound(f.name)), statMap(80)(f => bound(f.name)),
+        statMap(50)(f => bloom(f.name, f.dataType)),
+        if (sometimes(25)) null else java.lang.Long.valueOf(rnd.nextInt(10).toLong))
+    }
+  }
+
+  test("the driver path and the Spark path admit the same files (seeded)") {
+    val conf = spark.sessionState.newHadoopConf()
+    val hitsBefore = ManifestIO.localReadHits.get
+    var rulesRun = 0
+    var pruning = 0
+    (0 until 3).foreach { i =>
+      val seed = Seed(9300L + i)
+      val files = caseGen.pureApply(Gen.Parameters.default, seed)
+      // a written table's manifests, with and without blooms, and a
+      // random manifest
+      val tables = Seq(false, true).map { blooms =>
+        val t = GraftTable.create(spark, tmpDir(s"fspaths$i") + "/t", schema)
+        if (blooms)
+          t.setProperties(Map("write.bloom-filter.columns" -> "l,d,s,dt,ts"))
+        files.foreach(rows => t.append(
+          spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+            .coalesce(1)))
+        s"blooms=$blooms" -> t.currentSnapshot.get.manifests
+      }
+      val dir = new org.apache.hadoop.fs.Path(tmpDir(s"fspathsm$i"), "manifest")
+      ManifestIO.writeLocal(dir.getFileSystem(conf), ManifestIO.writeConf(conf), dir,
+        randomManifest(seed))
+      (tables :+ ("random" -> Seq(dir.toString))).foreach { case (what, manifests) =>
+        val all = ManifestIO.survivingFiles(spark, conf, manifests, FileSkipping.KeepAll)
+        val older = ("added before 5", col("added_snapshot_id").isNull ||
+          col("added_snapshot_id") < 5)
+        val keeps = older +: schema.fields.toSeq.zipWithIndex.flatMap { case (f, j) =>
+          val p = probeGen(f.name).pureApply(Gen.Parameters.default, seed.reseed(j))
+          rules(f.name, f.dataType, p).map { case (name, keep, _) =>
+            (s"$name(${f.name}) $p", keep)
+          }
+        }
+        keeps.foreach { case (label, keep) =>
+          // the Spark path lists files in its scan's order
+          val driver = ManifestIO.survivingFiles(spark, conf, manifests, keep).sortBy(_.path)
+          val distributed = ManifestIO.distributedFiles(spark, manifests, keep).sortBy(_.path)
+          assert(driver == distributed,
+            s"seed ${9300 + i} $what $label: the driver path kept " +
+              s"${driver.map(_.path)}, the Spark path ${distributed.map(_.path)}")
+          rulesRun += 1
+          if (driver.size < all.size) pruning += 1
+        }
+      }
+    }
+    // non-vacuous: the driver path served every listing, and most rules
+    // pruned a file somewhere
+    assert(ManifestIO.localReadHits.get - hitsBefore >= rulesRun)
+    assert(pruning > rulesRun / 2, s"only $pruning of $rulesRun listings pruned a file")
   }
 
   test("pushdown through the per-generation alignment keeps every match (seeded)") {
