@@ -543,7 +543,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Every live data file of `s`: the whole-snapshot scope. */
   private[graft] def scopeOf(s: Snapshot): FileScope =
-    new FileScope(s.manifests, survivingFiles(s.manifests, FileSkipping.KeepAll), Some(s))
+    new FileScope(s.manifests, listedScope(s.manifests).files, Some(s))
 
   /** The live data files of `s` that `keep` admits (a subset scope). */
   private[graft] def scopeOf(s: Snapshot, keep: Column): FileScope =
@@ -552,10 +552,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   /** The files `manifests` list (data or delete) that `keep` admits. */
   private def listedScope(manifests: Seq[String],
                           keep: Column = FileSkipping.KeepAll): FileScope =
-    FileScope(manifests, survivingFiles(manifests, keep))
-
-  private def survivingFiles(manifests: Seq[String], keep: Column): IndexedSeq[ManifestEntry] =
-    ManifestIO.survivingFiles(spark, hadoopConf, manifests, keep)
+    FileScope(manifests, ManifestIO.survivingFiles(spark, hadoopConf, manifests, keep))
 
   private[graft] def liveFiles: IndexedSeq[ManifestEntry] =
     liveFiles(FileSkipping.KeepAll)
@@ -743,7 +740,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           lit(f.nullCounts.get(k).forall(_ > 0)))
       }
     }.reduceOption(_ || _).fold(named)(keep =>
-      named ++ survivingFiles(cur.get.manifests, keep).map(_.path))
+      named ++ listedScope(cur.get.manifests, keep).files.map(_.path))
   }
 
   /** Schema-aligned scan of `scope` (files of `s`) with the snapshot's
