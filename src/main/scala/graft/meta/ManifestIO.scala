@@ -177,6 +177,10 @@ object ManifestIO {
       .collect().toIndexedSeq.map(r => ManifestEntry(r.getString(0),
         r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
 
+  /** The manifest attributes, over no rows: what [[admits]] resolves against. */
+  private lazy val noRows =
+    LocalRelation(DataTypeUtils.toAttributes(GraftTable.ManifestSchema))
+
   /** `keep` as an interpreted predicate over manifest rows: resolved by
     * the analyzer against the manifest attributes, its runtime-replaced
     * functions swapped for their replacements (the optimizer's
@@ -185,7 +189,7 @@ object ManifestIO {
     * the hull of a value list is one comparison per row, not a pass over
     * the list), bound to ordinals. */
   private def admits(spark: SparkSession, keep: Column): InternalRow => Boolean =
-    emptyRelation(spark).filter(keep).queryExecution.analyzed match {
+    CatalystShims.analyzeFilter(spark, keep, noRows) match {
       case Filter(cond, child) =>
         val p = Predicate.createInterpreted(BindReferences.bindReference(
           cond.transformDown { case e: RuntimeReplaceable => e.replacement }

@@ -37,6 +37,17 @@ object CatalystShims {
   def xxHash64(v: Any, dt: DataType): Long =
     new XxHash64(Seq(Literal.create(v, dt))).eval(InternalRow.empty).asInstanceOf[Long]
 
+  /** `keep` as a filter over `child`, through the session's analyzer
+    * and its checks, with no Dataset or query execution around it. */
+  def analyzeFilter(spark: org.apache.spark.sql.SparkSession, keep: Column,
+                    child: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    classic.sessionState.analyzer.executeAndCheck(
+      org.apache.spark.sql.catalyst.plans.logical.Filter(classic.expression(keep), child),
+      new org.apache.spark.sql.catalyst.QueryPlanningTracker)
+  }
+
   /** A Catalyst expression (parsed, possibly unresolved) as a Column. */
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
