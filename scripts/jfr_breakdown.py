@@ -1,31 +1,35 @@
 #!/usr/bin/env python3
-"""Main-thread JFR samples of ingest_maintain's write ops, by layer.
+"""Main-thread JFR samples of a perfbench run's ops, by layer.
 
-Usage: python3 scripts/jfr_breakdown.py <run.jfr> <dump.json> [--by-stack]
+Usage: python3 scripts/jfr_breakdown.py <run.jfr> <dump.json>
+           [--kinds K1,K2,...] [--by-stack]
 
 The recording comes from a copy of perfbench/run.py whose java command
 also carries
   -XX:StartFlightRecording=filename=<run.jfr>,settings=profile,dumponexit=true
-run as `--workload ingest_maintain --seed N --seconds 20 --trace 1
---dump <dump.json>` (the benchmark itself stays unchanged).
+run as `--workload W --seed N --seconds 20 --trace 1 --dump <dump.json>`
+(the benchmark itself stays unchanged).
 
 Default: execution samples of the client ("main") thread taken inside
-the traced half's top-level write-op spans (the six write kinds), read
-from the dump. --by-stack: every main-thread sample of the whole run
-whose stack passes through a write entry point, set-up and warm-up
-included. Each sample goes to the first layer whose pattern occurs
-anywhere on its stack. The last line sums main-thread parks (JFR's
-20 ms threshold) per write op: in AQE's final-plan wait, or in a job
-wait.
+the traced half's top-level op spans of the given kinds, read from the
+dump. --kinds defaults to ingest_maintain's six write kinds; for
+read_search's merge-on-read queries pass
+`--kinds sources.mor_point,sources.mor_range`. --by-stack: every
+main-thread sample of the whole run whose stack passes through a write
+entry point, set-up and warm-up included (--kinds is then unused).
+Each sample goes to the first layer whose pattern occurs anywhere on
+its stack. The last line sums main-thread parks (JFR's 20 ms
+threshold) per op: in AQE's final-plan wait, or in a job wait.
 """
+import argparse
 import json
 import subprocess
 import sys
 from collections import Counter
 from datetime import datetime
 
-WRITE_KINDS = {"meta.append", "meta.upsert", "meta.delete_mor", "cmd.merge",
-               "sql.delete", "sql.update"}
+WRITE_KINDS = ("meta.append", "meta.upsert", "meta.delete_mor", "cmd.merge",
+               "sql.delete", "sql.update")
 ENTRY = ("graft.meta.GraftTable.append", "graft.meta.GraftTable.upsert",
          "graft.meta.GraftTable.deleteWhereMOR", "graft.meta.GraftTable.merge",
          "graft.sql.GraftSql.exec")
@@ -43,6 +47,8 @@ LAYERS = [
     ("analysis", ("catalyst.analysis",)),
     ("optimizer/planning", ("catalyst.optimizer", "SparkPlanner",
                             "QueryPlanner", "RuleExecutor")),
+    ("codegen compile (janino)", ("org.codehaus.janino",
+                                  "org.codehaus.commons.compiler")),
     ("codegen", ("codegen",)),
     ("encoders", ("ExpressionEncoder", "encoders")),
     ("class loading", ("ClassLoader",)),
@@ -67,11 +73,18 @@ def events(jfr, kind):
 
 
 def main():
-    jfr, dump = sys.argv[1], sys.argv[2]
-    by_stack = sys.argv[3:] == ["--by-stack"]
-    with open(dump) as f:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("jfr")
+    ap.add_argument("dump")
+    ap.add_argument("--kinds", default=",".join(WRITE_KINDS),
+                    help="comma-separated top-level span names")
+    ap.add_argument("--by-stack", action="store_true")
+    args = ap.parse_args()
+    jfr, by_stack = args.jfr, args.by_stack
+    kinds = set(args.kinds.split(","))
+    with open(args.dump) as f:
         ops = [(s["start"], s["end"]) for s in json.load(f)["spans"]
-               if s["parent"] == 0 and s["name"] in WRITE_KINDS]
+               if s["parent"] == 0 and s["name"] in kinds]
 
     def in_op(v):
         t = epoch_ms(v["startTime"])
@@ -91,7 +104,7 @@ def main():
                      if any(p in stack for p in pats)), "other")] += 1
     print("%d main-thread samples (%s)" % (n, "write entry points on the "
           "stack, whole run" if by_stack else
-          "inside %d traced write ops" % len(ops)))
+          "inside %d traced ops of %s" % (len(ops), ", ".join(sorted(kinds)))))
     for name, c in layers.most_common():
         print("  %-44s %4d  %5.1f%%" % (name, c, 100.0 * c / max(n, 1)))
 
@@ -103,7 +116,7 @@ def main():
                "job wait" if "runJob" in stack or "awaitResult" in stack
                else "other")
         parks[key] += float(v["duration"][2:-1]) * 1e3  # "PT0.25S"
-    print("main-thread park ms per write op: " + ", ".join(
+    print("main-thread park ms per op: " + ", ".join(
         "%s %.0f" % (k, t / max(len(ops), 1)) for k, t in sorted(parks.items())))
 
 

@@ -46,8 +46,16 @@ import org.apache.spark.sql.types._
   * names its conflict rule, so a cron maintenance job racing ad-hoc
   * writers (the reference's deployment model) never loses a commit.
   */
-final class GraftTable(val spark: SparkSession, val location: String) {
+final class GraftTable private[graft] (val spark: SparkSession, val location: String,
+                                       private[graft] val positionIndexMaxBytes: Long) {
   import GraftTable._
+
+  /** A handle on the table at `location`. Position deletes totalling up
+    * to [[ManifestIO.LocalReadMaxBytes]] apply through a driver-built
+    * index ([[PositionDeletes]]); tests construct a handle with a
+    * negative bound to run the distributed join over the same table. */
+  def this(spark: SparkSession, location: String) =
+    this(spark, location, ManifestIO.LocalReadMaxBytes)
 
   private val tableDir = new Path(location)
   /** The handle's one Hadoop conf: its FileSystem, footer reads and
@@ -316,7 +324,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * inserts (planned metadata-only from `added_snapshot_id`, exactly
     * like [[readIncremental]]); merge-on-read delete snapshots emit
     * the rows their DELTA delete manifests removed — position entries
-    * by a semi-join at (file, pos), equality entries by a key
+    * at (file, pos) ([[PositionDeletes.select]]), equality entries by a key
     * semi-join against the strictly-older files; upserts emit both
     * their delete and insert events under one commit id. A row
     * appended then deleted inside the range appears twice — once per
@@ -444,12 +452,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         val dels = listedScope(s.deleteManifests.filterNot(prior))
         if (dels.files.isEmpty) None
         else {
-          val del = positionDeletes(dels)
-          val data = readFilesAligned(scopeOf(s), Some(MorPathCol),
-            Some(MorPosCol))
-          Some(stamp(data.join(del,
-              data(MorPathCol) === del("file_path") &&
-                data(MorPosCol) === del("pos"), "left_semi")
+          val scope = scopeOf(s)
+          val data = readFilesAligned(scope, Some(MorPathCol), Some(MorPosCol))
+          Some(stamp(PositionDeletes.select(this, data, MorPathCol, MorPosCol, dels, scope)
             .drop(MorPathCol, MorPosCol), "delete"))
         }
       }
@@ -600,11 +605,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def manifestDf(paths: Seq[String]): DataFrame =
     ManifestIO.relation(spark, hadoopConf, paths)
 
-  /** The (file_path, pos) entries of the position-delete files `dels`
-    * lists, through the same index as data scans. */
-  private def positionDeletes(dels: FileScope): DataFrame =
-    graft.sources.GraftFileIndex.scan(spark, this, DeleteSchema, dels)
-
   /** Live equality-delete file inventory of the current snapshot. */
   def eqDeleteFiles: DataFrame =
     manifestDf(currentSnapshot.map(_.eqDeleteManifests).getOrElse(Seq.empty))
@@ -707,8 +707,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   /** Paths of data files targeted by outstanding delete entries, plus
     * the `path`s of `also` — replacement commits (optimize, row-level
     * CoW) rewrite exactly these to materialize the deletes. Position
-    * deletes name their files; those names and `also`'s paths are
-    * collected in ONE job with no shuffle ([[KeySet.distinctRows]]).
+    * deletes name their files: below the index gate the names are the
+    * index's keys ([[PositionDeletes.targets]]), with no job; `also`'s
+    * paths (and, above the gate, the entries' names) are collected in
+    * ONE job with no shuffle ([[KeySet.distinctRows]]).
     * Equality deletes are pruned metadata-only: a data file is a target
     * only if it was added before the introducing commit AND its
     * manifest bounds overlap the delete file's bounds on EVERY key
@@ -719,11 +721,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * local-read gate. */
   private[graft] def deleteTargets(also: Option[DataFrame] = None): Set[String] = {
     val cur = currentSnapshot
-    val pos = cur.filter(_.deleteManifests.nonEmpty).map(s =>
-      positionDeletes(listedScope(s.deleteManifests))
-        .select(col("file_path").as("path")))
-    val named = (also ++ pos).reduceOption(_ unionByName _)
-      .fold(Set.empty[String])(KeySet.distinctRows(_).map(_.getString(0)).toSet)
+    val dels = cur.filter(_.deleteManifests.nonEmpty).map(s => listedScope(s.deleteManifests))
+    val indexed = dels.flatMap(PositionDeletes.targets(this, _))
+    val joined = dels.filter(_ => indexed.isEmpty).map(d =>
+      PositionDeletes.entries(this, d).select(col("file_path").as("path")))
+    val named = (also ++ joined).reduceOption(_ unionByName _)
+      .fold(Set.empty[String])(KeySet.distinctRows(_).map(_.getString(0)).toSet) ++
+      indexed.getOrElse(Set.empty)
     val tableSchema = schema
     cur.toSeq.flatMap(s => eqFileInfos(s.eqDeleteManifests)).map { f =>
       // the per-file intro (max-of-file for compacted files) is a
@@ -744,11 +748,12 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   }
 
   /** Schema-aligned scan of `scope` (files of `s`) with the snapshot's
-    * outstanding deletes anti-joined away — position deletes by (source
-    * file, row ordinal), equality deletes by key columns against data
-    * files added strictly before the deleting commit. All applications
-    * are distributed joins; files without delete entries stream through
-    * untouched. */
+    * outstanding deletes applied — position deletes by (source file, row
+    * ordinal) through [[PositionDeletes]] (a per-file index predicate
+    * in the scan's own stage below its gate, an anti-join above it),
+    * equality deletes by a key anti-join against data files added
+    * strictly before the deleting commit. Files without delete entries
+    * stream through untouched. */
   private[graft] def morReadFiles(s: Snapshot, scope: FileScope,
                                   pathCol: Option[String] = None,
                                   posCol: Option[String] = None): DataFrame = {
@@ -767,16 +772,15 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   /** Apply `s`'s outstanding deletes (both kinds) to `df0`, which must
     * expose the normalized source path in column `p` and — whenever
     * position deletes exist — the row ordinal in column `pos`. `scope`
-    * (the scanned files) supplies the per-file added ids the equality
-    * strictly-before rule compares against. */
+    * (the scanned files) bounds the position index and supplies the
+    * per-file added ids the equality strictly-before rule compares
+    * against. Position deletes apply through [[PositionDeletes]];
+    * equality deletes by one anti-join per key set. */
   private def applyDeletes(s: Snapshot, df0: DataFrame, p: String,
                            pos: String, scope: FileScope): DataFrame = {
     var df = df0
-    if (s.deleteManifests.nonEmpty) {
-      val del = positionDeletes(listedScope(s.deleteManifests))
-      df = df.join(del,
-        df(p) === del("file_path") && df(pos) === del("pos"), "left_anti")
-    }
+    if (s.deleteManifests.nonEmpty)
+      df = PositionDeletes.exclude(this, df, p, pos, listedScope(s.deleteManifests), scope)
     if (s.eqDeleteManifests.nonEmpty) {
       // per-row added id via a broadcast of the (tiny) path→added map
       import spark.implicits._
@@ -833,7 +837,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * rewriting every affected data file (the copy-on-write
     * [[deleteWhere]]), write a small parquet delete file of
     * (file_path, pos) for the matched rows and commit metadata-only —
-    * data files are untouched. Reads anti-join the entries away;
+    * data files are untouched. Reads apply the entries
+    * ([[PositionDeletes]]);
     * `optimize` and the CoW row-level ops materialize and drop them.
     *
     * Cost is O(matched rows) regardless of how large the touched files
@@ -864,44 +869,53 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           readFilesAligned(scope, Some(MorPathCol), Some(MorPosCol)).filter(matched),
           MorPathCol, MorPosCol, scope)
         .select(col(MorPathCol).as("file_path"), col(MorPosCol).as("pos"))
-      // HASH-cluster by target file: every file's entries land in exactly
-      // one output file (contiguous after the sort), and unlike a range
-      // shuffle there is no boundary-sampling pass. No partition count:
-      // AQE coalesces the shuffle by size, so a small delete writes ONE
-      // file whatever the random data paths hash to (a fixed count
-      // spread the same delete over 3 or 4 files from run to run).
-      // Schema-only files from empty tasks are pruned after the write
-      // (pruneEmptyFiles). The deleted-row count rides on the same write
-      // via observe, not a separate count job.
-      val obs = new org.apache.spark.sql.Observation(
-        s"mor-delete-${UUID.randomUUID()}")
-      val written = writeFiles(newDeletes
-        .observe(obs, count(lit(1)).as("n"))
-        .repartition(col("file_path"))
-        .sortWithinPartitions("file_path", "pos"))
-      // a predicate matching nothing can run ZERO tasks (AQE collapses
-      // the empty shuffle) — no task, no accumulator update, empty
-      // observation map
-      val deleted = obs.get.getOrElse("n", 0L).asInstanceOf[Long]
-      if (deleted == 0L) { fs.delete(written.dir, true); return 0L }
-      val files = pruneEmptyFiles(written) // shuffle writes emit schema-only files
-      // a new delete manifest, written once (no lineage stamp): data
-      // manifests are carried from the fresh head each attempt, so
-      // concurrent appends compose; positions go stale under any other
-      // commit since `cur`
-      val manifest = stage(inventory(files))
-      manifest.write(None)
-      val filesAdded = files.files.size.toLong
-      commitSnapshot("delete", "main", Commit.AppendsSince(cur),
-          rows = false) { (id, head) =>
-        val h = head.get
-        h.carried(id, "delete", clock.millis()).copy(
-          totalRows = h.totalRows - deleted,
-          deleteManifests = h.deleteManifests :+ manifest.path,
-          deleteFileCount = h.deleteFileCount.map(_ + filesAdded))
-      }
-      deleted
+      writePositionDeletes(cur, newDeletes, clock)
     }
+
+  /** Write `entries` ((file_path, pos) rows naming rows of `cur`'s files)
+    * as position-delete files and commit them as one merge-on-read
+    * delete on top of `cur`; run inside [[writeOp]]. Returns the entry
+    * count (the rows deleted, as [[deleteWhereMOR]] derives them). */
+  private[graft] def writePositionDeletes(cur: Snapshot, entries: DataFrame,
+                                           clock: Clock): Long = {
+    // HASH-cluster by target file: every file's entries land in exactly
+    // one output file (contiguous after the sort), and unlike a range
+    // shuffle there is no boundary-sampling pass. No partition count:
+    // AQE coalesces the shuffle by size, so a small delete writes ONE
+    // file whatever the random data paths hash to (a fixed count
+    // spread the same delete over 3 or 4 files from run to run).
+    // Schema-only files from empty tasks are pruned after the write
+    // (pruneEmptyFiles). The deleted-row count rides on the same write
+    // via observe, not a separate count job.
+    val obs = new org.apache.spark.sql.Observation(
+      s"mor-delete-${UUID.randomUUID()}")
+    val written = writeFiles(entries
+      .observe(obs, count(lit(1)).as("n"))
+      .repartition(col("file_path"))
+      .sortWithinPartitions("file_path", "pos"))
+    // a predicate matching nothing can run ZERO tasks (AQE collapses
+    // the empty shuffle) — no task, no accumulator update, empty
+    // observation map
+    val deleted = obs.get.getOrElse("n", 0L).asInstanceOf[Long]
+    if (deleted == 0L) { fs.delete(written.dir, true); return 0L }
+    val files = pruneEmptyFiles(written) // shuffle writes emit schema-only files
+    // a new delete manifest, written once (no lineage stamp): data
+    // manifests are carried from the fresh head each attempt, so
+    // concurrent appends compose; positions go stale under any other
+    // commit since `cur`
+    val manifest = stage(inventory(files))
+    manifest.write(None)
+    val filesAdded = files.files.size.toLong
+    commitSnapshot("delete", "main", Commit.AppendsSince(cur),
+        rows = false) { (id, head) =>
+      val h = head.get
+      h.carried(id, "delete", clock.millis()).copy(
+        totalRows = h.totalRows - deleted,
+        deleteManifests = h.deleteManifests :+ manifest.path,
+        deleteFileCount = h.deleteFileCount.map(_ + filesAdded))
+    }
+    deleted
+  }
 
   /** Equality delete (Iceberg v2's second merge-on-read delete kind):
     * drop every row whose key columns match a row of `keys` — WITHOUT
@@ -1116,7 +1130,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val nOut = math.max(1L,
         (dels.files.map(_.sizeBytes).sum + (64L << 20) - 1) / (64L << 20)).toInt
       // shuffle writes emit schema-only files
-      val merged = pruneEmptyFiles(writeFiles(positionDeletes(dels)
+      val merged = pruneEmptyFiles(writeFiles(PositionDeletes.entries(this, dels)
         .repartition(nOut, col("file_path"))
         .sortWithinPartitions("file_path", "pos")))
       val mergedCount = merged.files.size.toLong
@@ -2383,13 +2397,6 @@ object GraftTable {
     // the columns named by `write.bloom-filter.columns` (absent = none)
     StructField("blooms", MapType(StringType, BinaryType), nullable = true),
     StructField("added_snapshot_id", LongType, nullable = true)))
-
-  /** Row schema of a position-delete file (Iceberg v2 position-delete
-    * shape): the (normalized) data-file path and the row's ordinal
-    * within that file, as exposed by `_metadata.row_index`. */
-  val DeleteSchema: StructType = StructType(Seq(
-    StructField("file_path", StringType, nullable = false),
-    StructField("pos", LongType, nullable = false)))
 
   /** One live equality-delete file: its manifest entry (the added id
     * is the snapshot that introduced it, per-file stamp or legacy log

@@ -49,6 +49,12 @@ import org.apache.spark.sql.types._
   * the bounds maps never touch the driver, preserving the posture
   * documented on [[graft.sources.GraftFileIndex]].
   *
+  * Position-delete files share the gate and the cache: below the same
+  * [[LocalReadMaxBytes]] of live delete-file bytes, [[PositionDeletes]]
+  * reads their entries on the driver and keeps each file's decoded
+  * entries in this LRU (delete files are immutable and UUID-named
+  * like manifest dirs).
+  *
   * Writes mirror the read gate: a commit whose inventory is already
   * driver-resident (the footer fast path) writes its single-file manifest
   * through parquet-mr directly — same bytes-on-disk contract as the Spark
@@ -81,29 +87,29 @@ object ManifestIO {
     * regardless of how many tables one driver serves. */
   private val MaxCachedBytes = 256L << 20
 
-  /** manifest dir (or file) path → (decoded rows in Catalyst's internal
-    * form, on-disk bytes). Access-ordered LRU bounded by
-    * [[MaxCachedBytes]]; entries are immutable (UUID-named dirs,
-    * rewritten only before their commit's CAS lands — i.e. before any
-    * reader can name them). */
-  private val cache =
-    new java.util.LinkedHashMap[String, (IndexedSeq[InternalRow], Long)](
-      64, 0.75f, true)
+  /** immutable path → (its decoded content, price in bytes): a manifest
+    * dir's rows in Catalyst's internal form, priced at their on-disk
+    * bytes, or a position-delete file's entries
+    * ([[PositionDeletes]]), priced at their decoded size. Access-ordered
+    * LRU bounded by [[MaxCachedBytes]]; entries are immutable (UUID-named
+    * dirs, rewritten only before their commit's CAS lands — i.e. before
+    * any reader can name them). */
+  private val cache = new java.util.LinkedHashMap[String, (AnyRef, Long)](64, 0.75f, true)
   private var cachedBytes = 0L
 
-  private def cachePut(path: String, rows: IndexedSeq[InternalRow],
-                       bytes: Long): Unit = cache.synchronized {
-    Option(cache.remove(path)).foreach(old => cachedBytes -= old._2)
-    cache.put(path, (rows, bytes))
-    cachedBytes += bytes
-    val it = cache.entrySet().iterator()
-    while (cachedBytes > MaxCachedBytes && it.hasNext) {
-      val e = it.next()
-      if (e.getKey != path) { cachedBytes -= e.getValue._2; it.remove() }
+  private[meta] def cachePut(path: String, value: AnyRef, bytes: Long): Unit =
+    cache.synchronized {
+      Option(cache.remove(path)).foreach(old => cachedBytes -= old._2)
+      cache.put(path, (value, bytes))
+      cachedBytes += bytes
+      val it = cache.entrySet().iterator()
+      while (cachedBytes > MaxCachedBytes && it.hasNext) {
+        val e = it.next()
+        if (e.getKey != path) { cachedBytes -= e.getValue._2; it.remove() }
+      }
     }
-  }
 
-  private def cacheGet(path: String): Option[(IndexedSeq[InternalRow], Long)] =
+  private[meta] def cacheGet(path: String): Option[(AnyRef, Long)] =
     cache.synchronized(Option(cache.get(path)))
 
   private lazy val toInternal =
@@ -244,7 +250,8 @@ object ManifestIO {
       val parts = paths.map { p =>
         val key = GraftTable.normalize(p)
         cacheGet(key) match {
-          case Some((rows, bytes)) => (key, Some(rows), bytes, Seq.empty[Path])
+          case Some((rows, bytes)) =>
+            (key, Some(rows.asInstanceOf[IndexedSeq[InternalRow]]), bytes, Seq.empty[Path])
           case None =>
             val dir = new Path(key)
             val fs = dir.getFileSystem(conf)

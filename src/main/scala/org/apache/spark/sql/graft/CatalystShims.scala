@@ -51,6 +51,9 @@ object CatalystShims {
   /** A Catalyst expression (parsed, possibly unresolved) as a Column. */
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
+  /** A Column's Catalyst expression (unresolved until analyzed). */
+  def expression(c: Column): Expression = expr(c)
+
   /** A Catalyst-internal value of type `dt` as a literal Column. */
   def literal(value: Any, dt: DataType): Column =
     ExpressionUtils.column(Literal(value, dt))

@@ -8,7 +8,7 @@ import graft.meta.GraftTable
 
 /** Merge-on-read position deletes (Iceberg v2 shape): deleteWhereMOR
   * writes (file_path, pos) delete files instead of rewriting data;
-  * reads anti-join them away; optimize and the CoW row-level ops
+  * reads apply them; optimize and the CoW row-level ops
   * materialize them; expiry/orphan reconciliation treats delete files
   * as referenced storage. */
 class MorDeleteSpec extends SparkSpec {
@@ -255,6 +255,20 @@ class MorDeleteSpec extends SparkSpec {
     t.deleteWhereMOR(col("id") >= 20, clock)
     assert(t.rowCount === 20)
     assert(math.abs(fraction - 0.25) < 1e-9)
+  }
+
+  test("input_file_name() works on a read over outstanding position deletes") {
+    val t = GraftTable.create(spark, tmpDir("morifn") + "/t", schema)
+    t.append(seed(10))
+    t.append(seed(10).withColumn("id", col("id") + 10))
+    assert(t.deleteWhereMOR(col("id") === 7) === 1)
+    // the merge-on-read plan joined the entries, and the expression
+    // refused a plan with two sources
+    val Seq(file) = t.read.filter(col("id") === 5).select(input_file_name())
+      .as[String].collect().toSeq
+    assert(t.files.select("path").as[String].collect().toSet
+      .contains(GraftTable.normalize(file)))
+    assert(t.read.filter(col("id") === 7).select(input_file_name()).count() === 0)
   }
 
   test("MOR delete on an evolved table (renamed column) is id-aligned") {

@@ -1205,11 +1205,18 @@ class PlanShapeSpec extends SparkSpec {
           org.apache.spark.sql.types.LongType, nullable = false))))
     t.append(spark.range(10000).select($"id".as("k")))
     t.deleteWhereMOR($"k" % 100 === 0)
-    val nodes = allNodes(t.read)
+    // below the driver-index gate the entries apply inside the scan's
+    // stage: no join and no exchange at all
+    assert(!allNodes(t.read).exists(n =>
+      n.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec] ||
+        n.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]))
+    // above it (forced here by a negative gate) the anti-join runs
+    val joined = new graft.meta.GraftTable(spark, t.location, -1L)
+    val nodes = allNodes(joined.read)
     val bhj = nodes.collect { case b: BroadcastHashJoinExec => b }
     assert(bhj.exists(_.joinType.toString.contains("LeftAnti")),
       "small delete files must broadcast — a sort-merge anti join would " +
         "shuffle the whole table at scale")
-    assert(t.read.count() == 9900)
+    assert(t.read.count() == 9900 && joined.read.count() == 9900)
   }
 }
