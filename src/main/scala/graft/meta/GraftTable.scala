@@ -723,7 +723,7 @@ final class GraftTable private[graft] (val spark: SparkSession, val location: St
     val cur = currentSnapshot
     val dels = cur.filter(_.deleteManifests.nonEmpty).map(s => listedScope(s.deleteManifests))
     val indexed = dels.flatMap(PositionDeletes.targets(this, _))
-    val joined = dels.filter(_ => indexed.isEmpty).map(d =>
+    val joined = if (indexed.isDefined) None else dels.map(d =>
       PositionDeletes.entries(this, d).select(col("file_path").as("path")))
     val named = (also ++ joined).reduceOption(_ unionByName _)
       .fold(Set.empty[String])(KeySet.distinctRows(_).map(_.getString(0)).toSet) ++

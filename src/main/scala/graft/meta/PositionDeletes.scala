@@ -80,7 +80,7 @@ object PositionDeletes {
     * a handle whose gate is negative
     * ([[GraftTable.positionIndexMaxBytes]]). */
   private def joined(table: GraftTable, df: DataFrame, p: String, pos: String,
-                            dels: FileScope, how: String): DataFrame = {
+                     dels: FileScope, how: String): DataFrame = {
     val del = entries(table, dels)
     df.join(del, df(p) === del("file_path") && df(pos) === del("pos"), how)
   }
@@ -218,7 +218,7 @@ case class PositionDeleted(left: Expression, right: Expression, index: PositionI
   override def prettyName: String = "pos_deleted"
 
   /** The path before normalization, and whether to normalize it. */
-  private def rawPath: (Expression, Boolean) = left match {
+  @transient private lazy val rawPath: (Expression, Boolean) = left match {
     case NormalizePath(raw) => (raw, true)
     case other => (other, false)
   }
